@@ -1,37 +1,51 @@
 #!/usr/bin/env python3
-"""Seeded input generator for the perfbench workloads.
+"""Seeded inputs of the perfbench workloads, drawn from the committed
+sample of the repository's test data (``perfbench/data``, made by
+``data/make_data.py``).
 
 Everything the engine reads comes from here, as files: changelog topic
 files in the fixture line format (``keyJson`` line, then ``valueJson``
-line, an empty value line is a tombstone) and a JSON-lines document
-corpus.  The same seed always gives byte-identical files.
+line; an empty value line is a tombstone) and a JSON-lines document
+corpus. The same seed always gives byte-identical files.
+
+* ``cdc_bootstrap``: the sf0.001 TPC-H tables, whole, replayed as insert
+  changelogs in two interleaved batches (the seed assigns each record to
+  one) plus one batch of order tombstones (a seeded 1 in 37 of the orders).
+* ``cdc_trickle``: the dump of a seeded subset of the sf0.001 customers
+  (300 orders) with their orders and lineitems and the whole nation and
+  part tables;
+  then the separate load generator (``gen.py live``) appends the change mix.
+* ``neardup``: a seeded sample of the sf0.1 documents corpus made of whole
+  near-duplicate clusters, so that the sample keeps the corpus's
+  near-duplicate structure.
 
 Two entry points:
 
 * ``python3 gen.py static <workload> <seed> <outdir> <scale>`` writes the
-  inputs that exist before the engine starts (table dumps, bootstrap
-  batches, the corpus) plus ``inputs.json`` with their properties.
-* ``python3 gen.py live <seed> <outdir> <scale> <open_s> <rate> <bursts>
-  <burst_records>`` is the separate load generator of ``cdc_trickle``.  It
-  appends change records to ``live/<entity>.json`` on an open-loop
-  schedule, then writes catch-up bursts, and coordinates with the engine
-  only through marker files in ``<outdir>/ctl``.
+  inputs that exist before the engine starts plus ``inputs.json`` with
+  their properties.
+* ``python3 gen.py live <seed> <outdir> <open_s> <rate> <bursts>
+  <burst_records>`` is the load generator of ``cdc_trickle``. It appends
+  change records to ``main/topics/<entity>.json`` after the dump, on an
+  open-loop schedule, then writes the catch-up bursts, and coordinates with
+  the engine only through marker files in ``<outdir>/ctl``.
 """
+import gzip
 import json
 import os
 import random
+import statistics
 import sys
 import time
 
-# Row counts per scale. ``full`` is what the timed runs use; ``warm`` is
-# the small same-shape data set the warm-up runs over; ``smoke`` is the
-# seconds-long self-check (about TPC-H sf0.001).
+HERE = os.path.dirname(os.path.abspath(__file__))
+DATA = os.path.join(HERE, "data")
+
+# Sizes per scale. ``full`` is what the timed runs use; ``smoke`` is the
+# self-check. ``None`` orders means the whole sf0.001 tables.
 SCALES = {
-    "full": {"customer": 450, "orders": 4500, "part": 600, "docs": 600,
-             "trickle_orders": 300},
-    "warm": {"customer": 10, "orders": 100, "part": 15, "docs": 100},
-    "smoke": {"customer": 30, "orders": 300, "part": 40, "docs": 120,
-              "trickle_orders": 100},
+    "full": {"orders": None, "docs": 300, "trickle_orders": 300},
+    "smoke": {"orders": 100, "docs": 100, "trickle_orders": 60},
 }
 
 ENTITIES = ["orders", "customer", "nation", "lineitem", "part"]
@@ -39,12 +53,6 @@ KEYS = {"orders": ["o_orderkey"], "customer": ["c_custkey"],
         "nation": ["n_nationkey"], "lineitem": ["l_linenumber", "l_orderkey"],
         "part": ["p_partkey"]}
 STATUS = ["F", "O", "P"]
-PRIORITY = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-WORDS = ["batch", "part", "spark", "line", "column", "order", "small", "sort",
-         "fast", "value", "vector", "scan", "query", "agg", "table", "slow",
-         "filter", "customer", "stream", "hash", "big", "merge", "group", "a",
-         "the", "join", "row", "data", "index", "key", "page", "tree"]
 
 
 def key_of(entity, row):
@@ -59,39 +67,71 @@ def money(rng, lo, hi):
     return round(rng.uniform(lo, hi), 2)
 
 
-def make_tables(rng, n_cust, n_orders, n_part):
-    """TPC-H-shaped rows: nation, customer, part, orders, lineitem."""
+def load_tables():
+    """The sf0.001 tables, rows in file order (lineitem keys repeat: the
+    later row of a key is an update of the earlier one)."""
+    with gzip.open(os.path.join(DATA, "tpch_sf0.001.json.gz"), "rt") as f:
+        return json.load(f)
+
+
+def load_corpus():
+    with gzip.open(os.path.join(DATA, "documents_sf0.1.jsonl.gz"), "rt") as f:
+        return [json.loads(line) for line in f]
+
+
+def subset(rows, rng, n_orders):
+    """The rows of a seeded subset of the customers that together hold
+    ``n_orders`` orders, with all their orders and those orders' lineitems,
+    and the whole nation and part tables: the orders-per-customer and
+    lineitems-per-order fan-outs stay those of the full tables, and every
+    seed has the same number of orders."""
+    out = {e: list(rows[e]) for e in ENTITIES}
+    if n_orders is None:
+        return out
+    per = {}
+    for r in rows["orders"]:
+        per[r["o_custkey"]] = per.get(r["o_custkey"], 0) + 1
+    order = sorted(per)
+    rng.shuffle(order)
+    cust, total = set(), 0
+    for c in order:
+        if total + per[c] <= n_orders:
+            cust.add(c)
+            total += per[c]
+    out["customer"] = [r for r in rows["customer"] if r["c_custkey"] in cust]
+    out["orders"] = [r for r in rows["orders"] if r["o_custkey"] in cust]
+    keep = {r["o_orderkey"] for r in out["orders"]}
+    out["lineitem"] = [r for r in rows["lineitem"] if r["l_orderkey"] in keep]
+    return out
+
+
+def apply(records):
+    """Final table state after replaying records in offset order."""
     t = {e: {} for e in ENTITIES}
-    for n in range(25):
-        r = {"n_nationkey": n, "n_name": "NATION_%02d" % n, "n_regionkey": n % 5}
-        t["nation"][pk("nation", r)] = r
-    for c in range(1, n_cust + 1):
-        r = {"c_custkey": c, "c_name": "Customer#%09d" % c,
-             "c_nationkey": rng.randrange(25), "c_acctbal": money(rng, -999, 9999),
-             "c_mktsegment": rng.choice(SEGMENTS)}
-        t["customer"][pk("customer", r)] = r
-    for p in range(1, n_part + 1):
-        r = {"p_partkey": p, "p_name": " ".join(rng.sample(WORDS, 3)),
-             "p_brand": "Brand#%d%d" % (rng.randint(1, 5), rng.randint(1, 5)),
-             "p_size": rng.randint(1, 50), "p_retailprice": money(rng, 900, 2000)}
-        t["part"][pk("part", r)] = r
-    for o in range(1, n_orders + 1):
-        r = {"o_orderkey": o, "o_custkey": rng.randint(1, n_cust),
-             "o_orderstatus": rng.choice(STATUS),
-             "o_totalprice": money(rng, 1000, 400000),
-             "o_orderpriority": rng.choice(PRIORITY)}
-        t["orders"][pk("orders", r)] = r
-        for ln in range(1, rng.randint(1, 7) + 1):
-            t["lineitem"][(ln, o)] = lineitem(rng, o, ln, n_part)
+    for e, k, v in records:
+        kt = tuple(k[c] for c in KEYS[e])
+        if v is None:
+            t[e].pop(kt, None)
+        else:
+            t[e][kt] = v
     return t
 
 
-def lineitem(rng, o, ln, n_part):
-    return {"l_orderkey": o, "l_linenumber": ln,
-            "l_partkey": rng.randint(1, n_part), "l_quantity": float(rng.randint(1, 50)),
-            "l_extendedprice": money(rng, 900, 100000),
-            "l_discount": round(rng.randint(0, 10) / 100.0, 2),
-            "l_returnflag": rng.choice("ANR"), "l_linestatus": rng.choice("OF")}
+def fanouts(t):
+    """Join fan-outs of a table state: lineitems per order, orders per
+    customer, lineitems per part (mean, max)."""
+    def count(rows, col, keys):
+        c = {k: 0 for k in keys}
+        for r in rows:
+            c[r[col]] = c.get(r[col], 0) + 1
+        v = list(c.values()) or [0]
+        return [round(statistics.mean(v), 3), max(v)]
+    return {"lineitems_per_order": count(t["lineitem"].values(), "l_orderkey",
+                                         [k[0] for k in t["orders"]]),
+            "orders_per_customer": count(t["orders"].values(), "o_custkey",
+                                         [k[0] for k in t["customer"]]),
+            "lineitems_per_part": count(t["lineitem"].values(), "l_partkey",
+                                        [k[0] for k in t["part"]])}
 
 
 def pair_text(entity, key, value):
@@ -120,19 +160,17 @@ def write_final(path, tables):
                 f.write(json.dumps(r, separators=(",", ":")) + "\n")
 
 
-def bootstrap_records(tables):
-    """Two interleaved insert batches (key parity) and one batch of order
-    tombstones; returns (records, per-batch per-entity pair ranges)."""
-    batches = []
-    for b in range(2):
-        recs = []
-        for e in ENTITIES:
-            for k, r in tables[e].items():
-                if k[-1] % 2 == b:
-                    recs.append((e, key_of(e, r), r))
-        batches.append(recs)
-    doomed = sorted(k for k in tables["orders"] if k[0] % 37 == 0)
-    batches.append([("orders", {"o_orderkey": k[0]}, None) for k in doomed])
+def bootstrap_records(rows, rng):
+    """Two interleaved insert batches (the seed picks each record's batch)
+    and one batch of order tombstones; returns (records, per-batch
+    per-entity pair ranges)."""
+    inserts = [[], []]
+    for e in ENTITIES:
+        for r in rows[e]:
+            inserts[rng.randrange(2)].append((e, key_of(e, r), r))
+    orders = sorted(r["o_orderkey"] for r in rows["orders"])
+    doomed = sorted(rng.sample(orders, max(1, len(orders) // 37)))
+    batches = inserts + [[("orders", {"o_orderkey": k}, None) for k in doomed]]
     ranges, pos, records = [], {e: 0 for e in ENTITIES}, []
     for recs in batches:
         rng_b = {}
@@ -144,77 +182,80 @@ def bootstrap_records(tables):
         ranges.append(rng_b)
         # offset order inside one entity file follows the batch order
         records.extend(sorted(recs, key=lambda r: ENTITIES.index(r[0])))
-    for k in doomed:
-        del tables["orders"][k]
     return records, ranges
 
 
-def corpus(rng, n_docs):
-    """Bounded-vocabulary documents in blocks of five: three random
-    documents, then an edited copy of the third and an edited copy of that
-    copy. Near-duplicate pairs and chains exist in the same proportion
-    whatever the seed, so seeds change the data but not the work."""
-    docs = []
-    for i in range(n_docs):
-        if i % 5 < 3:
-            words = [rng.choice(WORDS) for _ in range(rng.randint(20, 80))]
-        else:
-            words = docs[i - 1][1].split(" ")
-            for _ in range(rng.randint(1, 2)):
-                j = rng.randrange(len(words))
-                if rng.random() < 0.5:
-                    words[j] = rng.choice(WORDS)
-                else:
-                    words.insert(j, rng.choice(WORDS))
-        docs.append((i, " ".join(words)))
-    return docs
+def corpus_sample(docs, rng, n):
+    """n documents made of whole near-duplicate clusters in seeded order."""
+    units = {}
+    for d in docs:
+        units.setdefault(d["cluster"], []).append(d)
+    order = sorted(units)
+    rng.shuffle(order)
+    out = []
+    for c in order:
+        if len(out) + len(units[c]) <= n:
+            out += units[c]
+        if len(out) == n:
+            break
+    return sorted(out, key=lambda d: d["doc_id"])
 
 
-def write_corpus(path, docs):
-    with open(path, "w") as f:
-        for i, text in docs:
-            f.write(json.dumps({"doc_id": i, "text": text}) + "\n")
+def corpus_props(docs):
+    words = [len(d["text"].split(" ")) for d in docs]
+    grams = [{t[i:i + 5] for i in range(max(len(t) - 4, 1))} for t in (d["text"] for d in docs)]
+    sizes = {}
+    for d in docs:
+        sizes[d["cluster"]] = sizes.get(d["cluster"], 0) + 1
+    by_size = {}
+    for s in sizes.values():
+        if s > 1:
+            by_size[s] = by_size.get(s, 0) + 1
+    return {"docs": len(docs), "words_mean": round(statistics.mean(words), 1),
+            "words_min": min(words), "words_max": max(words),
+            "vocabulary": len({w for d in docs for w in d["text"].split(" ")}),
+            "gram_universe": len(set().union(*grams)),
+            "grams_per_doc_mean": round(statistics.mean(len(g) for g in grams), 1),
+            "docs_in_clusters": sum(s for s in sizes.values() if s > 1),
+            "clusters_by_size": {str(k): v for k, v in sorted(by_size.items())}}
 
 
 def static(workload, seed, out, scale):
     os.makedirs(out, exist_ok=True)
     props = {"workload": workload, "seed": seed, "scale": scale}
-    parts = [("main", SCALES[scale])]
-    if workload != "cdc_trickle":
-        parts.append(("warm", SCALES["smoke" if scale == "smoke" else "warm"]))
-    for part, sc in parts:
-        rng = random.Random("%s/%d/%s" % (workload, seed, part))
-        d = os.path.join(out, part)
-        if workload == "cdc_bootstrap":
-            t = make_tables(rng, sc["customer"], sc["orders"], sc["part"])
-            records, ranges = bootstrap_records(t)
-            counts = write_topics(os.path.join(d, "topics"), records)
-            write_final(os.path.join(d, "final"), t)
-            with open(os.path.join(d, "batches.json"), "w") as f:
-                json.dump(ranges, f)
-            if part == "main":
-                tombstones = ranges[-1]["orders"][1] - ranges[-1]["orders"][0]
-                props.update(records=len(records), batches=len(ranges), per_entity=counts,
-                             distinct_keys=sum(len(v) for v in t.values()),
-                             tombstone_share=round(tombstones / len(records), 5))
-        elif workload == "cdc_trickle":
-            n_o = sc["trickle_orders"]
-            t = make_tables(rng, max(n_o // 10, 10), n_o, max(n_o // 8, 10))
-            records = [(e, key_of(e, r), r) for e in ENTITIES for r in t[e].values()]
-            counts = write_topics(os.path.join(d, "dump"), records)
-            write_topics(os.path.join(d, "live"), [])
-            with open(os.path.join(d, "tables.json"), "w") as f:
-                json.dump({e: list(t[e].values()) for e in ENTITIES}, f)
-            if part == "main":
-                props.update(dump_records=len(records), per_entity=counts)
-        else:
-            docs = corpus(rng, sc["docs"])
-            os.makedirs(d, exist_ok=True)
-            write_corpus(os.path.join(d, "documents.jsonl"), docs)
-            if part == "main":
-                props.update(docs=len(docs),
-                             mean_chars=round(sum(len(x[1]) for x in docs) / len(docs), 1),
-                             vocabulary=len(WORDS))
+    sc = SCALES[scale]
+    rng = random.Random("%s/%d/main" % (workload, seed))
+    d = os.path.join(out, "main")
+    if workload == "cdc_bootstrap":
+        records, ranges = bootstrap_records(subset(load_tables(), rng, sc["orders"]), rng)
+        counts = write_topics(os.path.join(d, "topics"), records)
+        t = apply(records)
+        write_final(os.path.join(d, "final"), t)
+        with open(os.path.join(d, "batches.json"), "w") as f:
+            json.dump(ranges, f)
+        tombstones = ranges[-1]["orders"][1] - ranges[-1]["orders"][0]
+        props.update(records=len(records), batches=len(ranges), per_entity=counts,
+                     distinct_keys=sum(len(v) for v in apply(
+                         [r for r in records if r[2] is not None]).values()),
+                     tombstone_share=round(tombstones / len(records), 5),
+                     fanouts=fanouts(t))
+    elif workload == "cdc_trickle":
+        rows = subset(load_tables(), rng, sc["trickle_orders"])
+        records = [(e, key_of(e, r), r) for e in ENTITIES for r in rows[e]]
+        counts = write_topics(os.path.join(d, "topics"), records)
+        t = apply(records)
+        with open(os.path.join(d, "tables.json"), "w") as f:
+            json.dump({e: list(t[e].values()) for e in ENTITIES}, f)
+        with open(os.path.join(d, "dump.json"), "w") as f:
+            json.dump(counts, f)
+        props.update(dump_records=len(records), per_entity=counts, fanouts=fanouts(t))
+    else:
+        docs = corpus_sample(load_corpus(), rng, sc["docs"])
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "documents.jsonl"), "w") as f:
+            for x in docs:
+                f.write(json.dumps({"doc_id": x["doc_id"], "text": x["text"]}) + "\n")
+        props.update(corpus_props(docs))
     with open(os.path.join(out, "inputs.json"), "w") as f:
         json.dump(props, f)
 
@@ -227,10 +268,12 @@ class Mix:
                ("lineitem_update", 25), ("tombstone_reinsert", 15)]
     HOT_SHARE = 0.5     # share of customer updates that hit a hot customer
     HOT_CUSTOMERS = 3   # how many customers are hot
+    ENTITY = {"orders_update": "orders", "fk_flip": "orders", "customer_update": "customer",
+              "lineitem_update": "lineitem", "tombstone_reinsert": "orders"}
 
     def __init__(self, rng, tables):
         self.rng, self.t = rng, tables
-        self.n_part = len(tables["part"])
+        self.part_keys = sorted(k[0] for k in tables["part"])
         self.cust_keys = sorted(tables["customer"])
         self.by_cust = {}
         for k, r in tables["orders"].items():
@@ -238,7 +281,6 @@ class Mix:
         self.stats = {name: 0 for name, _ in self.WEIGHTS}
         self.stats.update(records=0, tombstones=0, hot=0, keys=set(), fanout=[])
         self.pending = []   # delayed reinserts: (due_index, record)
-        self.total_w = sum(w for _, w in self.WEIGHTS)
 
     def _emit(self, e, row, value):
         self.stats["records"] += 1
@@ -250,13 +292,15 @@ class Mix:
             self.t[e][pk(e, value)] = value
         return (e, key_of(e, row), value)
 
-    def next(self, index):
-        """Records due at schedule position ``index`` (1 or 2 records)."""
+    def next(self, index, entity=None):
+        """Records due at schedule position ``index`` (one record), drawn
+        from the kinds that change ``entity`` if it is given."""
         if self.pending and self.pending[0][0] <= index:
             e, row = self.pending.pop(0)[1]
             return [self._emit(e, row, row)]
-        x = self.rng.randrange(self.total_w)
-        for kind, w in self.WEIGHTS:
+        kinds = [(k, w) for k, w in self.WEIGHTS if entity is None or self.ENTITY[k] == entity]
+        x = self.rng.randrange(sum(w for _, w in kinds))
+        for kind, w in kinds:
             if x < w:
                 break
             x -= w
@@ -276,9 +320,15 @@ class Mix:
             if ks:
                 r = dict(self.t["lineitem"][self.rng.choice(ks)],
                          l_quantity=float(self.rng.randint(1, 50)),
-                         l_partkey=self.rng.randint(1, self.n_part))
+                         l_partkey=self.rng.choice(self.part_keys))
             else:
-                r = lineitem(self.rng, o, 1, self.n_part)
+                r = {"l_orderkey": o, "l_linenumber": 1,
+                     "l_partkey": self.rng.choice(self.part_keys),
+                     "l_quantity": float(self.rng.randint(1, 50)),
+                     "l_extendedprice": money(self.rng, 900, 100000),
+                     "l_discount": round(self.rng.randint(0, 10) / 100.0, 2),
+                     "l_returnflag": self.rng.choice("ANR"),
+                     "l_linestatus": self.rng.choice("OF")}
             out = [self._emit("lineitem", r, r)]
         else:
             r = dict(self.rng.choice(live_orders))
@@ -315,25 +365,26 @@ class Mix:
 
 
 class Appender:
-    """Appends whole key/value pairs to the live topic files and keeps the
-    due time of every appended pair."""
+    """Appends whole key/value pairs to the topic files and keeps the due
+    time of every appended pair, by pair index."""
 
-    def __init__(self, live_dir):
-        self.files = {e: open(os.path.join(live_dir, e + ".json"), "a") for e in ENTITIES}
-        self.count = {e: 0 for e in ENTITIES}
-        self.due = {e: [] for e in ENTITIES}
+    def __init__(self, topic_dir, start):
+        self.files = {e: open(os.path.join(topic_dir, e + ".json"), "a") for e in ENTITIES}
+        self.count = dict(start)
+        self.due = {e: {} for e in ENTITIES}
         self.late = []
 
-    def append(self, records, dues):
+    def append(self, records, dues, track=True):
         chunks = {}
         for (e, k, v), d in zip(records, dues):
             chunks.setdefault(e, []).append(pair_text(e, k, v))
-            self.due[e].append(d)
+            if track:
+                self.due[e][self.count[e]] = d
             self.count[e] += 1
         for e, parts in chunks.items():
             self.files[e].write("".join(parts))   # one write: pairs stay whole
             self.files[e].flush()
-        if dues:
+        if dues and track:
             self.late.append(time.time() * 1000.0 - min(dues))
 
     def close(self):
@@ -341,12 +392,12 @@ class Appender:
             f.close()
 
 
-def wait_for(path, timeout_s=150.0):
+def wait_for(path, timeout_s=160.0):
     end = time.time() + timeout_s
     while not os.path.exists(path):
         if time.time() > end:
             raise SystemExit("generator: timed out waiting for " + path)
-        time.sleep(0.01)
+        time.sleep(0.005)
 
 
 def put(path, obj):
@@ -356,28 +407,30 @@ def put(path, obj):
     os.replace(tmp, path)
 
 
-def live(seed, out, scale, open_s, rate, bursts, burst_records):
-    """Warm-up appends, then the open-loop phase, then catch-up bursts."""
+def live(seed, out, open_s, rate, bursts, burst_records):
+    """A warm-up append (before the engine starts, so the bootstrap batch
+    reads it with the dump), then the open-loop phase, then the catch-up
+    bursts."""
     ctl = os.path.join(out, "ctl")
+    os.makedirs(ctl, exist_ok=True)
     d = os.path.join(out, "main")
     with open(os.path.join(d, "tables.json")) as f:
         tables = {e: {pk(e, r): r for r in rows} for e, rows in json.load(f).items()}
+    with open(os.path.join(d, "dump.json")) as f:
+        dump = json.load(f)
     mix = Mix(random.Random("cdc_trickle/%d/live" % seed), tables)
-    app = Appender(os.path.join(d, "live"))
+    app = Appender(os.path.join(d, "topics"), dump)
     now_ms = lambda: time.time() * 1000.0
-    wait_for(os.path.join(ctl, "ready"))
-    # warm-up: one small append over the same plan shapes (set-up time)
+    # warm-up: one small append of the change mix (set-up time)
     idx, recs = 0, []
-    while idx < 8:
+    while idx < 30:
         recs += mix.next(idx)
         idx += 1
     recs += mix.flush_pending()
-    app.append(recs, [now_ms()] * len(recs))
-    put(os.path.join(ctl, "warm.sent"), dict(app.count))
-    wait_for(os.path.join(ctl, "go"))
+    app.append(recs, [now_ms()] * len(recs), track=False)
     warm = dict(app.count)
-    app.due = {e: [] for e in ENTITIES}
-    app.late = []
+    put(os.path.join(ctl, "warm.sent"), warm)
+    wait_for(os.path.join(ctl, "go"))
     # open loop: record i is due at t0 + i / rate, whatever the engine does
     t0 = now_ms()
     n_open = int(open_s * rate)
@@ -394,31 +447,36 @@ def live(seed, out, scale, open_s, rate, bursts, burst_records):
                 dues.append(t0 + i * 1000.0 / rate)
             i += 1
         app.append(recs, dues)
-    tail = mix.flush_pending()
-    app.append(tail, [now_ms()] * len(tail))
+    # re-inserts still pending go out with the first burst
     open_counts = dict(app.count)
+    late = list(app.late)
     put(os.path.join(ctl, "open.sent"), open_counts)
-    open_late = list(app.late)
     wait_for(os.path.join(ctl, "open.drained"))
-    # catch-up: each burst lands at once; the next waits for the drain
-    burst_info = []
-    base = idx + n_open + 100
+    # catch-up: each backlog burst lands at once and is timed until it
+    # drains; the next one waits for that. A burst holds only orders
+    # changes (updates, FK flips, tombstone-then-reinsert pairs), so it is
+    # one append to one topic file: a burst spread over several files could
+    # be split between two batches by a trigger that counts the files while
+    # they are being written.
+    base, sent = idx + n_open + 100, []
     for b in range(bursts):
         recs = []
         while len(recs) < burst_records:
-            recs += mix.next(base)
+            recs += mix.next(base, entity="orders")
             base += 1
         recs += mix.flush_pending()
         t_b = now_ms()
-        app.append(recs, [t_b] * len(recs))
-        burst_info.append({"t_ms": t_b, "records": len(recs), "counts": dict(app.count)})
-        put(os.path.join(ctl, "burst%d.sent" % b), burst_info[-1])
-        wait_for(os.path.join(ctl, "burst%d.drained" % b))
+        app.append(recs, [t_b] * len(recs), track=False)
+        sent.append({"t_ms": t_b, "records": len(recs), "counts": dict(app.count)})
+        put(os.path.join(ctl, "burst%d.sent" % b), sent[-1])
+        if b + 1 < bursts:
+            wait_for(os.path.join(ctl, "burst%d.drained" % b))
     app.close()
     write_final(os.path.join(d, "final"), tables)
     put(os.path.join(out, "live.json"),
-        {"warm_counts": warm, "open_counts": open_counts, "due_ms": app.due, "late_ms": open_late,
-         "bursts": burst_info, "open_t0_ms": t0, "rate": rate,
+        {"dump_counts": dump, "warm_counts": warm, "open_counts": open_counts,
+         "due_ms": {e: sorted(v.items()) for e, v in app.due.items()},
+         "late_ms": late, "bursts": sent, "open_t0_ms": t0, "rate": rate,
          "props": mix.summary()})
     put(os.path.join(ctl, "done"), dict(app.count))
 
@@ -427,7 +485,7 @@ if __name__ == "__main__":
     if sys.argv[1] == "static":
         static(sys.argv[2], int(sys.argv[3]), sys.argv[4], sys.argv[5])
     elif sys.argv[1] == "live":
-        live(int(sys.argv[2]), sys.argv[3], sys.argv[4], float(sys.argv[5]),
-             float(sys.argv[6]), int(sys.argv[7]), int(sys.argv[8]))
+        live(int(sys.argv[2]), sys.argv[3], float(sys.argv[4]), float(sys.argv[5]),
+             int(sys.argv[6]), int(sys.argv[7]))
     else:
         raise SystemExit("usage: gen.py static|live ...")

@@ -2,9 +2,9 @@
 """The benchmark of this repository (see perfbench/README.md).
 
     python3 perfbench/run.py --workload cdc_bootstrap|cdc_trickle|neardup \\
-        --seed N --seconds S --trace 0|1
+        --seed N --seconds S --trace 0|1 [--buckets N]
     python3 perfbench/run.py --all [--seed N] [--seconds S]  # every workload, both modes
-    python3 perfbench/run.py --smoke                         # seconds-long self-check
+    python3 perfbench/run.py --smoke                         # smallest-input self-check
 
 Run from the repository root. One run builds the program if its sources
 changed, generates the seeded inputs, runs the workload in a fresh JVM,
@@ -30,11 +30,13 @@ import gen    # noqa: E402
 WORKLOADS = ["cdc_bootstrap", "cdc_trickle", "neardup"]
 MB = 1024.0 * 1024.0
 HEAP = "3g"
-# cdc_trickle load: open-loop rate (records/s), catch-up bursts and size
+# cdc_trickle: open-loop rate (records/s), catch-up bursts and their size,
+# trigger interval, state buckets (0: the memory backend)
 RATE = 20.0
 BURSTS = 2
 BURST_RECORDS = 400
 TRIGGER_MS = 250
+BUCKETS = 0  # memory backend; ``--buckets N`` runs on a durable backend by hand
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
     "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
@@ -63,7 +65,7 @@ def metric(v, unit):
     return {"value": v, "unit": unit}
 
 
-def run_jvm(cp, workload, seed, seconds, trace, work, scale, deadline):
+def run_jvm(cp, workload, seed, seconds, trace, work, buckets, deadline):
     out = os.path.join(work, "result.json")
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     os.makedirs(os.path.join(".bench_out"), exist_ok=True)
@@ -71,38 +73,35 @@ def run_jvm(cp, workload, seed, seconds, trace, work, scale, deadline):
     cmd = ["java"]
     for p in ADD_OPENS:
         cmd += ["--add-opens", p + "=ALL-UNNAMED"]
-    cmd += ["-Xms" + HEAP, "-Xmx" + HEAP, "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC",
+    cmd += ["-Xms" + HEAP, "-Xmx" + HEAP,
             "-Djava.io.tmpdir=" + os.path.abspath(os.path.join(work, "tmp")),
             "-cp", cp, "perfbench.BenchMain",
             "--workload", workload, "--seed", str(seed), "--seconds", str(seconds),
             "--trace", "1" if trace else "0", "--work", os.path.abspath(work),
             "--cores", str(cores()), "--out", os.path.abspath(out),
-            "--trace-file", trace_file, "--bursts", str(BURSTS),
+            "--trace-file", trace_file, "--buckets", str(buckets), "--bursts", str(BURSTS),
             "--trigger-ms", str(TRIGGER_MS)]
     env = dict(os.environ, SPARK_LOCAL_DIRS=os.path.abspath(os.path.join(work, "local")))
     log = open(os.path.join(work, "jvm.log"), "w")
     jvm = subprocess.Popen(cmd, cwd=work, stdout=log, stderr=subprocess.STDOUT, env=env)
     procs = [jvm]
     if workload == "cdc_trickle":
-        open_s = seconds
         procs.append(subprocess.Popen(
-            [sys.executable, os.path.join(HERE, "gen.py"), "live", str(seed), work, scale,
-             str(open_s), str(RATE), str(BURSTS), str(BURST_RECORDS)],
+            [sys.executable, os.path.join(HERE, "gen.py"), "live", str(seed), work,
+             str(seconds), str(RATE), str(BURSTS), str(BURST_RECORDS)],
             stdout=log, stderr=subprocess.STDOUT))
     try:
-        jvm.wait(timeout=max(deadline - time.time(), 1))
-        if workload == "cdc_trickle" and jvm.returncode == 0:
-            procs[1].wait(timeout=max(deadline - time.time(), 1))
-    except subprocess.TimeoutExpired:
-        pass
+        # a failed process fails the run at once; so does the deadline
+        while time.time() < deadline and any(p.poll() is None for p in procs) \
+                and all(p.poll() in (None, 0) for p in procs):
+            time.sleep(0.05)
     finally:
         for p in procs:
             if p.poll() is None:
                 p.kill()
             p.wait()
         log.close()
-    if jvm.returncode != 0 or not os.path.exists(out):
+    if any(p.returncode != 0 for p in procs) or not os.path.exists(out):
         sys.stderr.write(open(os.path.join(work, "jvm.log")).read()[-6000:])
         raise SystemExit("perfbench: %s run failed (exit %s)" % (workload, jvm.returncode))
     with open(out) as f:
@@ -188,42 +187,53 @@ def wrong_docs(want, it):
 
 
 def e2e_iterations(res, work_units):
-    """Closed-loop workloads: work units per median iteration time, and the
-    median per-iteration rise of storage memory."""
+    """Closed-loop workloads: work units per median iteration time; the
+    time from handing the input in to collecting its result (the iteration
+    time) as the freshness quantiles; the median per-iteration rise of
+    storage memory."""
     it = res["iterations"]
-    return {"throughput_rps": work_units / statistics.median(i["seconds"] for i in it),
+    ms = [i["seconds"] * 1000.0 for i in it]
+    return {"throughput_rps": work_units / (statistics.median(ms) / 1000.0),
+            "freshness_p50_ms": quantile(ms, 0.5), "freshness_p90_ms": quantile(ms, 0.9),
             "peak_storage_mb": statistics.median(i["peak_storage_bytes"] for i in it) / MB}
 
 
-def trickle_samples(res, live):
-    """Per open-loop record: the time the sink received the docs of the
-    batch that read it, minus its due time; and the batches they fell into."""
-    batches = [b for b in res["batches"] if b["emit_ms"] is not None]
+def trickle_freshness(res, live):
+    """Per open-loop record: the emission time of the batch that read it
+    (the first batch whose end offset passes the record) minus the record's
+    due time; and the batches these records fell into."""
+    batches = sorted((b for b in res["batches"] if b["emit_ms"] is not None),
+                     key=lambda b: b["id"])
     fresh, used = [], set()
     for si, e in enumerate(gen.ENTITIES):
-        warm, n_open = live["warm_counts"][e], live["open_counts"][e] - live["warm_counts"][e]
-        for j, due in enumerate(live["due_ms"][e][:n_open]):
-            b = next(b for b in batches if b["ranges"][si][0] <= warm + j < b["ranges"][si][1])
+        for j, due in live["due_ms"][e]:
+            b = next(b for b in batches if b["ranges"][si][1] > j)
             fresh.append(b["emit_ms"] - due)
             used.add(b["id"])
     return fresh, used
 
 
-def e2e_trickle(res, live):
-    """Catch-up drain rate over the bursts and peak storage rise over the
-    open-loop and burst windows; freshness goes to the info line."""
-    fresh, used = trickle_samples(res, live)
-    drains = [b["records"] / ((b["emit_ms"] - b["t_ms"]) / 1000.0) for b in res["bursts"]]
-    return ({"throughput_rps": statistics.median(drains),
+def e2e_trickle(res, live, buckets):
+    """Freshness quantiles over the open-loop records, the median catch-up
+    drain rate of the bursts (records / (emission of the batch that ends
+    the drain - burst write)), and the median storage peak of the open-loop
+    and burst windows."""
+    fresh, used = trickle_freshness(res, live)
+    drain_s = [(e - b["t_ms"]) / 1000.0 for e, b in zip(res["burst_emit_ms"], live["bursts"])]
+    return ({"throughput_rps": statistics.median(
+                 b["records"] / d for b, d in zip(live["bursts"], drain_s)),
+             "freshness_p50_ms": quantile(fresh, 0.5),
+             "freshness_p90_ms": quantile(fresh, 0.9),
              "peak_storage_mb": statistics.median(res["peak_storage_bytes"]) / MB},
-            {"freshness_p50_ms": quantile(fresh, 0.5), "freshness_p90_ms": quantile(fresh, 0.9),
-             "freshness_records": len(fresh), "freshness_batches": len(used),
-             "rate_rps": RATE, "trigger_ms": res["trigger_ms"],
-             "burst_records": [b["records"] for b in res["bursts"]],
+            {"freshness_records": len(fresh), "freshness_batches": len(used),
+             "rate_rps": RATE, "trigger_ms": res["trigger_ms"], "buckets": buckets,
+             "burst_records": [b["records"] for b in live["bursts"]],
+             "burst_drain_s": [round(d, 3) for d in drain_s],
+             "batch_rows": [b["rows"] for b in res["batches"]],
              "inputs": live["props"]})
 
 
-def one_run(cp, workload, seed, seconds, trace, scale="full"):
+def one_run(cp, workload, seed, seconds, trace, scale="full", buckets=BUCKETS):
     t_start = time.time()
     deadline = t_start + 172.0
     work = os.path.join(".bench_work", "%s-%d-%d" % (workload, seed, int(trace)))
@@ -231,7 +241,7 @@ def one_run(cp, workload, seed, seconds, trace, scale="full"):
     gen.static(workload, seed, work, scale)
     with open(os.path.join(work, "inputs.json")) as f:
         inputs = json.load(f)
-    res, trace_file = run_jvm(cp, workload, seed, seconds, trace, work, scale, deadline)
+    res, trace_file = run_jvm(cp, workload, seed, seconds, trace, work, buckets, deadline)
     info = {"workload": workload, "seed": seed, "cores": res["cores"], "heap": HEAP,
             "inputs": inputs}
     if workload == "neardup":
@@ -257,13 +267,15 @@ def one_run(cp, workload, seed, seconds, trace, scale="full"):
     else:
         with open(os.path.join(work, "live.json")) as f:
             live = json.load(f)
-        e2e, extra = e2e_trickle(res, live)
+        e2e, extra = e2e_trickle(res, live, buckets)
         info.update(extra)
-        attempted = sum(live["open_counts"].values()) - sum(live["warm_counts"].values()) \
-            + sum(extra["burst_records"])
-        ranges = {e: [live["warm_counts"][e], live["warm_counts"][e] + len(live["due_ms"][e])]
+        if res["durable_layers"]:
+            info["durable_layers"] = res["durable_layers"]
+        # every change record of the timed phase: the open loop and the burst
+        ranges = {e: [live["warm_counts"][e], live["bursts"][-1]["counts"][e]]
                   for e in gen.ENTITIES}
-        failed = failed_records(work, "live", ranges, res["bad_roots"])
+        attempted = sum(b - a for a, b in ranges.values())
+        failed = failed_records(work, "topics", ranges, res["bad_roots"])
         bad = set(res["bad_roots"])
         info["docs"] = res["expected_docs"]
         info["docs_sha256"] = res["docs_sha256"]
@@ -279,6 +291,7 @@ def one_run(cp, workload, seed, seconds, trace, scale="full"):
     if trace:
         layers = per_layer(workload, res, e2e, work)
     shutil.rmtree(work, ignore_errors=True)
+    info["wall_s"] = round(time.time() - t_start, 1)
     return {"correct": not bad, "attempted": attempted, "failed": failed,
             "e2e": e2e, "layers": layers, "info": info, "trace_file": trace_file,
             "wall_s": time.time() - t_start}
@@ -344,6 +357,9 @@ def main():
     ap.add_argument("--trace", type=int, default=0, choices=[0, 1])
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--smoke", action="store_true")
+    ap.add_argument("--buckets", type=int, default=BUCKETS,
+                    help="cdc_trickle state: 0 = memory backend (the benchmark's), "
+                         "N = durable BucketedParquetBackend with N buckets")
     a = ap.parse_args()
     if not os.path.isfile(os.path.join(ROOT, "BENCHMARK.json")):
         raise SystemExit("perfbench: run from the repository root (no BENCHMARK.json here)")
@@ -354,7 +370,7 @@ def main():
         rows = []
         for w in WORKLOADS:
             for trace in (False, True):
-                r = one_run(cp, w, a.seed, a.seconds, bool(trace))
+                r = one_run(cp, w, a.seed, a.seconds, bool(trace), buckets=a.buckets)
                 rows.append({"workload": w, "trace": trace, "result": json.loads(result_line(r, trace)),
                              "info": r["info"], "trace_file": r["trace_file"]})
                 for n, m in rows[-1]["result"]["metrics"].items():
@@ -369,7 +385,7 @@ def main():
         return
     if not a.workload:
         ap.error("--workload, --all or --smoke is required")
-    r = one_run(cp, a.workload, a.seed, a.seconds, bool(a.trace))
+    r = one_run(cp, a.workload, a.seed, a.seconds, bool(a.trace), buckets=a.buckets)
     print("info: " + json.dumps(r["info"]))
     if r["trace_file"]:
         print("trace: " + r["trace_file"])

@@ -20,7 +20,7 @@ import graft.operators.Denormalize
   * {{{
   *   BenchMain --workload cdc_bootstrap|cdc_trickle|neardup --seed N
   *     --seconds S --trace 0|1 --work DIR --cores K --out FILE
-  *     [--trace-file FILE] [--bursts N --trigger-ms MS]
+  *     [--trace-file FILE] [--bursts N --trigger-ms MS --buckets N]
   * }}}
   */
 object BenchMain {
@@ -108,12 +108,15 @@ final class Ctx(val spark: SparkSession, val args: BenchMain.Args, val probes: P
   }
 
   /** Progress line for the run's log (stderr). */
-  def log(msg: String): Unit = System.err.println(s"[perfbench] $msg")
+  def log(msg: String): Unit =
+    System.err.println(f"[perfbench] ${(nowMs - jvmStartMs) / 1e3}%.1f s $msg")
+  private val jvmStartMs =
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime.toDouble
 
   def file(parts: String*): String = parts.foldLeft(args.work)(new File(_, _)).getPath
 }
 
-/** The DenormalizedOrder tree over generated TPC-H-shaped topics:
+/** The DenormalizedOrder tree over the TPC-H topics:
   * orders → customer → nation, and orders → lineitem → part. */
 object Cdc {
   val name = "DenormalizedOrder"
@@ -158,20 +161,26 @@ object Cdc {
     Denormalize.documents(tree, tables, keyFields)
   }
 
-  /** Documents by root key (`o_orderkey`), collected. */
-  def byKey(docs: DataFrame): Map[Long, String] =
+  /** Documents as (root key `o_orderkey`, doc_json) rows, collected and
+    * sorted. A root key may occur more than once: the gate counts that. */
+  def rows(docs: DataFrame): Seq[(Long, String)] =
     docs.select(get_json_object(col("doc_json"), "$.Record.o_orderkey").cast("long"),
         col("doc_json"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
 
-  /** Root keys whose document is missing, extra or different. */
-  def diff(got: Map[Long, String], want: Map[Long, String]): Seq[Long] =
-    (got.keySet ++ want.keySet).filter(k => got.get(k) != want.get(k)).toSeq.sorted
+  /** Root keys whose document is missing, extra, different or not unique. */
+  def diff(got: Seq[(Long, String)], want: Seq[(Long, String)]): Seq[Long] = {
+    val g = got.groupMap(_._1)(_._2)
+    val w = want.groupMap(_._1)(_._2)
+    (g.keySet ++ w.keySet).filter { k =>
+      g.get(k) != w.get(k) || g.get(k).exists(_.size > 1)
+    }.toSeq.sorted
+  }
 
-  /** SHA-256 of the sorted (key, doc_json) lines. */
-  def sha(docs: Map[Long, String]): String = {
+  /** SHA-256 of the sorted (key, doc_json) rows, duplicates included. */
+  def sha(docs: Seq[(Long, String)]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    docs.toSeq.sortBy(_._1).foreach { case (k, d) => md.update(s"$k\t$d\n".getBytes("UTF-8")) }
+    docs.foreach { case (k, d) => md.update(s"$k\t$d\n".getBytes("UTF-8")) }
     md.digest().map("%02x".format(_)).mkString
   }
 

@@ -50,8 +50,13 @@ final class Trace(val enabled: Boolean, val runId: String) {
     phase = ids.incrementAndGet()
     timedFromNs = System.nanoTime()
   }
-  def closeTimed(): Unit =
+  def closeTimed(): Unit = {
     if (enabled) spans.add(Span(phase, "timed", timedFromNs, System.nanoTime(), 0L, Map.empty))
+    timedToNs = System.nanoTime()
+  }
+  @volatile private var timedToNs = Long.MaxValue
+  /** Whether the timed phase is open now. */
+  def inTimed: Boolean = { val t = System.nanoTime(); t >= timedFromNs && t < timedToNs }
 
   def count(name: String, by: Long = 1L): Unit =
     if (enabled) counters.computeIfAbsent(name, _ => new AtomicLong()).addAndGet(by)
@@ -77,8 +82,9 @@ final class Trace(val enabled: Boolean, val runId: String) {
 }
 
 /** Timing decorator around a [[StateBackend]]: persist and gc calls
-  * become spans, and each persist adds the bytes of the generation it
-  * wrote when the backend keeps state under a root directory. */
+  * become spans, and each persist of the timed phase adds the bytes of
+  * the generation it wrote when the backend keeps state under a root
+  * directory. */
 final class TimedBackend(inner: StateBackend, trace: Trace,
     root: Option[java.io.File]) extends StateBackend {
   def durable: Boolean = inner.durable
@@ -90,8 +96,7 @@ final class TimedBackend(inner: StateBackend, trace: Trace,
       "kind" -> (if (delta.isDefined) "delta" else "full"))) {
       inner.persist(name, df, delta)
     }
-    trace.count("state.persist_calls")
-    root.foreach { r =>
+    if (trace.inTimed) root.foreach { r =>
       val gens = Option(new java.io.File(r, name).listFiles()).getOrElse(Array.empty)
         .filter(_.getName.startsWith("g"))
       gens.maxByOption(_.getName.drop(1).toLongOption.getOrElse(-1L))
@@ -109,13 +114,11 @@ object Files {
 }
 
 /** Block-manager storage memory, from block-update events. A window
-  * reports how far storage rose above its level at the window's start:
-  * blocks left by earlier work do not count. */
+  * reports the highest level storage memory reached while it was open. */
 final class StorageListener extends SparkListener {
   private val blocks = mutable.HashMap.empty[String, Long]
   private var used = 0L
   private var peak = 0L
-  private var base = 0L
   override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = synchronized {
     val info = e.blockUpdatedInfo
     val id = info.blockId.name
@@ -127,12 +130,11 @@ final class StorageListener extends SparkListener {
     peak = math.max(peak, used)
   }
   def current: Long = synchronized(used)
-  /** Peak rise in bytes since the previous call; starts the next window. */
+  /** Peak level in bytes since the previous call; starts the next window. */
   def window(): Long = synchronized {
-    val rise = peak - base
-    base = used
+    val top = peak
     peak = used
-    rise
+    top
   }
 }
 
@@ -178,13 +180,15 @@ final class ProgressListener(nSources: Int) extends StreamingQueryListener {
     if (p.sources.length == nSources && p.numInputRows > 0) {
       def off(s: String): Long = Option(s).filter(_ != "null").map(_.trim.toLong).getOrElse(0L)
       val ranges = p.sources.toSeq.map(s => (off(s.startOffset), off(s.endOffset)))
+      // the batch is listed before its offsets count as processed, so a
+      // reader that sees them processed also finds the batch
+      batches.add(Batch(p.batchId, p.numInputRows,
+        p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap, ranges))
       synchronized {
         ranges.zipWithIndex.foreach { case ((_, end), i) =>
           processed(i) = math.max(processed(i), end)
         }
       }
-      batches.add(Batch(p.batchId, p.numInputRows,
-        p.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap, ranges))
     }
   }
   def processedOffsets: Seq[Long] = synchronized(processed.toSeq)

@@ -17,7 +17,7 @@ import graft.streaming.{BucketedParquetBackend, IncrementalDenormalizer,
 /** `cdc_bootstrap`: the initial build. Two interleaved insert batches
   * and one tombstone batch go through `processBatch` on a fresh
   * memory-backend engine per iteration; an iteration ends when the
-  * engine's async waves have drained. */
+  * engine's async waves have drained. The warm-up is one full build. */
 final class Bootstrap(ctx: Ctx) {
   import ctx._
   private val batchRanges: Seq[Map[String, (Long, Long)]] = {
@@ -33,9 +33,9 @@ final class Bootstrap(ctx: Ctx) {
 
   /** Each batch's changelog frames, parsed and held in memory, so the
     * timed phase starts at `processBatch`. */
-  private def load(part: String): Seq[Map[String, DataFrame]] =
+  private def load(): Seq[Map[String, DataFrame]] =
     batchRanges.map(_.map { case (e, r) =>
-      e -> Ckpt.mem(Cdc.topic(spark, file(part, "topics", s"$e.json"), e, Some(r)))
+      e -> Ckpt.mem(Cdc.topic(spark, file("main", "topics", s"$e.json"), e, Some(r)))
     })
 
   private def backend: StateBackend =
@@ -57,27 +57,25 @@ final class Bootstrap(ctx: Ctx) {
 
   def run(): Map[String, Any] = {
     val records = batchRanges.map(_.values.map { case (a, b) => b - a }.sum)
-    // set-up pass: parse the inputs, then warm up on the small data set
-    // over both plan shapes (an insert batch and the tombstone batch)
+    // set-up pass: parse the inputs, then one full build as the warm-up
     val (frames, setupS) = setup {
-      val main = load("main")
-      val warm = load("warm")
-      build(Seq(warm.head, warm.last))
+      val main = load()
+      build(main)
       main
     }
-    val expected = Cdc.byKey(Cdc.batchDocs(spark, file("main", "final")))
+    val expected = Cdc.rows(Cdc.batchDocs(spark, file("main", "final")))
     settle()
     startTimed()
     val iters = mutable.ArrayBuffer.empty[Map[String, Any]]
     var last: IncrementalDenormalizer = null
     var timed = 0.0
-    while (iters.size < 2 || timed < args.seconds) {
+    while (iters.size < 3 || timed < args.seconds) {
       probes.storage.window()
       val (engine, submits, end) = trace.span("iteration")(build(frames))
       val peak = probes.storage.window()
       timed += (end - submits.head) / 1e9
       // correctness gate of this iteration, outside the timed phase
-      val docs = Cdc.byKey(Cdc.liveDocs(engine))
+      val docs = Cdc.rows(Cdc.liveDocs(engine))
       iters += Map("seconds" -> (end - submits.head) / 1e9,
         "wait_ms" -> submits.map(s => (end - s) / 1e6),
         "peak_storage_bytes" -> peak,
@@ -118,51 +116,53 @@ final class Bootstrap(ctx: Ctx) {
   }
 }
 
-/** `cdc_trickle`: steady-state CDC through `StreamRunner.start` on the
-  * durable bucketed backend, fed by the separate load generator
-  * (`gen.py live`) through the live topic files. The engine and the
-  * generator coordinate only through marker files under `ctl/`. */
+/** `cdc_trickle`: steady-state CDC through `StreamRunner.start`, fed by
+  * the separate load generator (`gen.py live`) through the topic files.
+  * The topics start with the table dump and the generator's warm-up
+  * append, so the stream's first batch is the bootstrap; it is set-up.
+  * The timed phase is the open-loop phase and the catch-up bursts.
+  * The engine and the generator coordinate only through marker files
+  * under `ctl/`. */
 final class Trickle(ctx: Ctx) {
   import ctx._
+  import scala.jdk.CollectionConverters._
   private val ctl = new File(args.work, "ctl")
-  private val triggerMs = args.opts.getOrElse("trigger-ms", "250").toLong
-  private val deadline = System.nanoTime() + 170L * 1000000000L
+  private val triggerMs = args.opts("trigger-ms").toLong
+  private val deadline = System.nanoTime() + 165L * 1000000000L
+  private val root = file("state")
 
   private def waitFor(what: String)(cond: => Boolean): Unit = {
     while (!cond) {
       if (System.nanoTime() > deadline) throw new IllegalStateException(s"timed out waiting for $what")
-      Thread.sleep(5)
+      Thread.sleep(2)
     }
   }
-  private def mark(name: String, body: String = "{}"): Unit = {
+  private def mark(name: String): Unit = {
     val tmp = new File(ctl, name + ".tmp")
-    java.nio.file.Files.writeString(tmp.toPath, body)
+    java.nio.file.Files.writeString(tmp.toPath, "{}")
     tmp.renameTo(new File(ctl, name))
   }
-  private def counts(name: String): Seq[Long] = {
-    val f = new File(ctl, name)
-    waitFor(name)(f.exists())
+  /** Per-entity pair counts from a generator marker (or any JSON file
+    * with an entity -> count map, optionally under `counts`). */
+  private def counts(f: File): Seq[Long] = {
+    waitFor(f.getName)(f.exists())
     val m = Json.read(f.getPath)
     val c = m.getOrElse("counts", m).asInstanceOf[Map[String, Any]]
     Cdc.entities.map(e => Json.num(c(e)).toLong)
   }
 
+  /** `--buckets 0` (the default) keeps state on the memory backend;
+    * `--buckets N` on a durable `BucketedParquetBackend` with N buckets. */
+  private val buckets = args.opts.getOrElse("buckets", "0").toInt
+  private def newBackend(): BucketedParquetBackend =
+    new BucketedParquetBackend(spark, "file://" + root, buckets = buckets)
+
   def run(): Map[String, Any] = {
     ctl.mkdirs()
-    val dump = Cdc.entities.map(e =>
-      e -> Ckpt.mem(Cdc.topic(spark, file("main", "dump", s"$e.json"), e))).toMap
-    // set-up: bootstrap the dump into a fresh durable state root
-    val root = file("state")
-    val (_, setupS) = setup {
-      val e = new IncrementalDenormalizer(spark, Seq(Cdc.tree), Cdc.keyFields,
-        Cdc.valueSchemas,
-        backend = new BucketedParquetBackend(spark, "file://" + root, buckets = args.cores))
-      e.processBatch(dump)
-      e.counters
-    }
-    val inner = new BucketedParquetBackend(spark, "file://" + root, buckets = args.cores)
+    val inner: StateBackend = if (buckets == 0) StateBackend.Memory else newBackend()
     val backend: StateBackend =
-      if (trace.enabled) new TimedBackend(inner, trace, Some(new File(root))) else inner
+      if (!trace.enabled) inner
+      else new TimedBackend(inner, trace, Some(new File(root)).filter(_ => buckets > 0))
     val progress = new ProgressListener(Cdc.entities.size)
     spark.streams.addListener(progress)
     val emits = new java.util.concurrent.ConcurrentHashMap[Long, Double]()
@@ -170,62 +170,70 @@ final class Trickle(ctx: Ctx) {
       spark.readStream.format("graft-changelog")
         .option("keySchema", Cdc.keySchemas(e).toDDL)
         .option("valueSchema", Cdc.valueSchemas(e).toDDL)
-        .load(file("main", "live", s"$e.json"))
+        .load(file("main", "topics", s"$e.json"))
         .select(lit(e).as("entity"), col("offset"),
           to_json(col("key")).as("key_json"),
           when(col("value").isNull, lit(null).cast("string"))
             .otherwise(to_json(col("value"))).as("value_json"))
     }.reduce(_ unionByName _)
-    val (engine, query) = StreamRunner.start(spark, changelog, Seq(Cdc.tree),
-      Cdc.keyFields, Cdc.keySchemas, Cdc.valueSchemas,
-      checkpointDir = Some(file("checkpoint")),
-      sink = (_, _, batchId) => emits.putIfAbsent(batchId, nowMs),
-      onBatch = (_, batchId) => emits.putIfAbsent(batchId, nowMs),
-      backend = backend,
-      trigger = Trigger.ProcessingTime(triggerMs))
-    // StreamRunner recovers a BucketedParquetBackend itself; the timing
-    // decorator hides the type, so the traced run recovers explicitly
-    // (no live record exists yet, so no batch can race this).
-    if (trace.enabled) engine.loadStateTables(inner.recover())
-    def processed: Seq[Long] = progress.processedOffsets
-    def reached(target: Seq[Long]): Boolean =
-      processed.zip(target).forall { case (p, t) => p >= t }
+    var query: org.apache.spark.sql.streaming.StreamingQuery = null
+    /** Emission time of the batch that completed the drain up to `target`
+      * (per-entity pair counts): the first batch whose end offsets reach it. */
     def drainedAt(target: Seq[Long]): Double = {
-      waitFor("drain")(reached(target) || query.exception.isDefined)
+      waitFor("drain") {
+        progress.processedOffsets.zip(target).forall { case (p, t) => p >= t } ||
+          query.exception.isDefined
+      }
       query.exception.foreach(e => throw e)
-      import scala.jdk.CollectionConverters._
-      val b = progress.batches.asScala.filter(_.ranges.zip(target).exists {
-        case ((s, end), t) => s < t && t <= end
+      val b = progress.batches.asScala.filter(_.ranges.zip(target).forall {
+        case ((_, end), t) => end >= t
       }).map(_.id).min
       waitFor("emit")(emits.containsKey(b))
       emits.get(b)
     }
+    // the generator's warm-up append lands before the stream starts
+    val warm = counts(new File(ctl, "warm.sent"))
     try {
-      mark("ready")
-      val warm = counts("warm.sent")
-      drainedAt(warm)
+      // set-up: the bootstrap batch (the dump and the warm-up append)
+      val (engine, setupS) = setup {
+        val (engine, q) = StreamRunner.start(spark, changelog, Seq(Cdc.tree),
+          Cdc.keyFields, Cdc.keySchemas, Cdc.valueSchemas,
+          checkpointDir = Some(file("checkpoint")),
+          sink = (_, _, batchId) => emits.putIfAbsent(batchId, nowMs),
+          onBatch = (_, batchId) => emits.putIfAbsent(batchId, nowMs),
+          backend = backend,
+          trigger = Trigger.ProcessingTime(triggerMs))
+        query = q
+        drainedAt(warm)
+        engine
+      }
+      // every storage window starts after a full GC, so that blocks of
+      // superseded state generations are already cleaned up
+      settle()
       startTimed()
       mark("go")
-      val windows = mutable.ArrayBuffer.empty[Long]
-      drainedAt(counts("open.sent"))
-      windows += probes.storage.window()
+      val openEmit = drainedAt(counts(new File(ctl, "open.sent")))
+      log("open loop drained")
+      val windows = mutable.ArrayBuffer(probes.storage.window())
+      settle()
+      probes.storage.window()
       mark("open.drained")
-      val bursts = (0 until args.opts("bursts").toInt).map { b =>
-        val target = counts(s"burst$b.sent")
-        val info = Json.read(new File(ctl, s"burst$b.sent").getPath)
-        val emitted = drainedAt(target)
+      val burstEmits = (0 until args.opts("bursts").toInt).map { b =>
+        val emitted = drainedAt(counts(new File(ctl, s"burst$b.sent")))
         windows += probes.storage.window()
+        settle()
+        probes.storage.window()
         mark(s"burst$b.drained")
-        Map("t_ms" -> Json.num(info("t_ms")), "records" -> Json.num(info("records")),
-          "emit_ms" -> emitted)
+        emitted
       }
-      counts("done")
+      log("bursts drained")
+      counts(new File(ctl, "done"))
       stopTimed()
       query.stop()
-      import scala.jdk.CollectionConverters._
       val batches = progress.batches.asScala.toSeq.sortBy(_.id)
-      val docs = Cdc.byKey(Cdc.liveDocs(engine))
-      val expected = Cdc.byKey(Cdc.batchDocs(spark, file("main", "final")))
+      val docs = Cdc.rows(Cdc.liveDocs(engine))
+      val expected = Cdc.rows(Cdc.batchDocs(spark, file("main", "final")))
+      log("gate done")
       val layers = if (!trace.enabled) Map.empty[String, Double] else {
         val timed = batches.filter(b => emits.containsKey(b.id) && emits.get(b.id) >= firstOpMs)
         def phaseMs(k: String) = Stats.median(timed.map(_.durations.getOrElse(k, 0L).toDouble))
@@ -234,14 +242,10 @@ final class Trickle(ctx: Ctx) {
         val c = engine.counters
         val m = engine.metrics
         val persist = trace.durations("state.persist")
-        val gcs = trace.durations("state.gc")
-        val recoverMs = {
+        val denorm = (1 to 3).map { _ =>
           val t = System.nanoTime()
-          trace.span("state.recover") {
-            val b = new BucketedParquetBackend(spark, "file://" + root, buckets = args.cores)
-            new IncrementalDenormalizer(spark, Seq(Cdc.tree), Cdc.keyFields,
-              Cdc.valueSchemas, backend = b).loadStateTables(b.recover())
-          }
+          trace.span("operators.denormalize")(
+            Ckpt.mem(Cdc.batchDocs(spark, file("main", "final"))))
           (System.nanoTime() - t) / 1e6
         }
         probes.sparkMetrics(timed.size) ++ Map(
@@ -266,25 +270,37 @@ final class Trickle(ctx: Ctx) {
             "docs_live", "docs_tombstoned").map(m(_)).sum.toDouble,
           "state.persist_ms" -> Stats.median(persist),
           "state.persist_calls" -> persist.size.toDouble,
-          "state.gc_ms" -> Stats.median(gcs),
+          "operators.denormalize_ms" -> Stats.median(denorm))
+      }
+      // the durable state layer, when there is one
+      val durableLayers = if (!trace.enabled || buckets == 0) Map.empty[String, Double] else {
+        val t = System.nanoTime()
+        trace.span("state.recover") {
+          val b = newBackend()
+          new IncrementalDenormalizer(spark, Seq(Cdc.tree), Cdc.keyFields,
+            Cdc.valueSchemas, backend = b).loadStateTables(b.recover())
+        }
+        Map("state.recover_ms" -> (System.nanoTime() - t) / 1e6,
+          "state.gc_ms" -> Stats.median(trace.durations("state.gc")),
           "state.written_mb" -> trace.counter("state.written_bytes") / 1048576.0,
-          "state.root_mb" -> Files.du(new File(root)) / 1048576.0,
-          "state.recover_ms" -> recoverMs)
+          "state.root_mb" -> Files.du(new File(root)) / 1048576.0)
       }
       Map("setup_s" -> setupS, "trigger_ms" -> triggerMs,
         "batches" -> batches.map(b => Map("id" -> b.id, "rows" -> b.rows,
           "emit_ms" -> emits.get(b.id), "ranges" -> b.ranges.map(r => Seq(r._1, r._2)))),
-        "bursts" -> bursts, "peak_storage_bytes" -> windows.toSeq,
+        "open_emit_ms" -> openEmit, "burst_emit_ms" -> burstEmits,
+        "peak_storage_bytes" -> windows.toSeq,
         "expected_docs" -> expected.size, "bad_roots" -> Cdc.diff(docs, expected),
-        "docs_sha256" -> Cdc.sha(docs), "layers" -> layers)
+        "docs_sha256" -> Cdc.sha(docs), "layers" -> layers, "durable_layers" -> durableLayers,
+        "buckets" -> buckets)
     } finally {
-      if (query.isActive) query.stop()
+      if (query != null && query.isActive) query.stop()
       spark.streams.removeListener(progress)
     }
   }
 }
 
-/** `neardup`: the near-duplicate pipeline over a generated corpus,
+/** `neardup`: the near-duplicate pipeline over a documents sample,
   * repeated: gram arrays → n-gram Jaccard pairs (τ = 3/5) and MinHash
   * pairs → connected components over the MinHash pairs. */
 final class NearDup(ctx: Ctx) {
@@ -309,9 +325,11 @@ final class NearDup(ctx: Ctx) {
   }
 
   def run(): Map[String, Any] = {
+    // set-up pass: load the corpus, then two pipeline passes as the
+    // warm-up (the JIT still speeds up the second one)
     val ((docs, n), setupS) = setup {
       val d = corpus("main")
-      pipeline(corpus("warm"))
+      (1 to 2).foreach(_ => pipeline(d))
       (d, d.count())
     }
     settle()

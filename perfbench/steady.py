@@ -30,15 +30,17 @@ def main():
         bench = json.load(f)
     names = a.workloads.split(",") if a.workloads else [w["name"] for w in bench["workloads"]]
     bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}
-    report = {}
+    report, infos = {}, {}
     for w in names:
         values = {m: [] for m in bounds}
         for s in seeds(a.seeds):
             cmd = [sys.executable, os.path.join("perfbench", "run.py"), "--workload", w,
                    "--seed", str(s), "--seconds", str(bench["run_seconds"]), "--trace", "0"]
             out = subprocess.run(cmd, capture_output=True, text=True)
-            last = json.loads(out.stdout.strip().splitlines()[-1])
+            lines = out.stdout.strip().splitlines()
+            last = json.loads(lines[-1])
             assert last["correct"] and last["failed"] == 0, (w, s, last)
+            infos.setdefault(w, []).extend(json.loads(x[6:]) for x in lines if x.startswith("info: "))
             for m in bounds:
                 values[m].append(last["metrics"][m]["value"])
             print(w, s, {m: round(v[-1], 3) for m, v in values.items()}, flush=True)
@@ -51,7 +53,7 @@ def main():
                   (w, m, med, (q3 - q1) / med, bounds[m]), flush=True)
     if a.out:
         with open(a.out, "w") as f:
-            json.dump(report, f, indent=1)
+            json.dump({"metrics": report, "info": infos}, f, indent=1)
 
 
 if __name__ == "__main__":
