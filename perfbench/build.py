@@ -3,18 +3,28 @@
 benchmark harness (``perfbench/scala``) with the Scala compiler that ships
 with Spark, into ``.bench_build/perfbench/classes``.
 
-A stamp over every source file skips the compile when nothing changed.
-Run from the repository root: ``python3 perfbench/build.py``.
+The Spark jars are the ones ``build.sbt`` compiles against (its
+``unmanagedBase``). A stamp over every source file skips the compile when
+nothing changed. Run from the repository root: ``python3 perfbench/build.py``.
 """
 import glob
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 import sys
 
-SPARK_JARS = "/opt/spark/jars/*"
 OUT = os.path.join(".bench_build", "perfbench")
+
+
+def spark_jars():
+    """Classpath glob of the Spark jars named by build.sbt's unmanagedBase."""
+    with open("build.sbt") as f:
+        m = re.search(r'unmanagedBase\s*:=\s*file\("([^"]+)"\)', f.read())
+    if not m:
+        raise SystemExit("perfbench: build.sbt names no unmanagedBase (the Spark jars)")
+    return os.path.join(m.group(1), "*")
 
 
 def sources():
@@ -37,15 +47,16 @@ def build():
         with open(p, "rb") as f:
             h.update(f.read())
     stamp = h.hexdigest()
+    jars = spark_jars()
     classes = os.path.join(OUT, "classes")
     stamp_file = os.path.join(OUT, "stamp")
-    cp = os.path.abspath(classes) + ":" + SPARK_JARS
+    cp = os.path.abspath(classes) + ":" + jars
     if os.path.exists(stamp_file) and open(stamp_file).read() == stamp:
         return cp
     shutil.rmtree(OUT, ignore_errors=True)
     os.makedirs(classes)
-    cmd = ["java", "-Xss8m", "-Xmx2g", "-cp", SPARK_JARS, "scala.tools.nsc.Main",
-           "-nowarn", "-d", classes, "-cp", SPARK_JARS] + main + bench
+    cmd = ["java", "-Xss8m", "-Xmx2g", "-cp", jars, "scala.tools.nsc.Main",
+           "-nowarn", "-d", classes, "-cp", jars] + main + bench
     r = subprocess.run(cmd, stdout=sys.stderr, stderr=sys.stderr, timeout=800)
     if r.returncode != 0:
         raise SystemExit("perfbench: compile failed")
