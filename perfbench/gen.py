@@ -12,7 +12,7 @@ corpus. The same seed always gives byte-identical files.
   changelogs in two interleaved batches (the seed assigns each record to
   one) plus one batch of order tombstones (a seeded 1 in 37 of the orders).
 * ``cdc_trickle``: the dump of a seeded subset of the sf0.001 customers
-  (300 orders) with their orders and lineitems and the whole nation and
+  (150 orders) with their orders and lineitems and the whole nation and
   part tables;
   then the separate load generator (``gen.py live``) appends the change mix.
 * ``neardup``: a seeded sample of the sf0.1 documents corpus made of whole
@@ -26,9 +26,9 @@ Two entry points:
   their properties.
 * ``python3 gen.py live <seed> <outdir> <open_s> <rate> <bursts>
   <burst_records>`` is the load generator of ``cdc_trickle``. It appends
-  change records to ``main/topics/<entity>.json`` after the dump, on an
-  open-loop schedule, then writes the catch-up bursts, and coordinates with
-  the engine only through marker files in ``<outdir>/ctl``.
+  change records to ``main/topics/<entity>.json`` after the dump: the
+  catch-up bursts, then the open-loop schedule. It coordinates with the
+  engine only through marker files in ``<outdir>/ctl``.
 """
 import gzip
 import json
@@ -44,7 +44,7 @@ DATA = os.path.join(HERE, "data")
 # Sizes per scale. ``full`` is what the timed runs use; ``smoke`` is the
 # self-check. ``None`` orders means the whole sf0.001 tables.
 SCALES = {
-    "full": {"orders": None, "docs": 300, "trickle_orders": 300},
+    "full": {"orders": None, "docs": 300, "trickle_orders": 150},
     "smoke": {"orders": 100, "docs": 100, "trickle_orders": 60},
 }
 
@@ -369,7 +369,8 @@ class Appender:
     time of every appended pair, by pair index."""
 
     def __init__(self, topic_dir, start):
-        self.files = {e: open(os.path.join(topic_dir, e + ".json"), "a") for e in ENTITIES}
+        self.fds = {e: os.open(os.path.join(topic_dir, e + ".json"), os.O_WRONLY | os.O_APPEND)
+                    for e in ENTITIES}
         self.count = dict(start)
         self.due = {e: {} for e in ENTITIES}
         self.late = []
@@ -382,17 +383,22 @@ class Appender:
                 self.due[e][self.count[e]] = d
             self.count[e] += 1
         for e, parts in chunks.items():
-            self.files[e].write("".join(parts))   # one write: pairs stay whole
-            self.files[e].flush()
+            # One write(2) call per append, unbuffered. A buffered file
+            # splits a large append (a burst) into two calls, and a trigger
+            # that counts lines between them could plan a read of a pair
+            # that is not yet whole.
+            data = "".join(parts).encode()
+            while data:
+                data = data[os.write(self.fds[e], data):]
         if dues and track:
             self.late.append(time.time() * 1000.0 - min(dues))
 
     def close(self):
-        for f in self.files.values():
-            f.close()
+        for fd in self.fds.values():
+            os.close(fd)
 
 
-def wait_for(path, timeout_s=160.0):
+def wait_for(path, timeout_s=150.0):
     end = time.time() + timeout_s
     while not os.path.exists(path):
         if time.time() > end:
@@ -409,8 +415,8 @@ def put(path, obj):
 
 def live(seed, out, open_s, rate, bursts, burst_records):
     """A warm-up append (before the engine starts, so the bootstrap batch
-    reads it with the dump), then the open-loop phase, then the catch-up
-    bursts."""
+    reads it with the dump), then the catch-up bursts, then the open-loop
+    phase."""
     ctl = os.path.join(out, "ctl")
     os.makedirs(ctl, exist_ok=True)
     d = os.path.join(out, "main")
@@ -431,7 +437,29 @@ def live(seed, out, open_s, rate, bursts, burst_records):
     warm = dict(app.count)
     put(os.path.join(ctl, "warm.sent"), warm)
     wait_for(os.path.join(ctl, "go"))
+    # catch-up: each backlog burst lands at once and is timed until it
+    # drains; the next one waits for that. A burst holds only orders
+    # changes (updates, FK flips, tombstone-then-reinsert pairs), so it is
+    # one append to one topic file: a burst spread over several files could
+    # be split between two batches by a trigger that counts the files while
+    # they are being written. The bursts come first so that each one finds
+    # the same number of batches before it: the state's storage grows with
+    # every batch, and the open loop's batch count varies with host speed.
+    idx += 100
+    sent = []
+    for b in range(bursts):
+        recs = []
+        while len(recs) < burst_records:
+            recs += mix.next(idx, entity="orders")
+            idx += 1
+        recs += mix.flush_pending()
+        t_b = now_ms()
+        app.append(recs, [t_b] * len(recs), track=False)
+        sent.append({"t_ms": t_b, "records": len(recs), "counts": dict(app.count)})
+        put(os.path.join(ctl, "burst%d.sent" % b), sent[-1])
+        wait_for(os.path.join(ctl, "burst%d.drained" % b))
     # open loop: record i is due at t0 + i / rate, whatever the engine does
+    idx += 100
     t0 = now_ms()
     n_open = int(open_s * rate)
     i = 0
@@ -447,38 +475,18 @@ def live(seed, out, open_s, rate, bursts, burst_records):
                 dues.append(t0 + i * 1000.0 / rate)
             i += 1
         app.append(recs, dues)
-    # re-inserts still pending go out with the first burst
-    open_counts = dict(app.count)
     late = list(app.late)
-    put(os.path.join(ctl, "open.sent"), open_counts)
-    wait_for(os.path.join(ctl, "open.drained"))
-    # catch-up: each backlog burst lands at once and is timed until it
-    # drains; the next one waits for that. A burst holds only orders
-    # changes (updates, FK flips, tombstone-then-reinsert pairs), so it is
-    # one append to one topic file: a burst spread over several files could
-    # be split between two batches by a trigger that counts the files while
-    # they are being written.
-    base, sent = idx + n_open + 100, []
-    for b in range(bursts):
-        recs = []
-        while len(recs) < burst_records:
-            recs += mix.next(base, entity="orders")
-            base += 1
-        recs += mix.flush_pending()
-        t_b = now_ms()
-        app.append(recs, [t_b] * len(recs), track=False)
-        sent.append({"t_ms": t_b, "records": len(recs), "counts": dict(app.count)})
-        put(os.path.join(ctl, "burst%d.sent" % b), sent[-1])
-        if b + 1 < bursts:
-            wait_for(os.path.join(ctl, "burst%d.drained" % b))
+    # re-inserts still pending go out at once, untimed
+    pending = mix.flush_pending()
+    app.append(pending, [now_ms()] * len(pending), track=False)
     app.close()
     write_final(os.path.join(d, "final"), tables)
     put(os.path.join(out, "live.json"),
-        {"dump_counts": dump, "warm_counts": warm, "open_counts": open_counts,
+        {"dump_counts": dump, "warm_counts": warm, "end_counts": dict(app.count),
          "due_ms": {e: sorted(v.items()) for e, v in app.due.items()},
          "late_ms": late, "bursts": sent, "open_t0_ms": t0, "rate": rate,
          "props": mix.summary()})
-    put(os.path.join(ctl, "done"), dict(app.count))
+    put(os.path.join(ctl, "open.sent"), dict(app.count))
 
 
 if __name__ == "__main__":

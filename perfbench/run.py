@@ -33,7 +33,7 @@ HEAP = "3g"
 # cdc_trickle: open-loop rate (records/s), catch-up bursts and their size,
 # trigger interval, state buckets (0: the memory backend)
 RATE = 20.0
-BURSTS = 2
+BURSTS = 4
 BURST_RECORDS = 400
 TRIGGER_MS = 250
 BUCKETS = 0  # memory backend; ``--buckets N`` runs on a durable backend by hand
@@ -47,10 +47,12 @@ ADD_OPENS = [
 
 
 def cores():
-    """Spark task slots: one core stays free for query planning, the wave
-    pool's job submission and the load generator."""
+    """Spark task slots: two cores stay free for query planning, the wave
+    pool's job submission, the JIT and GC threads and the load generator.
+    With one core free, whole runs were slower or faster at random (burst
+    drains of 1.8 to 2.9 s on five seeds, against 1.7 to 2.3 s)."""
     n = len(os.sched_getaffinity(0))
-    return max(1, min(3, n - 1))
+    return max(1, min(2, n - 2))
 
 
 def quantile(xs, q):
@@ -216,8 +218,8 @@ def trickle_freshness(res, live):
 def e2e_trickle(res, live, buckets):
     """Freshness quantiles over the open-loop records, the median catch-up
     drain rate of the bursts (records / (emission of the batch that ends
-    the drain - burst write)), and the median storage peak of the open-loop
-    and burst windows."""
+    the drain - burst write)), and the median storage peak of the burst
+    and open-loop windows."""
     fresh, used = trickle_freshness(res, live)
     drain_s = [(e - b["t_ms"]) / 1000.0 for e, b in zip(res["burst_emit_ms"], live["bursts"])]
     return ({"throughput_rps": statistics.median(
@@ -229,6 +231,7 @@ def e2e_trickle(res, live, buckets):
              "rate_rps": RATE, "trigger_ms": res["trigger_ms"], "buckets": buckets,
              "burst_records": [b["records"] for b in live["bursts"]],
              "burst_drain_s": [round(d, 3) for d in drain_s],
+             "storage_windows_mb": [round(b / MB, 3) for b in res["peak_storage_bytes"]],
              "batch_rows": [b["rows"] for b in res["batches"]],
              "inputs": live["props"]})
 
@@ -271,9 +274,8 @@ def one_run(cp, workload, seed, seconds, trace, scale="full", buckets=BUCKETS):
         info.update(extra)
         if res["durable_layers"]:
             info["durable_layers"] = res["durable_layers"]
-        # every change record of the timed phase: the open loop and the burst
-        ranges = {e: [live["warm_counts"][e], live["bursts"][-1]["counts"][e]]
-                  for e in gen.ENTITIES}
+        # every change record of the timed phase: the bursts and the open loop
+        ranges = {e: [live["warm_counts"][e], live["end_counts"][e]] for e in gen.ENTITIES}
         attempted = sum(b - a for a, b in ranges.values())
         failed = failed_records(work, "topics", ranges, res["bad_roots"])
         bad = set(res["bad_roots"])

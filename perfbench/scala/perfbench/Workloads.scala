@@ -120,7 +120,7 @@ final class Bootstrap(ctx: Ctx) {
   * the separate load generator (`gen.py live`) through the topic files.
   * The topics start with the table dump and the generator's warm-up
   * append, so the stream's first batch is the bootstrap; it is set-up.
-  * The timed phase is the open-loop phase and the catch-up bursts.
+  * The timed phase is the catch-up bursts, then the open-loop phase.
   * The engine and the generator coordinate only through marker files
   * under `ctl/`. */
 final class Trickle(ctx: Ctx) {
@@ -128,7 +128,7 @@ final class Trickle(ctx: Ctx) {
   import scala.jdk.CollectionConverters._
   private val ctl = new File(args.work, "ctl")
   private val triggerMs = args.opts("trigger-ms").toLong
-  private val deadline = System.nanoTime() + 165L * 1000000000L
+  private val deadline = System.nanoTime() + 150L * 1000000000L
   private val root = file("state")
 
   private def waitFor(what: String)(cond: => Boolean): Unit = {
@@ -212,12 +212,7 @@ final class Trickle(ctx: Ctx) {
       settle()
       startTimed()
       mark("go")
-      val openEmit = drainedAt(counts(new File(ctl, "open.sent")))
-      log("open loop drained")
-      val windows = mutable.ArrayBuffer(probes.storage.window())
-      settle()
-      probes.storage.window()
-      mark("open.drained")
+      val windows = mutable.ArrayBuffer.empty[Long]
       val burstEmits = (0 until args.opts("bursts").toInt).map { b =>
         val emitted = drainedAt(counts(new File(ctl, s"burst$b.sent")))
         windows += probes.storage.window()
@@ -227,7 +222,9 @@ final class Trickle(ctx: Ctx) {
         emitted
       }
       log("bursts drained")
-      counts(new File(ctl, "done"))
+      val openEmit = drainedAt(counts(new File(ctl, "open.sent")))
+      windows += probes.storage.window()
+      log("open loop drained")
       stopTimed()
       query.stop()
       val batches = progress.batches.asScala.toSeq.sortBy(_.id)
@@ -338,7 +335,9 @@ final class NearDup(ctx: Ctx) {
     def rows(rs: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] = rs.toSeq.map(_.toSeq)
     var pairsOut = 0
     var timed = 0.0
-    while (iters.size < 3 || timed < args.seconds) {
+    // at least four iterations, so that the count does not switch between
+    // three and four (and move the median) as the host speed varies
+    while (iters.size < 4 || timed < args.seconds) {
       probes.storage.window()
       val t = System.nanoTime()
       val (jac, mh, comps) = trace.span("iteration")(pipeline(docs))
