@@ -11,115 +11,131 @@ import graft.sources.FixtureReader
   * split records across input partitions with stable offsets. */
 class ChangelogSourceSpec extends AnyFunSuite with SparkSpec {
 
-  private val entity = "playlist"
-  private def path = s"${ReferenceFixtures.root}/topic/$entity.json"
+  import ReferenceFixtures.forEachRoot
 
-  private def readV2(splits: Int = 4) =
+  private val entity = "playlist"
+  private def path(dir: String) = s"$dir/topic/$entity.json"
+
+  private def readV2(dir: String, splits: Int = 4) =
     spark.read.format("graft-changelog")
       .option("keySchema", ReferenceFixtures.keySchema(entity).toDDL)
       .option("valueSchema", ReferenceFixtures.valueSchemas(entity).toDDL)
       .option("splits", splits.toString)
-      .load(path)
+      .load(path(dir))
 
   test("rows match FixtureReader exactly") {
-    val expected = FixtureReader.readTopic(spark, path,
-      ReferenceFixtures.keySchema(entity), ReferenceFixtures.valueSchemas(entity))
-    val got = readV2()
-    assert(got.schema.map(_.name) == Seq("offset", "key", "value"))
-    val e = expected.orderBy("offset").collect().map(_.toString).toSeq
-    val g = got.orderBy("offset").collect().map(_.toString).toSeq
-    assert(g == e)
+    forEachRoot { dir =>
+      val expected = FixtureReader.readTopic(spark, path(dir),
+        ReferenceFixtures.keySchema(entity), ReferenceFixtures.valueSchemas(entity))
+      val got = readV2(dir)
+      assert(got.schema.map(_.name) == Seq("offset", "key", "value"))
+      val e = expected.orderBy("offset").collect().map(_.toString).toSeq
+      val g = got.orderBy("offset").collect().map(_.toString).toSeq
+      assert(g == e)
+    }
   }
 
   test("a scheme-qualified file:/// path reads identically (Hadoop-FS reach)") {
-    // the reader goes through the Hadoop FileSystem API, so the log
-    // path accepts any scheme the session can reach (file://, hdfs://,
-    // s3a://) — asserted here with an explicit file:/// URI producing
-    // byte-identical rows to the bare-path read
-    val qualified = "file://" + path
-    val got = spark.read.format("graft-changelog")
-      .option("keySchema", ReferenceFixtures.keySchema(entity).toDDL)
-      .option("valueSchema", ReferenceFixtures.valueSchemas(entity).toDDL)
-      .load(qualified)
-      .orderBy("offset").collect().map(_.toString).toSeq
-    val bare = readV2().orderBy("offset").collect().map(_.toString).toSeq
-    assert(got == bare && got.nonEmpty)
+    forEachRoot { dir =>
+      // the reader goes through the Hadoop FileSystem API, so the log
+      // path accepts any scheme the session can reach (file://, hdfs://,
+      // s3a://) — asserted here with an explicit file:/// URI producing
+      // byte-identical rows to the bare-path read
+      val qualified = "file://" + path(dir)
+      val got = spark.read.format("graft-changelog")
+        .option("keySchema", ReferenceFixtures.keySchema(entity).toDDL)
+        .option("valueSchema", ReferenceFixtures.valueSchemas(entity).toDDL)
+        .load(qualified)
+        .orderBy("offset").collect().map(_.toString).toSeq
+      val bare = readV2(dir).orderBy("offset").collect().map(_.toString).toSeq
+      assert(got == bare && got.nonEmpty)
+    }
   }
 
   test("tombstones arrive as null values") {
-    val tombs = readV2().where(col("value").isNull).count()
-    val expected = FixtureReader.readTopic(spark, path,
-        ReferenceFixtures.keySchema(entity), ReferenceFixtures.valueSchemas(entity))
-      .where(col("value").isNull).count()
-    assert(tombs == expected && tombs > 0)
+    forEachRoot { dir =>
+      val tombs = readV2(dir).where(col("value").isNull).count()
+      val expected = FixtureReader.readTopic(spark, path(dir),
+          ReferenceFixtures.keySchema(entity), ReferenceFixtures.valueSchemas(entity))
+        .where(col("value").isNull).count()
+      assert(tombs == expected && tombs > 0)
+    }
   }
 
   test("column pruning reaches the scan (nested ReadSchema)") {
-    val pruned = readV2().select(col("value.title"))
-    val readSchema = pruned.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan.readSchema()
-    }.get
-    assert(readSchema.fieldNames.toSeq == Seq("value"), s"got $readSchema")
-    val valueStruct = readSchema("value").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    assert(valueStruct.fieldNames.toSeq == Seq("title"),
-      s"nested pruning missed: ${valueStruct.toDDL}")
-    // and the pruned read still returns correct data
-    val titles = pruned.na.drop().collect().map(_.getString(0)).toSet
-    assert(titles.nonEmpty)
+    forEachRoot { dir =>
+      val pruned = readV2(dir).select(col("value.title"))
+      val readSchema = pruned.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.readSchema()
+      }.get
+      assert(readSchema.fieldNames.toSeq == Seq("value"), s"got $readSchema")
+      val valueStruct = readSchema("value").dataType
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      assert(valueStruct.fieldNames.toSeq == Seq("title"),
+        s"nested pruning missed: ${valueStruct.toDDL}")
+      // and the pruned read still returns correct data
+      val titles = pruned.na.drop().collect().map(_.getString(0)).toSet
+      assert(titles.nonEmpty)
+    }
   }
 
   test("splits partition the log with stable global offsets") {
-    val one = readV2(splits = 1)
-    val many = readV2(splits = 5)
-    assert(many.rdd.getNumPartitions == 5)
-    assert(one.rdd.getNumPartitions == 1)
-    assert(many.orderBy("offset").collect().map(_.toString).toSeq ==
-      one.orderBy("offset").collect().map(_.toString).toSeq)
-    // latest-per-key over the v2 source is partition-count invariant
-    def latest(df: org.apache.spark.sql.DataFrame) =
-      graft.operators.Compaction.latest(
-          df.select(col("offset"), col("key.id").as("id"), col("value")),
-          Seq("id"), "offset")
-        .orderBy("offset").collect().map(_.toString).toSeq
-    assert(latest(many) == latest(one))
+    forEachRoot { dir =>
+      val one = readV2(dir, splits = 1)
+      val many = readV2(dir, splits = 5)
+      assert(many.rdd.getNumPartitions == 5)
+      assert(one.rdd.getNumPartitions == 1)
+      assert(many.orderBy("offset").collect().map(_.toString).toSeq ==
+        one.orderBy("offset").collect().map(_.toString).toSeq)
+      // latest-per-key over the v2 source is partition-count invariant
+      def latest(df: org.apache.spark.sql.DataFrame) =
+        graft.operators.Compaction.latest(
+            df.select(col("offset"), col("key.id").as("id"), col("value")),
+            Seq("id"), "offset")
+          .orderBy("offset").collect().map(_.toString).toSeq
+      assert(latest(many) == latest(one))
+    }
   }
 
   test("offset predicates prune input partitions at planning time") {
-    val all = readV2(splits = 1).count()
-    val filtered = readV2(splits = 8).where(col("offset") >= 5 && col("offset") < 8)
-    val parts = filtered.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.inputRDD.getNumPartitions
-    }.get
-    // 3 records remain -> at most 3 single-record partitions, not 8
-    assert(parts <= 3, s"offset pushdown did not prune partitions: $parts")
-    assert(filtered.count() == math.min(all, 8L) - 5)
-    assert(filtered.select(min(col("offset")), max(col("offset")))
-      .collect()(0).toSeq == Seq(5L, math.min(all, 8L) - 1))
+    forEachRoot { dir =>
+      val all = readV2(dir, splits = 1).count()
+      val filtered = readV2(dir, splits = 8).where(col("offset") >= 5 && col("offset") < 8)
+      val parts = filtered.queryExecution.executedPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.inputRDD.getNumPartitions
+      }.get
+      // 3 records remain -> at most 3 single-record partitions, not 8
+      assert(parts <= 3, s"offset pushdown did not prune partitions: $parts")
+      assert(filtered.count() == math.min(all, 8L) - 5)
+      assert(filtered.select(min(col("offset")), max(col("offset")))
+        .collect()(0).toSeq == Seq(5L, math.min(all, 8L) - 1))
+    }
   }
 
   test("pushed offset bounds carry into the micro-batch stream (catch-up semantics)") {
     import graft.sources.v2.{ChangelogOffset, ChangelogScan, ChangelogInputPartition}
     val schema = graft.sources.v2.ChangelogTable.tableSchema(
       ReferenceFixtures.keySchema(entity), ReferenceFixtures.valueSchemas(entity))
-    val total = readV2(splits = 1).count()
-    assert(total > 8, s"fixture too small for this test: $total")
-    // a scan carrying pushed bounds [5, 8) hands them to its stream:
-    // the offset ledger starts at 5 (no head replay) and tops out at 8
-    val stream = new ChangelogScan(path, schema, splits = 4,
-      minPair = 5L, maxPairExcl = 8L).toMicroBatchStream("unused")
-    assert(stream.initialOffset() == ChangelogOffset(5L))
-    assert(stream.latestOffset() == ChangelogOffset(8L))
-    val parts = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
-      .map(_.asInstanceOf[ChangelogInputPartition])
-    assert(parts.forall(p => p.startPair >= 5L && p.endPair <= 8L))
-    assert(parts.map(p => p.endPair - p.startPair).sum == 3L)
-    // an unbounded scan still starts at the head
-    val unbounded = new ChangelogScan(path, schema, splits = 4).toMicroBatchStream("unused")
-    assert(unbounded.initialOffset() == ChangelogOffset(0L))
-    assert(unbounded.latestOffset() == ChangelogOffset(total))
+    forEachRoot { dir =>
+      val total = readV2(dir, splits = 1).count()
+      assert(total > 8, s"fixture too small for this test: $total")
+      // a scan carrying pushed bounds [5, 8) hands them to its stream:
+      // the offset ledger starts at 5 (no head replay) and tops out at 8
+      val stream = new ChangelogScan(path(dir), schema, splits = 4,
+        minPair = 5L, maxPairExcl = 8L).toMicroBatchStream("unused")
+      assert(stream.initialOffset() == ChangelogOffset(5L))
+      assert(stream.latestOffset() == ChangelogOffset(8L))
+      val parts = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
+        .map(_.asInstanceOf[ChangelogInputPartition])
+      assert(parts.forall(p => p.startPair >= 5L && p.endPair <= 8L))
+      assert(parts.map(p => p.endPair - p.startPair).sum == 3L)
+      // an unbounded scan still starts at the head
+      val unbounded = new ChangelogScan(path(dir), schema, splits = 4).toMicroBatchStream("unused")
+      assert(unbounded.initialOffset() == ChangelogOffset(0L))
+      assert(unbounded.latestOffset() == ChangelogOffset(total))
+    }
   }
 
   test("connector streams drive the IVM engine to golden parity") {

@@ -14,17 +14,19 @@ import ReferenceFixtures._
   * restore story: state/RocksDBState.java:639-708 — a new process
   * reopens the state written by the last committed run).
   *
-  * Shape: replay all reference topic fixtures EXCEPT the final pass
-  * through the durable backend under a temp root, capture every state
-  * table, then stop the SparkContext. Open a brand-new session (new
-  * context, empty catalog, every in-memory checkpoint block gone),
-  * recover purely from disk via [[BucketedParquetBackend.latest]] →
-  * `loadStateTables`, and assert all state tables — documents AND the
-  * JK link / PaK rootmap indices — byte-equal the pre-restart capture.
-  * Then process the final fixture pass on the recovered engine and
-  * assert the finished documents equal the reference goldens for all
-  * three trees: a replay split across a session restart is
-  * indistinguishable from an uninterrupted one.
+  * Shape: replay all topic fixtures EXCEPT the final pass through the
+  * durable backend under a temp root, capture every state table, then
+  * stop the SparkContext. Open a brand-new session (new context, empty
+  * catalog, every in-memory checkpoint block gone), recover purely from
+  * disk via [[BucketedParquetBackend.latest]] → `loadStateTables`, and
+  * assert all state tables — documents AND the JK link / PaK rootmap
+  * indices — byte-equal the pre-restart capture. The restart, the
+  * no-Exchange and the `_SUCCESS` checks run over the in-repo corpus,
+  * and over the reference's when mounted. On the reference corpus, the
+  * final fixture pass then runs on the recovered engine and the
+  * finished documents must equal the reference goldens for all three
+  * trees: a replay split across a session restart is indistinguishable
+  * from an uninterrupted one.
   */
 class DurableStateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -39,29 +41,39 @@ class DurableStateSpec extends AnyFunSuite with BeforeAndAfterAll {
       case _ => QueueingStrategy.Medium
     } else QueueingStrategy.Medium
 
-  val trees: Seq[Relation] =
-    Seq("relations.sample.json", "relations2.sample.json", "relations3.sample.json")
-      .flatMap(f => Relation.parseFile(s"$root/$f"))
+  /** One corpus's restart run: its trees, its own state root, and
+    * what the restart test captured and recovered. */
+  private final class Run(val dir: String) {
+    lazy val trees: Seq[Relation] = relationTrees(dir)
 
-  val stateRoot: String =
-    "file://" + java.nio.file.Files.createTempDirectory("graft_durable_state")
+    lazy val stateRoot: String =
+      "file://" + java.nio.file.Files.createTempDirectory("graft_durable_state")
 
-  private def newEngine(spark: SparkSession): IncrementalDenormalizer =
-    new IncrementalDenormalizer(spark, trees, keyFields, valueSchemas,
-      testFilter, strategy,
-      backend = new BucketedParquetBackend(spark, stateRoot, buckets = 4))
+    def newEngine(spark: SparkSession): IncrementalDenormalizer =
+      new IncrementalDenormalizer(spark, trees, keyFields, valueSchemas,
+        testFilter, strategy,
+        backend = new BucketedParquetBackend(spark, stateRoot, buckets = 4))
 
-  private def logRows(spark: SparkSession): Map[String, Array[Row]] =
-    valueSchemas.keys.map { e =>
-      e -> changelog(spark, e).orderBy("offset").collect()
-    }.toMap
+    def logRows(spark: SparkSession): Map[String, Array[Row]] =
+      valueSchemas.keys.map { e =>
+        e -> changelog(spark, e, dir).orderBy("offset").collect()
+      }.toMap
 
-  private def batchAt(spark: SparkSession, logs: Map[String, Array[Row]],
-      pass: Int): Map[String, DataFrame] =
-    logs.collect { case (e, rows) if pass < rows.length =>
-      e -> spark.createDataFrame(
-        java.util.Arrays.asList(rows(pass)), changelog(spark, e).schema)
-    }
+    def batchAt(spark: SparkSession, logs: Map[String, Array[Row]],
+        pass: Int): Map[String, DataFrame] =
+      logs.collect { case (e, rows) if pass < rows.length =>
+        e -> spark.createDataFrame(
+          java.util.Arrays.asList(rows(pass)), changelog(spark, e, dir).schema)
+      }
+
+    // state captured before the restart, asserted after it
+    var captured: Map[String, Set[Any]] = Map.empty
+    var finalPass: Int = -1
+    var recovered: IncrementalDenormalizer = null
+  }
+
+  private val runsByDir = scala.collection.mutable.Map.empty[String, Run]
+  private def run(dir: String): Run = runsByDir.getOrElseUpdate(dir, new Run(dir))
 
   /** Structural row comparison (binary keys value-compared). */
   private def comparable(v: Any): Any = v match {
@@ -80,20 +92,20 @@ class DurableStateSpec extends AnyFunSuite with BeforeAndAfterAll {
         Option(r.getAs[String]("doc_json"))
     }.toMap
 
-  // state captured before the restart, asserted after it
-  private var captured: Map[String, Set[Any]] = Map.empty
-  private var finalPass: Int = -1
-  private var recovered: IncrementalDenormalizer = null
-
   test("durable state written before a session restart recovers byte-equal in a new session") {
     val sparkA = SparkSpec.session
-    val logs = logRows(sparkA)
-    val passes = logs.values.map(_.length).max
-    finalPass = passes - 1
-    val engineA = newEngine(sparkA)
-    (0 until finalPass).foreach(p => engineA.processBatch(batchAt(sparkA, logs, p)))
-    captured = engineA.stateTables.map { case (n, df) => n -> contents(df) }
-    assert(captured.values.exists(_.nonEmpty), "replay produced no state")
+    val live = roots.map(run)
+    live.foreach { r =>
+      withClue(s"[${r.dir}] ") {
+        val logs = r.logRows(sparkA)
+        val passes = logs.values.map(_.length).max
+        r.finalPass = passes - 1
+        val engineA = r.newEngine(sparkA)
+        (0 until r.finalPass).foreach(p => engineA.processBatch(r.batchAt(sparkA, logs, p)))
+        r.captured = engineA.stateTables.map { case (n, df) => n -> contents(df) }
+        assert(r.captured.values.exists(_.nonEmpty), "replay produced no state")
+      }
+    }
 
     // the restart: the context dies, and with it the catalog and every
     // MEMORY_ONLY checkpoint block — only the parquet generations remain
@@ -102,27 +114,36 @@ class DurableStateSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sparkA.sparkContext.isStopped && (sparkB ne sparkA),
       "expected a genuinely new SparkContext after stop()")
 
-    val gens = BucketedParquetBackend.latest(sparkB, stateRoot)
-    // Tables the engine never persisted (pending sets in immediate /
-    // every-batch drain mode stay empty) legitimately have no on-disk
-    // generation; every table that HELD rows must have one.
-    captured.foreach { case (name, rows) =>
-      if (!gens.contains(name))
-        assert(rows.isEmpty, s"state table $name had rows but no committed generation")
-    }
-    recovered = newEngine(sparkB)
-    recovered.loadStateTables(gens)
-    recovered.stateTables.foreach { case (name, df) =>
-      assert(contents(df) == captured(name), s"state table $name diverged across restart")
+    live.foreach { r =>
+      withClue(s"[${r.dir}] ") {
+        val gens = BucketedParquetBackend.latest(sparkB, r.stateRoot)
+        // Tables the engine never persisted (pending sets in immediate /
+        // every-batch drain mode stay empty) legitimately have no on-disk
+        // generation; every table that HELD rows must have one.
+        r.captured.foreach { case (name, rows) =>
+          if (!gens.contains(name))
+            assert(rows.isEmpty, s"state table $name had rows but no committed generation")
+        }
+        r.recovered = r.newEngine(sparkB)
+        r.recovered.loadStateTables(gens)
+        r.recovered.stateTables.foreach { case (name, df) =>
+          assert(contents(df) == r.captured(name),
+            s"state table $name diverged across restart")
+        }
+      }
     }
   }
 
   test("recovered engine finishes the replay to reference-golden parity") {
     val spark = SparkSpec.session
-    recovered.processBatch(batchAt(spark, logRows(spark), finalPass))
-    trees.flatMap(_.denormalizedName).foreach { name =>
+    val reference = run(root)
+    val goldens = reference.trees.flatMap(_.denormalizedName)
+      .map(name => name -> goldenDocs(name))
+    val recovered = reference.recovered
+    recovered.processBatch(
+      reference.batchAt(spark, reference.logRows(spark), reference.finalPass))
+    goldens.foreach { case (name, golden) =>
       val got = docsOf(recovered, name)
-      val golden = goldenDocs(name)
       assert(got.keySet == golden.keySet,
         s"$name keys differ: extra=${got.keySet.diff(golden.keySet)} missing=${golden.keySet.diff(got.keySet)}")
       golden.foreach { case (k, expected) =>
@@ -139,36 +160,41 @@ class DurableStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("keyed aggregation on a recovered state table plans no Exchange") {
-    val docs = recovered.docs(trees.head.denormalizedName.get)
-    val plan = docs.groupBy("__pk").count().queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"recovered bucketed state table re-shuffled on its own key:\n$plan")
+    forEachRoot { dir =>
+      val r = run(dir)
+      val docs = r.recovered.docs(r.trees.head.denormalizedName.get)
+      val plan = docs.groupBy("__pk").count().queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"recovered bucketed state table re-shuffled on its own key:\n$plan")
+    }
   }
 
   test("recovery skips uncommitted generations (_SUCCESS gating)") {
     // a write that died mid-flight leaves data files but no _SUCCESS;
     // recovery must land on the last COMMITTED generation, not the wreck
     val spark = SparkSpec.session
-    val before = graft.streaming.BucketedParquetBackend.latest(spark, stateRoot)
-    assert(before.nonEmpty)
-    val table = before.keys.find(_.startsWith("snapshot__")).getOrElse(before.keys.head)
-    val goodRows = contents(before(table))
-    val wreck = new org.apache.hadoop.fs.Path(stateRoot, s"$table/g999")
-    spark.range(3).toDF("garbage").write.parquet(wreck.toString)
-    val fs = wreck.getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.delete(new org.apache.hadoop.fs.Path(wreck, "_SUCCESS"), false),
-      "test setup: expected a _SUCCESS marker to remove")
-    val after = graft.streaming.BucketedParquetBackend.latest(spark, stateRoot)
-    assert(contents(after(table)) == goodRows,
-      "recovery read an uncommitted generation")
+    forEachRoot { dir =>
+      val stateRoot = run(dir).stateRoot
+      val before = graft.streaming.BucketedParquetBackend.latest(spark, stateRoot)
+      assert(before.nonEmpty)
+      val table = before.keys.find(_.startsWith("snapshot__")).getOrElse(before.keys.head)
+      val goodRows = contents(before(table))
+      val wreck = new org.apache.hadoop.fs.Path(stateRoot, s"$table/g999")
+      spark.range(3).toDF("garbage").write.parquet(wreck.toString)
+      val fs = wreck.getFileSystem(spark.sessionState.newHadoopConf())
+      assert(fs.delete(new org.apache.hadoop.fs.Path(wreck, "_SUCCESS"), false),
+        "test setup: expected a _SUCCESS marker to remove")
+      val after = graft.streaming.BucketedParquetBackend.latest(spark, stateRoot)
+      assert(contents(after(table)) == goodRows,
+        "recovery read an uncommitted generation")
+    }
   }
 
   override def afterAll(): Unit = {
-    val dir = new java.io.File(new java.net.URI(stateRoot))
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete()
     }
-    rm(dir)
+    runsByDir.values.foreach(r => rm(new java.io.File(new java.net.URI(r.stateRoot))))
   }
 }

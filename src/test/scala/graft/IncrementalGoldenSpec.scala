@@ -16,7 +16,9 @@ import ReferenceFixtures._
   * compare every tree's final documents to the reference goldens.
   *
   * Also proves Q-INCR: with the default strategy (no shedding), the
-  * incremental final state equals a from-scratch batch run.
+  * incremental final state equals a from-scratch batch run; Q-INCR and
+  * backup/restore run over the in-repo corpus, and over the reference's
+  * when mounted ([[ReferenceFixtures.forEachRoot]]).
   */
 class IncrementalGoldenSpec extends SparkSpec {
 
@@ -30,27 +32,40 @@ class IncrementalGoldenSpec extends SparkSpec {
       case _ => QueueingStrategy.Medium
     } else QueueingStrategy.Medium
 
-  lazy val trees: Seq[Relation] =
-    Seq("relations.sample.json", "relations2.sample.json", "relations3.sample.json")
-      .flatMap(f => Relation.parseFile(s"$root/$f"))
+  /** One fixture corpus: its relation trees and per-entity changelog
+    * rows (materialized once), and its shedding replay. */
+  final class Corpus(val dir: String) {
+    lazy val trees: Seq[Relation] = relationTrees(dir)
 
-  /** Per-entity changelog rows, materialized once. */
-  lazy val logs: Map[String, Array[Row]] =
-    valueSchemas.keys.map { e =>
-      e -> changelog(spark, e).orderBy("offset").collect()
-    }.toMap
+    lazy val logs: Map[String, Array[Row]] =
+      valueSchemas.keys.map { e =>
+        e -> changelog(spark, e, dir).orderBy("offset").collect()
+      }.toMap
 
-  def replay(strategy: QueueingStrategy,
+    /** The shedding replay runs against the DURABLE bucketed-parquet
+      * backend: every assertion on it (golden docs, JK/PaK indices,
+      * backup/restore, invariants) exercises disk-backed state — the
+      * deployment shape — not just the in-memory bench envelope. */
+    lazy val durableEngine: IncrementalDenormalizer = replay(this, testStrategy,
+      new graft.streaming.BucketedParquetBackend(spark,
+        "file://" + java.nio.file.Files.createTempDirectory("graft_golden_state"),
+        buckets = 4))
+  }
+
+  private val corpora = scala.collection.mutable.Map.empty[String, Corpus]
+  def corpusAt(dir: String): Corpus = corpora.getOrElseUpdate(dir, new Corpus(dir))
+
+  def replay(c: Corpus, strategy: QueueingStrategy,
       backend: graft.streaming.StateBackend = graft.streaming.StateBackend.Memory)
       : IncrementalDenormalizer = {
     val engine = new IncrementalDenormalizer(
-      spark, trees, keyFields, valueSchemas, testFilter, strategy,
+      spark, c.trees, keyFields, valueSchemas, testFilter, strategy,
       backend = backend)
-    val passes = logs.values.map(_.length).max
+    val passes = c.logs.values.map(_.length).max
     (0 until passes).foreach { pass =>
-      val batch = logs.collect { case (e, rows) if pass < rows.length =>
+      val batch = c.logs.collect { case (e, rows) if pass < rows.length =>
         e -> spark.createDataFrame(
-          java.util.Arrays.asList(rows(pass)), changelog(spark, e).schema)
+          java.util.Arrays.asList(rows(pass)), changelog(spark, e, c.dir).schema)
       }
       engine.processBatch(batch)
     }
@@ -63,14 +78,8 @@ class IncrementalGoldenSpec extends SparkSpec {
         Option(r.getAs[String]("doc_json"))
     }.toMap
 
-  /** The golden replay runs against the DURABLE bucketed-parquet
-    * backend: every golden assertion below (docs, JK/PaK indices,
-    * backup/restore, invariants) exercises disk-backed state — the
-    * deployment shape — not just the in-memory bench envelope. */
-  lazy val goldenEngine: IncrementalDenormalizer = replay(testStrategy,
-    new graft.streaming.BucketedParquetBackend(spark,
-      "file://" + java.nio.file.Files.createTempDirectory("graft_golden_state"),
-      buckets = 4))
+  /** The reference corpus's replay, compared to its goldens below. */
+  def goldenEngine: IncrementalDenormalizer = corpusAt(root).durableEngine
 
   def checkGolden(name: String): Unit = {
     val got = docsOf(goldenEngine, name)
@@ -165,42 +174,49 @@ class IncrementalGoldenSpec extends SparkSpec {
   }
 
   test("state backup/restore round-trips and invariants hold") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_state").toString
-    try {
-      assert(graft.streaming.StateOps.verifyState(goldenEngine).isEmpty)
-      graft.streaming.StateOps.backup(goldenEngine, tmp)
-      val fresh = new graft.streaming.IncrementalDenormalizer(
-        spark, trees, keyFields, valueSchemas, testFilter, testStrategy)
-      graft.streaming.StateOps.restore(fresh, tmp)
-      trees.flatMap(_.denormalizedName).foreach { name =>
-        assert(docsOf(fresh, name) == docsOf(goldenEngine, name), s"$name docs diverged")
-      }
-      // point lookup against restored state
-      val rec = fresh.readByPk("user", Seq(1234L))
-      assert(rec.exists(_.getAs[String]("user_name") == "Suzy"))
-      assert(fresh.readByPk("user", Seq(999999L)).isEmpty)
-      val m = fresh.metrics
-      assert(m("docs_live") > 0 && m("snapshot_rows") > 0)
-    } finally graft.streaming.StateOps.deleteState(tmp)
+    forEachRoot { dir =>
+      val c = corpusAt(dir)
+      val engine = c.durableEngine
+      val tmp = java.nio.file.Files.createTempDirectory("graft_state").toString
+      try {
+        assert(graft.streaming.StateOps.verifyState(engine).isEmpty)
+        graft.streaming.StateOps.backup(engine, tmp)
+        val fresh = new graft.streaming.IncrementalDenormalizer(
+          spark, c.trees, keyFields, valueSchemas, testFilter, testStrategy)
+        graft.streaming.StateOps.restore(fresh, tmp)
+        c.trees.flatMap(_.denormalizedName).foreach { name =>
+          assert(docsOf(fresh, name) == docsOf(engine, name), s"$name docs diverged")
+        }
+        // point lookup against restored state
+        val rec = fresh.readByPk("user", Seq(1234L))
+        assert(rec.exists(_.getAs[String]("user_name") == "Suzy"))
+        assert(fresh.readByPk("user", Seq(999999L)).isEmpty)
+        val m = fresh.metrics
+        assert(m("docs_live") > 0 && m("snapshot_rows") > 0)
+      } finally graft.streaming.StateOps.deleteState(tmp)
+    }
   }
 
   test("Q-INCR: incremental with default strategy converges to batch result") {
-    val engine = replay(QueueingStrategy.allMedium)
-    val snapshots: Map[String, DataFrame] = valueSchemas.keys.map { e =>
-      e -> Compaction.snapshot(
-        Compaction.compact(changelog(spark, e), e, keyFields(e), testFilter))
-    }.toMap
-    trees.foreach { tree =>
-      val name = tree.denormalizedName.get
-      val batchDocs = Denormalize.documents(tree, snapshots, keyFields)
-        .select(col("__pk"), col("doc_json")).collect()
-        .map(r => BigInt(1, r.getAs[Array[Byte]]("__pk")).toLong ->
-          r.getAs[String]("doc_json")).toMap
-      val incrDocs = docsOf(engine, name).collect { case (k, Some(j)) => k -> j }
-      assert(incrDocs.keySet == batchDocs.keySet,
-        s"$name live keys differ: incr=${incrDocs.keySet} batch=${batchDocs.keySet}")
-      incrDocs.foreach { case (k, j) =>
-        assert(normalizeJson(j) == normalizeJson(batchDocs(k)), s"$name/$k diverged")
+    forEachRoot { dir =>
+      val c = corpusAt(dir)
+      val engine = replay(c, QueueingStrategy.allMedium)
+      val snapshots: Map[String, DataFrame] = valueSchemas.keys.map { e =>
+        e -> Compaction.snapshot(
+          Compaction.compact(changelog(spark, e, dir), e, keyFields(e), testFilter))
+      }.toMap
+      c.trees.foreach { tree =>
+        val name = tree.denormalizedName.get
+        val batchDocs = Denormalize.documents(tree, snapshots, keyFields)
+          .select(col("__pk"), col("doc_json")).collect()
+          .map(r => BigInt(1, r.getAs[Array[Byte]]("__pk")).toLong ->
+            r.getAs[String]("doc_json")).toMap
+        val incrDocs = docsOf(engine, name).collect { case (k, Some(j)) => k -> j }
+        assert(incrDocs.keySet == batchDocs.keySet,
+          s"$name live keys differ: incr=${incrDocs.keySet} batch=${batchDocs.keySet}")
+        incrDocs.foreach { case (k, j) =>
+          assert(normalizeJson(j) == normalizeJson(batchDocs(k)), s"$name/$k diverged")
+        }
       }
     }
   }

@@ -5,16 +5,48 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
+import graft.core.Relation
 import graft.operators.Filters.{FilterMode, RecordFilter}
 import graft.sources.FixtureReader
 
-/** Schemas, filter, and loaders for the reference's test corpus
-  * (/root/reference/test-resources — pure-JSON fixtures reused
-  * verbatim; formats documented in /root/repo/FIXTURES.md).
+/** Schemas, filter, and loaders for the two fixture corpora, both in
+  * the reference's pure-JSON layout (`relations*.sample.json`,
+  * `topic/<entity>.json`; formats and edge cases in FIXTURES.md):
+  *
+  *  - [[corpus]]: the hand-written corpus committed under
+  *    `src/test/resources/fixtures`, read from the test classpath. The
+  *    property tests (RelationSpec; ChangelogSourceSpec's reader tests;
+  *    IncrementalGoldenSpec's Q-INCR and backup/restore; StreamingSpec's
+  *    streaming-equals-batch; DurableStateSpec's restart, no-Exchange
+  *    and `_SUCCESS` tests) always run over it, and again over [[root]]
+  *    when that is mounted ([[forEachRoot]]).
+  *  - [[root]]: the reference's own corpus, with its golden documents
+  *    and JK/PaK index files. The golden-parity tests (DenormalizeGoldenSpec;
+  *    IncrementalGoldenSpec's golden and index tests; ChangelogSourceSpec's
+  *    connector-to-golden test; DurableStateSpec's recovered-replay
+  *    golden test) read only this root, and fail where it is absent.
   */
 object ReferenceFixtures {
 
   val root = "/root/reference/test-resources"
+
+  /** Directory of the in-repo corpus on the test classpath. */
+  lazy val corpus: String = {
+    val url = getClass.getResource("/fixtures/relations.sample.json")
+    require(url != null && url.getProtocol == "file",
+      s"in-repo fixture corpus not on the classpath as a directory: $url")
+    java.nio.file.Paths.get(url.toURI).getParent.toString
+  }
+
+  /** The roots a property test runs over: the in-repo corpus, then the
+    * reference corpus when its directory exists. */
+  def roots: Seq[String] =
+    corpus +: Seq(root).filter(d => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
+
+  /** Run a property test's body over each of [[roots]]; a failure names
+    * the root it failed on. */
+  def forEachRoot(body: String => Unit): Unit =
+    roots.foreach(dir => org.scalatest.Assertions.withClue(s"[$dir] ")(body(dir)))
 
   private def s(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t) })
@@ -72,9 +104,14 @@ object ReferenceFixtures {
       }
   }
 
+  /** The three relation trees of a fixture root, in file order. */
+  def relationTrees(dir: String): Seq[Relation] =
+    Seq("relations.sample.json", "relations2.sample.json", "relations3.sample.json")
+      .flatMap(f => Relation.parseFile(s"$dir/$f"))
+
   /** Load one entity's topic fixture as a changelog DataFrame. */
-  def changelog(spark: SparkSession, entity: String): DataFrame =
-    FixtureReader.readTopic(spark, s"$root/topic/$entity.json",
+  def changelog(spark: SparkSession, entity: String, dir: String = root): DataFrame =
+    FixtureReader.readTopic(spark, s"$dir/topic/$entity.json",
       keySchema(entity), valueSchemas(entity))
 
   private val mapper = new ObjectMapper()

@@ -8,9 +8,10 @@ import graft.operators.{Compaction, Denormalize}
 import graft.streaming.StreamRunner
 import ReferenceFixtures._
 
-/** End-to-end Structured Streaming test: feed the reference's topic
-  * fixtures through a MemoryStream as a unified changelog in several
-  * micro-batches; the final streaming-maintained documents must equal
+/** End-to-end Structured Streaming test: feed the topic fixtures (the
+  * in-repo corpus, and the reference's when mounted) through a
+  * MemoryStream as a unified changelog in several micro-batches; the
+  * final streaming-maintained documents must equal
   * a from-scratch batch run (the reference's core guarantee,
   * README.md:17-21).
   */
@@ -19,50 +20,51 @@ class StreamingSpec extends SparkSpec {
   test("streaming foreachBatch denormalization converges to batch result") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    forEachRoot { dir =>
+      val tree = Relation.parseFile(s"$dir/relations2.sample.json").head // player ⟕ user
+      val entities = Seq("player", "user")
 
-    val tree = Relation.parseFile(s"$root/relations2.sample.json").head // player ⟕ user
-    val entities = Seq("player", "user")
-
-    // unified changelog rows (entity, offset, key_json, value_json)
-    val rows: Seq[(String, Long, String, String)] = entities.flatMap { e =>
-      val lines = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get(s"$root/topic/$e.json")).toArray(Array.empty[String])
-      lines.grouped(2).zipWithIndex.collect {
-        case (Array(k, v), i) => (e, i.toLong, k, if (v.trim.isEmpty) null else v)
+      // unified changelog rows (entity, offset, key_json, value_json)
+      val rows: Seq[(String, Long, String, String)] = entities.flatMap { e =>
+        val lines = java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get(s"$dir/topic/$e.json")).toArray(Array.empty[String])
+        lines.grouped(2).zipWithIndex.collect {
+          case (Array(k, v), i) => (e, i.toLong, k, if (v.trim.isEmpty) null else v)
+        }
       }
-    }
 
-    val stream = MemoryStream[(String, Long, String, String)]
-    val changelogStream = stream.toDF()
-      .toDF("entity", "offset", "key_json", "value_json")
+      val stream = MemoryStream[(String, Long, String, String)]
+      val changelogStream = stream.toDF()
+        .toDF("entity", "offset", "key_json", "value_json")
 
-    // 3 micro-batches
-    val chunks = rows.grouped(math.max(rows.size / 3, 1)).toSeq
-    chunks.foreach(stream.addData(_))
+      // 3 micro-batches
+      val chunks = rows.grouped(math.max(rows.size / 3, 1)).toSeq
+      chunks.foreach(stream.addData(_))
 
-    val (engine, query) = StreamRunner.start(
-      spark, changelogStream, Seq(tree), keyFields,
-      entities.map(e => e -> keySchema(e)).toMap,
-      entities.map(e => e -> valueSchemas(e)).toMap,
-      testFilter)
-    query.awaitTermination(120000)
+      val (engine, query) = StreamRunner.start(
+        spark, changelogStream, Seq(tree), keyFields,
+        entities.map(e => e -> keySchema(e)).toMap,
+        entities.map(e => e -> valueSchemas(e)).toMap,
+        testFilter)
+      query.awaitTermination(120000)
 
-    val streamed = engine.docs("DenormalizedPlayer").where(!col("__deleted"))
-      .collect().map(r => BigInt(1, r.getAs[Array[Byte]]("__pk")).toLong ->
-        r.getAs[String]("doc_json")).toMap
+      val streamed = engine.docs("DenormalizedPlayer").where(!col("__deleted"))
+        .collect().map(r => BigInt(1, r.getAs[Array[Byte]]("__pk")).toLong ->
+          r.getAs[String]("doc_json")).toMap
 
-    val snapshots = entities.map { e =>
-      e -> Compaction.snapshot(
-        Compaction.compact(changelog(spark, e), e, keyFields(e), testFilter))
-    }.toMap
-    val batch = Denormalize.documents(tree, snapshots, keyFields)
-      .select(col("__pk"), col("doc_json")).collect()
-      .map(r => BigInt(1, r.getAs[Array[Byte]]("__pk")).toLong ->
-        r.getAs[String]("doc_json")).toMap
+      val snapshots = entities.map { e =>
+        e -> Compaction.snapshot(
+          Compaction.compact(changelog(spark, e, dir), e, keyFields(e), testFilter))
+      }.toMap
+      val batch = Denormalize.documents(tree, snapshots, keyFields)
+        .select(col("__pk"), col("doc_json")).collect()
+        .map(r => BigInt(1, r.getAs[Array[Byte]]("__pk")).toLong ->
+          r.getAs[String]("doc_json")).toMap
 
-    assert(streamed.keySet == batch.keySet)
-    streamed.foreach { case (k, j) =>
-      assert(normalizeJson(j) == normalizeJson(batch(k)), s"doc $k diverged")
+      assert(streamed.keySet == batch.keySet)
+      streamed.foreach { case (k, j) =>
+        assert(normalizeJson(j) == normalizeJson(batch(k)), s"doc $k diverged")
+      }
     }
   }
 
