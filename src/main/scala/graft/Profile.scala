@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level timing probe for the bench hotspots: times each
@@ -63,54 +63,6 @@ object Profile {
     spark.sqlContext.clearCache(); System.gc()
     time("minhash pairs again") {
       Dedup.minhashPairs(gramsCp, "doc_id", 3, 5).count()
-    }
-    // ---- ngramJaccardPairs sub-stages (q_dedup_ngram) ----
-    locally {
-      import org.apache.spark.sql.types.{IntegerType, LongType}
-      val (tauNum, tauDen) = (3L, 5L)
-      val g = gramsCp
-        .select(col("doc_id").as("id"), explode(col("grams")).as("gram"))
-        .localCheckpoint(true)
-      time("ngram: g ckpt read") { g.count() }
-      val dfs = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      time("ngram: dfs") { dfs.count() }
-      val plen = (n: org.apache.spark.sql.Column) =>
-        (n - floor((n * tauNum + (tauDen - 1)) / tauDen) + 1).cast(IntegerType)
-      val docPrefix = g.join(dfs, "gram")
-        .groupBy("id")
-        .agg(collect_list(struct(col("df"), col("gram"))).as("gs"))
-        .select(col("id"), size(col("gs")).cast(LongType).as("n"),
-          slice(sort_array(col("gs")), lit(1),
-            plen(size(col("gs")).cast(LongType)))
-            .getField("gram").as("pfx"))
-        .localCheckpoint(true)
-      time("ngram: docPrefix") { docPrefix.count() }
-      val ranked = docPrefix
-        .select(col("id"), col("n"), explode(col("pfx")).as("gram"))
-        .select(col("id"), col("n"), xxhash64(col("gram")).as("gh"))
-      val a = ranked.select(col("id").as("doc_a"), col("gh"), col("n").as("na"))
-      val b = ranked.select(col("id").as("doc_b"), col("gh"), col("n").as("nb"))
-      val suffix = (n: org.apache.spark.sql.Column) =>
-        floor((n * tauNum + (tauDen - 1)) / tauDen) - 1
-      val cands = a.join(b, Seq("gh"))
-        .where(col("doc_a") < col("doc_b") &&
-          col("nb") * tauDen >= col("na") * tauNum &&
-          col("na") * tauDen >= col("nb") * tauNum)
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("cnt"),
-          first(col("na")).as("na"), first(col("nb")).as("nb"))
-        .where((col("cnt") + least(suffix(col("na")), suffix(col("nb")))) *
-          (tauNum + tauDen) >= (col("na") + col("nb")) * tauNum)
-        .select("doc_a", "doc_b")
-      time("ngram: cands") { cands.count() }
-      time("ngram: full") {
-        // denseUniverseMax = 0 pins the PREFIX path — the one the
-        // sub-stage probes above decompose. A dense-universe profile
-        // corpus would otherwise route to the bitmap tier and the
-        // breakdown would no longer sum to the measured full run.
-        Dedup.ngramJaccardPairs(gramsCp, "doc_id", 3, 5,
-          denseUniverseMax = 0).count()
-      }
     }
     // ---- q_dedup_keep_quality / q_golden_record front (r17 §8) ----
     // Both queries ride minhashPairs + connectedComponents and then do

@@ -1,10 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.BloomBridge
 import org.apache.spark.sql.types._
 import graft.core.Ckpt.CkptOps
+import graft.functions.{BitmapExpr, SortedIntersectExpr}
 
 /** Deduplication operators for training-data pipelines: exact hashing,
   * n-gram Jaccard similarity join, MinHash+LSH, and SimHash.
@@ -178,6 +180,11 @@ object Dedup {
     * and the final J ≥ τ test are exact integer arithmetic (bit-equal
     * in any engine).
     *
+    * On a dense gram universe the router runs the [[overlapJoin]]
+    * bitmap tiers instead (routes J1, J2 in DEDUP_ROUTER.md); τ = 0
+    * never routes there, since the dense scans pair ALL docs and the
+    * prefix path only docs sharing ≥ 1 gram.
+    *
     * @return (doc_a, doc_b, jaccard) with doc_a < doc_b, J ≥ τ
     */
   def ngramJaccardPairs(
@@ -197,99 +204,36 @@ object Dedup {
       .select(col(idCol).as("id"), explode(col("grams")).as("gram"))
       .graftCkptMem()
     val dfs = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    // DENSE-UNIVERSE route — the containment router's adjudicated
-    // pattern (see [[containmentPairs]]) applied to symmetric Jaccard,
-    // decided by the same ONE driver scalar (dictionary size — layout
-    // metadata, not data) under the operator's eager contract. On a
-    // bounded vocabulary no gram is rare, so the prefix argument
-    // collapses: candidates approach all-pairs MATERIALIZED through
-    // the gh-keyed self-join + 5.8M-group count aggregate (measured
-    // 4.5 s of q_dedup_ngram's 8.1 s at sf0.1, where U = 2 041), while
-    // the same pair space as bitmaps is popcount(AND) inside
-    // whole-stage codegen with zero shuffle (broadcast tier) or
-    // component-blocked linear shuffle (Σ|block|² budget tier, one
-    // giant-component corpus ⇒ honest fallback to the prefix path).
-    // τ = 0 never routes: the dense scans pair ALL docs, the prefix
-    // path only docs sharing ≥ 1 gram — at τ > 0 both sets coincide.
-    // Cross-path value equality is pinned in DedupSpec and the routed
-    // query stays oracle-gated (the oracle replays plain exact SQL).
-    // The dense route probes and consumes a CHECKPOINTED copy of the
-    // df table; the prefix path below keeps the LAZY aggregate — its
-    // plan must stay byte-identical to the pre-router one (measured:
-    // feeding the prefix join a checkpointed dfs regressed the sf1
-    // prefix run ~2.5×; a fall-through to prefix costs one re-derived
-    // df aggregate over the checkpointed g, ~1.7 s at sf1, instead).
+    // The dense tiers read a CHECKPOINTED df table; the prefix path
+    // keeps the lazy aggregate (DEDUP_ROUTER.md, "Lazy df table").
     if (denseUniverseMax > 0 && tauNum > 0) {
       val dfsCp = dfs.graftCkptMem()
       val universe = dfsCp.count()
       if (universe <= denseUniverseMax) {
         val nDocs = g.select("id").distinct().count()
-        if (nDocs <= pairScanMaxDocs)
-          return jaccardDense(g, dfsCp, universe, tauNum, tauDen, None)
-        // The blocked tier is attempted only while its WORST CASE
-        // (one giant component, Σ|block|² = nDocs²) fits the pair
-        // budget — under that bound ANY component structure is
-        // affordable, so no Σ|block|² probe is needed. Past the bound
-        // the router goes STRAIGHT to the prefix path below rather
-        // than paying a corpus-wide connected-components probe first:
-        // unlike containment — whose prefix path detonates on dense
-        // corpora, making an exact Σ|block|² probe worth a CC pass —
-        // Jaccard's prefix path stays alive (symmetric size filter +
-        // count bound), and an entangled corpus (the r14 rotation
-        // class) turns the probe into pure overhead. Measured (sf1
-        // rotation, 50k docs, this round's sweep): probe-then-
-        // fallback 44.7 s vs 27.9 s for the direct prefix path.
-        // division form, not nDocs * nDocs: the square overflows Long
-        // past ~3.0e9 docs, going negative and wrongly ADMITTING the
-        // blocked tier at a scale where it cannot work (nDocs > 0 here
-        // — this branch requires nDocs > pairScanMaxDocs ≥ 0)
-        if (nDocs <= blockPairBudget / nDocs)
-          return jaccardDense(g, dfsCp, universe, tauNum, tauDen,
-            Some(jaccardGramComponents(g)))
+        val bound = jaccardBound(tauNum, tauDen)
+        if (nDocs <= pairScanMaxDocs) // J1
+          return overlapJoin(docSets(g, dfsCp, Some(universe)), AllPairs, bound)
+        // J2 while nDocs² fits the budget (DEDUP_ROUTER.md: no
+        // Σ|block|² probe here); division form, because the square
+        // overflows Long past ~3.0e9 docs (nDocs > 0 on this branch)
+        if (nDocs <= blockPairBudget / nDocs) {
+          val comp = gramComponents(g)
+          return overlapJoin(docSets(g, dfsCp, Some(universe)),
+            Blocked(comp), bound)
+        }
       }
-      // DENSE-BUT-WIDE universes (no rare grams, U past the bitmap
-      // cap) also fall through to prefix — DELIBERATELY. r17 built
-      // and measured the mirror of containment's sorted-gid-array
-      // blocked tier here (component-blocked salted scan, codegen
-      // merge-intersect, same nDocs² budget) and the tier lost
-      // catastrophically on its own design regime (graft.
-      // SweepJaccardWide, 9-symbol 5-gram corpus, U = 59 049,
-      // p10(df) ≫ 8): 10 000 docs routed 732/746 s vs 22.3/22.1 s on
-      // the forced prefix path (33×), 1 000 docs 8.9 vs 3.4 s.
-      // Unlike containment — whose asymmetric prefix filter
-      // detonates on dense corpora, making the array tier a rescue —
-      // Jaccard's symmetric size + ppjoin count bound keeps prefix
-      // candidates near the true pair count, while the blocked scan
-      // must stream BOTH full gid arrays through every joined pair
-      // row (~16 KB/row at 2 000-gram docs × nDocs²/2 pairs). The
-      // prefix path below is the measured winner for this regime,
-      // not a fallback of last resort.
+      // dense-but-wide universes fall through to prefix on purpose:
+      // DEDUP_ROUTER.md row J4, measured in BENCH_AB_r17.md
     }
-    // Per-doc prefix in ONE keyed aggregation: collect (df, gram),
-    // sort by the global (df, gram) order, slice to the prefix length
-    // n - ceil(tau*n) + 1 (ceil(a/b) = (a + b - 1) div b). This
-    // replaces a row_number window (sort shuffle) plus a separate
-    // per-doc size aggregation and its join — measured 3.9s → 2.6s at
-    // sf0.1, byte-identical prefix sets — and yields (id, n) for the
-    // verify for free. The doc-level result is tiny (one row per doc,
-    // prefix ≈ 0.3·n grams), so it checkpoints cheaply and both join
-    // sides below re-derive only a posexplode of it.
-    val plen = (n: Column) =>
-      (n - floor((n * tauNum + (tauDen - 1)) / tauDen) + 1).cast(IntegerType)
-    val docPrefix = g.join(dfs, "gram")
-      .groupBy("id")
-      .agg(collect_list(struct(col("df"), col("gram"))).as("gs"))
-      .select(col("id"), size(col("gs")).cast(LongType).as("n"),
-        slice(sort_array(col("gs")), lit(1), plen(size(col("gs")).cast(LongType)))
-          .getField("gram").as("pfx"))
-      .graftCkptMem()
-    val sizes = docPrefix.select(col("id"), col("n"))
+    val docPfx = docPrefix(g, dfs, tauNum, tauDen)
+    val sizes = docPfx.select(col("id"), col("n"))
     // The self-join keys on xxhash64(gram), not the gram string: a
     // 64-bit hash compares/hashes faster and shuffles fewer bytes. A
     // collision can only ADD candidate rows (cnt inflation makes the
     // count bound keep MORE pairs, never fewer) and the verify is
     // exact on real grams — completeness and results are unaffected.
-    val ranked = docPrefix
+    val ranked = docPfx
       .select(col("id"), col("n"), explode(col("pfx")).as("gram"))
       .select(col("id"), col("n"), xxhash64(col("gram")).as("gh"))
     val a = ranked.select(col("id").as("doc_a"), col("gh"), col("n").as("na"))
@@ -300,15 +244,8 @@ object Dedup {
     // ≥ ceil(τ/(1+τ)·(na+nb)), i.e. ≥ num·(na+nb)/(num+den). All
     // integer arithmetic — candidates drop from O(pairs sharing any
     // rare gram) to nearly the true pair count before verification.
-    // Counter-experiments (sf0.1, 5.8M pair groups → 255 after this
-    // bound): ppjoin's POSITIONAL first-match bound kept 3.9M pairs
-    // alone and 255/255 combined — zero extra pruning on shingle sets
-    // (near-uniform doc sizes make min(suffix) ≈ the positional
-    // remainder); the ASYMMETRIC indexing prefix (small side indexes
-    // 0.176·n grams) cut join rows 35M → 19M but invalidates this
-    // count bound — an uncounted shared gram may sit outside either
-    // side's region, so only the (useless here) positional bound
-    // remains valid and verify explodes. Both rejected on measurement.
+    // The positional and asymmetric-prefix variants were measured and
+    // rejected (DEDUP_ROUTER.md, "Jaccard count filter").
     val alphaNum = tauNum
     val alphaDen = tauNum + tauDen
     val suffix = (n: Column) =>
@@ -327,18 +264,6 @@ object Dedup {
     jaccardVerify(cands, g, sizes, tauNum, tauDen)
   }
 
-  /** Exact Jaccard of candidate pairs from full gram sets; the ≥ τ
-    * test is integer-exact: i/(na+nb-i) ≥ num/den ⟺
-    * i·den ≥ num·(na+nb-i).
-    *
-    * Counter-experiment (sf0.1, 46k MinHash candidates): computing the
-    * intersection as a per-pair `array_intersect` over the two gram
-    * ARRAYS measured 6.9 s vs 4.4 s for this exploded shape. A doc
-    * appears in ~30 candidate pairs, so the array form copies every
-    * ~30 KB gram array into each of its pairs (~2.7 GB through two
-    * joins) while the exploded rows here total ~240 MB — exploded +
-    * pair-keyed count is the LESS shuffle-heavy form whenever docs
-    * recur across candidates. */
   /** ASYMMETRIC containment pairs: ordered (src, dst) where
     * |grams(src) ∩ grams(dst)| / |grams(src)| ≥ τ — the quote /
     * extraction / subset-duplication detector that symmetric Jaccard
@@ -355,6 +280,11 @@ object Dedup {
     * is only ever walked for a gram that ranks into some doc's rarest
     * slice — a stopgram never does. Verification is exact integer
     * arithmetic on the true intersection (i·den ≥ num·n_src).
+    *
+    * On a DENSE corpus (bounded vocabulary, or no rare grams) the
+    * prefix argument collapses — candidates approach all pairs — and
+    * the router runs the [[overlapJoin]] tiers instead (routes C1–C4
+    * in DEDUP_ROUTER.md).
     *
     * EAGER at call time — not a lazy plan builder: the exploded gram
     * table and its document frequencies localCheckpoint immediately
@@ -388,96 +318,34 @@ object Dedup {
       .graftCkptMem()
     val dfs = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .graftCkptMem()
-    // ADAPTIVE representation, decided by ONE driver scalar (the
-    // dictionary size — layout metadata, not data). Prefix filtering
-    // is the scale path for real corpora, whose gram universe grows
-    // with the data and keeps every doc's rarest grams genuinely rare.
-    // But on a DENSE universe (a bounded vocabulary: this synthetic
-    // corpus has ~2k distinct 5-grams at sf0.1) the prefix argument
-    // collapses — nearly every ordered pair shares a "rare" gram, the
-    // candidate set approaches all-pairs, and the exploded verify
-    // join builds |cands|·|grams(src)| rows (measured 3.8B rows /
-    // 735 s at sf0.1). Dense sets over a small dictionary are bitmaps:
-    // 64·⌈U/64⌉ bits per doc, intersection = popcount(AND) in codegen
-    // (BitmapAndCountExpr), and the whole bitmap table is small enough
-    // to BROADCAST — the verify becomes a map-side nested-loop scan
-    // with zero shuffle (measured 735 s → ~8 s on the same input).
-    // The quadratic pair scan is inherent here: with U ≪ |docs| the
-    // candidate space IS dense, and the further scale lever (noted,
-    // not needed at this SF) is grouping identical bitmaps first so
-    // the loop runs over distinct SETS, fanning doc ids back out after.
     if (denseUniverseMax > 0) {
       val universe = dfs.count()
-      // DENSITY probe (r14 sweep catch at sf3): whether prefix
-      // filtering can work is a property of the DF DISTRIBUTION, not
-      // the universe size — a doc's prefix grams are its rarest, so if
-      // even the 10th-percentile gram frequency is high, no gram is
-      // rare and the corpus is DENSE at any universe. One tiny
-      // aggregate over the U-row df table decides. (The old router
-      // keyed the dense/sparse split on universe size alone; the sf3
-      // corpus crossed the bitmap cap and fell into the prefix path,
-      // which this same analysis says detonates there.)
+      // dense = a bitmap-sized universe, or no rare grams at any
+      // universe (p10(df) gate; DEDUP_ROUTER.md, "Density probe")
       val denseCorpus = universe <= denseUniverseMax ||
         dfs.stat.approxQuantile("df", Array(0.1), 0.001).head >
           ContainmentPrefixRareDfMax
       if (denseCorpus) {
-        // Second adaptivity axis, CORPUS size: the broadcast pair scan
-        // is O(n²) in the WHOLE corpus — unbeatable to ~4·10⁸ pairs
-        // (it never shuffles), but past the cutoff it pays quadratic
-        // cost even when the match structure is block-local (the r13
-        // scale sweep measured α = 1.40: 10× docs → 25× time, because
-        // 10 disjoint sub-corpora were scanned as one 100× pair
-        // space).
+        val bound = containmentBound(tauNum, tauDen)
+        // bitmaps while the universe fits them, sorted gid arrays past it
+        val bitmap = Some(universe).filter(_ <= denseUniverseMax)
         val nDocs = g.select("id").distinct().count()
-        if (universe <= denseUniverseMax && nDocs <= pairScanMaxDocs)
-          return containmentDense(g, dfs, universe, tauNum, tauDen)
-        // Third axis, COMPONENT structure: the blocked scans collapse
-        // the pair space to Σ_b |block|² — the true match structure
-        // when the corpus is a union of gram-disjoint communities. But
-        // that structure is an EMPIRICAL property, not a law: the r14
-        // sf3 corpus entangled its sub-corpora (every gram string
-        // recurred across alphabet rotations), the components merged
-        // into one giant block, and Σ|block|² degenerated to corpus²
-        // (2.25·10¹⁰ pair checks — the "blocked" scan timed out).
-        // So MEASURE Σ|block|² (one aggregate over the component
-        // sizes) and only block when it is budgeted; above the budget,
-        // giant components go to the prefix-candidate + streamed
-        // array-verify fallback, whose complete candidate stream is
-        // Σ_prefix df ≪ Σ|block|² exactly when components are dense.
-        val gramRep = g.groupBy("gram").agg(min(col("id")).as("rep"))
-        val compEdges = g.join(gramRep, "gram")
-          .where(col("id") =!= col("rep"))
-          .select(col("id").as("doc_a"), col("rep").as("doc_b"))
-          .distinct()
-        // ckpt'd: comp is doc-count-sized (tiny) and has TWO consumers
-        // (the sumSq probe and the chosen scan's block join) — without
-        // the checkpoint each consumer re-runs the CC final round's
-        // join, measured ~25% slower at sf1
-        val comp = connectedComponents(compEdges, "doc_a", "doc_b")
-          .select(col("id"), col("component")).graftCkptMem()
+        if (bitmap.isDefined && nDocs <= pairScanMaxDocs) // C1
+          return overlapJoin(docSets(g, dfs, bitmap), AllPairs, bound)
+        // C2/C3 while the MEASURED Σ|block|² fits the budget, C4 past it
+        val comp = gramComponents(g)
         // coalesce: an edgeless corpus (no two docs share a gram)
         // leaves comp empty and sum-over-zero-rows yields null
         val sumSq = comp.groupBy("component").agg(count(lit(1)).as("c"))
           .agg(coalesce(sum(col("c") * col("c")), lit(0L)).as("s"))
           .head().getLong(0)
         if (sumSq <= blockPairBudget)
-          return if (universe <= denseUniverseMax)
-            containmentDenseBlocked(g, dfs, universe, tauNum, tauDen, comp)
-          else
-            containmentDenseBlockedArrays(g, dfs, tauNum, tauDen, comp)
-        return containmentDensePrefixVerify(g, dfs, tauNum, tauDen)
+          return overlapJoin(docSets(g, dfs, bitmap), Blocked(comp), bound)
+        return overlapJoin(docSets(g, dfs, None), PrefixCands(g, dfs), bound)
       }
     }
-    val plen = (n: Column) =>
-      (n - floor((n * tauNum + (tauDen - 1)) / tauDen) + 1).cast(IntegerType)
-    val docPrefix = g.join(dfs, "gram")
-      .groupBy("id")
-      .agg(collect_list(struct(col("df"), col("gram"))).as("gs"))
-      .select(col("id"), size(col("gs")).cast(LongType).as("n"),
-        slice(sort_array(col("gs")), lit(1), plen(size(col("gs")).cast(LongType)))
-          .getField("gram").as("pfx"))
-      .graftCkptMem()
-    val srcPfx = docPrefix
+    val docPfx = docPrefix(g, dfs, tauNum, tauDen)
+    val srcPfx = docPfx
       .select(col("id").as("src"), explode(col("pfx")).as("gram"))
       .select(col("src"), xxhash64(col("gram")).as("gh"))
     val dstAll = g.select(col("id").as("dst"), xxhash64(col("gram")).as("gh"))
@@ -494,29 +362,46 @@ object Dedup {
       .select(col("id").as("dst"), col("gram"))
     val inter = cands.join(gs, "src").join(gd, Seq("dst", "gram"))
       .groupBy("src", "dst").agg(count(lit(1)).as("n_shared"))
-    inter.join(docPrefix.select(col("id").as("src"), col("n").as("n_src")), "src")
+    inter.join(docPfx.select(col("id").as("src"), col("n").as("n_src")), "src")
       .where(col("n_shared") * tauDen >= col("n_src") * tauNum)
       .select(col("src"), col("dst"), col("n_src"), col("n_shared"),
         round(col("n_shared").cast(DoubleType) / col("n_src"), 6)
           .as("containment"))
   }
 
-  /** Bitmap pair scan for DENSE-universe exact Jaccard — the
-    * [[ngramJaccardPairs]] router's fast tiers, mirroring
-    * [[containmentDense]]/[[containmentDenseBlocked]] with the
-    * symmetric size filter and the J ≥ τ integer test. `comp = None`
-    * is the broadcast all-pairs tier (≤ pairScanMaxDocs: the bitmap
-    * table broadcasts, the scan never shuffles); `Some(comp)` is the
-    * gram-connected-component blocked tier (pair space Σ_b |block|²,
-    * salted so a giant block cannot serialize into one task). The
-    * jaccard value is the verify path's exact expression
-    * (i / (na + nb − i) in double), so routed output is bit-identical
-    * to the prefix+verify path. */
-  /** Gram-connected components for the blocked Jaccard tiers: docs
-    * sharing any gram land in one component (star edges to each gram's
-    * min doc id — O(rows), never O(pairs)); the checkpointed result
-    * feeds the blocked scan's component join. */
-  private def jaccardGramComponents(g: DataFrame): DataFrame = {
+  /** Per-doc prefix in ONE keyed aggregation: collect (df, gram), sort
+    * by the global (df, gram) order, slice to the prefix length
+    * n - ceil(τ·n) + 1 (ceil(a/b) = (a + b - 1) div b). This replaces a
+    * row_number window (sort shuffle) plus a separate per-doc size
+    * aggregation and its join — measured 3.9s → 2.6s at sf0.1,
+    * byte-identical prefix sets — and yields (id, n) for the verify for
+    * free. The doc-level result is tiny (one row per doc, prefix ≈
+    * 0.3·n grams), so it checkpoints cheaply.
+    *
+    * @return (id, n, pfx) */
+  private def docPrefix(g: DataFrame, dfs: DataFrame,
+      tauNum: Long, tauDen: Long): DataFrame = {
+    val n = size(col("gs")).cast(LongType)
+    g.join(dfs, "gram")
+      .groupBy("id")
+      .agg(collect_list(struct(col("df"), col("gram"))).as("gs"))
+      .select(col("id"), n.as("n"),
+        slice(sort_array(col("gs")), lit(1),
+          (n - floor((n * tauNum + (tauDen - 1)) / tauDen) + 1).cast(IntegerType))
+          .getField("gram").as("pfx"))
+      .graftCkptMem()
+  }
+
+  /** Gram-connected components over the doc↔gram graph: each gram
+    * edges its docs to the gram's min doc (O(rows), never O(pairs)) and
+    * [[connectedComponents]] closes the transitive structure. Docs in
+    * different components share no gram, so they never pair.
+    * Checkpointed: the result is doc-count-sized and read twice (the
+    * Σ|block|² probe and the blocked scan's join); re-running the CC
+    * final round's join per consumer measured ~25% slower at sf1.
+    *
+    * @return (id, component) for every doc sharing a gram with another */
+  private def gramComponents(g: DataFrame): DataFrame = {
     val gramRep = g.groupBy("gram").agg(min(col("id")).as("rep"))
     val compEdges = g.join(gramRep, "gram")
       .where(col("id") =!= col("rep"))
@@ -526,62 +411,13 @@ object Dedup {
       .select(col("id"), col("component")).graftCkptMem()
   }
 
-  private def jaccardDense(g: DataFrame, dfs: DataFrame, universe: Long,
-      tauNum: Long, tauDen: Long, comp: Option[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.BitmapExpr
-    val nWords = ((universe + 63) / 64).toInt
-    // single-partition window over the ≤32k-row dictionary only
-    val dict = dfs.select(col("gram"))
-      .withColumn("gid",
-        (row_number().over(Window.orderBy("gram")) - 1).cast(IntegerType))
-    val docsBm = g.join(broadcast(dict), "gram")
-      .groupBy("id")
-      .agg(collect_list(col("gid")).as("gids"))
-      .select(col("id"), size(col("gids")).cast(LongType).as("n"),
-        BitmapExpr.bitmapBuild(col("gids"), nWords).as("bm"))
-      .graftCkptMem()
-    // symmetric size filter first (J ≥ τ ⇒ τ·na ≤ nb ∧ τ·nb ≤ na):
-    // integer-cheap, prunes before any popcount
-    val sizeOk = col("nb") * tauDen >= col("na") * tauNum &&
-      col("na") * tauDen >= col("nb") * tauNum
-    val scanned = comp match {
-      case None =>
-        val a = docsBm.select(col("id").as("doc_a"), col("n").as("na"),
-          col("bm").as("bma"))
-        val b = docsBm.select(col("id").as("doc_b"), col("n").as("nb"),
-          col("bm").as("bmb"))
-        a.crossJoin(broadcast(b))
-          .where(col("doc_a") < col("doc_b") && sizeOk)
-      case Some(c) =>
-        val bmc = docsBm.join(c, "id").graftCkptMem()
-        val s = math.max(4, g.sparkSession.sparkContext.defaultParallelism / 4)
-        val a = bmc.select(col("component"),
-          pmod(col("id"), lit(s)).as("__salt"),
-          col("id").as("doc_a"), col("n").as("na"), col("bm").as("bma"))
-        val b = bmc.select(col("component"),
-          explode(sequence(lit(0), lit(s - 1))).as("__salt"),
-          col("id").as("doc_b"), col("n").as("nb"), col("bm").as("bmb"))
-        a.join(b, Seq("component", "__salt"))
-          .where(col("doc_a") < col("doc_b") && sizeOk)
-    }
-    scanned
-      .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
-        BitmapExpr.bitmapAndCount(col("bma"), col("bmb")).as("i"))
-      .where(col("i") * tauDen >= (col("na") + col("nb") - col("i")) * tauNum)
-      .withColumn("jaccard",
-        col("i").cast(DoubleType) / (col("na") + col("nb") - col("i")))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
-
-  /** Dictionary sizes up to this use the bitmap containment path
+  /** Dictionary sizes up to this use the bitmap representation
     * (≤ 512 longs = 4 KB per doc bitmap). */
   val ContainmentDenseUniverseMax: Long = 1L << 15
 
   /** Corpus sizes up to this use the broadcast all-pairs scan inside
     * the dense-universe path (≤ 4·10⁸ popcounts, shuffle-free); larger
-    * corpora switch to prefix candidates + bitmap verify (see the
-    * decision comment in [[containmentPairs]]). */
+    * corpora go to the blocked scans (DEDUP_ROUTER.md). */
   val ContainmentPairScanMaxDocs: Long = 20000L
 
   /** Prefix filtering is routed to only when the 10th-percentile
@@ -597,249 +433,186 @@ object Dedup {
     * this budget (~2·10⁹ pair checks — a minute of one 32-core node;
     * scale the constant with cluster cores if needed). Beyond it the
     * component structure has effectively collapsed (a giant block's
-    * Σ|block|² approaches corpus²) and the router uses
-    * [[containmentDensePrefixVerify]], whose work tracks
-    * Σ_prefix-grams df instead. */
+    * Σ|block|² approaches corpus²) and containment streams prefix
+    * candidates instead ([[PrefixCands]]), whose work tracks
+    * Σ_prefix-grams df. */
   val ContainmentBlockPairBudget: Long = 2L << 30
 
-  /** The prefix-verify fallback broadcasts its per-doc sorted-gid
-    * table only while the measured payload (4 B per gid + row
-    * overhead) stays at or under this — comfortably inside Spark's
-    * 8 GB broadcast hard limit with headroom for the driver copy.
-    * Above it both lookups run as shuffle joins on the candidate
-    * stream (graceful degrade, not an envelope crash). */
+  /** The prefix-candidate scan broadcasts its per-doc sorted-gid table
+    * only while the measured payload (4 B per gid + row overhead) stays
+    * at or under this — comfortably inside Spark's 8 GB broadcast hard
+    * limit with headroom for the driver copy. Above it both lookups run
+    * as shuffle joins on the candidate stream (graceful degrade, not an
+    * envelope crash). */
   val ContainmentBroadcastMaxBytes: Long = 1L << 30
 
-  /** Dense-universe containment: gram → dense id over the sorted
-    * dictionary, each doc's gram set as a fixed-width bitset, ordered
-    * pairs verified by popcount(AND) against the BROADCAST bitmap
-    * table (see the decision comment in [[containmentPairs]]). */
-  private def containmentDense(g: DataFrame, dfs: DataFrame,
-      universe: Long, tauNum: Long, tauDen: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.BitmapExpr
-    val nWords = ((universe + 63) / 64).toInt
-    // single-partition window is fine HERE: it orders the ≤32k-row
-    // dictionary, never the data
+  // ---- the overlap-join kernel: doc sets × pair source × bound ---------
+  //
+  // Jaccard and containment over a dense gram universe are one sparse
+  // overlap join: build each doc's gram set once, enumerate candidate
+  // pairs, count |A ∩ B| in codegen, keep the pairs whose count clears
+  // the bound. Each router tier is one combination of the three parts
+  // below (DEDUP_ROUTER.md).
+
+  /** Per-doc gram sets `docs` = (id, n, <set>) over the sorted gram
+    * dictionary; `a`/`b` name the set column on the pair's two sides
+    * and `overlap` counts |A ∩ B| inside whole-stage codegen. */
+  private final case class DocSets(docs: DataFrame, set: String,
+      a: String, b: String, overlap: (Column, Column) => Column)
+
+  /** Gram → dense id over the sorted dictionary, each doc's gid set as
+    * a U-bit bitmap (`bitmapUniverse = Some(U)`; popcount(AND)) or as a
+    * sorted gid array (`None`: 4·|set| bytes, linear-merge intersect —
+    * the compact form once U outgrows the bitmap). Checkpointed: every
+    * pair source reads it twice. */
+  private def docSets(g: DataFrame, dfs: DataFrame,
+      bitmapUniverse: Option[Long]): DocSets = {
+    // single-partition window: it orders the ≤U-row dictionary, never
+    // the data
     val dict = dfs.select(col("gram"))
       .withColumn("gid",
         (row_number().over(Window.orderBy("gram")) - 1).cast(IntegerType))
-    val docsBm = g.join(broadcast(dict), "gram")
-      .groupBy("id")
-      .agg(collect_list(col("gid")).as("gids"))
-      .select(col("id"), size(col("gids")).cast(LongType).as("n"),
-        BitmapExpr.bitmapBuild(col("gids"), nWords).as("bm"))
-      .graftCkptMem()
-    val a = docsBm.select(col("id").as("src"), col("n").as("n_src"),
-      col("bm").as("bma"))
-    val b = docsBm.select(col("id").as("dst"), col("bm").as("bmb"))
-    a.crossJoin(broadcast(b))
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("n_src"),
-        BitmapExpr.bitmapAndCount(col("bma"), col("bmb")).as("n_shared"))
-      .where(col("n_shared") * tauDen >= col("n_src") * tauNum)
-      .select(col("src"), col("dst"), col("n_src"), col("n_shared"),
-        round(col("n_shared").cast(DoubleType) / col("n_src"), 6)
-          .as("containment"))
+    val byDoc = g.join(broadcast(dict), "gram").groupBy("id")
+    val n = size(col("gids")).cast(LongType).as("n")
+    bitmapUniverse match {
+      case Some(u) =>
+        val docs = byDoc.agg(collect_list(col("gid")).as("gids"))
+          .select(col("id"), n,
+            BitmapExpr.bitmapBuild(col("gids"), ((u + 63) / 64).toInt).as("bm"))
+          .graftCkptMem()
+        DocSets(docs, "bm", "bma", "bmb", BitmapExpr.bitmapAndCount)
+      case None =>
+        val docs = byDoc.agg(sort_array(collect_list(col("gid"))).as("gids"))
+          .select(col("id"), n, col("gids"))
+          .graftCkptMem()
+        DocSets(docs, "gids", "ga", "gb", SortedIntersectExpr.sortedIntersectCount)
+    }
   }
 
-  /** Dense-universe containment for LARGE corpora: CONNECTED-COMPONENT
-    * blocking over shared grams, then a salted within-component pair
-    * scan. Two docs can only match if they share a gram, so docs in
-    * different gram-connected components never pair — the pair space
-    * collapses from |corpus|² to Σ_b |block|², which is the TRUE match
-    * structure: linear growth when the corpus grows by adding
-    * communities (the common shape — new sources, new crawls, new
-    * languages), and gracefully the full square when the corpus really
-    * is one dense block (inherent: everything is then a candidate).
-    *
-    * Why not prefix-filtered candidates here: on a dense universe the
-    * "rarest" grams still have df in the hundreds, so prefix
-    * candidates ≈ all pairs MATERIALIZED (measured at 10× docs: 250M+
-    * candidate rows, 322 s then spill-OOM), strictly worse than
-    * scanning. The blocked scan never materializes pairs: the
-    * component-keyed self-join pipelines each joined row straight
-    * through popcount(AND) + threshold inside whole-stage codegen —
-    * shuffle volume is the two bitmap SIDES (linear), not the pair
-    * space. A salt column splits each component's scan S ways so one
-    * giant component cannot serialize into a single task.
-    *
-    * Components come from the doc↔gram bipartite graph: each gram
-    * edges its docs to the gram's min doc, and [[connectedComponents]]
-    * (O(log n) rounds) closes the transitive structure — cost linear
-    * in the exploded gram table. */
-  private def containmentDenseBlocked(g: DataFrame, dfs: DataFrame,
-      universe: Long, tauNum: Long, tauDen: Long,
-      comp: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.BitmapExpr
-    val nWords = ((universe + 63) / 64).toInt
-    // single-partition window over the ≤32k-row dictionary only
-    val dict = dfs.select(col("gram"))
-      .withColumn("gid",
-        (row_number().over(Window.orderBy("gram")) - 1).cast(IntegerType))
-    val docsBm = g.join(broadcast(dict), "gram")
-      .groupBy("id")
-      .agg(collect_list(col("gid")).as("gids"))
-      .select(col("id"), size(col("gids")).cast(LongType).as("n"),
-        BitmapExpr.bitmapBuild(col("gids"), nWords).as("bm"))
-      .graftCkptMem()
-    // docs absent from the component map share no gram with anyone —
-    // they can produce no pairs and drop out here by construction
-    // (comp comes pre-computed from the router, which also budgeted
-    // Σ|block|² before choosing this path)
-    val bmc = docsBm.join(comp, "id").graftCkptMem()
-    val s = math.max(4, g.sparkSession.sparkContext.defaultParallelism / 4)
-    val a = bmc.select(col("component"), pmod(col("id"), lit(s)).as("__salt"),
-      col("id").as("src"), col("n").as("n_src"), col("bm").as("bma"))
-    val b = bmc.select(col("component"),
-        explode(sequence(lit(0), lit(s - 1))).as("__salt"),
-        col("id").as("dst"), col("bm").as("bmb"))
-    a.join(b, Seq("component", "__salt"))
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("n_src"),
-        BitmapExpr.bitmapAndCount(col("bma"), col("bmb")).as("n_shared"))
-      .where(col("n_shared") * tauDen >= col("n_src") * tauNum)
-      .select(col("src"), col("dst"), col("n_src"), col("n_shared"),
-        round(col("n_shared").cast(DoubleType) / col("n_src"), 6)
-          .as("containment"))
-  }
+  /** Where the candidate pairs come from. */
+  private sealed trait PairSource
+  /** Every pair, scanned map-side against the BROADCAST set table: no
+    * shuffle, O(nDocs²) popcounts. */
+  private case object AllPairs extends PairSource
+  /** Pairs within one gram-connected component (`comp` from
+    * [[gramComponents]]): pair space Σ_b |block|², salted S ways so
+    * one giant component cannot serialize into a single task. */
+  private final case class Blocked(comp: DataFrame) extends PairSource
+  /** Pairs sharing one of the a-side doc's ⌊(1−τ)·n⌋+1 RAREST grams
+    * (df asc; complete by pigeonhole), streamed through two lookups of
+    * the set table in the join's own stage — the candidate stream never
+    * materializes, only τ-survivors reach the final distinct. */
+  private final case class PrefixCands(g: DataFrame, dfs: DataFrame)
+      extends PairSource
 
-  /** Dense-universe containment for LARGE corpora whose gram universe
-    * ALSO outgrew the bitmap representation (U > denseUniverseMax, so
-    * a U-bit map per doc is no longer the compact form): identical
-    * gram-connected-component blocking + salted within-component scan
-    * as [[containmentDenseBlocked]], but the per-doc payload is the
-    * SORTED gram-id array (4·|set| bytes — for |set| ≪ U far smaller
-    * than the bitmap) and the intersection is a linear merge
-    * ([[graft.functions.SortedIntersectExpr]]). Same output, same
-    * Σ_b |block|² pair space, no representation cliff as U grows.
-    *
-    * This tier exists because of an r14 sweep catch: at sf3 the gram
-    * universe (52k) crossed the bitmap cap for the FIRST time and the
-    * operator fell through to prefix filtering — the path its own
-    * scaladoc documents as detonating on dense corpora (no gram is
-    * rare ⇒ candidates ≈ all pairs, materialized) — and died after
-    * ~300 s of spill. Representation must degrade to arrays, never to
-    * prefix, when the corpus is dense (see the routing in
-    * [[containmentPairs]]). */
-  private def containmentDenseBlockedArrays(g: DataFrame, dfs: DataFrame,
-      tauNum: Long, tauDen: Long, comp: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.SortedIntersectExpr
-    val dict = dfs.select(col("gram"))
-      .withColumn("gid",
-        (row_number().over(Window.orderBy("gram")) - 1).cast(IntegerType))
-    val docsArr = g.join(broadcast(dict), "gram")
-      .groupBy("id")
-      .agg(sort_array(collect_list(col("gid"))).as("gids"))
-      .select(col("id"), size(col("gids")).cast(LongType).as("n"),
-        col("gids"))
-      .graftCkptMem()
-    val bmc = docsArr.join(comp, "id").graftCkptMem()
-    val s = math.max(4, g.sparkSession.sparkContext.defaultParallelism / 4)
-    val a = bmc.select(col("component"), pmod(col("id"), lit(s)).as("__salt"),
-      col("id").as("src"), col("n").as("n_src"), col("gids").as("ga"))
-    val b = bmc.select(col("component"),
-        explode(sequence(lit(0), lit(s - 1))).as("__salt"),
-        col("id").as("dst"), col("gids").as("gb"))
-    a.join(b, Seq("component", "__salt"))
-      .where(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("n_src"),
-        SortedIntersectExpr.sortedIntersectCount(col("ga"), col("gb"))
-          .as("n_shared"))
-      .where(col("n_shared") * tauDen >= col("n_src") * tauNum)
-      .select(col("src"), col("dst"), col("n_src"), col("n_shared"),
-        round(col("n_shared").cast(DoubleType) / col("n_src"), 6)
-          .as("containment"))
-  }
+  /** The verify bound: the pair's id and size column names, its
+    * pre-verify filters (`idOk` on ids, `sizeOk` on sizes) and
+    * `verify`, which keeps the pairs whose intersection size clears
+    * τ = num/den and projects the output columns. */
+  private final case class Bound(num: Long, den: Long,
+      a: String, b: String, na: String, nb: String,
+      idOk: Column, sizeOk: Option[Column],
+      verify: (DataFrame, Column) => DataFrame)
 
-  /** Dense-corpus containment when even the COMPONENT structure has
-    * collapsed (one giant gram-connected block, Σ|block|² ≈ corpus² —
-    * the r14 sf3 corpus, whose alphabet-rotated sub-corpora entangled
-    * through recurring gram strings): prefix CANDIDATES with a
-    * STREAMED array-merge verify.
-    *
-    * Completeness (pigeonhole): a pair at containment ≥ τ misses at
-    * most ⌊(1−τ)·n_src⌋ of src's grams, so at least one of src's
-    * ⌊(1−τ)·n_src⌋+1 RAREST grams (df asc) is shared — the candidate
-    * equijoin on those prefix grams finds every qualifying pair.
-    *
-    * Why this survives where both earlier prefix attempts died: the
-    * old sparse-path verify exploded (doc, gram) rows per candidate
-    * (measured 3.8 B rows at sf0.1-dense); here the candidate stream
-    * NEVER materializes — the prefix⋈posting join's output flows in
-    * the same stage through two BROADCAST lookups of the per-doc
-    * sorted-gid arrays and a codegen merge intersect
-    * ([[graft.functions.SortedIntersectExpr]]), and only τ-survivors
-    * (output-sized) reach the final distinct. Work is
-    * Σ_prefix-grams df (~2·10⁹ streamed checks at sf3, vs 2.25·10¹⁰
-    * blocked pair checks), shuffle is the gram-keyed candidate join's
-    * two linear sides.
-    *
-    * Memory contract: the per-doc array table broadcasts
-    * (4·|set| bytes/doc — ~180 MB for 150k docs × 200 grams) — but
-    * only while its MEASURED size (Σ|set| from the checkpointed
-    * docsArr, one cheap probe under this operator's documented eager
-    * contract) stays under [[ContainmentBroadcastMaxBytes]]. Beyond
-    * the envelope the hints are dropped and the two lookups run as
-    * shuffle joins on the candidate stream's src/dst — the candidate
-    * volume is the same; only the lookup transport changes (the
-    * graceful degrade this scaladoc used to merely promise). */
-  private def containmentDensePrefixVerify(g: DataFrame, dfs: DataFrame,
-      tauNum: Long, tauDen: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.SortedIntersectExpr
-    val dict = dfs.select(col("gram"))
-      .withColumn("gid",
-        (row_number().over(Window.orderBy("gram")) - 1).cast(IntegerType))
-    val docsArr = g.join(broadcast(dict), "gram")
-      .groupBy("id")
-      .agg(sort_array(collect_list(col("gid"))).as("gids"))
-      .select(col("id"), size(col("gids")).cast(LongType).as("n"),
-        col("gids"))
-      .graftCkptMem()
-    val w = Window.partitionBy("id").orderBy(col("df"), col("gram"))
-    val prefix = g.join(dfs, "gram")
-      .withColumn("rn", row_number().over(w))
-      .join(docsArr.select(col("id"), col("n")), "id")
-      .where(col("rn") <=
-        col("n") - floor((col("n") * tauNum + (tauDen - 1)) / tauDen) + 1)
-      .select(col("id").as("src"), col("gram"))
-      .graftCkptMem()
-    val aSide = docsArr.select(col("id").as("src"), col("n").as("n_src"),
-      col("gids").as("ga"))
-    val bSide = docsArr.select(col("id").as("dst"), col("gids").as("gb"))
-    // measured gate: 4 B/gid + ~32 B/doc row overhead; over the
-    // envelope the lookups degrade to SHUFFLED-HASH joins instead of
-    // a hard broadcast failure. Hash, never sort-merge: after the
-    // first lookup every candidate row carries a sorted-gid ARRAY
-    // (~4·|set| B), and an SMJ would sort that wide stream — the
-    // same plan shape that killed the banded verify at sf3
-    // (Similarity.cosinePairsBanded, r15).
-    val probe = docsArr.agg(coalesce(sum(col("n")), lit(0L)),
-      count(lit(1))).head()
-    val estBytes = probe.getLong(0) * 4L + probe.getLong(1) * 32L
-    val hint = (df: DataFrame) =>
-      if (estBytes <= ContainmentBroadcastMaxBytes) broadcast(df)
-      else df.hint("shuffle_hash")
-    prefix.join(g.select(col("id").as("dst"), col("gram")), "gram")
-      .where(col("src") =!= col("dst"))
-      .select("src", "dst")
-      .join(hint(aSide), "src")
-      .join(hint(bSide), "dst")
-      .select(col("src"), col("dst"), col("n_src"),
-        SortedIntersectExpr.sortedIntersectCount(col("ga"), col("gb"))
-          .as("n_shared"))
-      .where(col("n_shared") * tauDen >= col("n_src") * tauNum)
-      .select(col("src"), col("dst"), col("n_src"), col("n_shared"),
-        round(col("n_shared").cast(DoubleType) / col("n_src"), 6)
-          .as("containment"))
+  /** Symmetric Jaccard: doc_a < doc_b, the size filter τ·na ≤ nb ∧
+    * τ·nb ≤ na, and i·den ≥ (na + nb − i)·num. The jaccard value is
+    * [[jaccardVerify]]'s exact expression, so every route returns
+    * bit-identical rows. */
+  private def jaccardBound(num: Long, den: Long): Bound =
+    Bound(num, den, "doc_a", "doc_b", "na", "nb",
+      col("doc_a") < col("doc_b"),
+      Some(col("nb") * den >= col("na") * num &&
+        col("na") * den >= col("nb") * num),
+      (pairs, i) => pairs
+        .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), i.as("i"))
+        .where(col("i") * den >= (col("na") + col("nb") - col("i")) * num)
+        .withColumn("jaccard",
+          col("i").cast(DoubleType) / (col("na") + col("nb") - col("i")))
+        .select(col("doc_a"), col("doc_b"), col("jaccard")))
+
+  /** Ordered containment: src ≠ dst and n_shared·den ≥ n_src·num. */
+  private def containmentBound(num: Long, den: Long): Bound =
+    Bound(num, den, "src", "dst", "n_src", "n_dst",
+      col("src") =!= col("dst"), None,
+      (pairs, i) => pairs
+        .select(col("src"), col("dst"), col("n_src"), i.as("n_shared"))
+        .where(col("n_shared") * den >= col("n_src") * num)
+        .select(col("src"), col("dst"), col("n_src"), col("n_shared"),
+          round(col("n_shared").cast(DoubleType) / col("n_src"), 6)
+            .as("containment")))
+
+  /** The overlap join: pairs from `source` over the `sets` table, each
+    * checked by `bound` on its exact intersection size. */
+  private def overlapJoin(sets: DocSets, source: PairSource,
+      bound: Bound): DataFrame = {
+    val aCols = Seq(col("id").as(bound.a), col("n").as(bound.na),
+      col(sets.set).as(sets.a))
+    val bCols = Seq(col("id").as(bound.b), col("n").as(bound.nb),
+      col(sets.set).as(sets.b))
+    val pairOk = (bound.idOk +: bound.sizeOk.toSeq).reduce(_ && _)
+    val pairs = source match {
+      case AllPairs =>
+        sets.docs.select(aCols: _*)
+          .crossJoin(broadcast(sets.docs.select(bCols: _*)))
+          .where(pairOk)
+      case Blocked(comp) =>
+        // docs absent from the component map share no gram with anyone
+        // — they can produce no pairs and drop out here by construction
+        val bc = sets.docs.join(comp, "id").graftCkptMem()
+        val s = math.max(4, bc.sparkSession.sparkContext.defaultParallelism / 4)
+        val a = bc.select(col("component") +:
+          pmod(col("id"), lit(s)).as("__salt") +: aCols: _*)
+        val b = bc.select(col("component") +:
+          explode(sequence(lit(0), lit(s - 1))).as("__salt") +: bCols: _*)
+        a.join(b, Seq("component", "__salt")).where(pairOk)
+      case PrefixCands(g, dfs) =>
+        val w = Window.partitionBy("id").orderBy(col("df"), col("gram"))
+        val prefix = g.join(dfs, "gram")
+          .withColumn("rn", row_number().over(w))
+          .join(sets.docs.select(col("id"), col("n")), "id")
+          .where(col("rn") <= col("n") -
+            floor((col("n") * bound.num + (bound.den - 1)) / bound.den) + 1)
+          .select(col("id").as(bound.a), col("gram"))
+          .graftCkptMem()
+        // measured gate: 4 B/gid + ~32 B/doc row overhead; over the
+        // envelope the lookups run as SHUFFLED-HASH joins, never
+        // sort-merge: every candidate row carries a gid ARRAY after the
+        // first lookup, and sorting that wide stream is the plan that
+        // killed the banded verify at sf3 (Similarity.cosinePairsBanded)
+        val probe = sets.docs.agg(coalesce(sum(col("n")), lit(0L)),
+          count(lit(1))).head()
+        val estBytes = probe.getLong(0) * 4L + probe.getLong(1) * 32L
+        val hint = (df: DataFrame) =>
+          if (estBytes <= ContainmentBroadcastMaxBytes) broadcast(df)
+          else df.hint("shuffle_hash")
+        val cands = prefix.join(g.select(col("id").as(bound.b), col("gram")), "gram")
+          .where(bound.idOk)
+          .select(bound.a, bound.b)
+          .join(hint(sets.docs.select(aCols: _*)), bound.a)
+          .join(hint(sets.docs.select(bCols: _*)), bound.b)
+        bound.sizeOk.fold(cands)(cands.where)
+    }
+    val out = bound.verify(pairs, sets.overlap(col(sets.a), col(sets.b)))
+    source match {
       // a pair survives once per shared prefix gram — all its rows are
       // identical, and only τ-survivors (output-sized) reach here
-      .distinct()
+      case _: PrefixCands => out.distinct()
+      case _ => out
+    }
   }
 
+  /** Exact Jaccard of candidate pairs from full gram sets; the ≥ τ
+    * test is integer-exact: i/(na+nb-i) ≥ num/den ⟺
+    * i·den ≥ num·(na+nb-i).
+    *
+    * Counter-experiment (sf0.1, 46k MinHash candidates): computing the
+    * intersection as a per-pair `array_intersect` over the two gram
+    * ARRAYS measured 6.9 s vs 4.4 s for this exploded shape. A doc
+    * appears in ~30 candidate pairs, so the array form copies every
+    * ~30 KB gram array into each of its pairs (~2.7 GB through two
+    * joins) while the exploded rows here total ~240 MB — exploded +
+    * pair-keyed count is the LESS shuffle-heavy form whenever docs
+    * recur across candidates. */
   private[operators] def jaccardVerify(
       cands: DataFrame, // (doc_a, doc_b)
       g: DataFrame, // (id, gram)

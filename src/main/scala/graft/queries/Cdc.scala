@@ -192,8 +192,9 @@ object Cdc {
     // equal a from-scratch batch join — verified against a plain SQL
     // oracle that never saw the incremental path.
     //
-    // PER-BATCH FLOOR, profiled (GRAFT_IVM_TIMING, sf0.1 local[32],
-    // r13): each batch is two wave barriers — deltas+state (6 jobs)
+    // PER-BATCH FLOOR, profiled per wave (sf0.1 local[32], r13; the
+    // per-batch IVM layers now come from `perfbench/run.py --trace 1`,
+    // `ivm.*`): each batch is two wave barriers — deltas+state (6 jobs)
     // and rebuild (3 jobs) — and the tombstone batch (1.5k-row delta,
     // data ≈ 0) measures them at 0.40 s + 0.39 s: ~0.8 s/batch of
     // irreducible job-scheduling + localCheckpoint latency, ~4 s over
@@ -277,8 +278,9 @@ object Cdc {
       // fewer buckets under-parallelize the state writes, more buckets
       // pay per-file/task overhead at this state size)
       //
-      // Residual ~1.25× over q_incr, profiled (GRAFT_IVM_TIMING wave
-      // breakdown, sf0.1 local[32]): the gap is spread across every
+      // Residual ~1.25× over q_incr, profiled per wave (sf0.1
+      // local[32]; today `perfbench/run.py --trace 1` with `--buckets N`
+      // reports the durable layers): the gap is spread across every
       // wave, not concentrated — durable deltas+state waves run
       // ~1.2-1.5× the memory backend's (six bucketed delta parquet
       // writes + commit-marker renames vs MEMORY_ONLY checkpoints),

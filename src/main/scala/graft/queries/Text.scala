@@ -1161,7 +1161,7 @@ object Text {
 
     // The containment ROUTER's last-resort path, value-gated on its
     // own: pairScanMaxDocs = 0 and blockPairBudget = 0 force every
-    // dense corpus through containmentDensePrefixVerify (prefix
+    // dense corpus through route C4 of DEDUP_ROUTER.md (prefix
     // candidates + streamed sorted-array verify — the regime the
     // router reserves for giant entangled components, r14's sf3).
     // Same oracle SHAPE as q_containment: the path choice must be

@@ -140,22 +140,16 @@ final class IncrementalDenormalizer(
     * idle; submitting them from a small thread pool overlaps the jobs
     * (Spark's scheduler is thread-safe). Order of results matches the
     * input order. */
-  private def parMaterialize(thunks: Seq[() => DataFrame], tag: String = ""): Seq[DataFrame] = {
-    val t0 = System.nanoTime()
-    val out =
-      if (thunks.lengthCompare(2) < 0) thunks.map(_.apply())
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec = materializeEc
-        Await.result(
-          Future.sequence(thunks.map(t => Future(t.apply()))),
-          Duration.Inf)
-      }
-    if (IncrementalDenormalizer.timing)
-      System.err.println(f"[ivm] wave $tag%-12s ${thunks.size}%2d jobs ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-    out
-  }
+  private def parMaterialize(thunks: Seq[() => DataFrame]): Seq[DataFrame] =
+    if (thunks.lengthCompare(2) < 0) thunks.map(_.apply())
+    else {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec = materializeEc
+      Await.result(
+        Future.sequence(thunks.map(t => Future(t.apply()))),
+        Duration.Inf)
+    }
 
   /** First edge in a tree whose child entity matches — reference
     * RelationHelper.getRelation takes the first match. */
@@ -323,7 +317,7 @@ final class IncrementalDenormalizer(
       // still-running persists of the other tables
       val aligned = names.map(n => alignRestored(n, tables(n)))
       val out = parMaterialize(
-        names.zip(aligned).map { case (n, df) => matState(n, df) }, "recover")
+        names.zip(aligned).map { case (n, df) => matState(n, df) })
       names.zip(out).toMap
     }
     def load(name: String, old: DataFrame): DataFrame =
@@ -582,7 +576,7 @@ final class IncrementalDenormalizer(
           matState(s"snapshot__$e", df, Some(d)) } ++
         linkUpdates.map { case (id, df, d) =>
           matState(s"links__${safeName(id)}", df, Some(d)) }
-    val waveOut = parMaterialize(waveInputs, "deltas+state")
+    val waveOut = parMaterialize(waveInputs)
     val (deltaOut, rest0) = waveOut.splitAt(deltaPairs.size)
     val (dirtyOut, rest) = rest0.splitAt(wavePlans.size)
     val (snapOut, linkOut) = rest.splitAt(snapUpdates.size)
@@ -861,24 +855,24 @@ final class IncrementalDenormalizer(
     rootmapUpdates.foreach { case (id, df, d) =>
       val thunk = matState(s"rootmap__${safeName(id)}", df, Some(d))
       rootmapsF = rootmapsF.updated(id,
-        scala.concurrent.Future(timed(s"rootmap $id")(thunk())))
+        scala.concurrent.Future(thunk()))
     }
     if (!backend.durable) {
-      val newDocsF = scala.concurrent.Future(timed(s"docs $name") {
+      val newDocsF = scala.concurrent.Future {
         val nd = newDocs.graftCkptMem()
         bumpDocCounters()
         nd
-      })
-      val keptF = scala.concurrent.Future(timed(s"kept $name") {
+      }
+      val keptF = scala.concurrent.Future {
         kept.coalesce(statePartitions).graftCkptMem()
-      })
+      }
       lastChangedF = lastChangedF.updated(name, newDocsF)
       // Lazy union of the two checkpointed frames, composed once both
       // land — same two-level lineage as before.
       docStateF = docStateF.updated(name,
         newDocsF.flatMap(nd => keptF.map(_.unionByName(nd))))
     } else {
-      val docPairF = scala.concurrent.Future(timed(s"docs $name") {
+      val docPairF = scala.concurrent.Future {
         val nd = newDocs.graftCkptMem()
         bumpDocCounters()
         // change set: nd covers EVERY dirty root (tombstones are real
@@ -887,32 +881,14 @@ final class IncrementalDenormalizer(
           kept.unionByName(nd).coalesce(statePartitions),
           Some((nd, dirtyPks)))
         (nd, full)
-      })
+      }
       lastChangedF = lastChangedF.updated(name, docPairF.map(_._1))
       docStateF = docStateF.updated(name, docPairF.map(_._2))
     }
   }
-
-  /** GRAFT_IVM_TIMING instrumentation for the async wave: absolute
-    * start/end offsets from engine construction, so the profile SHOWS
-    * job overlap (the verdict's asked-for evidence shape). */
-  private val epochNs = System.nanoTime()
-  private def timed[A](tag: String)(body: => A): A =
-    if (!IncrementalDenormalizer.timing) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      val t1 = System.nanoTime()
-      System.err.println(f"[ivm] job ${tag.take(60)}%-60s +${(t0 - epochNs) / 1e9}%7.2fs .. +${(t1 - epochNs) / 1e9}%7.2fs (${(t1 - t0) / 1e9}%5.2fs)")
-      r
-    }
 }
 
 object IncrementalDenormalizer {
-  /** Wave timing to stderr (set GRAFT_IVM_TIMING=1) — a debug aid for
-    * the per-batch scheduling profile. */
-  private val timing: Boolean = sys.env.contains("GRAFT_IVM_TIMING")
-
   /** Small daemon pool for concurrent state-table materialization —
     * shared with [[IncrementalAggregate]] (see [[Waves]]). */
   private def materializeEc: scala.concurrent.ExecutionContext = Waves.ec

@@ -3,12 +3,21 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-/** Latest-per-key compaction on `transformWithState` — Spark 4's
-  * arbitrary-state operator API — semantically identical to
-  * [[StatefulCompaction.latestStream]] (same fold, same tombstone and
-  * out-of-order contracts, pinned in TwsCompactionSpec against the
-  * same scenario matrix as the legacy operator's spec) but on the API
-  * that supersedes `flatMapGroupsWithState`: typed state variables
+/** Latest-per-key compaction as a native Structured Streaming stateful
+  * operator on `transformWithState` — the keyed-state-store
+  * alternative to the micro-batch `foreachBatch` engine for pipelines
+  * that only need topic-state semantics (reference:
+  * topic/KafkaTopic.java:193-205 `-data` keyspace) without document
+  * assembly.
+  *
+  * State per (entity, key) is the latest (offset, value); a null value
+  * at the newest offset is a tombstone that REMOVES the state entry
+  * (reference filter/BaseFilter.java:149-160) and emits one null row
+  * so downstream sinks can delete. Out-of-order rows below the current
+  * offset are ignored (last-writer-wins by offset — the same
+  * convergence contract as the IVM engine's folds). Pinned in
+  * TwsCompactionSpec. Spark 4's arbitrary-state operator API
+  * supersedes `flatMapGroupsWithState` with typed state variables
   * behind a handle (a key can host several value/list/map states,
   * which is the shape the multi-index IVM engine would need if it
   * ever moved from micro-batch `foreachBatch` to a fully
@@ -36,7 +45,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   */
 object TwsCompaction {
 
-  import StatefulCompaction.{ChangeRow, KeyState}
+  case class ChangeRow(entity: String, offset: Long,
+      key_json: String, value_json: String)
+  case class KeyState(offset: Long, value: String)
 
   /** Compact a streaming unified changelog
     * ([[StreamRunner.changelogSchema]] shape) to one updated row per

@@ -14,6 +14,14 @@ class ContainmentSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** Lower-cased physical plan — the routing pins below assert the
+    * route's signature, since value equality alone also passes when a
+    * route silently falls through to another tier. */
+  private def physical(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString.toLowerCase
+
+  private val broadcastScan = "broadcastnestedloopjoin"
+
   test("a quoted paragraph is contained in its quoting page, not vice versa") {
     val para = "the quick brown fox jumps over the lazy dog again and again"
     val page = ("intro text before the quote. " + para +
@@ -61,12 +69,18 @@ class ContainmentSpec extends SparkSpec {
     val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val arrs = TextAnalysis.gramArrays(rows, "doc_id", "text", 4)
-    def run(denseMax: Long) =
+    def pairs(denseMax: Long) =
       Dedup.containmentPairs(arrs, "doc_id", 3, 4, denseUniverseMax = denseMax)
-        .select("src", "dst", "n_src", "n_shared", "containment")
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.select("src", "dst", "n_src", "n_shared", "containment")
         .as[(Long, Long, Long, Long, Double)].collect().toSet
-    val dense = run(Long.MaxValue) // force bitmap path
-    val prefix = run(0L)           // force prefix path
+    val densePairs = pairs(Long.MaxValue) // force bitmap path
+    val densePlan = physical(densePairs)
+    assert(densePlan.contains("bitmapandcount") &&
+      densePlan.contains(broadcastScan) && !densePlan.contains("__salt"),
+      "uncapped universe must route to the bitmap broadcast scan")
+    val dense = values(densePairs)
+    val prefix = values(pairs(0L))   // force prefix path
     assert(dense.nonEmpty)
     assert(dense == prefix, s"dense=$dense prefix=$prefix")
   }
@@ -85,13 +99,19 @@ class ContainmentSpec extends SparkSpec {
     val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val arrs = TextAnalysis.gramArrays(rows, "doc_id", "text", 4)
-    def run(maxDocs: Long) =
+    def pairs(maxDocs: Long) =
       Dedup.containmentPairs(arrs, "doc_id", 3, 4,
           denseUniverseMax = Long.MaxValue, pairScanMaxDocs = maxDocs)
-        .select("src", "dst", "n_src", "n_shared", "containment")
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.select("src", "dst", "n_src", "n_shared", "containment")
         .as[(Long, Long, Long, Long, Double)].collect().toSet
-    val scan = run(Long.MaxValue) // force the all-pairs scan
-    val blocked = run(0L)         // force the component-blocked scan
+    val scan = values(pairs(Long.MaxValue)) // force the all-pairs scan
+    val blockedPairs = pairs(0L)          // force the component-blocked scan
+    val blockedPlan = physical(blockedPairs)
+    assert(blockedPlan.contains("bitmapandcount") &&
+      blockedPlan.contains("__salt") && !blockedPlan.contains(broadcastScan),
+      "pairScanMaxDocs = 0 must route to the bitmap blocked scan")
+    val blocked = values(blockedPairs)
     assert(scan.nonEmpty)
     assert(scan == blocked, s"scan=$scan blocked=$blocked")
   }
@@ -161,13 +181,24 @@ class ContainmentSpec extends SparkSpec {
     val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val arrs = TextAnalysis.gramArrays(rows, "doc_id", "text", 4)
-    def run(denseMax: Long, maxDocs: Long) =
+    def pairs(denseMax: Long, maxDocs: Long) =
       Dedup.ngramJaccardPairs(arrs, "doc_id", 2, 5,
-          denseUniverseMax = denseMax, pairScanMaxDocs = maxDocs)
-        .as[(Long, Long, Double)].collect().toSet
-    val prefix = run(0L, Long.MaxValue)            // force prefix path
-    val scan = run(Long.MaxValue, Long.MaxValue)   // broadcast pair scan
-    val blocked = run(Long.MaxValue, 0L)           // component-blocked scan
+        denseUniverseMax = denseMax, pairScanMaxDocs = maxDocs)
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double)].collect().toSet
+    val prefix = values(pairs(0L, Long.MaxValue))    // force prefix path
+    val scanPairs = pairs(Long.MaxValue, Long.MaxValue) // broadcast pair scan
+    val scanPlan = physical(scanPairs)
+    assert(scanPlan.contains("bitmapandcount") &&
+      scanPlan.contains(broadcastScan) && !scanPlan.contains("__salt"),
+      "uncapped universe must route to the bitmap broadcast scan")
+    val scan = values(scanPairs)
+    val blockedPairs = pairs(Long.MaxValue, 0L)    // component-blocked scan
+    val blockedPlan = physical(blockedPairs)
+    assert(blockedPlan.contains("bitmapandcount") &&
+      blockedPlan.contains("__salt") && !blockedPlan.contains(broadcastScan),
+      "pairScanMaxDocs = 0 must route to the bitmap blocked scan")
+    val blocked = values(blockedPairs)
     assert(scan.nonEmpty, "fixture must plant qualifying pairs")
     assert(scan == prefix, s"scan=$scan prefix=$prefix")
     assert(blocked == prefix, s"blocked=$blocked prefix=$prefix")
@@ -175,8 +206,8 @@ class ContainmentSpec extends SparkSpec {
 
   test("Jaccard dense-but-wide corpus stays on the prefix path (measured decision)") {
     // r17: the sorted-array blocked tier was built for this regime and
-    // REJECTED on its own sweep (graft.SweepJaccardWide: 33× slower
-    // than prefix at 10k docs — Jaccard's symmetric size + count
+    // REJECTED on its own sweep (BENCH_AB_r17.md: 33× slower than
+    // prefix at 10k docs — Jaccard's symmetric size + count
     // filters keep prefix alive where containment's asymmetric filter
     // detonates). This pins the measured routing decision: a dense
     // corpus whose universe exceeds the bitmap cap must take the

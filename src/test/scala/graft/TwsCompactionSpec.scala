@@ -5,10 +5,12 @@ import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.TwsCompaction
 
-/** transformWithState latest-per-key compaction: same contract as the
-  * legacy flatMapGroupsWithState operator (StatefulCompactionSpec) on
-  * the modern API. Runs on the RocksDB state store provider, which
-  * transformWithState requires.
+/** transformWithState latest-per-key compaction: per-key
+  * last-writer-wins by offset (also within one batch), a tombstone
+  * removes state and emits a null row, out-of-order rows below the
+  * stored offset are ignored across micro-batches, and a key reinserted
+  * after its tombstone starts fresh. Runs on the RocksDB state store
+  * provider, which transformWithState requires.
   */
 class TwsCompactionSpec extends SparkSpec {
 
