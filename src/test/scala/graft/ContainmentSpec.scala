@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -14,13 +15,15 @@ class ContainmentSpec extends SparkSpec {
 
   import spark.implicits._
 
-  /** Lower-cased physical plan — the routing pins below assert the
-    * route's signature, since value equality alone also passes when a
-    * route silently falls through to another tier. */
-  private def physical(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString.toLowerCase
-
-  private val broadcastScan = "broadcastnestedloopjoin"
+  /** Routing pin: `df` runs the bitmap tier's salted blocked scan
+    * (`blocked`) or its broadcast pair scan. Value equality alone also
+    * passes when a route silently falls through to another tier. */
+  private def assertBitmapRoute(df: DataFrame, blocked: Boolean): Unit = {
+    val plan = df.queryExecution.executedPlan.toString.toLowerCase
+    assert(plan.contains("bitmapandcount") && plan.contains("__salt") == blocked &&
+      plan.contains("broadcastnestedloopjoin") != blocked,
+      s"expected the bitmap ${if (blocked) "blocked" else "broadcast"} scan:\n$plan")
+  }
 
   test("a quoted paragraph is contained in its quoting page, not vice versa") {
     val para = "the quick brown fox jumps over the lazy dog again and again"
@@ -71,14 +74,11 @@ class ContainmentSpec extends SparkSpec {
     val arrs = TextAnalysis.gramArrays(rows, "doc_id", "text", 4)
     def pairs(denseMax: Long) =
       Dedup.containmentPairs(arrs, "doc_id", 3, 4, denseUniverseMax = denseMax)
-    def values(df: org.apache.spark.sql.DataFrame) =
+    def values(df: DataFrame) =
       df.select("src", "dst", "n_src", "n_shared", "containment")
         .as[(Long, Long, Long, Long, Double)].collect().toSet
     val densePairs = pairs(Long.MaxValue) // force bitmap path
-    val densePlan = physical(densePairs)
-    assert(densePlan.contains("bitmapandcount") &&
-      densePlan.contains(broadcastScan) && !densePlan.contains("__salt"),
-      "uncapped universe must route to the bitmap broadcast scan")
+    assertBitmapRoute(densePairs, blocked = false)
     val dense = values(densePairs)
     val prefix = values(pairs(0L))   // force prefix path
     assert(dense.nonEmpty)
@@ -102,15 +102,12 @@ class ContainmentSpec extends SparkSpec {
     def pairs(maxDocs: Long) =
       Dedup.containmentPairs(arrs, "doc_id", 3, 4,
           denseUniverseMax = Long.MaxValue, pairScanMaxDocs = maxDocs)
-    def values(df: org.apache.spark.sql.DataFrame) =
+    def values(df: DataFrame) =
       df.select("src", "dst", "n_src", "n_shared", "containment")
         .as[(Long, Long, Long, Long, Double)].collect().toSet
     val scan = values(pairs(Long.MaxValue)) // force the all-pairs scan
     val blockedPairs = pairs(0L)          // force the component-blocked scan
-    val blockedPlan = physical(blockedPairs)
-    assert(blockedPlan.contains("bitmapandcount") &&
-      blockedPlan.contains("__salt") && !blockedPlan.contains(broadcastScan),
-      "pairScanMaxDocs = 0 must route to the bitmap blocked scan")
+    assertBitmapRoute(blockedPairs, blocked = true)
     val blocked = values(blockedPairs)
     assert(scan.nonEmpty)
     assert(scan == blocked, s"scan=$scan blocked=$blocked")
@@ -184,20 +181,14 @@ class ContainmentSpec extends SparkSpec {
     def pairs(denseMax: Long, maxDocs: Long) =
       Dedup.ngramJaccardPairs(arrs, "doc_id", 2, 5,
         denseUniverseMax = denseMax, pairScanMaxDocs = maxDocs)
-    def values(df: org.apache.spark.sql.DataFrame) =
+    def values(df: DataFrame) =
       df.as[(Long, Long, Double)].collect().toSet
     val prefix = values(pairs(0L, Long.MaxValue))    // force prefix path
     val scanPairs = pairs(Long.MaxValue, Long.MaxValue) // broadcast pair scan
-    val scanPlan = physical(scanPairs)
-    assert(scanPlan.contains("bitmapandcount") &&
-      scanPlan.contains(broadcastScan) && !scanPlan.contains("__salt"),
-      "uncapped universe must route to the bitmap broadcast scan")
+    assertBitmapRoute(scanPairs, blocked = false)
     val scan = values(scanPairs)
     val blockedPairs = pairs(Long.MaxValue, 0L)    // component-blocked scan
-    val blockedPlan = physical(blockedPairs)
-    assert(blockedPlan.contains("bitmapandcount") &&
-      blockedPlan.contains("__salt") && !blockedPlan.contains(broadcastScan),
-      "pairScanMaxDocs = 0 must route to the bitmap blocked scan")
+    assertBitmapRoute(blockedPairs, blocked = true)
     val blocked = values(blockedPairs)
     assert(scan.nonEmpty, "fixture must plant qualifying pairs")
     assert(scan == prefix, s"scan=$scan prefix=$prefix")
