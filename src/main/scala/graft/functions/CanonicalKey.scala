@@ -126,19 +126,17 @@ case class CanonicalPkExpr(children: Seq[Expression]) extends Expression {
       val v = children.head.eval(input)
       if (v == null) null else CanonicalPkExpr.encode(v, children.head.dataType)
     } else {
-      val out = new java.io.ByteArrayOutputStream(16)
+      // as the generated code: any null element makes the key null,
+      // also when an earlier element is over the 255-byte cap
+      val parts = new Array[Array[Byte]](n)
       var i = 0
       while (i < n) {
         val v = children(i).eval(input)
         if (v == null) return null
-        val p = CanonicalPkExpr.encode(v, children(i).dataType)
-        if (p.length > 255) throw new IllegalStateException(
-          s"composite key element exceeds 255 bytes: ${p.length}")
-        out.write(p.length)
-        out.write(p, 0, p.length)
+        parts(i) = CanonicalPkExpr.encode(v, children(i).dataType)
         i += 1
       }
-      out.toByteArray
+      CanonicalKeyRT.composite(parts)
     }
   }
 

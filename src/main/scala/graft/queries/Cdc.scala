@@ -192,23 +192,12 @@ object Cdc {
     // equal a from-scratch batch join — verified against a plain SQL
     // oracle that never saw the incremental path.
     //
-    // PER-BATCH FLOOR, profiled per wave (sf0.1 local[32], r13; the
-    // per-batch IVM layers now come from `perfbench/run.py --trace 1`,
-    // `ivm.*`): each batch is two wave barriers — deltas+state (6 jobs)
-    // and rebuild (3 jobs) — and the tombstone batch (1.5k-row delta,
-    // data ≈ 0) measures them at 0.40 s + 0.39 s: ~0.8 s/batch of
-    // irreducible job-scheduling + localCheckpoint latency, ~4 s over
-    // the 5-batch replay. Insert batches add ~1-1.5 s each of REAL
-    // assembly/state volume (40k+ dirty roots re-assembled, full
-    // snapshot rewrite under the memory backend) — that part scales
-    // with data, not batch count. Knob sweep confirmed the floor is
-    // wave-structural, not tuning: statePartitions 8/16/32 measured
-    // 10.3/8.5/9.8 s same-host back-to-back (16 = tuned optimum), and
-    // the two barriers cannot fuse (rebuild reads the wave-1
-    // checkpoints). At production cadence the floor amortizes:
-    // batches carry minutes of changelog, so 0.8 s of fixed cost per
-    // batch is noise against the delta volume — the floor matters
-    // only at this bench's artificial 5-batches-over-60k-rows shape.
+    // Per-batch cost: each batch is two wave barriers (delta+state, then
+    // rebuild). The engine runs its plans interpreted in its own
+    // session, because a batch's generated classes overflow Spark's
+    // codegen cache and would be recompiled every batch
+    // (BENCH_AB_ivm_interpreted.md has the A/B for this query). The
+    // per-wave split comes from `perfbench/run.py --trace 1` (`ivm.*`).
     "q_incr" -> QueryDef(
       "incremental view maintenance over a chunked changelog ≡ batch join",
       """SELECT o_orderkey, c_name

@@ -9,6 +9,7 @@ import graft.core.Ckpt.CkptOps
 import graft.functions.CanonicalKey.canonicalPk
 import graft.operators.{Compaction, Denormalize, Filters}
 import graft.operators.Filters.{FilterMode, RecordFilter}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Queueing strategy hook — decides rebuild priority per
   * (denormalized name, triggering entity); NONE drops the rebuild
@@ -77,6 +78,27 @@ final class IncrementalDenormalizer(
 
   import IncrementalDenormalizer._
 
+  /** The engine's own session, in which every plan it builds runs: a
+    * clone of `spark` with runtime code generation off
+    * ([[PlanBridge.interpretedClone]]). One micro-batch plans about 130
+    * distinct generated classes, more than Spark's JVM-wide codegen
+    * cache holds (100), so with codegen every batch recompiled all of
+    * them; interpreted, the batch runs faster than it compiled
+    * (BENCH_AB_ivm_interpreted.md). `spark` keeps codegen, and so do
+    * batch [[Denormalize]] and the other operators. Conf set on `spark`
+    * after construction does not reach this session. */
+  val session: SparkSession = PlanBridge.interpretedClone(spark)
+  // a durable backend's frames may compose through BucketUnion, whose
+  // planner strategy the clone must hold also if it was registered late
+  if (backend.durable) graft.plans.BucketUnion.register(session)
+
+  /** `df` with its plan rebound into [[session]]: every frame that
+    * enters engine state goes through here, so every plan derived from
+    * state runs interpreted. */
+  private def bind(df: DataFrame): DataFrame =
+    if (df.sparkSession eq session) df
+    else PlanBridge.ofRows(session, PlanBridge.analyzed(df))
+
   /** One edge of one tree: path of relations from root (inclusive) down
     * to the edge's parent node, plus the child relation. */
   private case class Edge(id: String, tree: Relation, path: Seq[Relation], child: Relation)
@@ -131,7 +153,7 @@ final class IncrementalDenormalizer(
       // already-bucket-aligned recovered chain from persistFull's
       // aligned fast path — so durable frames pass through untouched.
       val src = if (backend.durable) df else df.coalesce(statePartitions)
-      backend.persist(name, src, delta)
+      bind(backend.persist(name, src, delta))
     }
 
   /** Materialize independent state tables concurrently. Each eager
@@ -161,19 +183,19 @@ final class IncrementalDenormalizer(
   /** entity → (__pk binary, value struct) */
   private var snapshots: Map[String, DataFrame] =
     allEntities.map { e =>
-      e -> emptyDf(spark, StructType(Seq(
+      e -> emptyDf(session, StructType(Seq(
         StructField("__pk", BinaryType),
         StructField("value", valueSchemas(e)))))
     }.toMap
 
   /** edge id → (__cpk binary childPK, __jk binary) */
   private var links: Map[String, DataFrame] =
-    edges.map(e => e.id -> emptyDf(spark, linkSchema)).toMap
+    edges.map(e => e.id -> emptyDf(session, linkSchema)).toMap
 
   // Rebuild-owned state is FUTURE-valued: [[rebuild]] submits its
   // materializations to the shared pool and returns, so a queued next
-  // batch's delta wave overlaps the rebuild wave (the cross-batch
-  // barrier was the measured per-batch floor — see processBatch).
+  // batch's delta wave overlaps the rebuild wave instead of waiting
+  // for it at a cross-batch barrier.
   // Every consumer awaits through the typed accessors below; public
   // reads go through [[awaitPending]] so the external contract
   // (counters, docs, state tables reflect every processed batch) is
@@ -185,16 +207,16 @@ final class IncrementalDenormalizer(
 
   /** edge id → (__jk binary, __rpk binary rootPK) */
   private var rootmapsF: Map[String, scala.concurrent.Future[DataFrame]] =
-    edges.map(e => e.id -> completed(emptyDf(spark, rootmapSchema))).toMap
+    edges.map(e => e.id -> completed(emptyDf(session, rootmapSchema))).toMap
   private def rootmap(id: String): DataFrame = await(rootmapsF(id))
 
   /** tree name → (__pk binary, doc_json string nullable, __deleted) */
   private var docStateF: Map[String, scala.concurrent.Future[DataFrame]] =
-    trees.map(t => t.denormalizedName.get -> completed(emptyDf(spark, docSchema))).toMap
+    trees.map(t => t.denormalizedName.get -> completed(emptyDf(session, docSchema))).toMap
 
   /** Documents changed by the most recent batch, per tree (for sinks). */
   private var lastChangedF: Map[String, scala.concurrent.Future[DataFrame]] =
-    trees.map(t => t.denormalizedName.get -> completed(emptyDf(spark, docSchema))).toMap
+    trees.map(t => t.denormalizedName.get -> completed(emptyDf(session, docSchema))).toMap
 
   /** Block until every async rebuild materialization has landed. */
   private def awaitPending(): Unit = {
@@ -208,9 +230,9 @@ final class IncrementalDenormalizer(
     * batch — reference Southpaw.java:600-637). */
   private val dirtySchema = StructType(Seq(StructField("__rpk", BinaryType)))
   private var pendingMedium: Map[String, DataFrame] =
-    trees.map(t => t.denormalizedName.get -> emptyDf(spark, dirtySchema)).toMap
+    trees.map(t => t.denormalizedName.get -> emptyDf(session, dirtySchema)).toMap
   private var pendingLow: Map[String, DataFrame] =
-    trees.map(t => t.denormalizedName.get -> emptyDf(spark, dirtySchema)).toMap
+    trees.map(t => t.denormalizedName.get -> emptyDf(session, dirtySchema)).toMap
   private var batchIndex: Long = 0L
 
   /** Cumulative engine counters, accumulated from `observe` metrics
@@ -233,7 +255,6 @@ final class IncrementalDenormalizer(
   private def observed(df: DataFrame, name: String): Option[Row] =
     df.queryExecution.observedMetrics.get(name)
 
-  def session: SparkSession = spark
   def docs(rootName: String): DataFrame = await(docStateF(rootName))
   def changedDocs(rootName: String): DataFrame = await(lastChangedF(rootName))
   def snapshot(entity: String): DataFrame = snapshots(entity).select(col("value.*"))
@@ -315,7 +336,7 @@ final class IncrementalDenormalizer(
       // name): its loud schema-evolution rejection must fire before any
       // sibling restore job is submitted, or the caller's cleanup races
       // still-running persists of the other tables
-      val aligned = names.map(n => alignRestored(n, tables(n)))
+      val aligned = names.map(n => alignRestored(n, bind(tables(n))))
       val out = parMaterialize(
         names.zip(aligned).map { case (n, df) => matState(n, df) })
       names.zip(out).toMap
@@ -424,44 +445,32 @@ final class IncrementalDenormalizer(
   /** Process one micro-batch of changelog DataFrames per entity
     * (columns: offset Long, key struct, value struct|null).
     *
-    * Materialization is ONE fused wave before the per-tree rebuild
-    * (measured: wave barriers, not data volume, are the per-batch cost
-    * at micro-batch scale): the per-entity delta folds checkpoint
-    * concurrently with the dirty-root sets, snapshot updates, link
-    * updates and deferred-priority sets — the derived plans re-derive
-    * the (cheap, map-side-combinable) fold inline from LAZY delta
-    * views instead of waiting for the fold's checkpoint, and all of
-    * them read only PRE-batch state, so they are mutually independent
-    * by construction. The checkpointed folds then feed the rebuild.
+    * Materialization is ONE wave before the per-tree rebuild: the
+    * dirty-root sets, snapshot updates, link updates and
+    * deferred-priority sets each re-derive their entity's
+    * (map-side-combinable) delta fold inline from a LAZY view, and all
+    * of them read only PRE-batch state, so they are mutually
+    * independent by construction. No fold is materialized on its own:
+    * the rebuild reads the drained dirty sets and the updated state.
+    * The plans run interpreted in [[session]]: at micro-batch scale,
+    * compiling them cost more than running them
+    * (BENCH_AB_ivm_interpreted.md).
     */
-  // Counter-experiment (kept for the record): disabling AQE for the
-  // batch's many small fixed-shape jobs does NOT help — 15.7s vs 15.1s
-  // at sf0.1; AQE's shuffle-partition coalescing is what keeps the
-  // tiny state shuffles from fanning out to 32 tasks each.
   def processBatch(changes: Map[String, DataFrame]): Unit = {
     batchIndex += 1
     bump("batches", 1L)
     // reset per-batch change tracking
     lastChangedF = trees.map(t =>
-      t.denormalizedName.get -> completed(emptyDf(spark, docSchema))).toMap
-    // 1. fold each entity's changes against prior state (filter-aware).
-    // Eager localCheckpoint (not cache): truncating lineage keeps
-    // downstream plan trees small across chained batches — measured
-    // faster than lazy caching once batches accumulate. The observe
-    // metrics (records in, delta keys out) ride this job.
-    val deltaPairs: Seq[(String, DataFrame)] = changes.collect {
-      case (entity, df) if allEntities.contains(entity) =>
-        entity -> foldDelta(entity,
-            df.observe(s"graft_in_$entity", count(lit(1)).as("n")))
-          .observe(s"graft_delta_$entity", count(lit(1)).as("n"))
-    }.toSeq
-    // LAZY delta views feed the same wave's derived plans: each derived
-    // plan re-runs the (cheap, map-side-combinable) fold inline rather
-    // than waiting for the fold's checkpoint — one barrier instead of
-    // two per batch. The checkpointed outputs below become `deltas`
-    // for the rebuild phase; derived plans and checkpoints read the
-    // SAME pre-batch state either way, so results are identical.
-    val lazyDeltas: Map[String, DataFrame] = deltaPairs.toMap
+      t.denormalizedName.get -> completed(emptyDf(session, docSchema))).toMap
+    // 1. fold each entity's changes against prior state (filter-aware),
+    // as LAZY views: each plan of the wave re-runs its fold inline, so
+    // the wave has one barrier, and every plan reads the SAME pre-batch
+    // state.
+    val inputs: Map[String, DataFrame] = changes.collect {
+      case (entity, df) if allEntities.contains(entity) => entity -> bind(df)
+    }
+    val lazyDeltas: Map[String, DataFrame] =
+      inputs.map { case (entity, df) => entity -> foldDelta(entity, df) }
 
     // Per-tree per-priority dirty-root sets plus snapshot and link
     // updates, all derived from (lazy deltas, pre-batch state). State
@@ -511,7 +520,7 @@ final class IncrementalDenormalizer(
         }
       }
     def unionParts(parts: Seq[DataFrame]): DataFrame =
-      if (parts.isEmpty) emptyDf(spark, dirtySchema)
+      if (parts.isEmpty) emptyDf(session, dirtySchema)
       else parts.reduce(_ union _).distinct()
 
     val mediumImmediate = mediumTriggerRows <= 0L
@@ -541,15 +550,33 @@ final class IncrementalDenormalizer(
     // keys) alongside the full plan: the durable backend persists just
     // the change set as a delta generation, so its write cost scales
     // with the batch, not the state (RocksDBState.java:611-636 parity).
-    val snapUpdates: Seq[(String, DataFrame, (DataFrame, DataFrame))] =
-      lazyDeltas.toSeq.map { case (entity, delta) =>
-        val snap = snapshots(entity)
-        val changedKeys = delta.select(col("__pk"))
-        val newRows =
-          delta.where(col("value").isNotNull).select(col("__pk"), col("value"))
-        val kept = snap.join(changedKeys, Seq("__pk"), "left_anti")
-        (entity, kept.unionByName(newRows), (newRows, changedKeys))
-      }
+    // The snapshot update also carries the fold's counters (records
+    // in, delta keys out) as observe metrics, so they cost no job of
+    // their own. The memory backend checkpoints the update itself, and
+    // the metrics ride that job. A durable backend runs only the change
+    // set's writes, whose executions the engine never sees, so there
+    // the fold is checkpointed first: the metrics ride that job, and
+    // both writes read its blocks instead of re-running the fold.
+    val snapEntities: Seq[String] = lazyDeltas.keys.toSeq
+    def snapUpdate(entity: String): () => DataFrame = () => {
+      val observedDelta = foldDelta(entity,
+          inputs(entity).observe(s"graft_in_$entity", count(lit(1)).as("n")))
+        .observe(s"graft_delta_$entity", count(lit(1)).as("n"))
+      val delta =
+        if (backend.durable) observedDelta.graftCkptMem() else observedDelta
+      val changedKeys = delta.select(col("__pk"))
+      val newRows =
+        delta.where(col("value").isNotNull).select(col("__pk"), col("value"))
+      val kept = snapshots(entity).join(changedKeys, Seq("__pk"), "left_anti")
+      val full = kept.unionByName(newRows)
+      // as in matState: the coalesced frame is the one the memory
+      // backend checkpoints, so its execution holds the metrics
+      val src = if (backend.durable) full else full.coalesce(statePartitions)
+      val out = bind(backend.persist(s"snapshot__$entity", src,
+        Some((newRows, changedKeys))))
+      countDelta(entity, if (backend.durable) observedDelta else src)
+      out
+    }
     val linkUpdates: Seq[(String, DataFrame, (DataFrame, DataFrame))] =
       lazyDeltas.toSeq.flatMap { case (entity, delta) =>
         edges.filter(_.child.entity == entity).map { edge =>
@@ -566,39 +593,17 @@ final class IncrementalDenormalizer(
       }
 
     val waveInputs: Seq[() => DataFrame] =
-      deltaPairs.map(p => matTemp(p._2)) ++
-        wavePlans.map {
-          case (_, "drain", b) => matTemp(b())
-          case (name, "pmed", b) => matState(s"pending_med__${safeName(name)}", b())
-          case (name, _, b) => matState(s"pending_low__${safeName(name)}", b())
-        } ++
-        snapUpdates.map { case (e, df, d) =>
-          matState(s"snapshot__$e", df, Some(d)) } ++
+      wavePlans.map {
+        case (_, "drain", b) => matTemp(b())
+        case (name, "pmed", b) => matState(s"pending_med__${safeName(name)}", b())
+        case (name, _, b) => matState(s"pending_low__${safeName(name)}", b())
+      } ++
+        snapEntities.map(snapUpdate) ++
         linkUpdates.map { case (id, df, d) =>
           matState(s"links__${safeName(id)}", df, Some(d)) }
     val waveOut = parMaterialize(waveInputs)
-    val (deltaOut, rest0) = waveOut.splitAt(deltaPairs.size)
-    val (dirtyOut, rest) = rest0.splitAt(wavePlans.size)
-    val (snapOut, linkOut) = rest.splitAt(snapUpdates.size)
-    val deltas: Map[String, DataFrame] =
-      deltaPairs.map(_._1).zip(deltaOut).toMap
-    deltaPairs.foreach { case (entity, observedDf) =>
-      observed(observedDf, s"graft_in_$entity")
-        .foreach(r => bump("records_consumed", r.getLong(0)))
-      observed(observedDf, s"graft_delta_$entity")
-        .foreach(r => bump("delta_keys", r.getLong(0)))
-    }
-    // NONE drops are counted off the already-observed delta sizes —
-    // no extra job (reference Southpaw.java:618-637 load shedding).
-    trees.foreach { tree =>
-      deltaPairs.foreach { case (entity, observedDf) =>
-        val affects = tree.entity == entity || firstEdgeFor(tree, entity).nonEmpty
-        if (affects &&
-            strategy.priority(tree.denormalizedName.get, entity) == QueueingStrategy.None)
-          observed(observedDf, s"graft_delta_$entity")
-            .foreach(r => bump("rebuilds_dropped_none", r.getLong(0)))
-      }
-    }
+    val (dirtyOut, rest) = waveOut.splitAt(wavePlans.size)
+    val (snapOut, linkOut) = rest.splitAt(snapEntities.size)
 
     var dirtySets = Map.empty[String, DataFrame]
     wavePlans.map { case (name, kind, _) => (name, kind) }.zip(dirtyOut).foreach {
@@ -609,8 +614,8 @@ final class IncrementalDenormalizer(
     }
     if (drainLowNow) // drained this batch → reset without a job
       trees.foreach(t => pendingLow =
-        pendingLow.updated(t.denormalizedName.get, emptyDf(spark, dirtySchema)))
-    snapUpdates.map(_._1).zip(snapOut).foreach {
+        pendingLow.updated(t.denormalizedName.get, emptyDf(session, dirtySchema)))
+    snapEntities.zip(snapOut).foreach {
       case (entity, df) => snapshots = snapshots.updated(entity, df)
     }
     linkUpdates.map(_._1).zip(linkOut).foreach {
@@ -626,7 +631,7 @@ final class IncrementalDenormalizer(
           dirtySets = dirtySets.updated(name,
             dirtySets(name).union(pendingMedium(name)).distinct()
               .graftCkptMem())
-          pendingMedium = pendingMedium.updated(name, emptyDf(spark, dirtySchema))
+          pendingMedium = pendingMedium.updated(name, emptyDf(session, dirtySchema))
         }
       }
     }
@@ -651,6 +656,24 @@ final class IncrementalDenormalizer(
     if (backend.durable) {
       awaitPending()
       backend.gc()
+    }
+  }
+
+  /** Bump the fold counters from the observe metrics of `executed`, the
+    * materialized frame whose plan ran the entity's observed fold. */
+  private def countDelta(entity: String, executed: DataFrame): Unit = {
+    observed(executed, s"graft_in_$entity")
+      .foreach(r => bump("records_consumed", r.getLong(0)))
+    observed(executed, s"graft_delta_$entity").foreach { r =>
+      bump("delta_keys", r.getLong(0))
+      // NONE drops are counted off the observed delta size — no extra
+      // job (reference Southpaw.java:618-637 load shedding).
+      trees.foreach { tree =>
+        val affects = tree.entity == entity || firstEdgeFor(tree, entity).nonEmpty
+        if (affects &&
+            strategy.priority(tree.denormalizedName.get, entity) == QueueingStrategy.None)
+          bump("rebuilds_dropped_none", r.getLong(0))
+      }
     }
   }
 
@@ -877,9 +900,9 @@ final class IncrementalDenormalizer(
         bumpDocCounters()
         // change set: nd covers EVERY dirty root (tombstones are real
         // rows), so (rows = nd, keys = dirty) upserts exactly
-        val full = backend.persist(s"docs__${safeName(name)}",
+        val full = bind(backend.persist(s"docs__${safeName(name)}",
           kept.unionByName(nd).coalesce(statePartitions),
-          Some((nd, dirtyPks)))
+          Some((nd, dirtyPks))))
         (nd, full)
       }
       lastChangedF = lastChangedF.updated(name, docPairF.map(_._1))

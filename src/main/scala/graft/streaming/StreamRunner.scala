@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -229,13 +230,16 @@ object StreamRunner {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.cache()
         try {
-          val perEntity = entities.flatMap { e =>
-            val rows = cached.where(col("entity") === e)
-            if (rows.isEmpty) None
-            else Some(e -> rows.select(
+          // one presence job for every entity, in the engine's session
+          // (its plans run interpreted): it also fills the cache
+          val rows = PlanBridge.ofRows(engine.session, PlanBridge.analyzed(cached))
+          val present = rows.select(col("entity")).distinct().collect()
+            .map(_.getString(0)).toSet
+          val perEntity = entities.filter(present).map { e =>
+            e -> rows.where(col("entity") === e).select(
               col("offset"),
               from_json(col("key_json"), keySchemas(e)).as("key"),
-              from_json(col("value_json"), valueSchemas(e)).as("value")))
+              from_json(col("value_json"), valueSchemas(e)).as("value"))
           }.toMap
           if (perEntity.nonEmpty) {
             engine.processBatch(perEntity)

@@ -70,4 +70,59 @@ class CanonicalKeySpec extends AnyFunSuite {
         Integer.signum(Integer.compare(a, b)))
     }
   }
+
+  test("CanonicalPkExpr: interpreted eval equals the generated code") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.CanonicalPkExpr
+
+    // the IVM engine evaluates keys interpreted, batch Denormalize
+    // through the generated code: both must give the same bytes, the
+    // same nulls and the same failure
+    def both(types: Seq[DataType], values: Seq[Any]): (Any, Any) = {
+      val expr = CanonicalPkExpr(types.zipWithIndex.map { case (t, i) =>
+        BoundReference(i, t, nullable = true)
+      })
+      val row = InternalRow.fromSeq(values)
+      def attempt(f: => Any): Any =
+        try f catch { case e: IllegalStateException => e.getMessage }
+      val interpreted = attempt(Option(expr.eval(row))
+        .map(_.asInstanceOf[Array[Byte]].toSeq))
+      val projection = GenerateUnsafeProjection.generate(Seq(expr))
+      val generated = attempt {
+        val out = projection(row)
+        if (out.isNullAt(0)) None else Some(out.getBinary(0).toSeq)
+      }
+      (interpreted, generated)
+    }
+    val long = UTF8String.fromString("x" * 300)
+    val cases: Seq[(Seq[DataType], Seq[Any])] = Seq(
+      Seq(IntegerType) -> Seq(0), Seq(IntegerType) -> Seq(-1),
+      Seq(LongType) -> Seq(4235L), Seq(LongType) -> Seq(null),
+      Seq(ShortType) -> Seq((-2).toShort), Seq(ByteType) -> Seq(7.toByte),
+      Seq(StringType) -> Seq(UTF8String.fromString("ab")),
+      Seq(BooleanType) -> Seq(true), Seq(BinaryType) -> Seq(Array[Byte](0, 1)),
+      Seq(StringType) -> Seq(long),
+      Seq(LongType, LongType) -> Seq(4235L, 7234L),
+      Seq(IntegerType, StringType, BinaryType) ->
+        Seq(256, UTF8String.fromString("k"), Array[Byte](9)),
+      Seq(LongType, StringType) -> Seq(1L, null),
+      Seq(LongType, StringType) -> Seq(null, UTF8String.fromString("k")),
+      Seq(StringType, LongType) -> Seq(long, 1L),
+      Seq(StringType, LongType) -> Seq(long, null),
+      Seq(LongType, StringType) -> Seq(null, long))
+    cases.foreach { case (types, values) =>
+      val (interpreted, generated) = both(types, values)
+      assert(interpreted == generated, s"$types $values")
+    }
+    // the composite cap fails, and the single-element path has none
+    assert(both(Seq(StringType, LongType), Seq(long, 1L))._1 ==
+      "composite key element exceeds 255 bytes: 300")
+    assert(both(Seq(StringType), Seq(long))._1 == Some(long.getBytes.toSeq))
+    assert(both(Seq(LongType, LongType), Seq(4235L, 7234L))._1 ==
+      Some(encodeComposite(Seq(4235L, 7234L)).toSeq))
+  }
 }

@@ -108,6 +108,15 @@ class IncrementalGoldenSpec extends SparkSpec {
     checkGolden("DenormalizedPlaylist")
   }
 
+  /** The reference's golden index files named `prefix*`; a missing
+    * `index/` directory fails by its path, like a missing fixture. */
+  private def indexFiles(prefix: String): Array[java.io.File] = {
+    val dir = new java.io.File(s"$root/index")
+    val files = dir.listFiles()
+    if (files == null) throw new java.nio.file.NoSuchFileException(dir.getPath)
+    files.filter(_.getName.startsWith(prefix))
+  }
+
   test("join indices match the reference's golden JK fixtures") {
     import graft.functions.CanonicalKey
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -118,8 +127,7 @@ class IncrementalGoldenSpec extends SparkSpec {
         CanonicalKey.encodeComposite(fields.map(_._2.asLong()))
       } else CanonicalKey.encodeValue(n.asLong())
 
-    val indexDir = new java.io.File(s"$root/index")
-    val jkFiles = indexDir.listFiles().filter(_.getName.startsWith("JK."))
+    val jkFiles = indexFiles("JK.")
     assert(jkFiles.nonEmpty)
     jkFiles.foreach { f =>
       val Array(_, entity, joinKey, _) = f.getName.split("\\.", 4)
@@ -151,8 +159,7 @@ class IncrementalGoldenSpec extends SparkSpec {
         CanonicalKey.encodeComposite(fields.map(_._2.asLong()))
       } else CanonicalKey.encodeValue(n.asLong())
 
-    val pakFiles = new java.io.File(s"$root/index").listFiles()
-      .filter(_.getName.startsWith("PaK."))
+    val pakFiles = indexFiles("PaK.")
     assert(pakFiles.nonEmpty)
     pakFiles.foreach { f =>
       val Array(_, rootE, parentE, pkField, _) = f.getName.split("\\.", 5)
@@ -195,6 +202,17 @@ class IncrementalGoldenSpec extends SparkSpec {
         assert(m("docs_live") > 0 && m("snapshot_rows") > 0)
       } finally graft.streaming.StateOps.deleteState(tmp)
     }
+  }
+
+  test("engine counters on the in-repo corpus: equal on both backends, as pinned") {
+    val c = corpusAt(corpus)
+    val names = Seq("records_consumed", "delta_keys", "rebuilds_dropped_none",
+      "docs_written", "docs_tombstoned", "batches")
+    val memory = names.map(replay(c, testStrategy).counters)
+    val durable = names.map(c.durableEngine.counters)
+    assert(memory == durable)
+    // 56 records, one per entity and pass, over 10 passes
+    assert(memory == Seq(56L, 56L, 4L, 43L, 5L, 10L))
   }
 
   test("Q-INCR: incremental with default strategy converges to batch result") {
