@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """A/B bench protocol (BENCH_AB_r10.md): HEAD vs a snapshot worktree,
-same host, back-to-back ALTERNATING fresh-JVM sessions, N rounds each.
+same host, back-to-back ALTERNATING fresh-JVM sessions, N rounds each;
+HEAD runs first in odd rounds and the snapshot in even ones.
 
 Decides code-vs-host for a round-over-round drift: if the two builds'
 timing distributions overlap when interleaved on the same host in the
@@ -95,15 +96,22 @@ def main():
 
     head, snap = [], []
     for i in range(args.rounds):
-        h = run_head(args.query, args.sfdir, args.cpus)
+        # alternate which side runs first, so host drift within a round
+        # does not always favour one side
+        head_first = i % 2 == 0
+        if head_first:
+            h = run_head(args.query, args.sfdir, args.cpus)
         s = run_snapshot(args.snapshot, args.query, args.sfdir, args.cpus)
+        if not head_first:
+            h = run_head(args.query, args.sfdir, args.cpus)
         if h is not None:
             head.append(h)
         if s is not None:
             snap.append(s)
         hs = "fail" if h is None else f"{h:.3f}s"
         ss = "fail" if s is None else f"{s:.3f}s"
-        print(f"round {i + 1}: HEAD={hs} snapshot={ss}", flush=True)
+        order = "HEAD first" if head_first else "snapshot first"
+        print(f"round {i + 1} ({order}): HEAD={hs} snapshot={ss}", flush=True)
     if not head or not snap:
         sys.exit("no completed rounds on one side; cannot compare "
                  f"(HEAD={len(head)}, snapshot={len(snap)})")

@@ -33,6 +33,37 @@ object BitmapExpr {
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }
 
+/** The bitmap kernels, one static call each from `eval` and from the
+  * generated code. */
+object BitmapRT {
+
+  /** Bits `gids` of an `nWords`-word bitset; positions outside it are
+    * ignored. */
+  def build(gids: ArrayData, nWords: Int): UnsafeArrayData = {
+    val w = new Array[Long](nWords)
+    var i = 0
+    val n = gids.numElements()
+    while (i < n) {
+      val g = gids.getInt(i)
+      if (g >= 0 && (g >>> 6) < nWords) w(g >>> 6) |= 1L << (g & 63)
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(w)
+  }
+
+  /** popcount(x AND y) over the shorter bitmap's words. */
+  def andCount(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var c = 0L
+    var i = 0
+    while (i < n) {
+      c += java.lang.Long.bitCount(x.getLong(i) & y.getLong(i))
+      i += 1
+    }
+    c
+  }
+}
+
 /** `array<int>` bit positions → `array<long>` bitset of `nWords` words. */
 case class BitmapBuildExpr(child: Expression, nWords: Int)
     extends UnaryExpression {
@@ -40,37 +71,12 @@ case class BitmapBuildExpr(child: Expression, nWords: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  override protected def nullSafeEval(in: Any): Any = {
-    val gids = in.asInstanceOf[ArrayData]
-    val w = new Array[Long](nWords)
-    var i = 0
-    val n = gids.numElements()
-    while (i < n) {
-      val g = gids.getInt(i)
-      if (g >= 0 && (g >> 6) < nWords) w(g >> 6) |= 1L << (g & 63)
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(w)
-  }
+  override protected def nullSafeEval(in: Any): Any =
+    BitmapRT.build(in.asInstanceOf[ArrayData], nWords)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val w = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      val g = ctx.freshName("g")
-      val n = ctx.freshName("n")
-      s"""
-         |long[] $w = new long[$nWords];
-         |int $n = $in.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  int $g = $in.getInt($i);
-         |  if ($g >= 0 && ($g >>> 6) < $nWords) {
-         |    $w[$g >>> 6] |= 1L << ($g & 63);
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($w);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, in =>
+      s"${ev.value} = graft.functions.BitmapRT.build($in, $nWords);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -83,33 +89,12 @@ case class BitmapAndCountExpr(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var c = 0L
-    var i = 0
-    while (i < n) {
-      c += java.lang.Long.bitCount(x.getLong(i) & y.getLong(i))
-      i += 1
-    }
-    c
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    BitmapRT.andCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $c = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $c += java.lang.Long.bitCount($a.getLong($i) & $b.getLong($i));
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.BitmapRT.andCount($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -48,17 +47,11 @@ object CanonicalKey {
     * given order (caller sorts by field name). Single element: no prefix. */
   def encodeComposite(values: Seq[Any]): Array[Byte] =
     if (values.size == 1) encodeValue(values.head)
-    else {
-      val parts = values.map(encodeValue)
-      val out = new java.io.ByteArrayOutputStream()
-      parts.foreach { p =>
-        require(p != null, "null element in composite key")
-        require(p.length <= 255, s"composite key element exceeds 255 bytes: ${p.length}")
-        out.write(p.length)
-        out.write(p)
-      }
-      out.toByteArray
-    }
+    else CanonicalKeyRT.composite(values.map { v =>
+      val p = encodeValue(v)
+      require(p != null, "null element in composite key")
+      p
+    }.toArray)
 
   def stripZeroes(bytes: Array[Byte]): Array[Byte] = {
     var i = 0

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -24,9 +23,22 @@ case class CosineSimExpr(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimRT.sim(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.CosineSimRT.sim($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The fused kernel, one static call from `eval` and from the generated
+  * code. */
+object CosineSimRT {
+  def sim(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -37,31 +49,6 @@ case class CosineSimExpr(left: Expression, right: Expression)
     }
     dot / math.sqrt(nx * ny)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = $a.getDouble($i);
-         |  double $yi = $b.getDouble($i);
-         |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |}
-         |${ev.value} = $dot / java.lang.Math.sqrt($nx * $ny);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object CosineSimExpr {

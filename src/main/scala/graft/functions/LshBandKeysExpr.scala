@@ -17,8 +17,9 @@ import org.apache.spark.sql.types._
   * lambdas, allocating a fresh 64-element array per plane per row — at
   * the selective 8×16 tier that is 128 allocations/row and dominated
   * the r14 sweep (per-row signature cost, not candidates). This
-  * expression computes the same keys in one tight generated loop: no
-  * allocations, no lambda dispatch, one pass over the sign matrix.
+  * expression computes the same keys in one tight loop (the static
+  * [[LshBandKeysRT.keys]] kernel, which `eval` and the generated code
+  * both call): no lambda dispatch, one pass over the sign matrix.
   *
   * NUMERICALLY IDENTICAL to the column form, which the generated-SQL
   * oracles replay: the per-plane accumulation is the same sequential
@@ -51,7 +52,24 @@ case class LshBandKeysExpr(child: Expression, dim: Int, bands: Int,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  @inline private def planeNonNeg(dot: Double): Boolean =
+  override protected def nullSafeEval(input: Any): Any =
+    LshBandKeysRT.keys(input.asInstanceOf[ArrayData], signs, dim, bands, rowsPerBand)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val s = ctx.addReferenceObj("lshSigns", signs, "byte[]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.LshBandKeysRT.keys($v, $s, $dim, $bands, $rowsPerBand);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The band-key kernel, one static call from `eval` and from the
+  * generated code. */
+object LshBandKeysRT {
+
+  private def planeNonNeg(dot: Double): Boolean =
     if (dot > 1e-6) true
     else if (dot < -1e-6) false
     // NaN fails BOTH sign tests and would reach BigDecimal.valueOf
@@ -69,9 +87,9 @@ case class LshBandKeysExpr(child: Expression, dim: Int, bands: Int,
     else java.math.BigDecimal.valueOf(dot)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() >= 0
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    require(v.numElements() >= dim,
+  def keys(v: ArrayData, signs: Array[Byte], dim: Int, bands: Int,
+      rowsPerBand: Int): GenericArrayData = {
+    if (v.numElements() < dim) throw new IllegalArgumentException(
       s"LshBandKeysExpr: vector has ${v.numElements()} elements, need $dim")
     val keys = new Array[Long](bands)
     var m = 0
@@ -95,50 +113,6 @@ case class LshBandKeysExpr(child: Expression, dim: Int, bands: Int,
     }
     new GenericArrayData(keys)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val s = ctx.addReferenceObj("lshSigns", signs, "byte[]")
-      val keys = ctx.freshName("keys")
-      val m = ctx.freshName("m")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val base = ctx.freshName("base")
-      val acc = ctx.freshName("acc")
-      val x = ctx.freshName("x")
-      val bits = ctx.freshName("bits")
-      val nonneg = ctx.freshName("nonneg")
-      s"""
-         |if ($v.numElements() < $dim) {
-         |  throw new IllegalArgumentException(
-         |    "LshBandKeysExpr: vector has " + $v.numElements() +
-         |    " elements, need $dim");
-         |}
-         |long[] $keys = new long[$bands];
-         |for (int $m = 0; $m < $bands; $m++) {
-         |  long $bits = 0L;
-         |  for (int $j = 0; $j < $rowsPerBand; $j++) {
-         |    int $base = ($m * $rowsPerBand + $j) * $dim;
-         |    double $acc = 0.0;
-         |    for (int $d = 0; $d < $dim; $d++) {
-         |      double $x = $v.getDouble($d);
-         |      $acc += ($s[$base + $d] > 0) ? $x : -$x;
-         |    }
-         |    boolean $nonneg = ($acc > 1e-6) ? true : (($acc < -1e-6) ? false :
-         |      (Double.isNaN($acc) ? true :
-         |      java.math.BigDecimal.valueOf($acc)
-         |        .setScale(6, java.math.RoundingMode.HALF_UP)
-         |        .doubleValue() >= 0));
-         |    if ($nonneg) $bits |= (1L << $j);
-         |  }
-         |  $keys[$m] = ((long) $m) * (1L << $rowsPerBand) + $bits;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($keys);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object LshBandKeysExpr {

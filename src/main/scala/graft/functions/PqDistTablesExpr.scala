@@ -21,7 +21,9 @@ import org.apache.spark.sql.types._
   * m·nCodes times (~69 KB of plan text parsed/optimized/codegen'd per
   * run even though the probe set is tiny — see
   * plans/r16/q_ann_pq_after.txt). This expression computes the same
-  * tables in one generated loop over a compact codebook reference.
+  * tables in one loop over a compact codebook reference (the static
+  * [[PqRT.tables]] kernel, which `eval` and the generated code both
+  * call).
   *
   * NUMERICALLY IDENTICAL to the column form (which the generated SQL
   * oracle replays): per-(subspace, code) distance = the same sequential
@@ -30,7 +32,8 @@ import org.apache.spark.sql.types._
   * shortest-decimal form Spark's `Round` uses — with NaN/Infinity
   * passing through unrounded exactly like `Round` (and
   * [[PqEncodeExpr]]'s guard). Parity is pinned property-style in
-  * SimilarityPlanSpec.
+  * SimilarityPlanSpec. Vectors shorter than `dim`, or with a null
+  * element, fail loudly.
   *
   * @param codebook row-major nCodes × dim doubles (full vectors; each
   *                 subspace reads its own slice)
@@ -44,80 +47,18 @@ case class PqDistTablesExpr(child: Expression, dim: Int, m: Int,
   require(codebook.length == nCodes * dim,
     s"codebook has ${codebook.length} doubles, need ${nCodes * dim}")
 
-  private def sub: Int = dim / m
-
   override def dataType: DataType =
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  private def round6(acc: Double): Double =
-    if (java.lang.Double.isNaN(acc) || java.lang.Double.isInfinite(acc)) acc
-    else java.math.BigDecimal.valueOf(acc)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  override protected def nullSafeEval(input: Any): Any =
+    PqRT.tables(input.asInstanceOf[ArrayData], codebook, dim, m, nCodes)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    require(v.numElements() >= dim,
-      s"PqDistTablesExpr: vector has ${v.numElements()} elements, need $dim")
-    val w = sub
-    val tables = new Array[Any](m)
-    var s = 0
-    while (s < m) {
-      val dists = new Array[Double](nCodes)
-      var c = 0
-      while (c < nCodes) {
-        var acc = 0.0
-        var i = 0
-        while (i < w) {
-          val d = v.getDouble(s * w + i) - codebook(c * dim + s * w + i)
-          acc += d * d
-          i += 1
-        }
-        dists(c) = round6(acc)
-        c += 1
-      }
-      tables(s) = new GenericArrayData(dists)
-      s += 1
-    }
-    new GenericArrayData(tables)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("pqCodebook", codebook, "double[]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.PqRT.tables($v, $cb, $dim, $m, $nCodes);")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cb = ctx.addReferenceObj("pqCodebook", codebook, "double[]")
-      val tables = ctx.freshName("tables")
-      val dists = ctx.freshName("dists")
-      val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val dd = ctx.freshName("dd")
-      val w = sub
-      s"""
-         |if ($v.numElements() < $dim) {
-         |  throw new IllegalArgumentException(
-         |    "PqDistTablesExpr: vector has " + $v.numElements() +
-         |    " elements, need $dim");
-         |}
-         |Object[] $tables = new Object[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  double[] $dists = new double[$nCodes];
-         |  for (int $c = 0; $c < $nCodes; $c++) {
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $w; $i++) {
-         |      double $dd = $v.getDouble($s * $w + $i) - $cb[$c * $dim + $s * $w + $i];
-         |      $acc += $dd * $dd;
-         |    }
-         |    $dists[$c] = (Double.isNaN($acc) || Double.isInfinite($acc))
-         |      ? $acc
-         |      : java.math.BigDecimal.valueOf($acc)
-         |          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue();
-         |  }
-         |  $tables[$s] = new org.apache.spark.sql.catalyst.util.GenericArrayData($dists);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($tables);
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -128,17 +69,7 @@ object PqDistTablesExpr {
   /** Column API: the `m` per-subspace distance tables of an
     * array<double> column against a codebook of full vectors. */
   def tables(vec: Column, dim: Int, m: Int,
-      codebook: Array[Seq[Double]]): Column = {
-    val flat = new Array[Double](codebook.length * dim)
-    var c = 0
-    while (c < codebook.length) {
-      require(codebook(c).length == dim,
-        s"codebook vector $c has ${codebook(c).length} dims, need $dim")
-      var d = 0
-      while (d < dim) { flat(c * dim + d) = codebook(c)(d); d += 1 }
-      c += 1
-    }
-    ColumnBridge.column(PqDistTablesExpr(
-      ColumnBridge.expression(vec), dim, m, codebook.length, flat))
-  }
+      codebook: Array[Seq[Double]]): Column =
+    ColumnBridge.column(PqDistTablesExpr(ColumnBridge.expression(vec), dim, m,
+      codebook.length, PqRT.flatten(codebook, dim)))
 }

@@ -20,8 +20,9 @@ import org.apache.spark.sql.types._
   * and the whole codebook inlined as literal trees m·nCodes times
   * (the before-plan was 206 KB of expression text; see
   * plans/r16/q_ann_pq_before.txt). This expression computes the same
-  * codes in one generated loop over a compact codebook reference:
-  * no allocations, no lambda dispatch, plan text collapses to one node.
+  * codes in one loop over a compact codebook reference (the static
+  * [[PqRT.codes]] kernel, which `eval` and the generated code both
+  * call): no lambda dispatch, plan text collapses to one node.
   *
   * NUMERICALLY IDENTICAL to the column form, which the generated SQL
   * oracle replays:
@@ -37,8 +38,9 @@ import org.apache.spark.sql.types._
   *    scan equals the equality-based position lookup.
   *
   * Parity with the column form is pinned property-style in
-  * SimilarityPlanSpec. Vectors shorter than `dim` fail loudly (the
-  * corpus contract is fixed-dimension embeddings).
+  * SimilarityPlanSpec. Vectors shorter than `dim`, or with a null
+  * element, fail loudly (the corpus contract is fixed-dimension
+  * embeddings).
   *
   * @param codebook row-major nCodes × dim doubles (full vectors; each
   *                 subspace reads its own slice)
@@ -50,16 +52,79 @@ case class PqEncodeExpr(child: Expression, dim: Int, m: Int,
   require(codebook.length == nCodes * dim,
     s"codebook has ${codebook.length} doubles, need ${nCodes * dim}")
 
-  private def sub: Int = dim / m
-
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    require(v.numElements() >= dim,
-      s"PqEncodeExpr: vector has ${v.numElements()} elements, need $dim")
-    val w = sub
+  override protected def nullSafeEval(input: Any): Any =
+    PqRT.codes(input.asInstanceOf[ArrayData], codebook, dim, m, nCodes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("pqCodebook", codebook, "double[]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.PqRT.codes($v, $cb, $dim, $m, $nCodes);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object PqEncodeExpr {
+
+  /** Column API: the `m` 1-based PQ codes of an array<double> column
+    * against a codebook of full vectors (one per code). */
+  def codes(vec: Column, dim: Int, m: Int,
+      codebook: Array[Seq[Double]]): Column =
+    ColumnBridge.column(PqEncodeExpr(ColumnBridge.expression(vec), dim, m,
+      codebook.length, PqRT.flatten(codebook, dim)))
+}
+
+/** The PQ kernels, one static call each from `eval` and from the
+  * generated code. [[PqEncodeExpr]]'s codes and [[PqDistTablesExpr]]'s
+  * tables share one distance fold and its rounding. A codebook is
+  * row-major nCodes × dim doubles (full vectors; each subspace reads
+  * its own slice).
+  */
+object PqRT {
+
+  /** Vectors shorter than `dim`, or with a null element, have no
+    * distance: they fail loudly. */
+  private def check(name: String, v: ArrayData, dim: Int): Unit = {
+    if (v.numElements() < dim) throw new IllegalArgumentException(
+      s"$name: vector has ${v.numElements()} elements, need $dim")
+    var d = 0
+    while (d < dim) {
+      if (v.isNullAt(d)) throw new IllegalArgumentException(
+        s"$name: vector element $d is null")
+      d += 1
+    }
+  }
+
+  /** Subspace `s`'s distance to code `c`: the sequential fold of
+    * (v[d] − cb[d])² over its `w` dimensions, rounded half-up to 6
+    * decimals. NaN/Infinity skip the BigDecimal rounding (valueOf THROWS
+    * on non-finite doubles, where Spark's Round passes them through
+    * unchanged) — same guard as [[LshBandKeysRT]]. */
+  private def dist(v: ArrayData, codebook: Array[Double], dim: Int, w: Int,
+      s: Int, c: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < w) {
+      val d = v.getDouble(s * w + i) - codebook(c * dim + s * w + i)
+      acc += d * d
+      i += 1
+    }
+    if (java.lang.Double.isNaN(acc) || java.lang.Double.isInfinite(acc)) acc
+    else java.math.BigDecimal.valueOf(acc)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  }
+
+  /** Per subspace, the 1-based first index of the minimum distance.
+    * NaN compares GREATEST under Double.compare, so a NaN distance never
+    * beats any finite one. */
+  def codes(v: ArrayData, codebook: Array[Double], dim: Int, m: Int,
+      nCodes: Int): GenericArrayData = {
+    check("PqEncodeExpr", v, dim)
+    val w = dim / m
     val codes = new Array[Long](m)
     var s = 0
     while (s < m) {
@@ -67,22 +132,7 @@ case class PqEncodeExpr(child: Expression, dim: Int, m: Int,
       var best = 0.0
       var c = 0
       while (c < nCodes) {
-        var acc = 0.0
-        var i = 0
-        while (i < w) {
-          val d = v.getDouble(s * w + i) - codebook(c * dim + s * w + i)
-          acc += d * d
-          i += 1
-        }
-        // NaN/Infinity skip the BigDecimal rounding (valueOf THROWS on
-        // non-finite doubles, where Spark's Round passes them through
-        // unchanged) and enter the compare as-is — same guard as
-        // LshBandKeysExpr. NaN compares GREATEST under Double.compare,
-        // so a NaN distance never beats any finite one.
-        val r =
-          if (java.lang.Double.isNaN(acc) || java.lang.Double.isInfinite(acc)) acc
-          else java.math.BigDecimal.valueOf(acc)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        val r = dist(v, codebook, dim, w, s, c)
         if (c == 0 || java.lang.Double.compare(r, best) < 0) {
           best = r; bestIdx = c
         }
@@ -94,59 +144,28 @@ case class PqEncodeExpr(child: Expression, dim: Int, m: Int,
     new GenericArrayData(codes)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cb = ctx.addReferenceObj("pqCodebook", codebook, "double[]")
-      val codes = ctx.freshName("codes")
-      val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val dd = ctx.freshName("dd")
-      val r = ctx.freshName("r")
-      val best = ctx.freshName("best")
-      val bestIdx = ctx.freshName("bestIdx")
-      val w = sub
-      s"""
-         |if ($v.numElements() < $dim) {
-         |  throw new IllegalArgumentException(
-         |    "PqEncodeExpr: vector has " + $v.numElements() +
-         |    " elements, need $dim");
-         |}
-         |long[] $codes = new long[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $bestIdx = 0;
-         |  double $best = 0.0;
-         |  for (int $c = 0; $c < $nCodes; $c++) {
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $w; $i++) {
-         |      double $dd = $v.getDouble($s * $w + $i) - $cb[$c * $dim + $s * $w + $i];
-         |      $acc += $dd * $dd;
-         |    }
-         |    double $r = (Double.isNaN($acc) || Double.isInfinite($acc))
-         |      ? $acc
-         |      : java.math.BigDecimal.valueOf($acc)
-         |          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue();
-         |    if ($c == 0 || java.lang.Double.compare($r, $best) < 0) {
-         |      $best = $r; $bestIdx = $c;
-         |    }
-         |  }
-         |  $codes[$s] = $bestIdx + 1L;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-       """.stripMargin
-    })
+  /** Per subspace, the nCodes distances in code order. */
+  def tables(v: ArrayData, codebook: Array[Double], dim: Int, m: Int,
+      nCodes: Int): GenericArrayData = {
+    check("PqDistTablesExpr", v, dim)
+    val w = dim / m
+    val tables = new Array[Any](m)
+    var s = 0
+    while (s < m) {
+      val dists = new Array[Double](nCodes)
+      var c = 0
+      while (c < nCodes) {
+        dists(c) = dist(v, codebook, dim, w, s, c)
+        c += 1
+      }
+      tables(s) = new GenericArrayData(dists)
+      s += 1
+    }
+    new GenericArrayData(tables)
+  }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PqEncodeExpr {
-
-  /** Column API: the `m` 1-based PQ codes of an array<double> column
-    * against a codebook of full vectors (one per code). */
-  def codes(vec: Column, dim: Int, m: Int,
-      codebook: Array[Seq[Double]]): Column = {
+  /** A codebook of full vectors, one per code, as the kernels read it. */
+  def flatten(codebook: Array[Seq[Double]], dim: Int): Array[Double] = {
     val flat = new Array[Double](codebook.length * dim)
     var c = 0
     while (c < codebook.length) {
@@ -156,7 +175,6 @@ object PqEncodeExpr {
       while (d < dim) { flat(c * dim + d) = codebook(c)(d); d += 1 }
       c += 1
     }
-    ColumnBridge.column(PqEncodeExpr(
-      ColumnBridge.expression(vec), dim, m, codebook.length, flat))
+    flat
   }
 }

@@ -31,9 +31,22 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectRT.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.SortedIntersectRT.count($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The merge kernel, one static call from `eval` and from the generated
+  * code. */
+object SortedIntersectRT {
+  def count(x: ArrayData, y: ArrayData): Long = {
     val nx = x.numElements(); val ny = y.numElements()
     var i = 0; var j = 0; var c = 0L
     while (i < nx && j < ny) {
@@ -44,34 +57,6 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val c = ctx.freshName("c")
-      val xi = ctx.freshName("xi")
-      val yj = ctx.freshName("yj")
-      s"""
-         |int $nx = $a.numElements(), $ny = $b.numElements();
-         |int $i = 0, $j = 0;
-         |long $c = 0L;
-         |while ($i < $nx && $j < $ny) {
-         |  int $xi = $a.getInt($i);
-         |  int $yj = $b.getInt($j);
-         |  if ($xi == $yj) { $c++; $i++; $j++; }
-         |  else if ($xi < $yj) { $i++; }
-         |  else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object SortedIntersectExpr {

@@ -11,6 +11,8 @@ import graft.operators.{Compaction, Denormalize, Filters}
 import graft.operators.Filters.{FilterMode, RecordFilter}
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import scala.util.control.NonFatal
+
 /** Queueing strategy hook — decides rebuild priority per
   * (denormalized name, triggering entity); NONE drops the rebuild
   * entirely (load shedding). Parity with the reference's
@@ -204,6 +206,20 @@ final class IncrementalDenormalizer(
     scala.concurrent.Future.successful(df)
   private def await[A](f: scala.concurrent.Future[A]): A =
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+
+  /** Submit one rebuild materialization of `table` to the wave pool.
+    * Its failure surfaces at whichever call awaits the future next,
+    * possibly batches later, so it is rethrown naming the table and the
+    * submitting batch, with the original failure as its cause. */
+  private def submit[A](table: String)(body: => A): scala.concurrent.Future[A] = {
+    val batch = batchIndex
+    scala.concurrent.Future {
+      try body catch {
+        case NonFatal(e) => throw new IllegalStateException(
+          s"IVM state table $table failed in batch $batch: $e", e)
+      }
+    }(materializeEc)
+  }
 
   /** edge id → (__jk binary, __rpk binary rootPK) */
   private var rootmapsF: Map[String, scala.concurrent.Future[DataFrame]] =
@@ -875,18 +891,19 @@ final class IncrementalDenormalizer(
         bump("docs_tombstoned", tomb)
         bump("docs_truncated", if (r.isNullAt(2)) 0L else r.getLong(2))
       }
+    val docsTable = s"docs__${safeName(name)}"
     rootmapUpdates.foreach { case (id, df, d) =>
-      val thunk = matState(s"rootmap__${safeName(id)}", df, Some(d))
-      rootmapsF = rootmapsF.updated(id,
-        scala.concurrent.Future(thunk()))
+      val table = s"rootmap__${safeName(id)}"
+      val thunk = matState(table, df, Some(d))
+      rootmapsF = rootmapsF.updated(id, submit(table)(thunk()))
     }
     if (!backend.durable) {
-      val newDocsF = scala.concurrent.Future {
+      val newDocsF = submit(s"$docsTable (new documents)") {
         val nd = newDocs.graftCkptMem()
         bumpDocCounters()
         nd
       }
-      val keptF = scala.concurrent.Future {
+      val keptF = submit(s"$docsTable (kept documents)") {
         kept.coalesce(statePartitions).graftCkptMem()
       }
       lastChangedF = lastChangedF.updated(name, newDocsF)
@@ -895,12 +912,12 @@ final class IncrementalDenormalizer(
       docStateF = docStateF.updated(name,
         newDocsF.flatMap(nd => keptF.map(_.unionByName(nd))))
     } else {
-      val docPairF = scala.concurrent.Future {
+      val docPairF = submit(docsTable) {
         val nd = newDocs.graftCkptMem()
         bumpDocCounters()
         // change set: nd covers EVERY dirty root (tombstones are real
         // rows), so (rows = nd, keys = dirty) upserts exactly
-        val full = bind(backend.persist(s"docs__${safeName(name)}",
+        val full = bind(backend.persist(docsTable,
           kept.unionByName(nd).coalesce(statePartitions),
           Some((nd, dirtyPks))))
         (nd, full)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types._
 import graft.core.Ckpt.CkptOps
 import graft.functions.TopKByScore
 
+import scala.util.control.NonFatal
+
 /** Incrementally maintained GROUPED AGGREGATE over a keyed changelog —
   * the aggregation face of the IVM engine's set-at-a-time model: where
   * [[IncrementalDenormalizer]] maintains joined documents under
@@ -252,9 +254,6 @@ object IncrementalAggregate {
     * state-sized. */
   def applyBatch(state: State, changes: DataFrame,
       backend: StateBackend): State = {
-    val spark = changes.sparkSession
-    import spark.implicits._
-    val kk = state.k
     val cc = compactBatch(changes).graftCkptMem()
     // The LATEST-state persist (O(state) memory rewrite / durable
     // parquet generation — the batch's single largest job) depends
@@ -275,6 +274,20 @@ object IncrementalAggregate {
     def awaitLatest(): DataFrame =
       scala.concurrent.Await.result(fLatest,
         scala.concurrent.duration.Duration.Inf)
+    // A failed merge waits for the persist before it rethrows (the
+    // persist's own failure aside): no persist outlives its call, and a
+    // retried batch never persists beside a stray one.
+    try mergeRollup(state, cc, () => awaitLatest())
+    catch { case NonFatal(e) => scala.util.Try(awaitLatest()); throw e }
+  }
+
+  /** The rollup half of [[applyBatch]], run while the latest-state
+    * persist is in flight; `awaitLatest` joins it. */
+  private def mergeRollup(state: State, cc: DataFrame,
+      awaitLatest: () => DataFrame): State = {
+    val spark = cc.sparkSession
+    import spark.implicits._
+    val kk = state.k
     // kk == 0 (count/sum-only): the lookup join has ONE consumer (the
     // ±delta aggregate), so its checkpoint barrier is pure overhead —
     // fuse it into the merged-rollup plan (guide §2.4: a shared

@@ -26,6 +26,15 @@ private[streaming] object Waves {
           t
         }))
 
+  /** Tasks of this pool block on other futures of this pool: a wave
+    * thunk of batch N whose plan reads batch N−1's rootmaps awaits their
+    * futures (`Await.result`, no timeout) on a pool thread. That cannot
+    * deadlock only because the pool is a fixed-size FIFO executor and
+    * every future a task awaits was submitted strictly before it and
+    * blocks on nothing submitted later: queued tasks start in submission
+    * order, so what a task awaits is running or done by the time the task
+    * holds a thread. A work-stealing or caller-runs executor, or a task
+    * submitted before a future it awaits, can hang every thread. */
   lazy val ec: scala.concurrent.ExecutionContext = new scala.concurrent.ExecutionContext {
     def execute(r: Runnable): Unit = {
       val props = LocalPropsBridge.capture()

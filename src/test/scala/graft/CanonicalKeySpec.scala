@@ -42,6 +42,9 @@ class CanonicalKeySpec extends AnyFunSuite {
     // {playlist_id: 4235, user_tag_id: 7234} name-sorted
     val enc = encodeComposite(Seq(4235L, 7234L))
     assert(enc.sameElements(bytes(2, 0x10, 0x8B, 2, 0x1C, 0x42)))
+    // a null element has no encoding; an element over 255 bytes no length byte
+    intercept[IllegalArgumentException](encodeComposite(Seq(4235L, null)))
+    intercept[IllegalStateException](encodeComposite(Seq("x" * 256, 1L)))
   }
 
   test("unsigned lexicographic comparator parity on random pairs") {

@@ -219,4 +219,29 @@ class IncrementalAggSpec extends SparkSpec {
       backend.deleteAll()
     }
   }
+
+  test("a failed batch waits for its latest-state persist before it throws") {
+    // the persist runs async while the rollup merges; the merge fails on
+    // an agg frame that throws when evaluated
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val slow = new graft.streaming.StateBackend {
+      val durable = false
+      def persist(name: String, df: org.apache.spark.sql.DataFrame) = {
+        Thread.sleep(3000)
+        val out = graft.streaming.StateBackend.Memory.persist(name, df)
+        finished.set(true)
+        out
+      }
+    }
+    val fails = udf((cnt: Long) => {
+      if (cnt > 0) throw new IllegalStateException("agg frame fails")
+      cnt
+    })
+    val st = empty(spark)
+    val agg = Seq(("A", 1L, "1.00")).toDF("g", "cnt", "s")
+      .select(col("g"), fails(col("cnt")).as("cnt"), col("s").cast(IncrementalAggregate.sumType))
+    intercept[Exception](applyBatch(st.copy(agg = agg),
+      changes((1L, 1L, "A", "10.00")), slow))
+    assert(finished.get(), "applyBatch threw while its persist still ran")
+  }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import graft.core.Relation
-import graft.streaming.IncrementalDenormalizer
+import graft.streaming.{IncrementalDenormalizer, StateBackend}
 
 /** The IVM engine's own session: its micro-batch plans run interpreted
   * in a clone of the caller's session, and its wave-pool jobs carry the
@@ -53,12 +53,14 @@ class IvmSessionSpec extends SparkSpec {
       "customer" -> customers((base + 4, i % 3L, s"c$i")))
   }
 
-  private def newEngine(): IncrementalDenormalizer =
+  private def newEngine(
+      backend: StateBackend = StateBackend.Memory): IncrementalDenormalizer =
     new IncrementalDenormalizer(spark,
       Seq(Relation.root("Orders", "orders",
         Relation.child("customer", "c_id", "o_cust"))),
       Map("orders" -> Seq("o_id"), "customer" -> Seq("c_id")),
-      Map("orders" -> orderSchema, "customer" -> customerSchema))
+      Map("orders" -> orderSchema, "customer" -> customerSchema),
+      backend = backend)
 
   test("micro-batches after the first compile no code; the caller's session keeps codegen") {
     val wholeStage = SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key
@@ -127,5 +129,27 @@ class IvmSessionSpec extends SparkSpec {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("an async rebuild failure names its state table and batch") {
+    // the second rootmap persist (batch 2's rebuild) fails in the pool;
+    // the next call that awaits it must say where it came from
+    val rootmaps = new java.util.concurrent.atomic.AtomicInteger()
+    val failing = new StateBackend {
+      val durable = false
+      def persist(name: String, df: DataFrame): DataFrame =
+        if (name.startsWith("rootmap__") && rootmaps.incrementAndGet() == 2)
+          throw new RuntimeException("boom")
+        else StateBackend.Memory.persist(name, df)
+    }
+    val engine = newEngine(failing)
+    engine.processBatch(batch(1))
+    engine.counters
+    engine.processBatch(batch(2))
+    val e = intercept[Exception](engine.counters)
+    assert(e.getMessage.contains("rootmap__") && e.getMessage.contains("batch 2"),
+      e.getMessage)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "boom"))
   }
 }
