@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * one JVM session — block-manager/GC/code-cache state accumulated by
   * earlier queries taxes later ones, so a query's measurement depends
   * on its POSITION in the session, and round-over-round comparisons of
-  * a growing query set are unfalsifiable. Fixed-size sessions (default
-  * 50 queries, streaming isolated in their own sessions) pin each
+  * a growing query set are unfalsifiable. Fixed-size sessions (50
+  * queries, streaming isolated in their own sessions) pin each
   * query's session position across rounds: adding queries appends new
   * shards instead of shifting everyone's position.
   */
@@ -85,17 +85,16 @@ object BenchCore {
             base.resolve(up).normalize().resolve("bench_order.txt")
           }
         } catch { case _: Exception => None }
-      val candidates = sys.env.get("GRAFT_BENCH_ORDER").map(Paths.get(_))
-        .toSeq ++ Seq(Paths.get("bench_order.txt")) ++ fromClasses.toSeq
+      val candidates = Paths.get("bench_order.txt") +: fromClasses.toSeq
       candidates.find(Files.exists(_)) match {
         case Some(p) =>
           Files.readAllLines(p)
             .toArray(Array.empty[String]).toSeq.map(_.trim).filter(_.nonEmpty)
         case None =>
           System.err.println(
-            "WARNING: bench_order.txt not found (cwd or repo root) and " +
-              "GRAFT_BENCH_ORDER unset — session order falls back to " +
-              "alphabetical; round-over-round timings are NOT comparable")
+            "WARNING: bench_order.txt not found (cwd or repo root) — " +
+              "session order falls back to alphabetical; " +
+              "round-over-round timings are NOT comparable")
           Seq.empty[String]
       }
     }
@@ -420,15 +419,13 @@ object BenchShard {
   }
 }
 
-/** Driver bench entry. Shards the query set into fixed-size child JVM
-  * sessions (GRAFT_BENCH_SHARD_SIZE, default 50; streaming queries
-  * isolated in their own sessions), runs them SEQUENTIALLY (parallel
-  * shards would contend for the same 32 cores and contaminate each
-  * other), merges the TSV handoffs, and prints the single
-  * driver-contract JSON line. GRAFT_BENCH_SHARDED=0 restores the old
-  * single-session in-process run; a shard whose child JVM fails to
-  * produce a handoff is re-run in-process so the bench line is never
-  * silently incomplete. */
+/** The bench entry point. Shards the query set into child JVM sessions of
+  * 50 queries (streaming queries isolated in their own sessions), runs
+  * them SEQUENTIALLY (parallel shards would contend for the same cores
+  * and contaminate each other), merges the TSV handoffs, and prints the
+  * single JSON result line. A shard whose child JVM fails to produce a
+  * handoff is re-run in-process so the bench line is never silently
+  * incomplete. */
 object Bench {
 
   /** Child JVM spawn: same java binary, same classpath (the sbt-forked
@@ -498,8 +495,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val names = BenchCore.orderedNames(only)
-    val shardSize = sys.env.getOrElse("GRAFT_BENCH_SHARD_SIZE", "50").toInt
-    val sharded = sys.env.getOrElse("GRAFT_BENCH_SHARDED", "1") != "0"
+    val shardSize = 50
     // Fixed-size shards; the streaming family starts a fresh shard so
     // its state-store runtimes never share a session with batch queries.
     val (batch, stream) = names.partition(!_.startsWith("q_stream_"))
@@ -509,8 +505,8 @@ object Bench {
     // child JVMs, see BenchCore.canaryNames): once before the first
     // shard, once after the last, so the JSON line carries the run's
     // own drift measurement. Skipped for filtered runs (A/B tooling
-    // has its own alternation protocol) and the non-sharded escape.
-    val wantCanary = sharded && only.isEmpty && names.nonEmpty
+    // has its own alternation protocol).
+    val wantCanary = only.isEmpty && names.nonEmpty
     def canaryRun(tag: String): Seq[(String, Double)] =
       runShardInChild(BenchCore.canaryNames, sfDir, cpus, -1) match {
         case Some(r) => r.results
@@ -520,26 +516,18 @@ object Bench {
           BenchCore.canarySession(cpus)
       }
     val canaryStart = if (wantCanary) Some(canaryRun("start")) else None
-    var shardHost = Seq.empty[(Int, String, String, Map[String, Double])]
-    val merged: BenchCore.SessionResult =
-      if (!sharded || names.isEmpty) {
-        val r = BenchCore.runSession(sfDir, cpus, names)
-        BenchCore.SessionResult(r.results, r.passes, r.errors)
-      } else {
-        val parts = shards.zipWithIndex.map { case (s, i) =>
-          runShardComplete(s, sfDir, cpus, i)
-        }
-        shardHost = parts.zipWithIndex.collect {
-          case (p, i) if p.host.nonEmpty && shards(i).nonEmpty =>
-            (i, shards(i).head, shards(i).last, p.host.toMap)
-        }
-        BenchCore.SessionResult(
-          parts.flatMap(_.results), parts.flatMap(_.passes),
-          parts.flatMap(_.errors).toList)
-      }
+    val parts = shards.zipWithIndex.map { case (s, i) =>
+      runShardComplete(s, sfDir, cpus, i)
+    }
+    val shardHost = parts.zipWithIndex.collect {
+      case (p, i) if p.host.nonEmpty && shards(i).nonEmpty =>
+        (i, shards(i).head, shards(i).last, p.host.toMap)
+    }
+    val merged = BenchCore.SessionResult(
+      parts.flatMap(_.results), parts.flatMap(_.passes),
+      parts.flatMap(_.errors).toList)
     val canaryEnd = if (wantCanary) Some(canaryRun("end")) else None
-    val line = BenchCore.jsonLine(merged, sfDir,
-      if (sharded) shards.size else 1,
+    val line = BenchCore.jsonLine(merged, sfDir, shards.size,
       canaryStart.zip(canaryEnd), shardHost)
     println(line)
     // The driver's BENCH_rN.json retains only an output TAIL — persist

@@ -42,9 +42,10 @@ import org.apache.spark.sql.types._
   * [[graft.operators.Similarity.planeSign]] at construction and rides
   * along as a compact byte array reference.
   *
-  * Vectors shorter than `dim` fail loudly (the corpus contract is
-  * fixed-dimension embeddings; the HOF form would silently zero the
-  * affected bits instead, which no shipped data path relies on).
+  * Vectors shorter than `dim`, or with a null element among the first
+  * `dim`, fail loudly (the corpus contract is fixed-dimension
+  * embeddings; the HOF form would silently zero the affected bits
+  * instead, which no shipped data path relies on).
   */
 case class LshBandKeysExpr(child: Expression, dim: Int, bands: Int,
     rowsPerBand: Int, signs: Array[Byte]) extends UnaryExpression {
@@ -89,8 +90,7 @@ object LshBandKeysRT {
 
   def keys(v: ArrayData, signs: Array[Byte], dim: Int, bands: Int,
       rowsPerBand: Int): GenericArrayData = {
-    if (v.numElements() < dim) throw new IllegalArgumentException(
-      s"LshBandKeysExpr: vector has ${v.numElements()} elements, need $dim")
+    PqRT.check("LshBandKeysExpr", v, dim)
     val keys = new Array[Long](bands)
     var m = 0
     while (m < bands) {

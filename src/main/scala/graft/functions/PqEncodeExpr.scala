@@ -87,8 +87,9 @@ object PqEncodeExpr {
 object PqRT {
 
   /** Vectors shorter than `dim`, or with a null element, have no
-    * distance: they fail loudly. */
-  private def check(name: String, v: ArrayData, dim: Int): Unit = {
+    * distance (and no LSH band key, [[LshBandKeysRT]]): they fail
+    * loudly. */
+  private[functions] def check(name: String, v: ArrayData, dim: Int): Unit = {
     if (v.numElements() < dim) throw new IllegalArgumentException(
       s"$name: vector has ${v.numElements()} elements, need $dim")
     var d = 0

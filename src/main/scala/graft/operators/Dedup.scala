@@ -204,6 +204,7 @@ object Dedup {
       .select(col(idCol).as("id"), explode(col("grams")).as("gram"))
       .graftCkptMem()
     val dfs = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
+    val bound = jaccardBound(tauNum, tauDen)
     // The dense tiers read a CHECKPOINTED df table; the prefix path
     // keeps the lazy aggregate (DEDUP_ROUTER.md, "Lazy df table").
     if (denseUniverseMax > 0 && tauNum > 0) {
@@ -211,7 +212,6 @@ object Dedup {
       val universe = dfsCp.count()
       if (universe <= denseUniverseMax) {
         val nDocs = g.select("id").distinct().count()
-        val bound = jaccardBound(tauNum, tauDen)
         if (nDocs <= pairScanMaxDocs) // J1
           return overlapJoin(docSets(g, dfsCp, Some(universe)), AllPairs, bound)
         // J2 while nDocs² fits the budget (DEDUP_ROUTER.md: no
@@ -227,7 +227,6 @@ object Dedup {
       // DEDUP_ROUTER.md row J4, measured in BENCH_AB_r17.md
     }
     val docPfx = docPrefix(g, dfs, tauNum, tauDen)
-    val sizes = docPfx.select(col("id"), col("n"))
     // The self-join keys on xxhash64(gram), not the gram string: a
     // 64-bit hash compares/hashes faster and shuffles fewer bytes. A
     // collision can only ADD candidate rows (cnt inflation makes the
@@ -251,17 +250,14 @@ object Dedup {
     val suffix = (n: Column) =>
       floor((n * tauNum + (tauDen - 1)) / tauDen) - 1
     val cands = a.join(b, Seq("gh"))
-      .where(col("doc_a") < col("doc_b") &&
-        // size filter: J ≥ τ requires τ·na ≤ nb and τ·nb ≤ na
-        col("nb") * tauDen >= col("na") * tauNum &&
-        col("na") * tauDen >= col("nb") * tauNum)
+      .where(bound.pairOk)
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("cnt"),
         first(col("na")).as("na"), first(col("nb")).as("nb"))
       .where((col("cnt") + least(suffix(col("na")), suffix(col("nb")))) * alphaDen >=
         (col("na") + col("nb")) * alphaNum)
       .select("doc_a", "doc_b")
-    jaccardVerify(cands, g, sizes, tauNum, tauDen)
+    exactVerify(cands, g, docPfx, bound)
   }
 
   /** ASYMMETRIC containment pairs: ordered (src, dst) where
@@ -318,6 +314,7 @@ object Dedup {
       .graftCkptMem()
     val dfs = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
       .graftCkptMem()
+    val bound = containmentBound(tauNum, tauDen)
     if (denseUniverseMax > 0) {
       val universe = dfs.count()
       // dense = a bitmap-sized universe, or no rare grams at any
@@ -326,7 +323,6 @@ object Dedup {
         dfs.stat.approxQuantile("df", Array(0.1), 0.001).head >
           ContainmentPrefixRareDfMax
       if (denseCorpus) {
-        val bound = containmentBound(tauNum, tauDen)
         // bitmaps while the universe fits them, sorted gid arrays past it
         val bitmap = Some(universe).filter(_ <= denseUniverseMax)
         val nDocs = g.select("id").distinct().count()
@@ -341,7 +337,8 @@ object Dedup {
           .head().getLong(0)
         if (sumSq <= blockPairBudget)
           return overlapJoin(docSets(g, dfs, bitmap), Blocked(comp), bound)
-        return overlapJoin(docSets(g, dfs, None), PrefixCands(g, dfs), bound)
+        return overlapJoin(docSets(g, dfs, None),
+          PrefixCands(g, docPrefix(g, dfs, tauNum, tauDen)), bound)
       }
     }
     val docPfx = docPrefix(g, dfs, tauNum, tauDen)
@@ -350,23 +347,9 @@ object Dedup {
       .select(col("src"), xxhash64(col("gram")).as("gh"))
     val dstAll = g.select(col("id").as("dst"), xxhash64(col("gram")).as("gh"))
     val cands = srcPfx.join(dstAll, "gh")
-      .where(col("src") =!= col("dst"))
+      .where(bound.pairOk)
       .select("src", "dst").distinct()
-      .graftCkptMem()
-    // exact verify: true intersection over full gram sets, src-normalized
-    val srcIds = cands.select(col("src").as("id")).distinct()
-    val dstIds = cands.select(col("dst").as("id")).distinct()
-    val gs = g.join(srcIds, Seq("id"), "left_semi")
-      .select(col("id").as("src"), col("gram"))
-    val gd = g.join(dstIds, Seq("id"), "left_semi")
-      .select(col("id").as("dst"), col("gram"))
-    val inter = cands.join(gs, "src").join(gd, Seq("dst", "gram"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("n_shared"))
-    inter.join(docPfx.select(col("id").as("src"), col("n").as("n_src")), "src")
-      .where(col("n_shared") * tauDen >= col("n_src") * tauNum)
-      .select(col("src"), col("dst"), col("n_src"), col("n_shared"),
-        round(col("n_shared").cast(DoubleType) / col("n_src"), 6)
-          .as("containment"))
+    exactVerify(cands, g, docPfx, bound)
   }
 
   /** Per-doc prefix in ONE keyed aggregation: collect (df, gram), sort
@@ -498,28 +481,29 @@ object Dedup {
     * [[gramComponents]]): pair space Σ_b |block|², salted S ways so
     * one giant component cannot serialize into a single task. */
   private final case class Blocked(comp: DataFrame) extends PairSource
-  /** Pairs sharing one of the a-side doc's ⌊(1−τ)·n⌋+1 RAREST grams
-    * (df asc; complete by pigeonhole), streamed through two lookups of
-    * the set table in the join's own stage — the candidate stream never
-    * materializes, only τ-survivors reach the final distinct. */
-  private final case class PrefixCands(g: DataFrame, dfs: DataFrame)
+  /** Pairs sharing one of the a-side doc's prefix grams (`pfx` from
+    * [[docPrefix]]; complete by pigeonhole), streamed through two
+    * lookups of the set table in the join's own stage — the candidate
+    * stream never materializes, only τ-survivors reach the final
+    * distinct. */
+  private final case class PrefixCands(g: DataFrame, pfx: DataFrame)
       extends PairSource
 
   /** The verify bound: the pair's id and size column names, its
     * pre-verify filters (`idOk` on ids, `sizeOk` on sizes) and
     * `verify`, which keeps the pairs whose intersection size clears
-    * τ = num/den and projects the output columns. */
-  private final case class Bound(num: Long, den: Long,
-      a: String, b: String, na: String, nb: String,
+    * τ and projects the output columns. */
+  private final case class Bound(a: String, b: String, na: String, nb: String,
       idOk: Column, sizeOk: Option[Column],
-      verify: (DataFrame, Column) => DataFrame)
+      verify: (DataFrame, Column) => DataFrame) {
+    def pairOk: Column = (idOk +: sizeOk.toSeq).reduce(_ && _)
+  }
 
   /** Symmetric Jaccard: doc_a < doc_b, the size filter τ·na ≤ nb ∧
-    * τ·nb ≤ na, and i·den ≥ (na + nb − i)·num. The jaccard value is
-    * [[jaccardVerify]]'s exact expression, so every route returns
-    * bit-identical rows. */
+    * τ·nb ≤ na, and i·den ≥ (na + nb − i)·num; every route computes
+    * the jaccard value here, so all return bit-identical rows. */
   private def jaccardBound(num: Long, den: Long): Bound =
-    Bound(num, den, "doc_a", "doc_b", "na", "nb",
+    Bound("doc_a", "doc_b", "na", "nb",
       col("doc_a") < col("doc_b"),
       Some(col("nb") * den >= col("na") * num &&
         col("na") * den >= col("nb") * num),
@@ -532,7 +516,7 @@ object Dedup {
 
   /** Ordered containment: src ≠ dst and n_shared·den ≥ n_src·num. */
   private def containmentBound(num: Long, den: Long): Bound =
-    Bound(num, den, "src", "dst", "n_src", "n_dst",
+    Bound("src", "dst", "n_src", "n_dst",
       col("src") =!= col("dst"), None,
       (pairs, i) => pairs
         .select(col("src"), col("dst"), col("n_src"), i.as("n_shared"))
@@ -549,12 +533,11 @@ object Dedup {
       col(sets.set).as(sets.a))
     val bCols = Seq(col("id").as(bound.b), col("n").as(bound.nb),
       col(sets.set).as(sets.b))
-    val pairOk = (bound.idOk +: bound.sizeOk.toSeq).reduce(_ && _)
     val pairs = source match {
       case AllPairs =>
         sets.docs.select(aCols: _*)
           .crossJoin(broadcast(sets.docs.select(bCols: _*)))
-          .where(pairOk)
+          .where(bound.pairOk)
       case Blocked(comp) =>
         // docs absent from the component map share no gram with anyone
         // — they can produce no pairs and drop out here by construction
@@ -564,16 +547,9 @@ object Dedup {
           pmod(col("id"), lit(s)).as("__salt") +: aCols: _*)
         val b = bc.select(col("component") +:
           explode(sequence(lit(0), lit(s - 1))).as("__salt") +: bCols: _*)
-        a.join(b, Seq("component", "__salt")).where(pairOk)
-      case PrefixCands(g, dfs) =>
-        val w = Window.partitionBy("id").orderBy(col("df"), col("gram"))
-        val prefix = g.join(dfs, "gram")
-          .withColumn("rn", row_number().over(w))
-          .join(sets.docs.select(col("id"), col("n")), "id")
-          .where(col("rn") <= col("n") -
-            floor((col("n") * bound.num + (bound.den - 1)) / bound.den) + 1)
-          .select(col("id").as(bound.a), col("gram"))
-          .graftCkptMem()
+        a.join(b, Seq("component", "__salt")).where(bound.pairOk)
+      case PrefixCands(g, pfx) =>
+        val prefix = pfx.select(col("id").as(bound.a), explode(col("pfx")).as("gram"))
         // measured gate: 4 B/gid + ~32 B/doc row overhead; over the
         // envelope the lookups run as SHUFFLED-HASH joins, never
         // sort-merge: every candidate row carries a gid ARRAY after the
@@ -601,9 +577,10 @@ object Dedup {
     }
   }
 
-  /** Exact Jaccard of candidate pairs from full gram sets; the ≥ τ
-    * test is integer-exact: i/(na+nb-i) ≥ num/den ⟺
-    * i·den ≥ num·(na+nb-i).
+  /** Exact verify of candidate pairs `cands` (the bound's two id
+    * columns) against the exploded gram table `g` = (id, gram): count
+    * |A ∩ B| per pair, join both sizes from `sizes` = (id, n), and keep
+    * the pairs that clear `bound`. Serves J3, C5 and [[minhashPairs]].
     *
     * Counter-experiment (sf0.1, 46k MinHash candidates): computing the
     * intersection as a per-pair `array_intersect` over the two gram
@@ -613,37 +590,27 @@ object Dedup {
     * joins) while the exploded rows here total ~240 MB — exploded +
     * pair-keyed count is the LESS shuffle-heavy form whenever docs
     * recur across candidates. */
-  private[operators] def jaccardVerify(
-      cands: DataFrame, // (doc_a, doc_b)
-      g: DataFrame, // (id, gram)
-      sizes: DataFrame, // (id, n)
-      tauNum: Long,
-      tauDen: Long): DataFrame = {
+  private def exactVerify(cands: DataFrame, g: DataFrame, sizes: DataFrame,
+      bound: Bound): DataFrame = {
     // Materialize the candidate pairs once: they are few (the filters
     // upstream exist precisely to make them few) but their plan is the
     // expensive half of the query — every reuse below must NOT
     // re-derive it.
     val c = cands.graftCkptMem()
-    // Restrict both gram sides to docs that actually appear in a
+    // Restrict each gram side to docs that actually appear in a
     // candidate pair BEFORE the intersection join: the candidate id
     // sets are tiny relative to the corpus (AQE broadcasts them), so
     // the (doc, gram) join below scales with candidate volume instead
     // of shuffling the full gram corpus.
-    val aIds = c.select(col("doc_a").as("id")).distinct()
-    val bIds = c.select(col("doc_b").as("id")).distinct()
-    val ga = g.join(aIds, Seq("id"), "left_semi")
-      .select(col("id").as("doc_a"), col("gram"))
-    val gb = g.join(bIds, Seq("id"), "left_semi")
-      .select(col("id").as("doc_b"), col("gram"))
-    val inter = c.join(ga, "doc_a").join(gb, Seq("doc_b", "gram"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
-    val sa = sizes.select(col("id").as("doc_a"), col("n").as("na"))
-    val sb = sizes.select(col("id").as("doc_b"), col("n").as("nb"))
-    inter.join(sa, "doc_a").join(sb, "doc_b")
-      .where(col("i") * tauDen >= (col("na") + col("nb") - col("i")) * tauNum)
-      .withColumn("jaccard",
-        col("i").cast(DoubleType) / (col("na") + col("nb") - col("i")))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    def grams(id: String) =
+      g.join(c.select(col(id).as("id")).distinct(), Seq("id"), "left_semi")
+        .select(col("id").as(id), col("gram"))
+    val inter = c.join(grams(bound.a), bound.a)
+      .join(grams(bound.b), Seq(bound.b, "gram"))
+      .groupBy(bound.a, bound.b).agg(count(lit(1)).as("i"))
+    val sa = sizes.select(col("id").as(bound.a), col("n").as(bound.na))
+    val sb = sizes.select(col("id").as(bound.b), col("n").as(bound.nb))
+    bound.verify(inter.join(sa, bound.a).join(sb, bound.b), col("i"))
   }
 
   /** MinHash signatures: per doc, per permutation i, min over grams of
@@ -691,17 +658,20 @@ object Dedup {
   /** Per-ROW banded signatures — the streaming-safe twin of
     * [[bandedSignatures]], producing the identical (id, band, bh)
     * rows from (id, text) directly. The batch form explodes grams and
-    * runs 32 codegen'd min AGGREGATES (faster per the measured note
-    * on [[minhashSignatures]]), but an aggregation cannot run inside
-    * a streaming append pipeline ahead of a stateful operator — so
-    * this variant computes each document's full signature per row via
-    * the native one-pass [[graft.functions.MinHashSigsExpr]] (a
-    * lambda-HOF fold here would be CodegenFallback, interpreted per
-    * gram per permutation — see that expression's scaladoc for the
-    * measured gap): a pure projection, no shuffle, legal and
-    * incremental in a stream. Same grams, same base hash, same
-    * permutations, same md5 band key ⇒ bucket-compatible with every
-    * batch consumer (parity pinned in StreamingDedupSpec). */
+    * runs 32 codegen'd min AGGREGATES, but an aggregation cannot run
+    * inside a streaming append pipeline ahead of a stateful operator —
+    * so this variant computes each document's full signature per row
+    * via the native one-pass [[graft.functions.MinHashSigsExpr]]: a
+    * pure projection, no shuffle, legal and incremental in a stream.
+    * The note on [[minhashSignatures]] measured the exploded form
+    * against lambda-HOF folds, not against this kernel; this kernel
+    * measured faster in batch too (`neardup` 203.1 → 245.0 rec/s,
+    * `operators.minhash_ms` 901 → 527 ms; CHANGES.md). The batch
+    * switch waits on the `peak_storage_mb` listener fix (ROADMAP),
+    * which today reads a faster run's extra iterations as more
+    * storage. Same grams, same base hash, same permutations, same md5
+    * band key ⇒ bucket-compatible with every batch consumer (parity
+    * pinned in StreamingDedupSpec). */
   def bandedSignaturesRowwise(
       df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val grams = df.select(col(idCol),
@@ -750,14 +720,15 @@ object Dedup {
     val banded = bandedSignatures(gramArrs, idCol)
     val l = banded.select(col("id").as("doc_a"), col("band"), col("bh"))
     val r = banded.select(col("id").as("doc_b"), col("band"), col("bh"))
-    val cands = l.join(r, Seq("band", "bh")).where(col("doc_a") < col("doc_b"))
+    val bound = jaccardBound(tauNum, tauDen)
+    val cands = l.join(r, Seq("band", "bh")).where(bound.idOk)
       .select("doc_a", "doc_b").distinct()
     // sizes are map-side off the arrays; the exploded gram view is only
-    // consumed candidate-restricted inside jaccardVerify.
+    // consumed candidate-restricted inside exactVerify.
     val sizes = gramArrs.select(col(idCol).as("id"),
       size(col("grams")).cast(LongType).as("n"))
     val g = gramArrs.select(col(idCol).as("id"), explode(col("grams")).as("gram"))
-    jaccardVerify(cands, g, sizes, tauNum, tauDen)
+    exactVerify(cands, g, sizes, bound)
   }
 
   /** Undirected duplicate-graph edges from LSH bucket membership: every

@@ -702,31 +702,24 @@ final class IncrementalDenormalizer(
   private def foldDelta(entity: String, changes: DataFrame): DataFrame = {
     val valueSchema = valueSchemas(entity)
     val kf = keyFields(entity)
-    // Column fast path (e.g. deleteWhere) compiles into the changelog
-    // up front — the remaining fold is then plain newest-wins, so it
-    // takes the declarative branch below (and a columnMode-only filter
-    // can never silently no-op through the row path).
-    Filters.applyChangelog(changes, entity, filter).foreach { pre =>
-      return pre.select(
-          canonicalPk(kf.map(f => col("key").getField(f))).as("__pk"),
-          col("offset"), col("value"))
-        .groupBy("__pk")
-        .agg(max_by(struct(col("value")), col("offset"))
-          .getField("value").as("value"))
-    }
-    if (filter eq Compaction.passThrough) {
-      // No custom filter: the fold degenerates to newest-change-wins —
-      // max_by as a declarative aggregate gets map-side partial
-      // aggregation (a window would shuffle and sort every change).
-      // The struct wrap keeps tombstones (null value) as real rows:
-      // struct(value) is never null, so max_by can't skip them.
-      return changes.select(
-          canonicalPk(kf.map(f => col("key").getField(f))).as("__pk"),
-          col("offset"), col("value"))
-        .groupBy("__pk")
-        .agg(max_by(struct(col("value")), col("offset"))
-          .getField("value").as("value"))
-    }
+    // A Column fast path (e.g. deleteWhere) compiles into the changelog
+    // up front, and no custom filter leaves it as is: either way the
+    // fold is plain newest-change-wins (so a columnMode-only filter can
+    // never silently no-op through the row path). max_by as a
+    // declarative aggregate gets map-side partial aggregation (a window
+    // would shuffle and sort every change). The struct wrap keeps
+    // tombstones (null value) as real rows: struct(value) is never
+    // null, so max_by can't skip them.
+    Filters.applyChangelog(changes, entity, filter)
+      .orElse(Option.when(filter eq Compaction.passThrough)(changes))
+      .foreach { pre =>
+        return pre.select(
+            canonicalPk(kf.map(f => col("key").getField(f))).as("__pk"),
+            col("offset"), col("value"))
+          .groupBy("__pk")
+          .agg(max_by(struct(col("value")), col("offset"))
+            .getField("value").as("value"))
+      }
     val prepared = changes.select(
       canonicalPk(kf.map(f => col("key").getField(f))).as("__pk"),
       struct(col("offset"), col("value")).as("__ov"))

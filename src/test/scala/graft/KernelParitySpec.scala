@@ -124,7 +124,7 @@ class KernelParitySpec extends AnyFunSuite {
         Math.nextUp(1e-6), Math.nextDown(-1e-6), 1e-7, -1e-7, 0.0, -0.0,
         nan, inf, -inf, 1e300).map(x => Seq(arr(x))) ++
         Seq(Seq(arr(-half, 1.0)), Seq(null)),
-      failing = Seq(Seq(arr()))),
+      failing = Seq(Seq(arr()), Seq(arr(null)))),
     "LshBandKeysExpr" -> Kernel(
       LshBandKeysExpr(ref(0, doubles), 3, 2, 2,
         Array[Byte](1, -1, 1, -1, -1, 1, 1, 1, -1, -1, 1, -1)),
@@ -133,8 +133,11 @@ class KernelParitySpec extends AnyFunSuite {
         Seq(arr(half, -1e-6, half)), Seq(arr(halfUp, 0.0, -halfDown)),
         Seq(arr(nan, 1.0, 1.0)), Seq(arr(inf, -inf, 0.0)),
         Seq(arr(inf, 1.0, 1.0)), Seq(arr(1.0, 2.0, 3.0, 4.0)),
-        Seq(arr(1.0, null, 3.0))),
-      failing = Seq(Seq(arr()), Seq(arr(1.0, 2.0)))),
+        // elements past `dim` are not read, null or not
+        Seq(arr(1.0, 2.0, 3.0, null))),
+      // too short, and null elements: no band key is defined
+      failing = Seq(Seq(arr()), Seq(arr(1.0, 2.0)),
+        Seq(arr(1.0, null, 3.0)), Seq(arr(null, 2.0, 3.0)))),
     // two one-dimensional subspaces: each distance is one square
     "PqEncodeExpr" -> Kernel(
       PqEncodeExpr(ref(0, doubles), 2, 2, 3,
