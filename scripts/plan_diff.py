@@ -1,20 +1,30 @@
 #!/usr/bin/env python3
-"""Plan identity check: print `graft.Explain`'s formatted physical plans
-for the named queries on this checkout's classes and on a snapshot's
-classes, normalize the ids that differ from run to run, and diff them.
+"""Plan identity check: for each named query, on this checkout's
+classes and on a snapshot's, read the formatted physical plan of the
+frame `graft.Explain` builds and every plan the build EXECUTED, normalize
+the ids that differ from run to run, and diff them.
+
+The executed plans matter for queries that materialize their answer (the
+IVM replays, the durable-state queries): the frame they return is a bare
+checkpoint scan. They come from Spark's event log
+(`SparkListenerSQLExecutionStart`) and are compared as a sorted list,
+because concurrent waves run in any order.
 
 Normalized: expression ids (`#123`, `#123L`), plan ids (`[plan_id=7]`),
-RDD ids (`MapPartitionsRDD[42]`) and JVM lambda / object hash names. Any
-other difference, join strategy and codegen stage included, is printed.
+RDD ids (`MapPartitionsRDD[42]`), JVM lambda / object hash names, the
+random suffix of temp directories (`graft_q_incr_durable8841…`) and the
+durable backend's catalog tables (`graft_state_<instance>_<seq>`, whose
+sequence follows the order in which concurrent persists run). Any other
+difference, join strategy and codegen stage included, is printed.
 
 Both sides must be compiled (`sbt compile`, which writes
-`target/scala-2.13/classes`). Each side runs in one fresh JVM.
+`target/scala-2.13/classes`). Each query runs in a fresh JVM per side.
 
 Usage: python3 scripts/plan_diff.py --snapshot ../graft_parent \
-         --sfdir <testdata>/sf0.1 q_dedup_ngram q_dedup_minhash ...
+         --sfdir <testdata>/sf0.1 q_dedup_ngram q_incr_durable ...
 Exit status: 0 when every plan matches, 1 on any difference.
 """
-import argparse, difflib, os, re, subprocess, sys
+import argparse, difflib, glob, json, os, re, shutil, subprocess, sys, tempfile
 
 from bench_ab import REPO, jvm_cmd
 
@@ -24,23 +34,67 @@ NORMALIZE = [
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"\$\$Lambda[\w$/.]*(@[0-9a-f]+)?"), "$$Lambda"),
     (re.compile(r"@[0-9a-f]{6,}\b"), "@"),
+    # Files.createTempDirectory(prefix) appends a random unsigned long
+    (re.compile(r"(/[A-Za-z][\w.-]*?[A-Za-z_.-])\d{6,}(?=[/\]\s,']|$)"),
+     r"\1<tmp>"),
+    (re.compile(r"graft_state_\d+_\d+"), "graft_state_<i>_<n>"),
 ]
 
 
-def plans(root, sfdir, queries):
-    """The Explain output of `queries` on the classes under `root`,
-    normalized, one line per list entry."""
+def normalize(text):
+    for pat, rep in NORMALIZE:
+        text = pat.sub(rep, text)
+    return text
+
+
+def run_explain(root, sfdir, query, logdir):
+    """Run `graft.Explain` for one query on the classes under `root`,
+    with Spark's event log written under `logdir`; return its stdout."""
+    cmd = jvm_cmd(os.path.join(root, "target/scala-2.13/classes"), heap="4g")
+    # JVM options go ahead of the class path and main class
+    cmd[1:1] = ["-Dspark.eventLog.enabled=true",
+                "-Dspark.eventLog.compress=false",
+                f"-Dspark.eventLog.dir=file://{logdir}"]
     out = subprocess.run(
-        jvm_cmd(os.path.join(root, "target/scala-2.13/classes"), heap="4g")
-        + ["graft.Explain", sfdir] + queries,
+        cmd + ["graft.Explain", sfdir, query],
         cwd=root, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
         text=True, timeout=1800)
     if out.returncode != 0:
         sys.exit(f"graft.Explain failed in {root} (exit {out.returncode})")
-    text = out.stdout
-    for pat, rep in NORMALIZE:
-        text = pat.sub(rep, text)
-    return text.splitlines()
+    return out.stdout
+
+
+def executed(logdir):
+    """The physical plan of every SQL execution in the event log."""
+    found = []
+    # Spark 4 may write a rolling `eventlog_v2_<app>/` directory
+    for path in glob.glob(os.path.join(logdir, "**"), recursive=True):
+        if not os.path.isfile(path) or path.endswith(".crc"):
+            continue
+        with open(path) as f:
+            for line in f:
+                ev = json.loads(line)
+                if ev.get("Event", "").endswith("SQLExecutionStart"):
+                    found.append(ev["physicalPlanDescription"])
+    return found
+
+
+def plans(root, sfdir, queries):
+    """Per query, on the classes under `root`: the returned frame's plan,
+    then the executed plans, sorted. Normalized, one line per entry."""
+    lines = []
+    for q in queries:
+        logdir = tempfile.mkdtemp(prefix="plan_diff_events_")
+        try:
+            returned = normalize(run_explain(root, sfdir, q, logdir))
+            ran = sorted(normalize(p) for p in executed(logdir))
+        finally:
+            shutil.rmtree(logdir, ignore_errors=True)
+        lines += returned.splitlines()
+        lines.append(f"---------- {q}: {len(ran)} executed plans ----------")
+        for plan in ran:
+            lines += plan.splitlines() + [""]
+    return lines
 
 
 def main():

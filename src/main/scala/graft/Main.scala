@@ -198,23 +198,27 @@ object Main {
     val entities = trees.flatMap(_.entities).distinct
     val (keyFields, keySchemas, valueSchemas) =
       topicSchemas(spark, conf, topicsDir, entities)
-    def newBackend(): StateBackend = str(conf, "backend") match {
-      case Some("bucketed") =>
-        new BucketedParquetBackend(spark,
-          backendRoot.getOrElse(throw new IllegalArgumentException(
-            "backend=bucketed needs backendRoot")),
+    val bucketed = str(conf, "backend").contains("bucketed")
+    def bucketedRoot: String = backendRoot.getOrElse(
+      throw new IllegalArgumentException("backend=bucketed needs backendRoot"))
+    def newBackend(): StateBackend =
+      if (!bucketed) StateBackend.Memory
+      else new BucketedParquetBackend(spark, bucketedRoot,
           Option(conf.get("buckets")).map(_.asInt()).getOrElse(16),
           Option(conf.get("compactEvery")).map(_.asInt()).getOrElse(4))
-      case _ => StateBackend.Memory
-    }
     val filter = hook[RecordFilter](conf, "filterClass", Compaction.passThrough)
     val strategy = hook[QueueingStrategy](conf, "strategyClass", QueueingStrategy.allMedium)
 
     if (cli.verifyState) {
-      // reference parity: verify runs alone against restored state
+      // reference parity: verify runs alone. It reads the durable state
+      // (or, without one, the newest backup) into a memory-backend
+      // engine, so it writes nothing to either root.
       val engine = new IncrementalDenormalizer(spark, trees, keyFields,
-        valueSchemas, filter, strategy, backend = newBackend())
-      backupUri.foreach(u => StateOps.restore(engine, u, StateOps.RestoreMode.WhenNeeded))
+        valueSchemas, filter, strategy)
+      if (bucketed)
+        engine.loadStateTables(BucketedParquetBackend.latest(spark, bucketedRoot))
+      else
+        backupUri.foreach(u => StateOps.restore(engine, u, StateOps.RestoreMode.WhenNeeded))
       val violations = StateOps.verifyState(engine)
       violations.foreach(v => System.err.println(s"[graft] VIOLATION: $v"))
       println(s"[graft] verify-state: ${violations.size} violations")

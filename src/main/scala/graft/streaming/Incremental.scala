@@ -175,6 +175,12 @@ final class IncrementalDenormalizer(
         Duration.Inf)
     }
 
+  /** One plan of a batch's materialization wave: `run` materializes it,
+    * and `assign` stores the result in the engine's state once the
+    * whole wave is done, so every plan of the wave reads pre-batch
+    * state. */
+  private case class WaveItem(run: () => DataFrame, assign: DataFrame => Unit)
+
   /** First edge in a tree whose child entity matches — reference
     * RelationHelper.getRelation takes the first match. */
   private def firstEdgeFor(tree: Relation, entity: String): Option[Edge] =
@@ -546,7 +552,8 @@ final class IncrementalDenormalizer(
     // part reads the previous batch's rootmaps, which may still be
     // materializing async — the builder runs inside the wave thunk's
     // pool thread and awaits there, so independent wave jobs proceed.
-    val wavePlans: Seq[(String, String, () => DataFrame)] = trees.flatMap { tree =>
+    var dirtySets = Map.empty[String, DataFrame]
+    val dirtyWave: Seq[WaveItem] = trees.flatMap { tree =>
       val name = tree.denormalizedName.get
       def high = dirtyParts(tree, _ == QueueingStrategy.High)
       def med = dirtyParts(tree, _ == QueueingStrategy.Medium)
@@ -555,11 +562,16 @@ final class IncrementalDenormalizer(
         high ++ (if (mediumImmediate) med else Nil) ++ (if (drainLowNow) low else Nil)
       def drainBase =
         if (drainLowNow) Seq(pendingLow(name)) else Nil
-      Seq((name, "drain", () => unionParts(drainNowParts ++ drainBase))) ++
+      Seq(WaveItem(matTemp(unionParts(drainNowParts ++ drainBase)),
+          df => dirtySets = dirtySets.updated(name, df))) ++
         (if (mediumImmediate) Nil
-         else Seq((name, "pmed", () => unionParts(med :+ pendingMedium(name))))) ++
+         else Seq(WaveItem(matState(s"pending_med__${safeName(name)}",
+             unionParts(med :+ pendingMedium(name))),
+           df => pendingMedium = pendingMedium.updated(name, df)))) ++
         (if (drainLowNow) Nil
-         else Seq((name, "plow", () => unionParts(low :+ pendingLow(name)))))
+         else Seq(WaveItem(matState(s"pending_low__${safeName(name)}",
+             unionParts(low :+ pendingLow(name))),
+           df => pendingLow = pendingLow.updated(name, df))))
     }
 
     // Snapshot/link updates carry their change set (new rows + changed
@@ -608,35 +620,19 @@ final class IncrementalDenormalizer(
         }
       }
 
-    val waveInputs: Seq[() => DataFrame] =
-      wavePlans.map {
-        case (_, "drain", b) => matTemp(b())
-        case (name, "pmed", b) => matState(s"pending_med__${safeName(name)}", b())
-        case (name, _, b) => matState(s"pending_low__${safeName(name)}", b())
-      } ++
-        snapEntities.map(snapUpdate) ++
-        linkUpdates.map { case (id, df, d) =>
-          matState(s"links__${safeName(id)}", df, Some(d)) }
-    val waveOut = parMaterialize(waveInputs)
-    val (dirtyOut, rest) = waveOut.splitAt(wavePlans.size)
-    val (snapOut, linkOut) = rest.splitAt(snapEntities.size)
-
-    var dirtySets = Map.empty[String, DataFrame]
-    wavePlans.map { case (name, kind, _) => (name, kind) }.zip(dirtyOut).foreach {
-      case ((name, "drain"), df) => dirtySets = dirtySets.updated(name, df)
-      case ((name, "pmed"), df) => pendingMedium = pendingMedium.updated(name, df)
-      case ((name, "plow"), df) => pendingLow = pendingLow.updated(name, df)
-      case _ => ()
+    val wave: Seq[WaveItem] = dirtyWave ++
+      snapEntities.map(e => WaveItem(snapUpdate(e),
+        df => snapshots = snapshots.updated(e, df))) ++
+      linkUpdates.map { case (id, df, d) =>
+        WaveItem(matState(s"links__${safeName(id)}", df, Some(d)),
+          out => links = links.updated(id, out))
+      }
+    parMaterialize(wave.map(_.run)).zip(wave).foreach {
+      case (df, item) => item.assign(df)
     }
     if (drainLowNow) // drained this batch → reset without a job
       trees.foreach(t => pendingLow =
         pendingLow.updated(t.denormalizedName.get, emptyDf(session, dirtySchema)))
-    snapEntities.zip(snapOut).foreach {
-      case (entity, df) => snapshots = snapshots.updated(entity, df)
-    }
-    linkUpdates.map(_._1).zip(linkOut).foreach {
-      case (id, df) => links = links.updated(id, df)
-    }
 
     // MEDIUM trigger check (only when deferral is configured — the
     // count here is the one deliberate extra job of the deferred mode).
@@ -658,7 +654,7 @@ final class IncrementalDenormalizer(
     // other, and — when the caller queues another batch immediately, the
     // bench/replay shape — the next batch's delta wave overlaps this
     // rebuild's tail (its dirty thunks await the rootmap futures in the
-    // pool; see wavePlans). Results are identical: every consumer of
+    // pool; see dirtyWave). Results are identical: every consumer of
     // rebuild-owned state awaits through the accessors.
     trees.foreach { tree =>
       val name = tree.denormalizedName.get

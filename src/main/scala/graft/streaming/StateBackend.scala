@@ -1,12 +1,13 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.Ckpt
 
@@ -78,56 +79,50 @@ object StateBackend {
 /** Durable state backend: generation-chained parquet per state table,
   * under `root/<name>/g<n>` (any Hadoop FS scheme).
   *
-  * Two generation kinds, distinguished by a `_MANIFEST` commit marker
-  * (written last, via atomic rename — a generation without one is an
-  * uncommitted wreck and is never read):
+  * A generation is committed once its `_MANIFEST` marker exists. The
+  * marker holds `kind:buckets` and is written last, by create-then-
+  * rename, so a generation without one is a write that died mid-flight
+  * and is never read. There are two kinds:
   *
-  *  - FULL — the whole table as a bucketed parquet catalog table.
-  *    The write repartitions by the table's leading column (the state
-  *    key: `__pk` / `__cpk` / `__jk`) into exactly `buckets`
-  *    partitions before the bucketed write, so every task holds one
-  *    bucket and writes one file. Readers go through the session
-  *    catalog (`spark.table`) so they see the bucket spec: a join or
-  *    aggregation keyed on the bucket column plans NO Exchange on the
-  *    state side (BucketingSpec; DurableStateSpec on a recovered
-  *    table).
-  *  - DELTA — only the batch's change set: `rows/` (full new rows for
-  *    changed keys) + `keys/` (every changed key; a key with no row is
-  *    a deletion). This is the reference's RocksDB WriteBatch write
-  *    profile (state/RocksDBState.java:611-636: only touched keys hit
-  *    the store) — write cost scales with the DELTA, not the state.
-  *    The composed view is `prev.join(keys, keys.columns, "left_anti")
-  *    .unionByName(rows)` folded over the chain; the changed-key side
-  *    is batch-sized, so Catalyst plans it as a broadcast anti-join —
-  *    the full-state side never re-shuffles for composition.
+  *  - FULL — the whole table as a bucketed parquet catalog table, plus
+  *    a `_SCHEMA` sidecar (a bucketed write of an empty frame emits no
+  *    parquet file to read a schema from). The write repartitions by
+  *    the table's leading column (the state key: `__pk` / `__cpk` /
+  *    `__jk`) into `buckets` partitions, so every task writes one
+  *    bucket file. Readers go through the session catalog, which holds
+  *    the bucket spec: a join or aggregation keyed on the bucket column
+  *    plans no Exchange on the state side (BucketingSpec).
+  *  - DELTA — only the batch's change set: `rows/` (full new rows of
+  *    the changed keys, bucketed like the full generation) and `keys/`
+  *    (every changed key; a key without a row is a deletion). Write
+  *    cost scales with the batch, not the state, as with the
+  *    reference's RocksDB WriteBatch (state/RocksDBState.java:611-636).
   *
-  * Every `compactEvery`-th persist of a table writes FULL, bounding
-  * the compose chain (and restoring bucket metadata); a persist
-  * without delta information (first persist, restart recovery) is
-  * always FULL. Each persist writes a NEW generation — never in
-  * place — because the plan being written typically reads the previous
-  * generation of the same table. Superseded generations are queued and
-  * dropped on [[gc]], after the batch's last job finishes; delta
-  * chains retire only when a FULL persist supersedes the whole chain.
+  * A table's committed state is its CHAIN: the last committed full
+  * generation and the committed delta generations after it, up to the
+  * first uncommitted one. [[BucketedParquetBackend.chain]]
+  * selects it for every reader, and [[BucketedParquetBackend.applyDelta]]
+  * lays one delta over the view so far (broadcast anti-join on `keys/`,
+  * then `rows/`). Live persists, [[recover]] and the read-only
+  * [[BucketedParquetBackend.asOf]] compose through those two functions.
   *
-  * Restart recovery: [[recover]] composes the newest committed full
-  * generation + its committed delta suffix for every table under the
-  * root THROUGH THE CATALOG — each bucketed base/delta `rows/`
-  * directory is registered as a bucketed table (bucket metadata lives
-  * only in the catalog; a raw `spark.read.parquet` forgets the
-  * layout) and the chain zips with [[graft.plans.BucketUnion]],
-  * exactly like the live [[persistDelta]] compose — so keyed reads
-  * against recovered state plan no state-side Exchange even before
-  * the first post-restart compaction, mirroring the reference, whose
-  * RocksDB state is key-indexed the moment it reopens (reference
-  * state/RocksDBState.java:474-491). Feed the result to
-  * [[IncrementalDenormalizer.loadStateTables]], which re-persists
-  * through the live backend (a FULL write: recovery doubles as
-  * compaction — and because the recovered plan is already
-  * bucket-aligned, [[persistFull]]'s aligned fast path writes it
-  * WITHOUT the full-state re-shuffle). The static
-  * [[BucketedParquetBackend.latest]] remains as the layout-agnostic
-  * read-only path (no catalog registration, plain compose).
+  * Every `compactEvery`-th persist of a table writes FULL, which bounds
+  * the chain; a persist without a change set (the first one, restart
+  * recovery) is always FULL. Each persist writes a NEW generation,
+  * because the plan being written usually reads the previous one.
+  * Superseded generations are queued and dropped on [[gc]], after the
+  * batch's last job; a delta chain retires when a FULL persist
+  * supersedes it.
+  *
+  * Restart: [[recover]] registers each chain's bucketed directories in
+  * the catalog and zips them with [[graft.plans.BucketUnion]], as a live
+  * persist does, so keyed reads against recovered state plan no
+  * state-side Exchange before the first compaction — the reference's
+  * RocksDB state is key-indexed the moment it reopens
+  * (state/RocksDBState.java:474-491). Feed the result to
+  * [[IncrementalDenormalizer.loadStateTables]]: its re-persist is a FULL
+  * write that takes [[persistFull]]'s aligned path, without a
+  * full-state shuffle.
   */
 final class BucketedParquetBackend(
     spark: SparkSession,
@@ -135,7 +130,8 @@ final class BucketedParquetBackend(
     buckets: Int = 16,
     compactEvery: Int = 4) extends StateBackend {
 
-  import BucketedParquetBackend.writeMarker
+  import BucketedParquetBackend.{applyDelta, chains, generations, readSchema,
+    writeMarker, writeSchema}
 
   // Register the BucketUnion planner strategy + pushdown rule NOW, at
   // backend construction — not lazily at the first compose. A
@@ -169,20 +165,19 @@ final class BucketedParquetBackend(
   private def fs(p: Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** Catalog identifiers are case-insensitive and charset-limited, so a
+    * generation's catalog table is a unique sequence id; its data dir
+    * keeps the exact state-table name. */
+  private def newTableName(): String =
+    s"graft_state_${instanceId}_${tableSeq.incrementAndGet()}"
+
   /** Generations already on disk from a PREVIOUS session (restart over
     * an existing root): the first persist of each table must write
     * past them, and they retire once that write commits. */
   private def adoptDiskGens(name: String): Long = {
-    val tableDir = new Path(root, name)
-    val f = fs(tableDir)
-    if (!f.exists(tableDir)) 0L
-    else {
-      val gens = f.listStatus(tableDir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
-        .flatMap(s => s.getPath.getName.drop(1).toLongOption.map(_ -> s.getPath))
-      gens.foreach { case (_, p) => retired.add((None, p)) }
-      gens.map(_._1).maxOption.getOrElse(0L)
-    }
+    val gens = generations(fs(new Path(root)), new Path(root, name))
+    gens.foreach { case (_, p) => retired.add((None, p)) }
+    gens.lastOption.map(_._1).getOrElse(0L)
   }
 
   def persist(name: String, df: DataFrame): DataFrame =
@@ -202,10 +197,7 @@ final class BucketedParquetBackend(
   private def persistFull(name: String, df: DataFrame): DataFrame = {
     val prev = live.get(name)
     val gen = if (prev == null) adoptDiskGens(name) + 1L else prev.maxGen + 1L
-    // Catalog identifiers are case-insensitive and charset-limited, so
-    // the table name is a mangled-but-unique sequence id; the DATA DIR
-    // keeps the exact state-table name (needed for restart recovery).
-    val tbl = s"graft_state_${instanceId}_${tableSeq.incrementAndGet()}"
+    val tbl = newTableName()
     val dir = new Path(root, s"$name/g$gen")
     val keyCol = df.columns.head
     // Aligned fast path: a frame whose plan is already a BucketUnion
@@ -223,12 +215,10 @@ final class BucketedParquetBackend(
       .bucketBy(buckets, keyCol)
       .option("path", dir.toString)
       .saveAsTable(tbl)
-    // schema sidecar BEFORE the commit marker: a bucketed write of an
-    // EMPTY frame emits no data files at all, so a later recover/asOf
-    // could not infer the table schema from parquet footers — an empty
+    // the schema sidecar lands before the commit marker, so an empty
     // state table (a scrubbed rootmap, a link table before its first
-    // edge) must survive restart as EMPTY, not as unreadable
-    BucketedParquetBackend.writeSchema(fs(dir), dir, df.schema)
+    // edge) survives restart as EMPTY, not as unreadable
+    writeSchema(fs(dir), dir, df.schema)
     writeMarker(fs(dir), dir, "full", buckets)
     if (prev != null) {
       retired.add((Some(prev.table), prev.baseDir))
@@ -259,7 +249,7 @@ final class BucketedParquetBackend(
     val gen = prev.maxGen + 1L
     val dir = new Path(root, s"$name/g$gen")
     val keyCol = prev.frame.columns.head
-    val tbl = s"graft_state_${instanceId}_${tableSeq.incrementAndGet()}"
+    val tbl = newTableName()
     // Change sets are batch-sized: the pre-write repartition is a
     // delta-sized shuffle that lands exactly one file per bucket.
     rows.select(prev.frame.columns.map(col).toSeq: _*)
@@ -270,13 +260,9 @@ final class BucketedParquetBackend(
       .saveAsTable(tbl)
     keys.coalesce(buckets).write.parquet(new Path(dir, "keys").toString)
     writeMarker(fs(dir), dir, "delta", buckets)
-    // read both sides back from disk so the composed frame is
-    // independent of the input plans' lineage
-    val keysDf = spark.read.parquet(new Path(dir, "keys").toString)
-    val kept = prev.frame.join(
-      org.apache.spark.sql.functions.broadcast(keysDf),
-      keysDf.columns.toSeq, "left_anti")
-    val frame = graft.plans.BucketUnion(kept, spark.table(tbl), keyCol, buckets)
+    // the layer reads both sides back from disk, so the composed frame
+    // is independent of the input plans' lineage
+    val frame = applyDelta(spark, prev.frame, dir, Some((tbl, buckets)))
     live.put(name, prev.copy(maxGen = gen,
       deltas = prev.deltas :+ ((dir, tbl)), frame = frame))
     frame
@@ -287,7 +273,7 @@ final class BucketedParquetBackend(
     * bucket spec. DDL because the DataFrame API can only CTAS. */
   private def registerBucketed(dir: Path, schema: StructType,
       keyCol: String, bucketCount: Int): String = {
-    val tbl = s"graft_state_${instanceId}_${tableSeq.incrementAndGet()}"
+    val tbl = newTableName()
     spark.sql(s"CREATE TABLE $tbl (${schema.toDDL}) USING PARQUET " +
       s"CLUSTERED BY (`$keyCol`) INTO $bucketCount BUCKETS " +
       s"LOCATION '${dir.toString}'")
@@ -295,73 +281,36 @@ final class BucketedParquetBackend(
   }
 
   /** Restart recovery through the live backend (see class doc): the
-    * newest committed chain of every table under [[root]], composed
-    * bucket-aligned. Chains are adopted into [[live]], so each table's
-    * first post-restore persist supersedes the adopted generations and
-    * [[gc]] retires their files and catalog entries together; disk
-    * generations OUTSIDE the adopted chain (uncommitted wrecks,
-    * superseded older generations) queue for retirement immediately.
-    * Tables whose markers predate the bucket-count format (or whose
-    * chain mixes bucket counts) compose unbucketed — one full-state
-    * shuffle on the recovery persist, never a wrong layout guess. */
-  def recover(): Map[String, DataFrame] = {
-    val rootPath = new Path(root)
-    val f = fs(rootPath)
-    if (!f.exists(rootPath)) return Map.empty
-    f.listStatus(rootPath).toSeq.filter(_.isDirectory).flatMap { tableDir =>
-      val name = tableDir.getPath.getName
-      val info = BucketedParquetBackend.committedGens(f, tableDir.getPath)
-      val base = info.filter(_._3.exists(_._1 == "full")).lastOption
-      if (base.isEmpty && info.exists(_._3.exists(_._1 == "delta")))
-        throw new IllegalStateException(
-          s"state table ${tableDir.getPath} has committed delta " +
-            "generations but no committed full generation; refusing to " +
-            "recover an empty state over existing data")
-      base.map { case (baseId, baseDir, baseInfo) =>
-        val suffix = info.filter(_._1 > baseId)
-          .takeWhile(_._3.exists(_._1 == "delta"))
-        val chainDirs = (baseDir +: suffix.map(_._2)).toSet
-        info.filterNot(g => chainDirs(g._2))
-          .foreach(g => retired.add((None, g._2)))
-        val counts = (baseInfo +: suffix.map(_._3)).map(_.flatMap(_._2))
-        val bucketCount = counts.head
-        val frame =
-          if (bucketCount.isDefined && counts.forall(_ == bucketCount)) {
-            val schema =
-              BucketedParquetBackend.readBase(spark, f, baseDir).schema
-            val keyCol = schema.fields.head.name
-            val baseTbl =
-              registerBucketed(baseDir, schema, keyCol, bucketCount.get)
-            var cur = spark.table(baseTbl)
-            val deltas = suffix.map { case (_, dir, _) =>
-              val rowsTbl = registerBucketed(
-                new Path(dir, "rows"), schema, keyCol, bucketCount.get)
-              val keysDf =
-                spark.read.parquet(new Path(dir, "keys").toString)
-              val kept = cur.join(broadcast(keysDf),
-                keysDf.columns.toSeq, "left_anti")
-              cur = graft.plans.BucketUnion(
-                kept, spark.table(rowsTbl), keyCol, bucketCount.get)
-              (dir, rowsTbl)
-            }
-            // maxGen spans ALL disk generations, not just the chain: an
-            // uncommitted wreck beyond the chain still occupies its gen
-            // directory, and the next persist must write past it
-            live.put(name, Chain(
-              maxGen = info.lastOption.map(_._1).getOrElse(baseId),
-              table = baseTbl, baseDir = baseDir,
-              deltas = deltas.toVector, frame = cur))
-            cur
-          } else
-            // legacy chain: plain compose; the table stays out of
-            // `live`, so its first persist takes the adoptDiskGens path
-            suffix.foldLeft(BucketedParquetBackend.readBase(spark, f, baseDir)) {
-              (cur, g) => BucketedParquetBackend.applyDelta(spark, cur, g._2)
-            }
-        name -> frame
-      }
+    * committed chain of every table under [[root]], composed
+    * bucket-aligned on its full generation's bucket count. Chains are
+    * adopted into [[live]], so each table's first post-restore persist
+    * supersedes them and [[gc]] retires their files and catalog entries
+    * together; generations outside the chain (uncommitted wrecks,
+    * superseded older generations) queue for retirement at once. */
+  def recover(): Map[String, DataFrame] =
+    chains(fs(new Path(root)), new Path(root), Long.MaxValue).flatMap {
+      case (name, gens, committed) =>
+        val kept = committed.map(_.dir).toSet
+        gens.filterNot(g => kept(g._2)).foreach(g => retired.add((None, g._2)))
+        committed.headOption.map { base =>
+          val schema = readSchema(fs(base.dir), base.dir)
+          val keyCol = schema.fields.head.name
+          val baseTbl = registerBucketed(base.dir, schema, keyCol, base.buckets)
+          var frame = spark.table(baseTbl)
+          val deltas = committed.tail.map { d =>
+            val rowsTbl = registerBucketed(
+              new Path(d.dir, "rows"), schema, keyCol, d.buckets)
+            frame = applyDelta(spark, frame, d.dir, Some((rowsTbl, base.buckets)))
+            (d.dir, rowsTbl)
+          }
+          // maxGen spans ALL disk generations, not just the chain: an
+          // uncommitted wreck beyond the chain still occupies its gen
+          // directory, and the next persist must write past it
+          live.put(name, Chain(gens.last._1, baseTbl, base.dir,
+            deltas.toVector, frame))
+          name -> frame
+        }
     }.toMap
-  }
 
   override def gc(): Unit = {
     var item = retired.poll()
@@ -396,57 +345,39 @@ final class BucketedParquetBackend(
 object BucketedParquetBackend {
   private val instances = new AtomicInteger(0)
 
-  /** Schema sidecar for full generations (`_SCHEMA`, StructType json):
-    * the authoritative table schema when the generation holds no
-    * parquet files (empty state table). Written before the commit
-    * marker, so a committed generation always carries it. */
-  private[streaming] def writeSchema(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path, schema: StructType): Unit = {
+  /** A committed generation: its directory, marker kind and bucket count. */
+  private case class Gen(dir: Path, kind: String, buckets: Int)
+
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  /** Schema sidecar of a full generation (`_SCHEMA`, StructType json),
+    * written before its commit marker. */
+  private def writeSchema(f: FileSystem, dir: Path, schema: StructType): Unit = {
     val out = f.create(new Path(dir, "_SCHEMA"), true)
-    out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  private def readSchemaSidecar(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Option[StructType] = {
+  private def readSchema(f: FileSystem, dir: Path): StructType = {
     val p = new Path(dir, "_SCHEMA")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(org.apache.spark.sql.types.DataType.fromJson(
-          bytes.toString("UTF-8")).asInstanceOf[StructType])
-      } finally in.close()
-    }
+    if (!f.exists(p))
+      throw new IllegalStateException(s"full generation $dir has no _SCHEMA")
+    DataType.fromJson(readText(f, p)).asInstanceOf[StructType]
   }
 
-  /** Read a full-generation directory, surviving the zero-file case
-    * via the `_SCHEMA` sidecar; pre-sidecar generations (which always
-    * had data files) fall back to footer inference. */
-  private[streaming] def readBase(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, dir: Path): DataFrame =
-    readSchemaSidecar(f, dir) match {
-      case Some(s) => spark.read.schema(s).parquet(dir.toString)
-      case None => spark.read.parquet(dir.toString)
-    }
-
-  /** Commit marker: `_MANIFEST` holds `kind:buckets` (the bucket
-    * count lets [[BucketedParquetBackend.recover]] re-register the
-    * directory with its true layout) and is written LAST via
-    * create-then-rename, so its presence implies the generation's
-    * data is complete (the `_SUCCESS`-equivalent gate — a write that
-    * died mid-flight leaves data files but no marker). */
-  private def writeMarker(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path, kind: String, bucketCount: Int): Unit = {
+  /** Commit marker of `dir`: `_MANIFEST` holding `kind:count`, written
+    * LAST via create-then-rename, so its presence implies everything
+    * written before it is complete. The state layout writes
+    * `full|delta:<buckets>`; [[StateOps.backup]] writes
+    * `backup:<tables>`. */
+  private[streaming] def writeMarker(f: FileSystem, dir: Path, kind: String,
+      count: Int): Unit = {
     val tmp = new Path(dir, "_MANIFEST.tmp")
     val out = f.create(tmp, true)
-    out.write(s"$kind:$bucketCount"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    try out.write(s"$kind:$count".getBytes(StandardCharsets.UTF_8))
+    finally out.close()
     // fail LOUD on a false rename (dest exists, FS quirk): a generation
     // whose marker never landed would be live in this session's chain
     // but invisible to recovery — the checkpoint would advance past a
@@ -456,138 +387,114 @@ object BucketedParquetBackend {
         s"could not commit generation marker ${new Path(dir, "_MANIFEST")}")
   }
 
-  /** Committed generation `(kind, bucket count)`. Markers since the
-    * bucket-count format hold `kind:buckets`; earlier ones hold just
-    * `kind` (count unknown → None). Pre-delta versions of this backend
-    * wrote no `_MANIFEST` at all — their full generations carry only
-    * parquet's `_SUCCESS` at the generation root (delta generations
-    * nest it under `rows/`/`keys/`), so a `_SUCCESS`-only directory is
-    * a committed FULL generation from the OLD format, not a wreck:
-    * without this a restart over a pre-delta state root would silently
-    * recover an EMPTY state map and rebuild from offset zero. The
-    * fallback is scoped by `allowSuccessFallback` to tables where NO
-    * generation has a `_MANIFEST`: on a manifest-format table, a full
-    * generation whose parquet job committed (`_SUCCESS` present) but
-    * whose marker write crashed must stay invisible — the engine
-    * checkpoint never advanced past that batch, and recovering it
-    * would make the restart replay the batch on top of state that
-    * already includes it. */
-  private def markerInfo(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path, allowSuccessFallback: Boolean): Option[(String, Option[Int])] =
-    readMarker(f, dir).map { s =>
-      s.split(':') match {
-        case Array(kind, b) => (kind, b.toIntOption)
-        case _ => (s, None)
-      }
-    }.orElse {
-      if (allowSuccessFallback && f.exists(new Path(dir, "_SUCCESS")))
-        Some(("full", None))
-      else None
-    }
-
-  /** All `g<n>` generation directories of one state table in id order,
-    * each with its committed-marker info (None = uncommitted wreck).
-    * The `_SUCCESS` fallback is enabled only when the whole table
-    * predates the manifest format (see [[markerInfo]]). */
-  private def committedGens(f: org.apache.hadoop.fs.FileSystem,
-      tableDir: Path): Seq[(Long, Path, Option[(String, Option[Int])])] = {
-    val gens = f.listStatus(tableDir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
-      .flatMap(s => s.getPath.getName.drop(1).toLongOption.map(_ -> s.getPath))
-      .sortBy(_._1)
-    val preManifest =
-      !gens.exists { case (_, p) => f.exists(new Path(p, "_MANIFEST")) }
-    gens.map { case (id, p) => (id, p, markerInfo(f, p, preManifest)) }
-  }
-
-  private def readMarker(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Option[String] = {
+  /** `dir`'s marker as `(kind, count)`; None when `dir` is uncommitted.
+    * A marker that does not read as `kind:count` fails, naming `dir`. */
+  private[streaming] def readMarker(f: FileSystem,
+      dir: Path): Option[(String, Int)] = {
     val m = new Path(dir, "_MANIFEST")
     if (!f.exists(m)) None
     else {
-      val in = f.open(m)
-      try {
-        val bytes = new Array[Byte](32)
-        val n = in.read(bytes)
-        Some(new String(bytes, 0, math.max(n, 0),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      } finally in.close()
+      val text = readText(f, m).trim
+      text.split(':') match {
+        case Array(kind, n) if n.toIntOption.isDefined => Some((kind, n.toInt))
+        case _ => throw new IllegalStateException(
+          s"unreadable commit marker '$text' in $dir")
+      }
     }
   }
 
-  /** One delta-generation layer: drop the changed keys from the view
-    * so far, add the generation's new rows (a changed key without a
-    * row stays dropped = deletion). The keys side is batch-sized, so
-    * Catalyst's size estimate plans a broadcast anti-join — the state
-    * side is never shuffled for composition. */
-  private def applyDelta(spark: SparkSession, cur: DataFrame,
-      deltaDir: Path): DataFrame = {
-    val keys = spark.read.parquet(new Path(deltaDir, "keys").toString)
-    // rows/ is a BUCKETED write, which emits no data file at all for an
-    // empty change set (a plain write leaves a schema-bearing empty
-    // file) — read with the base generation's schema, which is the
-    // chain's schema by construction, so empty deltas stay composable
-    val rows = spark.read.schema(cur.schema)
-      .parquet(new Path(deltaDir, "rows").toString)
-    cur.join(keys, keys.columns.toSeq, "left_anti").unionByName(rows)
+  /** A table's `g<n>` generation directories, in id order. */
+  private def generations(f: FileSystem, tableDir: Path): Seq[(Long, Path)] =
+    if (!f.exists(tableDir)) Nil
+    else f.listStatus(tableDir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
+      .flatMap(s => s.getPath.getName.drop(1).toLongOption.map(_ -> s.getPath))
+      .sortBy(_._1)
+
+  /** A table's committed chain as of generation `upTo`: the last
+    * committed full generation with id ≤ `upTo`, then the committed
+    * delta generations after it, up to the first uncommitted one. Empty
+    * when no full generation has committed: a table whose first persist
+    * died mid-flight never committed a batch. A COMMITTED delta without
+    * a committed base is corruption, and fails rather than recover an
+    * empty state and rebuild from offset zero. */
+  private def chain(f: FileSystem, tableDir: Path, gens: Seq[(Long, Path)],
+      upTo: Long): Seq[Gen] = {
+    val marked = gens.takeWhile(_._1 <= upTo).map { case (_, dir) =>
+      readMarker(f, dir).map {
+        case (kind @ ("full" | "delta"), n) => Gen(dir, kind, n)
+        case (kind, _) => throw new IllegalStateException(
+          s"generation $dir has commit marker kind '$kind', not full or delta")
+      }
+    }
+    val base = marked.lastIndexWhere(_.exists(_.kind == "full"))
+    if (base < 0 && marked.exists(_.isDefined))
+      throw new IllegalStateException(
+        s"state table $tableDir has committed delta generations but " +
+          "no committed full generation; refusing to recover an empty " +
+          "state over existing data")
+    if (base < 0) Nil
+    else marked(base).get +:
+      marked.drop(base + 1).takeWhile(_.exists(_.kind == "delta")).flatten
   }
 
-  /** The newest committed state of every table under `root`: the last
-    * full generation with a commit marker, composed with its committed
-    * delta suffix in generation order. Generations without a marker
-    * (a write that died mid-flight) are skipped, and the walk up the
-    * delta suffix stops at the first uncommitted generation, so
-    * recovery always lands on the last complete batch.
-    *
-    * This is the read-only, layout-agnostic path (plain parquet reads,
-    * broadcast-anti compose — no catalog registration): right for
-    * inspection and cross-backend reads. ENGINE restarts should go
-    * through the live backend's [[BucketedParquetBackend.recover]],
-    * which composes the same chain bucket-aligned. */
+  /** Every table under `root`: its name, generation listing and
+    * committed chain as of `upTo` (see [[chain]]). */
+  private def chains(f: FileSystem, root: Path,
+      upTo: Long): Seq[(String, Seq[(Long, Path)], Seq[Gen])] =
+    if (!f.exists(root)) Nil
+    else f.listStatus(root).toSeq.filter(_.isDirectory).map { s =>
+      val gens = generations(f, s.getPath)
+      (s.getPath.getName, gens, chain(f, s.getPath, gens, upTo))
+    }
+
+  /** One delta generation over the view so far: drop the changed keys
+    * (`keys/`; batch-sized, so a broadcast anti-join that never
+    * shuffles the state side), then add the new rows (a changed key
+    * without a row stays dropped = deletion). `rowsTable` names the
+    * delta's `rows/` registered as a bucketed catalog table, with the
+    * bucket count of the view; the layer then zips bucket to bucket
+    * ([[graft.plans.BucketUnion]]) and keeps the view's layout. Without
+    * it, `rows/` is read plain, with the view's schema (a bucketed write
+    * of an empty change set emits no parquet file), and unioned. */
+  private def applyDelta(spark: SparkSession, cur: DataFrame, dir: Path,
+      rowsTable: Option[(String, Int)]): DataFrame = {
+    val keys = spark.read.parquet(new Path(dir, "keys").toString)
+    val kept = cur.join(broadcast(keys), keys.columns.toSeq, "left_anti")
+    rowsTable match {
+      case Some((tbl, n)) =>
+        graft.plans.BucketUnion(kept, spark.table(tbl), cur.columns.head, n)
+      case None => kept.unionByName(
+        spark.read.schema(cur.schema).parquet(new Path(dir, "rows").toString))
+    }
+  }
+
+  /** The newest committed state of every table under `root`:
+    * [[asOf]] the newest generation. */
   def latest(spark: SparkSession, root: String): Map[String, DataFrame] =
     asOf(spark, root, Long.MaxValue)
 
   /** Time travel over the generational layout: every table's committed
-    * state as of generation `gen` — the last committed full generation
-    * with id ≤ `gen`, composed with its committed delta suffix up to
-    * `gen`. Because every engine batch commits one generation per
-    * touched table, this answers "what did the engine believe after
-    * batch N" for any batch still on disk — the per-batch refinement of
-    * the reference's whole-store backup restore (RocksDBState.java:
-    * 355-461 can only rewind to a rotated backup; the delta chain
-    * rewinds to any batch for free).
+    * chain as of generation `gen`, read with plain parquet reads and
+    * composed with plain unions. It registers nothing in the catalog and
+    * writes nothing, so it is the path for inspection (`--show-state`,
+    * `--verify-state`) and cross-backend reads; ENGINE restarts go
+    * through [[BucketedParquetBackend.recover]], which composes the same
+    * chain bucket-aligned. Because every engine batch commits one
+    * generation per touched table, this answers "what did the engine
+    * believe after batch N" for any batch still on disk — a per-batch
+    * refinement of the reference's whole-store backup restore
+    * (RocksDBState.java:355-461 can only rewind to a rotated backup).
     *
-    * Retention bound: [[gc]] retires a superseded chain when
-    * compaction rewrites full, so the travel window is what gc hasn't
-    * deleted yet — a retired chain's base and deltas go together, so a
-    * too-old `gen` yields the table ABSENT from the map, never a
-    * half-composed state. */
+    * Retention bound: [[gc]] retires a superseded chain's base and
+    * deltas together when compaction rewrites full, so a too-old `gen`
+    * yields the table ABSENT from the map, never a half-composed state. */
   def asOf(spark: SparkSession, root: String, gen: Long): Map[String, DataFrame] = {
     val rootPath = new Path(root)
     val f = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!f.exists(rootPath)) return Map.empty
-    f.listStatus(rootPath).toSeq.filter(_.isDirectory).flatMap { tableDir =>
-      val gens = committedGens(f, tableDir.getPath).filter(_._1 <= gen)
-      val base = gens.filter(_._3.exists(_._1 == "full")).lastOption
-      // A COMMITTED delta can only exist after its base committed, so
-      // finding one with no committed full generation is corruption —
-      // fail loud rather than silently recover an empty state and
-      // rebuild from offset zero. (Uncommitted-only wrecks are NOT an
-      // error: a table whose very first persist died mid-flight never
-      // committed a batch, so the empty fresh start is the truth.)
-      if (base.isEmpty && gens.exists(_._3.exists(_._1 == "delta")))
-        throw new IllegalStateException(
-          s"state table ${tableDir.getPath} has committed delta " +
-            "generations but no committed full generation; refusing to " +
-            "recover an empty state over existing data")
-      base.map { case (baseId, baseDir, _) =>
-        val suffix = gens.filter(_._1 > baseId)
-          .takeWhile(_._3.exists(_._1 == "delta"))
-        val frame = suffix.foldLeft(readBase(spark, f, baseDir)) {
-          (cur, g) => applyDelta(spark, cur, g._2)
-        }
-        tableDir.getPath.getName -> frame
-      }
+    chains(f, rootPath, gen).collect { case (name, _, base +: deltas) =>
+      val full = spark.read.schema(readSchema(f, base.dir)).parquet(base.dir.toString)
+      name -> deltas.foldLeft(full)((cur, d) => applyDelta(spark, cur, d.dir, None))
     }.toMap
   }
 }

@@ -10,14 +10,19 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * state/RocksDBState.java:247-265,355-461,639-708,
   * index/Index.java:366-414).
   *
-  * State is persisted as one parquet directory per state table
-  * (snapshots, per-edge links/rootmaps, per-tree documents) inside a
-  * timestamped backup directory. Each [[backup]] call creates a new
-  * backup and prunes to the newest `backupsToKeep` (the reference's
-  * `backups.to.keep`, RocksDBState.java:247-265). [[restore]] honors
-  * the reference's restore modes (`backups.restore.mode` =
-  * always / when_needed / never, RocksDBState.java:355-461) and rolls
-  * back to the previous backup when the newest is corrupt
+  * A backup is one `backup_<millis>` directory under a root, holding
+  * one parquet directory per state table (snapshots, per-edge
+  * links/rootmaps, per-tree documents, deferred-priority sets). It is
+  * committed by a `_MANIFEST` marker written after its last table,
+  * with the durable backend's create-then-rename
+  * [[BucketedParquetBackend.writeMarker]]: a backup whose writer died
+  * between two tables has no marker and is never restored. Each
+  * [[backup]] call creates a new backup and prunes to the newest
+  * `backupsToKeep` (the reference's `backups.to.keep`,
+  * RocksDBState.java:247-265). [[restore]] honors the reference's
+  * restore modes (`backups.restore.mode` = always / when_needed /
+  * never, RocksDBState.java:355-461) and rolls back to the previous
+  * backup when the newest is uncommitted or corrupt
   * (RocksDBState.java:639-708).
   *
   * All listing/pruning/deletion goes through the Hadoop FileSystem
@@ -72,8 +77,8 @@ object StateOps {
   }
 
   /** Persist every state table of a live engine into a NEW timestamped
-    * backup under `root`, then prune to the newest `backupsToKeep`
-    * backups. Returns the backup directory path. */
+    * backup under `root`, commit it with its marker, then prune to the
+    * newest `backupsToKeep` backups. Returns the backup directory path. */
   def backup(engine: IncrementalDenormalizer, root: String,
       backupsToKeep: Int = 5): String = {
     require(backupsToKeep >= 1, "must keep at least one backup")
@@ -83,15 +88,18 @@ object StateOps {
     def dirFor(t: Long) = new Path(r, f"$backupPrefix$t%013d")
     var dir = dirFor(ts)
     while (f.exists(dir)) { ts += 1; dir = dirFor(ts) }
-    engine.stateTables.foreach { case (name, df) =>
+    val tables = engine.stateTables
+    tables.foreach { case (name, df) =>
       df.write.mode(SaveMode.Overwrite).parquet(new Path(dir, name).toString)
     }
+    BucketedParquetBackend.writeMarker(f, dir, "backup", tables.size)
     backups(root).dropRight(backupsToKeep).foreach(p => f.delete(p, true))
     dir.toString
   }
 
   /** Load persisted state back into an engine according to `mode`,
-    * rolling back through older backups when a newer one is corrupt.
+    * rolling back through older backups when a newer one is
+    * uncommitted or corrupt.
     *
     * @return the backup directory restored from, or None when the mode
     *         decided not to restore
@@ -101,20 +109,7 @@ object StateOps {
     case RestoreMode.Never => None
     case RestoreMode.WhenNeeded if hasState(engine) => None
     case _ =>
-      val candidates = {
-        val b = backups(root)
-        if (b.nonEmpty) b.reverse // newest first
-        else {
-          // pre-rotation layout: table dirs directly under root. An
-          // EXISTING but empty root (the normal first run — the caller
-          // just created the directory) is "nothing backed up yet",
-          // not a corrupt backup.
-          val r = new Path(root)
-          val f = fs(r)
-          if (f.exists(r) && f.listStatus(r).exists(_.isDirectory)) Seq(r)
-          else Nil
-        }
-      }
+      val candidates = backups(root).reverse // newest first
       if (candidates.isEmpty) {
         // nothing backed up yet: fine for when_needed (first run),
         // an error for an explicit always
@@ -135,13 +130,16 @@ object StateOps {
   private def hasState(engine: IncrementalDenormalizer): Boolean =
     engine.stateTables.values.exists(df => !df.isEmpty)
 
-  /** Read and VALIDATE one backup: every table must fully scan (a
-    * corrupt or truncated parquet fails here, triggering rollback to
-    * the previous backup — RocksDBState.java:639-708 semantics). */
+  /** Read and VALIDATE one backup: it must be committed, and every
+    * table must fully scan (a corrupt or truncated parquet fails here).
+    * Either failure triggers rollback to the previous backup —
+    * RocksDBState.java:639-708 semantics. */
   private def tryLoad(engine: IncrementalDenormalizer,
       dir: Path): Option[Map[String, DataFrame]] =
     try {
       val spark = engine.session
+      if (BucketedParquetBackend.readMarker(fs(dir), dir).isEmpty)
+        throw new IllegalStateException("no commit marker")
       val tables = fs(dir).listStatus(dir).toSeq
         .filter(_.isDirectory)
         .map { d =>

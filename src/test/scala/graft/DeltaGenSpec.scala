@@ -149,18 +149,6 @@ class DeltaGenSpec extends SparkSpec with BeforeAndAfterAll {
     b.deleteAll()
   }
 
-  test("a pre-delta generation (_SUCCESS only, no _MANIFEST) recovers as full") {
-    // old versions of the backend wrote full generations with only
-    // parquet's _SUCCESS; a restart over such a root must NOT silently
-    // recover an empty state map
-    df(1 -> 10L, 2 -> 20L).write.parquet(new Path(root, "bc/g1").toString)
-    val rec = BucketedParquetBackend.latest(spark, root)("bc")
-    assert(contents(rec) == Map(1 -> 10L, 2 -> 20L),
-      "back-compat: _SUCCESS-only generation invisible to recovery")
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new Path(root, "bc"), true)
-  }
-
   test("a committed delta with no committed base fails loudly, not empty") {
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     val dir = new Path(root, "corrupt/g2")
@@ -169,12 +157,40 @@ class DeltaGenSpec extends SparkSpec with BeforeAndAfterAll {
     // commit the delta by hand — in real operation this can only happen
     // if the base generation was lost/deleted underneath the chain
     val out = fs.create(new Path(dir, "_MANIFEST"), true)
-    out.write("delta".getBytes("UTF-8")); out.close()
+    out.write("delta:4".getBytes("UTF-8")); out.close()
     val err = intercept[IllegalStateException] {
       BucketedParquetBackend.latest(spark, root)
     }
     assert(err.getMessage.contains("no committed full generation"))
     fs.delete(new Path(root, "corrupt"), true)
+  }
+
+  test("a marker without a bucket count, or a full generation without _SCHEMA, fails naming the generation") {
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    def failure(): String = {
+      val viaLatest = intercept[IllegalStateException] {
+        BucketedParquetBackend.latest(spark, root)
+      }
+      val viaRecover = intercept[IllegalStateException] {
+        new BucketedParquetBackend(spark, root, buckets = 4).recover()
+      }
+      assert(viaLatest.getMessage == viaRecover.getMessage)
+      viaLatest.getMessage
+    }
+    val b = new BucketedParquetBackend(spark, root, buckets = 4, compactEvery = 10)
+    b.persist("m", df(1 -> 1L), None)
+    val g1 = genDirs(fs, "m").head
+    val out = fs.create(new Path(g1, "_MANIFEST"), true)
+    out.write("full".getBytes("UTF-8")); out.close()
+    val badMarker = failure()
+    assert(badMarker.contains("m/g1") && badMarker.contains("'full'"), badMarker)
+
+    b.persist("s", df(2 -> 2L), None)
+    fs.delete(new Path(genDirs(fs, "s").head, "_SCHEMA"), false)
+    fs.delete(new Path(root, "m"), true)
+    val noSchema = failure()
+    assert(noSchema.contains("s/g1") && noSchema.contains("_SCHEMA"), noSchema)
+    b.deleteAll()
   }
 
   override def afterAll(): Unit = {

@@ -2,11 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.Filters.{FilterMode, RecordFilter}
-import graft.streaming.StateOps
+import graft.streaming.{BucketedParquetBackend, StateOps}
 
 /** A no-arg filter hook loadable through the CLI's `filterClass`
   * config (the reference's filter.class): drops items with qty 13. */
@@ -139,6 +141,59 @@ class MainSpec extends SparkSpec {
     val live = docs.where(!col("__deleted")).collect().map(_.getAs[String]("doc_json"))
     assert(live.length == 1 && live.head.contains("\"qty\":10"),
       s"filter hook not applied: ${live.mkString(";")}")
+  }
+
+  test("--verify-state reads the durable state and writes nothing") {
+    val state = Paths.get(s"$base/state")
+    // every generation directory, and every commit marker's bytes
+    def layout(): Map[String, Seq[Byte]] = {
+      val walk = Files.walk(state)
+      try walk.iterator().asScala.collect {
+        case p if Files.isDirectory(p) && p.getFileName.toString.matches("g\\d+") =>
+          state.relativize(p).toString -> Seq.empty[Byte]
+        case p if p.getFileName.toString == "_MANIFEST" =>
+          state.relativize(p).toString -> Files.readAllBytes(p).toSeq
+      }.toMap
+      finally walk.close()
+    }
+    val before = layout()
+    assert(before.keys.exists(_.endsWith("_MANIFEST")), s"no committed state: $before")
+    assert(Main.run(cli("--verify-state"), spark) == 0)
+    assert(layout() == before, "--verify-state changed the durable state")
+  }
+
+  test("--verify-state without backups reports an orphan link in the durable state") {
+    val dir = Files.createTempDirectory("graft-cli-orphan").toString
+    write(dir, "relations.json",
+      """[{"DenormalizedName":"DenormItem","Entity":"item","Children":[
+        |  {"Entity":"owner","JoinKey":"id","ParentKey":"owner_id"}]}]""".stripMargin)
+    write(dir, "topics/item.json",
+      """{"id":1}
+        |{"id":1,"qty":10,"owner_id":100}
+        |""".stripMargin)
+    write(dir, "topics/owner.json",
+      """{"id":100}
+        |{"id":100,"name":"ann"}
+        |""".stripMargin)
+    write(dir, "conf.json",
+      s"""{
+         |  "topicsDir": "$dir/topics",
+         |  "backend": "bucketed",
+         |  "backendRoot": "file://$dir/state",
+         |  "buckets": 4,
+         |  "checkpointDir": "$dir/ckpt"
+         |}""".stripMargin)
+    def run(flag: String): Int = Main.run(Main.parse(Array("--config",
+      s"$dir/conf.json", "--relations", s"$dir/relations.json", flag)), spark)
+    assert(run("--build") == 0)
+    assert(run("--verify-state") == 0)
+    // commit an empty owner snapshot over the built state: the owner
+    // link now references a dead child PK
+    val root = s"file://$dir/state"
+    val owners = BucketedParquetBackend.latest(spark, root)("snapshot__owner")
+    new BucketedParquetBackend(spark, root, buckets = 4)
+      .persist("snapshot__owner", owners.limit(0))
+    assert(run("--verify-state") > 0)
   }
 
   test("--verify-state exits 0 on consistent restored state") {

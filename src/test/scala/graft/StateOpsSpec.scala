@@ -109,4 +109,27 @@ class StateOpsSpec extends SparkSpec {
     assert(snapshotMap(fresh) == Map(1L -> 10L)) // first backup's content
     StateOps.deleteState(root)
   }
+
+  test("a newest backup without its commit marker rolls back to the previous one") {
+    val root = tmpRoot()
+    val engine = newEngine()
+    engine.processBatch(Map("item" -> changelog(Seq((1L, 1L, 10L)))))
+    StateOps.backup(engine, root)
+    engine.processBatch(Map("item" -> changelog(Seq((2L, 1L, 99L)))))
+    val latest = new File(StateOps.backup(engine, root))
+
+    // a writer that died between two tables: the newest backup holds
+    // its snapshot table only, and no marker
+    latest.listFiles().filter(_.getName != "snapshot__item").foreach { f =>
+      Files.walk(f.toPath).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+    }
+    assert(latest.list().toSeq == Seq("snapshot__item"))
+
+    val fresh = newEngine()
+    val restoredFrom = StateOps.restore(fresh, root)
+    assert(restoredFrom.isDefined && !restoredFrom.contains(latest.toString))
+    assert(snapshotMap(fresh) == Map(1L -> 10L)) // first backup's content
+    StateOps.deleteState(root)
+  }
 }
