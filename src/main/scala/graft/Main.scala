@@ -53,7 +53,7 @@ object Main {
       restore: Boolean = false,
       verifyState: Boolean = false,
       showState: Boolean = false,
-      asOfGen: Option[Long] = None,
+      asOfCommit: Option[Long] = None,
       deleteState: Boolean = false,
       deleteBackup: Boolean = false,
       help: Boolean = false)
@@ -64,7 +64,7 @@ object Main {
       |  --restore        restore engine state from the newest readable backup
       |  --verify-state   check index invariants; exit code = violation count
       |  --show-state     list durable state tables and row counts
-      |  --as-of <gen>    with --show-state: time-travel to generation <gen>
+      |  --as-of <n>      with --show-state: the state as of batch commit <n>
       |  --delete-state   delete the durable state root. BE VERY CAREFUL!
       |  --delete-backup  delete the backup root. BE VERY CAREFUL!
       |  --help           this text""".stripMargin
@@ -82,9 +82,9 @@ object Main {
       case "--restore" :: t => go(t, acc.copy(restore = true))
       case "--verify-state" :: t => go(t, acc.copy(verifyState = true))
       case "--show-state" :: t => go(t, acc.copy(showState = true))
-      case "--as-of" :: v :: t => go(t, acc.copy(asOfGen = Some(v.toLong)))
+      case "--as-of" :: v :: t => go(t, acc.copy(asOfCommit = Some(v.toLong)))
       case "--as-of" :: Nil =>
-        throw new IllegalArgumentException("--as-of needs a generation id")
+        throw new IllegalArgumentException("--as-of needs a commit id")
       case "--delete-state" :: t => go(t, acc.copy(deleteState = true))
       case "--delete-backup" :: t => go(t, acc.copy(deleteBackup = true))
       case "--help" :: t => go(t, acc.copy(help = true))
@@ -172,12 +172,12 @@ object Main {
     val backendRoot = str(conf, "backendRoot")
 
     if (cli.showState) {
-      // read-only inspection of the durable generational layout —
-      // latest by default, any still-on-disk batch via --as-of
+      // read-only inspection of the durable state: the newest batch
+      // commit by default, any retained older commit via --as-of
       val root = backendRoot.getOrElse(throw new IllegalArgumentException(
         "show-state needs backendRoot in config"))
-      val tables = cli.asOfGen match {
-        case Some(g) => BucketedParquetBackend.asOf(spark, root, g)
+      val tables = cli.asOfCommit match {
+        case Some(n) => BucketedParquetBackend.asOf(spark, root, n)
         case None => BucketedParquetBackend.latest(spark, root)
       }
       if (tables.isEmpty) println("[graft] show-state: no committed state")

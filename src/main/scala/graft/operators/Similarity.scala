@@ -292,7 +292,7 @@ object Similarity {
   val MidTierRowsPerBand = 16
 
   /** The mid tier's recall floor AT the queried threshold; the table
-    * count is derived from it (see [[midTierTables]]). The retired
+    * count is derived from it (see [[midTierTables]]). The former
     * fixed 16×8 config's recall floor was 0.80 (at the τ = 0.7
     * boundary; 0.88 at τ = 0.75 — above τ ≈ 0.77 it over-delivered
     * recall at 2⁷× the candidate cost), so the rework raises the

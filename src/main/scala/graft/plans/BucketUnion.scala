@@ -17,7 +17,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * partitions (2N partitions, each key living in two of them), so its
   * output partitioning is unknown and every keyed join/aggregation
   * over a union re-shuffles BOTH inputs. For the durable state
-  * backend's delta chains (base generation ∪ delta rows, both bucketed
+  * backend's delta-chained tables (base generation ∪ delta rows, both bucketed
   * by the state key) that re-shuffle is exactly the cost the bucket
   * layout exists to avoid: the reference's RocksDB state stays
   * key-indexed after WriteBatch puts (reference
@@ -38,7 +38,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * Scale note: the node is opaque to the GENERIC optimizer, but
   * [[BucketUnionPushdown]] (registered alongside the strategy)
   * distributes deterministic filters and projections into both
-  * children — cascading down nested compose chains — so selective
+  * children — cascading down nested composes — so selective
   * ad-hoc scans over a composed view reach the leaf parquet scans as
   * `PushedFilters` + pruned `ReadSchema` (asserted in BucketingSpec).
   */

@@ -263,24 +263,7 @@ object Cdc {
         col(keyCol).as("offset"),
         struct(col(keyCol)).as("key"),
         struct(df.columns.map(col): _*).as("value"))
-      // buckets=8 measured best at sf0.1 (11.0s vs 11.8s @4, 12.8s @16:
-      // fewer buckets under-parallelize the state writes, more buckets
-      // pay per-file/task overhead at this state size)
-      //
-      // Residual ~1.25× over q_incr, profiled per wave (sf0.1
-      // local[32]; today `perfbench/run.py --trace 1` with `--buckets N`
-      // reports the durable layers): the gap is spread across every
-      // wave, not concentrated — durable deltas+state waves run
-      // ~1.2-1.5× the memory backend's (six bucketed delta parquet
-      // writes + commit-marker renames vs MEMORY_ONLY checkpoints),
-      // rebuild waves ~1.5-2× (the docs delta write chains AFTER the
-      // newDocs checkpoint inside one thunk — a true data dependency,
-      // not schedulable overlap), plus ~1s of recover wave at the
-      // handoff. No wave dominates and none of it is a shuffle: the
-      // residual is fixed per-wave parquet/commit cost ∝ number of
-      // state tables — the price of durability, not a plan defect, so
-      // no further action (write ∝ delta and read is Exchange-free on
-      // both the live and recovered chains).
+      // buckets = 8 measured best at sf0.1; per-wave durable cost: perfbench/run.py --buckets N --trace 1
       val b1 = new BucketedParquetBackend(spark, stateRoot, buckets = 8)
       val e1 = newEngine(b1)
       (0 until 2).foreach { i =>
@@ -288,7 +271,7 @@ object Cdc {
           "orders" -> changelog(o.where(pmod(col("o_orderkey"), lit(2)) === i), "o_orderkey"),
           "customer" -> changelog(c.where(pmod(col("c_custkey"), lit(2)) === i), "c_custkey")))
       }
-      // handoff: recover from committed generations only, then delete
+      // handoff: recover from the newest batch commit, then delete
       val b2 = new BucketedParquetBackend(spark, stateRoot, buckets = 8)
       val e2 = newEngine(b2)
       e2.loadStateTables(b2.recover())
@@ -575,7 +558,7 @@ object Cdc {
     // BITEMPORAL point query — both time axes at once: "what did the
     // system BELIEVE at transaction offset O about the state VALID
     // at offset V". Transaction time = the changelog prefix
-    // (event_id ≤ O, the asOf(generation) axis of the durable
+    // (event_id ≤ O, the asOf(commit) axis of the durable
     // backend); valid time = the SCD2 interval containing V. Both
     // cuts are in-plan scalars (max-offset fractions), so the query
     // is one prefix filter + one run-collapse + one interval point
@@ -710,15 +693,15 @@ object Cdc {
         sideA = "view", sideB = "purchase")
     },
 
-    // State TIME TRAVEL through the oracle gate: two committed full
-    // generations of a compacted user-state table, then asOf(gen 1)
+    // State TIME TRAVEL through the oracle gate: two batch commits of a
+    // compacted user-state table, then asOf(commit 1)
     // must reproduce the pre-update compaction EXACTLY while
     // asOf(latest) is the current one — per-batch rewind vs the
     // reference's rotated whole-store backups (state/RocksDBState.java
     // backups restore only whole stores). The oracle replays both
     // epochs as latest-per-key over the corresponding changelog prefix.
     "q_time_travel" -> QueryDef(
-      "durable-state time travel: asOf(gen1) == the pre-update compaction",
+      "durable-state time travel: asOf(commit 1) == the pre-update compaction",
       """WITH h AS (SELECT user_id, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
         |  FROM events WHERE event_id < 500),
@@ -736,7 +719,9 @@ object Cdc {
       def comp(df: DataFrame) =
         latestPerKey(df).select(col("user_id"), col("event_type"))
       b.persist("user_state", comp(ev.where(col("event_id") < 500)))
+      b.gc() // commit 1
       b.persist("user_state", comp(ev))
+      b.gc() // commit 2
       val g1 = BucketedParquetBackend.asOf(spark, root, 1L)("user_state")
       val cur = BucketedParquetBackend
         .asOf(spark, root, Long.MaxValue)("user_state")

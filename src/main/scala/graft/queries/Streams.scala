@@ -317,11 +317,11 @@ object Streams {
     // connectivity-complete (anchorMerge consumer contract). The
     // roll-up therefore resolves the pointer map to a FIXPOINT — a
     // connectedComponents pass over the tiny (anchor, merged_into)
-    // graph — so a₃—a₂—a₁ chains collapse to a₁ within the horizon,
+    // graph — so a₃—a₂—a₁ paths collapse to a₁ within the horizon,
     // matching what q_dup_clusters would say for in-horizon evidence.
     // Edges travel between the two streaming stages as files — the
     // offline stand-in for a topic, matching how a real deployment
-    // chains the jobs. Out-of-horizon closure remains the batch CC
+    // links the jobs. Out-of-horizon closure remains the batch CC
     // pass (q_dup_clusters). The oracle replays the same closure with
     // a recursive min-reachability CTE over the edge set.
     "q_stream_dup_merge" -> QueryDef(

@@ -661,10 +661,11 @@ final class IncrementalDenormalizer(
       val dirty = dirtySets(name)
       if (!dirty.isEmpty) rebuild(tree, dirty)
     }
-    // 4. a durable backend may only drop superseded generations once no
-    // in-flight job can still read them — drain the async wave first
-    // (the memory backend has no gc, so it keeps the full cross-batch
-    // overlap).
+    // 4. a durable backend commits the batch and drops what it
+    // superseded: drain the async wave first, so the commit names every
+    // table this batch wrote and no in-flight job reads a dropped
+    // generation (the memory backend has no gc, so it keeps the full
+    // cross-batch overlap).
     if (backend.durable) {
       awaitPending()
       backend.gc()
@@ -846,8 +847,8 @@ final class IncrementalDenormalizer(
     // two checkpointed frames — its lineage stays two levels deep
     // forever because the next batch's `kept` re-materializes it, so
     // no extra barrier is ever paid. Durable backend: one wave thunk
-    // chains the newDocs checkpoint (lastChanged + observe metrics
-    // ride it) into the docs-table write — the union re-reads the
+    // runs the newDocs checkpoint (lastChanged + observe metrics
+    // ride it), then the docs-table write — the union re-reads the
     // just-checkpointed blocks, so the assembly still runs once, and
     // the rootmap writes overlap the whole chain.
     val truncCol =

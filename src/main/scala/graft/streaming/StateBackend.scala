@@ -1,8 +1,12 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -61,10 +65,12 @@ trait StateBackend {
       delta: Option[(DataFrame, DataFrame)]): DataFrame =
     persist(name, df)
 
-  /** Drop generations superseded by newer [[persist]] calls. The
-    * engine calls this only between batches: while a batch's waves
-    * run, derived plans still read the PRE-batch generations, so
-    * deleting them mid-batch would fail concurrent jobs. */
+  /** The batch boundary. The engine calls this once per batch, after
+    * the batch's last job, and once after a restore. A durable backend
+    * commits every table's current state here as one unit, then drops
+    * what no retained commit still names; the memory backend has nothing
+    * to do. Never call it mid-batch: while a batch's waves run, derived
+    * plans still read the PRE-batch generations. */
   def gc(): Unit = ()
 }
 
@@ -76,43 +82,48 @@ object StateBackend {
   }
 }
 
+
 /** Durable state backend: generation-chained parquet per state table,
-  * under `root/<name>/g<n>` (any Hadoop FS scheme).
+  * under `root/<name>/g<n>` (any Hadoop FS scheme), committed once per
+  * batch. One writer per root.
   *
-  * A generation is committed once its `_MANIFEST` marker exists. The
-  * marker holds `kind:buckets` and is written last, by create-then-
-  * rename, so a generation without one is a write that died mid-flight
-  * and is never read. There are two kinds:
+  * A generation is one of two kinds:
   *
-  *  - FULL — the whole table as a bucketed parquet catalog table, plus
-  *    a `_SCHEMA` sidecar (a bucketed write of an empty frame emits no
-  *    parquet file to read a schema from). The write repartitions by
-  *    the table's leading column (the state key: `__pk` / `__cpk` /
-  *    `__jk`) into `buckets` partitions, so every task writes one
-  *    bucket file. Readers go through the session catalog, which holds
-  *    the bucket spec: a join or aggregation keyed on the bucket column
-  *    plans no Exchange on the state side (BucketingSpec).
+  *  - FULL — the whole table as a bucketed parquet catalog table. The
+  *    write repartitions by the table's leading column (the state key:
+  *    `__pk` / `__cpk` / `__jk`) into `buckets` partitions, so every
+  *    task writes one bucket file. Readers go through the session
+  *    catalog, which holds the bucket spec: a join or aggregation keyed
+  *    on the bucket column plans no Exchange on the state side
+  *    (BucketingSpec).
   *  - DELTA — only the batch's change set: `rows/` (full new rows of
   *    the changed keys, bucketed like the full generation) and `keys/`
   *    (every changed key; a key without a row is a deletion). Write
   *    cost scales with the batch, not the state, as with the
   *    reference's RocksDB WriteBatch (state/RocksDBState.java:611-636).
   *
-  * A table's committed state is its CHAIN: the last committed full
-  * generation and the committed delta generations after it, up to the
-  * first uncommitted one. [[BucketedParquetBackend.chain]]
-  * selects it for every reader, and [[BucketedParquetBackend.applyDelta]]
-  * lays one delta over the view so far (broadcast anti-join on `keys/`,
-  * then `rows/`). Live persists, [[recover]] and the read-only
-  * [[BucketedParquetBackend.asOf]] compose through those two functions.
+  * A table's state is its CHAIN: a full generation and the delta
+  * generations after it. [[BucketedParquetBackend.applyDelta]] lays one
+  * delta over the view so far (broadcast anti-join on `keys/`, then
+  * `rows/`) for live persists, [[recover]] and the read-only
+  * [[BucketedParquetBackend.asOf]]. Every `compactEvery`-th persist of a
+  * table writes FULL, which bounds the chain; a persist without a change
+  * set (the first one, restart recovery) is always FULL. Each persist
+  * writes a NEW generation, past every one on disk, because the plan
+  * being written usually reads the previous one.
   *
-  * Every `compactEvery`-th persist of a table writes FULL, which bounds
-  * the chain; a persist without a change set (the first one, restart
-  * recovery) is always FULL. Each persist writes a NEW generation,
-  * because the plan being written usually reads the previous one.
-  * Superseded generations are queued and dropped on [[gc]], after the
-  * batch's last job; a delta chain retires when a FULL persist
-  * supersedes it.
+  * Commits: [[gc]], the batch boundary, writes one manifest
+  * `root/_commits/<n>` by create-then-rename. It names every live
+  * table's chain: the table, its schema (a bucketed write of an empty
+  * frame emits no parquet file to read one from) and each generation's
+  * directory, kind and bucket count. Readers see only what a commit
+  * names, so a batch that dies mid-flight recovers as the batch before
+  * it, whole, as the reference commits a batch's writes as one RocksDB
+  * WriteBatch. [[recover]] and [[BucketedParquetBackend.latest]] read
+  * the newest commit. gc then keeps the newest `compactEvery` commits
+  * and deletes every generation directory, and its catalog table, that
+  * none of them names: superseded generations and the wrecks of batches that
+  * never committed.
   *
   * Restart: [[recover]] registers each chain's bucketed directories in
   * the catalog and zips them with [[graft.plans.BucketUnion]], as a live
@@ -130,8 +141,8 @@ final class BucketedParquetBackend(
     buckets: Int = 16,
     compactEvery: Int = 4) extends StateBackend {
 
-  import BucketedParquetBackend.{applyDelta, chains, generations, readSchema,
-    writeMarker, writeSchema}
+  import BucketedParquetBackend.{Chain, Gen, applyDelta, commitPath, commits,
+    generations, manifest, manifestLine, readCommit, tableNames, writeMarker}
 
   // Register the BucketUnion planner strategy + pushdown rule NOW, at
   // backend construction — not lazily at the first compose. A
@@ -146,38 +157,33 @@ final class BucketedParquetBackend(
   // and the restarted run's first delta compose was mid-stream.)
   graft.plans.BucketUnion.register(spark)
 
+  // gc keeps the newest `compactEvery` commits: none would drop them all
+  require(compactEvery >= 1, s"compactEvery must be at least 1, got $compactEvery")
+
   val durable = true
 
-  private case class Chain(
-      maxGen: Long,
-      table: String,          // catalog table of the base FULL gen
-      baseDir: Path,
-      deltas: Vector[(Path, String)], // (gen dir, rows catalog table)
-      frame: DataFrame)
+  /** A table's chain as of its last persist, the frame composed over it,
+    * and the newest generation id on disk (past the chain after a
+    * restart over the wrecks of an uncommitted batch). */
+  private case class Live(maxGen: Long, chain: Chain, frame: DataFrame)
 
   private val instanceId = BucketedParquetBackend.instances.incrementAndGet()
   private val tableSeq = new AtomicLong(0L)
-  private val live =
-    new java.util.concurrent.ConcurrentHashMap[String, Chain]()
-  /** superseded (catalog table if registered, data dir) awaiting [[gc]]. */
-  private val retired = new ConcurrentLinkedQueue[(Option[String], Path)]()
+  private val live = new ConcurrentHashMap[String, Live]()
+  /** Catalog table of each generation this backend registered, by `<name>/g<n>`. */
+  private val catalog = new ConcurrentHashMap[String, String]()
 
-  private def fs(p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+  private val rootPath = new Path(root)
+  private def fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+  private def genDir(name: String, gen: Long) = new Path(rootPath, s"$name/g$gen")
 
   /** Catalog identifiers are case-insensitive and charset-limited, so a
     * generation's catalog table is a unique sequence id; its data dir
     * keeps the exact state-table name. */
-  private def newTableName(): String =
-    s"graft_state_${instanceId}_${tableSeq.incrementAndGet()}"
-
-  /** Generations already on disk from a PREVIOUS session (restart over
-    * an existing root): the first persist of each table must write
-    * past them, and they retire once that write commits. */
-  private def adoptDiskGens(name: String): Long = {
-    val gens = generations(fs(new Path(root)), new Path(root, name))
-    gens.foreach { case (_, p) => retired.add((None, p)) }
-    gens.lastOption.map(_._1).getOrElse(0L)
+  private def newTableName(name: String, gen: Long): String = {
+    val tbl = s"graft_state_${instanceId}_${tableSeq.incrementAndGet()}"
+    catalog.put(s"$name/g$gen", tbl)
+    tbl
   }
 
   def persist(name: String, df: DataFrame): DataFrame =
@@ -188,7 +194,7 @@ final class BucketedParquetBackend(
     val prev = live.get(name)
     delta match {
       case Some((rows, keys))
-          if prev != null && prev.deltas.size < compactEvery - 1 =>
+          if prev != null && prev.chain.gens.size < compactEvery =>
         persistDelta(name, prev, rows, keys)
       case _ => persistFull(name, df)
     }
@@ -196,9 +202,9 @@ final class BucketedParquetBackend(
 
   private def persistFull(name: String, df: DataFrame): DataFrame = {
     val prev = live.get(name)
-    val gen = if (prev == null) adoptDiskGens(name) + 1L else prev.maxGen + 1L
-    val tbl = newTableName()
-    val dir = new Path(root, s"$name/g$gen")
+    val gen = 1L + (if (prev != null) prev.maxGen
+      else generations(fs, new Path(rootPath, name)).lastOption.getOrElse(0L))
+    val tbl = newTableName(name, gen)
     val keyCol = df.columns.head
     // Aligned fast path: a frame whose plan is already a BucketUnion
     // compose on (keyCol, buckets) — a recovered chain, or any
@@ -213,19 +219,10 @@ final class BucketedParquetBackend(
       else df.repartition(buckets, col(keyCol))
     src.write.format("parquet")
       .bucketBy(buckets, keyCol)
-      .option("path", dir.toString)
+      .option("path", genDir(name, gen).toString)
       .saveAsTable(tbl)
-    // the schema sidecar lands before the commit marker, so an empty
-    // state table (a scrubbed rootmap, a link table before its first
-    // edge) survives restart as EMPTY, not as unreadable
-    writeSchema(fs(dir), dir, df.schema)
-    writeMarker(fs(dir), dir, "full", buckets)
-    if (prev != null) {
-      retired.add((Some(prev.table), prev.baseDir))
-      prev.deltas.foreach { case (d, t) => retired.add((Some(t), d)) }
-    }
     val frame = spark.table(tbl)
-    live.put(name, Chain(gen, tbl, dir, Vector.empty, frame))
+    live.put(name, Live(gen, Chain(df.schema, Seq(Gen(gen, "full", buckets))), frame))
     frame
   }
 
@@ -244,12 +241,12 @@ final class BucketedParquetBackend(
     * delta write saved. With the aligned compose the chain keeps the
     * full generation's no-Exchange property end to end
     * (BucketingSpec). */
-  private def persistDelta(name: String, prev: Chain,
+  private def persistDelta(name: String, prev: Live,
       rows: DataFrame, keys: DataFrame): DataFrame = {
     val gen = prev.maxGen + 1L
-    val dir = new Path(root, s"$name/g$gen")
+    val dir = genDir(name, gen)
     val keyCol = prev.frame.columns.head
-    val tbl = newTableName()
+    val tbl = newTableName(name, gen)
     // Change sets are batch-sized: the pre-write repartition is a
     // delta-sized shuffle that lands exactly one file per bucket.
     rows.select(prev.frame.columns.map(col).toSeq: _*)
@@ -259,194 +256,171 @@ final class BucketedParquetBackend(
       .option("path", new Path(dir, "rows").toString)
       .saveAsTable(tbl)
     keys.coalesce(buckets).write.parquet(new Path(dir, "keys").toString)
-    writeMarker(fs(dir), dir, "delta", buckets)
     // the layer reads both sides back from disk, so the composed frame
     // is independent of the input plans' lineage
     val frame = applyDelta(spark, prev.frame, dir, Some((tbl, buckets)))
-    live.put(name, prev.copy(maxGen = gen,
-      deltas = prev.deltas :+ ((dir, tbl)), frame = frame))
+    val chain = prev.chain.copy(gens = prev.chain.gens :+ Gen(gen, "delta", buckets))
+    live.put(name, Live(gen, chain, frame))
     frame
   }
 
   /** Register a bucketed parquet directory (a full generation, or a
     * delta's `rows/`) as an external catalog table so readers see the
     * bucket spec. DDL because the DataFrame API can only CTAS. */
-  private def registerBucketed(dir: Path, schema: StructType,
-      keyCol: String, bucketCount: Int): String = {
-    val tbl = newTableName()
+  private def registerBucketed(name: String, gen: Gen, dir: Path,
+      schema: StructType): String = {
+    val tbl = newTableName(name, gen.id)
     spark.sql(s"CREATE TABLE $tbl (${schema.toDDL}) USING PARQUET " +
-      s"CLUSTERED BY (`$keyCol`) INTO $bucketCount BUCKETS " +
+      s"CLUSTERED BY (`${schema.fields.head.name}`) INTO ${gen.buckets} BUCKETS " +
       s"LOCATION '${dir.toString}'")
     tbl
   }
 
   /** Restart recovery through the live backend (see class doc): the
-    * committed chain of every table under [[root]], composed
-    * bucket-aligned on its full generation's bucket count. Chains are
-    * adopted into [[live]], so each table's first post-restore persist
-    * supersedes them and [[gc]] retires their files and catalog entries
-    * together; generations outside the chain (uncommitted wrecks,
-    * superseded older generations) queue for retirement at once. */
+    * newest commit's chain of every table, composed bucket-aligned on
+    * its full generation's bucket count and adopted into [[live]], so
+    * each table's first post-restore persist extends or supersedes it. */
   def recover(): Map[String, DataFrame] =
-    chains(fs(new Path(root)), new Path(root), Long.MaxValue).flatMap {
-      case (name, gens, committed) =>
-        val kept = committed.map(_.dir).toSet
-        gens.filterNot(g => kept(g._2)).foreach(g => retired.add((None, g._2)))
-        committed.headOption.map { base =>
-          val schema = readSchema(fs(base.dir), base.dir)
-          val keyCol = schema.fields.head.name
-          val baseTbl = registerBucketed(base.dir, schema, keyCol, base.buckets)
-          var frame = spark.table(baseTbl)
-          val deltas = committed.tail.map { d =>
-            val rowsTbl = registerBucketed(
-              new Path(d.dir, "rows"), schema, keyCol, d.buckets)
-            frame = applyDelta(spark, frame, d.dir, Some((rowsTbl, base.buckets)))
-            (d.dir, rowsTbl)
-          }
-          // maxGen spans ALL disk generations, not just the chain: an
-          // uncommitted wreck beyond the chain still occupies its gen
-          // directory, and the next persist must write past it
-          live.put(name, Chain(gens.last._1, baseTbl, base.dir,
-            deltas.toVector, frame))
-          name -> frame
-        }
-    }.toMap
+    readCommit(fs, rootPath, Long.MaxValue).map { case (name, chain) =>
+      val base = chain.gens.head
+      val frame = chain.gens.tail.foldLeft(
+        spark.table(registerBucketed(name, base, genDir(name, base.id), chain.schema))) {
+        (cur, d) =>
+          val dir = genDir(name, d.id)
+          val rowsTbl = registerBucketed(name, d, new Path(dir, "rows"), chain.schema)
+          applyDelta(spark, cur, dir, Some((rowsTbl, base.buckets)))
+      }
+      live.put(name, Live(generations(fs, new Path(rootPath, name)).last, chain, frame))
+      name -> frame
+    }
 
-  override def gc(): Unit = {
-    var item = retired.poll()
-    while (item != null) {
-      val (tbl, dir) = item
-      // DROP on an external (path-backed) table leaves the files; the
-      // directory is deleted explicitly through the Hadoop FS API.
-      tbl.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      fs(dir).delete(dir, true)
-      item = retired.poll()
+  /** Commit every live table's chain as `root/_commits/<n>`, then keep
+    * the newest `compactEvery` commits and delete each generation
+    * directory and catalog table that none of them names. A backend
+    * that has neither persisted nor recovered commits nothing. */
+  override def gc(): Unit = synchronized {
+    if (!live.isEmpty) {
+      val f = fs
+      val ids = commits(f, rootPath)
+      val id = ids.lastOption.getOrElse(0L) + 1L
+      writeMarker(f, commitPath(rootPath, id), live.asScala.toSeq.sortBy(_._1)
+        .map { case (name, l) => manifestLine(name, l.chain) }.mkString("\n"))
+      // drop the commits first: a crash between the two deletes then
+      // leaves unnamed generations for the next gc, never a commit
+      // naming deleted ones
+      val (dropped, kept) = (ids :+ id).splitAt(ids.size + 1 - compactEvery)
+      dropped.foreach(c => f.delete(commitPath(rootPath, c), false))
+      val named = kept.flatMap(c => manifest(f, rootPath, c)).flatMap {
+        case (name, chain) => chain.gens.map(g => s"$name/g${g.id}")
+      }.toSet
+      for (name <- tableNames(f, rootPath);
+           gen <- generations(f, new Path(rootPath, name));
+           key = s"$name/g$gen" if !named(key)) {
+        // DROP on an external (path-backed) table leaves the files; the
+        // directory is deleted explicitly through the Hadoop FS API.
+        Option(catalog.remove(key)).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        f.delete(new Path(rootPath, key), true)
+      }
     }
   }
 
-  /** Drop every live table + directory (test teardown / --delete-state). */
+  /** Drop every catalog table and the whole root (test teardown / --delete-state). */
   def deleteAll(): Unit = {
-    gc()
-    live.forEach { (_: String, v: Chain) =>
-      spark.sql(s"DROP TABLE IF EXISTS ${v.table}")
-      fs(v.baseDir).delete(v.baseDir, true)
-      v.deltas.foreach { case (d, t) =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        fs(d).delete(d, true)
-      }
-    }
+    catalog.values.forEach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    catalog.clear()
     live.clear()
-    val r = new Path(root)
-    val f = fs(r)
-    if (f.exists(r)) f.delete(r, true)
+    val f = fs
+    if (f.exists(rootPath)) f.delete(rootPath, true)
   }
 }
 
 object BucketedParquetBackend {
   private val instances = new AtomicInteger(0)
 
-  /** A committed generation: its directory, marker kind and bucket count. */
-  private case class Gen(dir: Path, kind: String, buckets: Int)
+  /** One generation of a chain: `g<id>`, its kind and bucket count. */
+  private case class Gen(id: Long, kind: String, buckets: Int)
+
+  /** One table as a commit names it: its schema and its chain, the FULL
+    * generation first. */
+  private case class Chain(schema: StructType, gens: Seq[Gen])
 
   private def readText(f: FileSystem, p: Path): String = {
     val in = f.open(p)
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
-  /** Schema sidecar of a full generation (`_SCHEMA`, StructType json),
-    * written before its commit marker. */
-  private def writeSchema(f: FileSystem, dir: Path, schema: StructType): Unit = {
-    val out = f.create(new Path(dir, "_SCHEMA"), true)
-    try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
-
-  private def readSchema(f: FileSystem, dir: Path): StructType = {
-    val p = new Path(dir, "_SCHEMA")
-    if (!f.exists(p))
-      throw new IllegalStateException(s"full generation $dir has no _SCHEMA")
-    DataType.fromJson(readText(f, p)).asInstanceOf[StructType]
-  }
-
-  /** Commit marker of `dir`: `_MANIFEST` holding `kind:count`, written
-    * LAST via create-then-rename, so its presence implies everything
-    * written before it is complete. The state layout writes
-    * `full|delta:<buckets>`; [[StateOps.backup]] writes
-    * `backup:<tables>`. */
-  private[streaming] def writeMarker(f: FileSystem, dir: Path, kind: String,
-      count: Int): Unit = {
-    val tmp = new Path(dir, "_MANIFEST.tmp")
+  /** Write `text` to `p` by create-then-rename, so a reader finds the
+    * whole file or none: the commit point of a batch's state and of a
+    * [[StateOps.backup]]. */
+  private[streaming] def writeMarker(f: FileSystem, p: Path, text: String): Unit = {
+    val tmp = p.suffix(".tmp")
     val out = f.create(tmp, true)
-    try out.write(s"$kind:$count".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // fail LOUD on a false rename (dest exists, FS quirk): a generation
-    // whose marker never landed would be live in this session's chain
-    // but invisible to recovery — the checkpoint would advance past a
-    // batch that a restart silently replays from an older generation
-    if (!f.rename(tmp, new Path(dir, "_MANIFEST")))
-      throw new java.io.IOException(
-        s"could not commit generation marker ${new Path(dir, "_MANIFEST")}")
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    // fail LOUD on a false rename (dest exists, FS quirk): the engine
+    // would go on past a batch that a restart silently replays from
+    // the commit before it
+    if (!f.rename(tmp, p))
+      throw new java.io.IOException(s"could not commit $p")
   }
 
-  /** `dir`'s marker as `(kind, count)`; None when `dir` is uncommitted.
-    * A marker that does not read as `kind:count` fails, naming `dir`. */
-  private[streaming] def readMarker(f: FileSystem,
-      dir: Path): Option[(String, Int)] = {
-    val m = new Path(dir, "_MANIFEST")
-    if (!f.exists(m)) None
-    else {
-      val text = readText(f, m).trim
-      text.split(':') match {
-        case Array(kind, n) if n.toIntOption.isDefined => Some((kind, n.toInt))
-        case _ => throw new IllegalStateException(
-          s"unreadable commit marker '$text' in $dir")
-      }
+  private def commitPath(root: Path, id: Long) = new Path(root, s"_commits/$id")
+
+  /** Ids of the commits under `root`, oldest first. */
+  private def commits(f: FileSystem, root: Path): Seq[Long] = {
+    val dir = new Path(root, "_commits")
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq.flatMap(_.getPath.getName.toLongOption).sorted
+  }
+
+  /** A commit's line for one table: name, schema JSON, then one
+    * `g<id>:<kind>:<buckets>` per generation, tab-separated. */
+  private def manifestLine(name: String, chain: Chain): String =
+    (name +: chain.schema.json +:
+      chain.gens.map(g => s"g${g.id}:${g.kind}:${g.buckets}")).mkString("\t")
+
+  /** Every table of the newest commit with id ≤ `upTo`; empty when there
+    * is none. */
+  private def readCommit(f: FileSystem, root: Path, upTo: Long): Map[String, Chain] =
+    commits(f, root).filter(_ <= upTo).lastOption
+      .fold(Map.empty[String, Chain])(manifest(f, root, _))
+
+  /** Every table that commit `id` names. A commit that does not parse
+    * fails, naming it and the table or generation at fault. */
+  private def manifest(f: FileSystem, root: Path, id: Long): Map[String, Chain] = {
+    val p = commitPath(root, id)
+    try readText(f, p).linesIterator.filter(_.nonEmpty).map { line =>
+      val Array(name, schema, gens @ _*) = line.split('\t')
+      val struct = Try(DataType.fromJson(schema)).toOption.collect {
+        case s: StructType => s
+      }.getOrElse(throw new IllegalArgumentException(s"$name: no schema"))
+      val chain = Chain(struct, gens.map {
+        case s"g$g:$kind:$n" if g.toLongOption.isDefined && n.toIntOption.isDefined =>
+          Gen(g.toLong, kind, n.toInt)
+        case other => throw new IllegalArgumentException(
+          s"$name/$other: not g<id>:<kind>:<buckets>")
+      })
+      require(chain.gens.map(_.kind) == "full" +: Seq.fill(gens.size - 1)("delta"),
+        s"$name: a chain is one full generation, then deltas")
+      name -> chain
+    }.toMap
+    catch { case NonFatal(e) =>
+      throw new IllegalStateException(s"unreadable commit $p: ${e.getMessage}", e)
     }
   }
 
-  /** A table's `g<n>` generation directories, in id order. */
-  private def generations(f: FileSystem, tableDir: Path): Seq[(Long, Path)] =
+  /** The state tables under `root`: every directory but `_commits`. */
+  private def tableNames(f: FileSystem, root: Path): Seq[String] =
+    if (!f.exists(root)) Nil
+    else f.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filterNot(_.startsWith("_"))
+
+  /** A table's `g<n>` generation ids, in order. */
+  private def generations(f: FileSystem, tableDir: Path): Seq[Long] =
     if (!f.exists(tableDir)) Nil
     else f.listStatus(tableDir).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
-      .flatMap(s => s.getPath.getName.drop(1).toLongOption.map(_ -> s.getPath))
-      .sortBy(_._1)
-
-  /** A table's committed chain as of generation `upTo`: the last
-    * committed full generation with id ≤ `upTo`, then the committed
-    * delta generations after it, up to the first uncommitted one. Empty
-    * when no full generation has committed: a table whose first persist
-    * died mid-flight never committed a batch. A COMMITTED delta without
-    * a committed base is corruption, and fails rather than recover an
-    * empty state and rebuild from offset zero. */
-  private def chain(f: FileSystem, tableDir: Path, gens: Seq[(Long, Path)],
-      upTo: Long): Seq[Gen] = {
-    val marked = gens.takeWhile(_._1 <= upTo).map { case (_, dir) =>
-      readMarker(f, dir).map {
-        case (kind @ ("full" | "delta"), n) => Gen(dir, kind, n)
-        case (kind, _) => throw new IllegalStateException(
-          s"generation $dir has commit marker kind '$kind', not full or delta")
-      }
-    }
-    val base = marked.lastIndexWhere(_.exists(_.kind == "full"))
-    if (base < 0 && marked.exists(_.isDefined))
-      throw new IllegalStateException(
-        s"state table $tableDir has committed delta generations but " +
-          "no committed full generation; refusing to recover an empty " +
-          "state over existing data")
-    if (base < 0) Nil
-    else marked(base).get +:
-      marked.drop(base + 1).takeWhile(_.exists(_.kind == "delta")).flatten
-  }
-
-  /** Every table under `root`: its name, generation listing and
-    * committed chain as of `upTo` (see [[chain]]). */
-  private def chains(f: FileSystem, root: Path,
-      upTo: Long): Seq[(String, Seq[(Long, Path)], Seq[Gen])] =
-    if (!f.exists(root)) Nil
-    else f.listStatus(root).toSeq.filter(_.isDirectory).map { s =>
-      val gens = generations(f, s.getPath)
-      (s.getPath.getName, gens, chain(f, s.getPath, gens, upTo))
-    }
+      .flatMap(_.getPath.getName.drop(1).toLongOption)
+      .sorted
 
   /** One delta generation over the view so far: drop the changed keys
     * (`keys/`; batch-sized, so a broadcast anti-join that never
@@ -469,32 +443,29 @@ object BucketedParquetBackend {
     }
   }
 
-  /** The newest committed state of every table under `root`:
-    * [[asOf]] the newest generation. */
+  /** The newest committed state of every table under `root`. */
   def latest(spark: SparkSession, root: String): Map[String, DataFrame] =
     asOf(spark, root, Long.MaxValue)
 
-  /** Time travel over the generational layout: every table's committed
-    * chain as of generation `gen`, read with plain parquet reads and
-    * composed with plain unions. It registers nothing in the catalog and
-    * writes nothing, so it is the path for inspection (`--show-state`,
+  /** Time travel: every table as of commit `commit` (the newest commit
+    * with id ≤ `commit`), read with plain parquet reads and composed
+    * with plain unions. It registers nothing in the catalog and writes
+    * nothing, so it is the path for inspection (`--show-state`,
     * `--verify-state`) and cross-backend reads; ENGINE restarts go
     * through [[BucketedParquetBackend.recover]], which composes the same
-    * chain bucket-aligned. Because every engine batch commits one
-    * generation per touched table, this answers "what did the engine
-    * believe after batch N" for any batch still on disk — a per-batch
-    * refinement of the reference's whole-store backup restore
-    * (RocksDBState.java:355-461 can only rewind to a rotated backup).
-    *
-    * Retention bound: [[gc]] retires a superseded chain's base and
-    * deltas together when compaction rewrites full, so a too-old `gen`
-    * yields the table ABSENT from the map, never a half-composed state. */
-  def asOf(spark: SparkSession, root: String, gen: Long): Map[String, DataFrame] = {
+    * tables bucket-aligned. The engine commits once per batch, so this
+    * answers "what did the engine believe after batch N" for every
+    * commit the backend still keeps — a per-batch refinement of the reference's
+    * whole-store backup restore (RocksDBState.java:355-461 can only
+    * rewind to a rotated backup). Before the oldest retained commit the
+    * map is empty, never half-composed. */
+  def asOf(spark: SparkSession, root: String, commit: Long): Map[String, DataFrame] = {
     val rootPath = new Path(root)
     val f = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    chains(f, rootPath, gen).collect { case (name, _, base +: deltas) =>
-      val full = spark.read.schema(readSchema(f, base.dir)).parquet(base.dir.toString)
-      name -> deltas.foldLeft(full)((cur, d) => applyDelta(spark, cur, d.dir, None))
-    }.toMap
+    readCommit(f, rootPath, commit).map { case (name, chain) =>
+      def dir(g: Gen) = new Path(rootPath, s"$name/g${g.id}")
+      val full = spark.read.schema(chain.schema).parquet(dir(chain.gens.head).toString)
+      name -> chain.gens.tail.foldLeft(full)((cur, d) => applyDelta(spark, cur, dir(d), None))
+    }
   }
 }

@@ -18,12 +18,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * [[BucketedParquetBackend.writeMarker]]: a backup whose writer died
   * between two tables has no marker and is never restored. Each
   * [[backup]] call creates a new backup and prunes to the newest
-  * `backupsToKeep` (the reference's `backups.to.keep`,
-  * RocksDBState.java:247-265). [[restore]] honors the reference's
-  * restore modes (`backups.restore.mode` = always / when_needed /
-  * never, RocksDBState.java:355-461) and rolls back to the previous
-  * backup when the newest is uncommitted or corrupt
-  * (RocksDBState.java:639-708).
+  * `backupsToKeep` committed ones (the reference's `backups.to.keep`,
+  * RocksDBState.java:247-265). Backups are explicit, whole-state
+  * copies; a durable engine's restart reads its backend's newest batch
+  * commit instead ([[BucketedParquetBackend.recover]]). [[restore]]
+  * honors the reference's restore modes (`backups.restore.mode` =
+  * always / when_needed / never, RocksDBState.java:355-461) and rolls
+  * back to the previous backup when the newest is uncommitted or
+  * corrupt (RocksDBState.java:639-708).
   *
   * All listing/pruning/deletion goes through the Hadoop FileSystem
   * API, so a root may be a bare local path or any scheme-qualified
@@ -55,6 +57,9 @@ object StateOps {
 
   private val backupPrefix = "backup_"
 
+  /** A backup's commit marker. */
+  private def marker(dir: Path) = new Path(dir, "_MANIFEST")
+
   /** Hadoop conf of the live session when there is one (carries its
     * fs.* credentials/settings); defaults otherwise. */
   private def hadoopConf(): Configuration =
@@ -78,7 +83,9 @@ object StateOps {
 
   /** Persist every state table of a live engine into a NEW timestamped
     * backup under `root`, commit it with its marker, then prune to the
-    * newest `backupsToKeep` backups. Returns the backup directory path. */
+    * newest `backupsToKeep` committed backups, and drop the uncommitted
+    * ones older than this one (wrecks of writers that died). Returns the
+    * backup directory path. */
   def backup(engine: IncrementalDenormalizer, root: String,
       backupsToKeep: Int = 5): String = {
     require(backupsToKeep >= 1, "must keep at least one backup")
@@ -92,8 +99,10 @@ object StateOps {
     tables.foreach { case (name, df) =>
       df.write.mode(SaveMode.Overwrite).parquet(new Path(dir, name).toString)
     }
-    BucketedParquetBackend.writeMarker(f, dir, "backup", tables.size)
-    backups(root).dropRight(backupsToKeep).foreach(p => f.delete(p, true))
+    BucketedParquetBackend.writeMarker(f, marker(dir), s"backup:${tables.size}")
+    val (done, wrecks) = backups(root).partition(p => f.exists(marker(p)))
+    (done.dropRight(backupsToKeep) ++ wrecks.filter(_.getName < dir.getName))
+      .foreach(p => f.delete(p, true))
     dir.toString
   }
 
@@ -138,7 +147,7 @@ object StateOps {
       dir: Path): Option[Map[String, DataFrame]] =
     try {
       val spark = engine.session
-      if (BucketedParquetBackend.readMarker(fs(dir), dir).isEmpty)
+      if (!fs(dir).exists(marker(dir)))
         throw new IllegalStateException("no commit marker")
       val tables = fs(dir).listStatus(dir).toSeq
         .filter(_.isDirectory)

@@ -192,8 +192,8 @@ object StreamRunner {
     // Restart consistency: the streaming checkpoint makes committed
     // offsets skip on restart, so the engine state MUST resume from
     // where those offsets left it. A durable backend recovers first,
-    // from its own committed generations (the state written by the last
-    // completed batch — BucketedParquetBackend.recover); a stateRoot
+    // from its newest batch commit (the state of the last batch whose
+    // gc() completed — BucketedParquetBackend.recover); a stateRoot
     // then restores the newest readable explicit backup only if the
     // backend had nothing (when_needed), and keeps backing up every
     // `backupEvery`-th batch. Pair either with `checkpointDir` for
@@ -202,7 +202,7 @@ object StreamRunner {
     // fresh checkpoint dir then.
     backend match {
       case b: BucketedParquetBackend =>
-        // recover() (not the static latest()): the composed chains come
+        // recover() (not the static latest()): the composed tables come
         // back bucket-aligned, so the recovery re-persist skips the
         // full-state shuffle and pre-compaction keyed reads stay
         // Exchange-free on the state side

@@ -1,0 +1,151 @@
+package graft
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+
+import graft.core.Relation
+import graft.streaming.{BucketedParquetBackend, IncrementalDenormalizer, StateBackend}
+
+/** One commit per batch in [[BucketedParquetBackend]]: a batch that dies
+  * between its table writes recovers as the batch before it, whole, and
+  * the commits it keeps each read back as the state of their batch. */
+class BatchCommitSpec extends SparkSpec {
+
+  private val parentSchema = StructType(Seq(
+    StructField("id", LongType), StructField("name", StringType)))
+  private val childSchema = StructType(Seq(
+    StructField("id", LongType), StructField("pid", LongType)))
+
+  private val tree = Relation.root("CrashDoc", "parent",
+    Relation.child("child", "pid", "id"))
+
+  private def newEngine(backend: StateBackend) = new IncrementalDenormalizer(
+    spark, Seq(tree), Map("parent" -> Seq("id"), "child" -> Seq("id")),
+    Map("parent" -> parentSchema, "child" -> childSchema), backend = backend)
+
+  private def changelog(schema: StructType, values: Row*): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(values.zipWithIndex.map { case (v, i) =>
+        Row(i.toLong, Row(v.getLong(0)), v)
+      }: _*),
+      StructType(Seq(
+        StructField("offset", LongType),
+        StructField("key", StructType(Seq(StructField("id", LongType)))),
+        StructField("value", schema))))
+
+  /** Parents 1 and 2, child 10 under parent 1, child 11 under parent 2. */
+  private def batch1 = Map(
+    "parent" -> changelog(parentSchema, Row(1L, "p1"), Row(2L, "p2")),
+    "child" -> changelog(childSchema, Row(10L, 1L), Row(11L, 2L)))
+  /** Child 10 moves to parent 2. */
+  private def batch2 = Map("child" -> changelog(childSchema, Row(10L, 2L)))
+
+  private def docsOf(docs: DataFrame): Map[Long, Option[Any]] =
+    docs.collect().map { r =>
+      BigInt(1, r.getAs[Array[Byte]]("__pk")).toLong ->
+        Option(r.getAs[String]("doc_json")).map(ReferenceFixtures.normalizeJson)
+    }.toMap
+
+  /** Structural rows (binary keys value-compared). */
+  private def contents(df: DataFrame): Set[Any] = {
+    def comparable(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case r: Row => r.toSeq.map(comparable)
+      case s: Seq[_] => s.map(comparable)
+      case x => x
+    }
+    df.collect().map(comparable).toSet
+  }
+
+  private def tempRoot(prefix: String) =
+    "file://" + java.nio.file.Files.createTempDirectory(prefix)
+
+  /** Delegates to `inner`; once armed, throws from the first `rootmap__`
+    * or `docs__` persist on, so the batch's snapshot and link writes
+    * land and its rebuild does not. */
+  private final class CrashingBackend(inner: StateBackend) extends StateBackend {
+    @volatile var armed = false
+    @volatile private var crashed = false
+    def durable: Boolean = inner.durable
+    def persist(name: String, df: DataFrame): DataFrame = persist(name, df, None)
+    override def persist(name: String, df: DataFrame,
+        delta: Option[(DataFrame, DataFrame)]): DataFrame = {
+      if (armed && (crashed || name.startsWith("rootmap__") || name.startsWith("docs__"))) {
+        crashed = true
+        throw new IllegalStateException(s"crash before persisting $name")
+      }
+      inner.persist(name, df, delta)
+    }
+    override def gc(): Unit = inner.gc()
+  }
+
+  test("a crash in the middle of a batch recovers the batch before it, and the replay matches an uninterrupted run") {
+    val expected = newEngine(StateBackend.Memory)
+    expected.processBatch(batch1)
+    expected.processBatch(batch2)
+
+    val root = tempRoot("graft_crash")
+    val b1 = new BucketedParquetBackend(spark, root, buckets = 2)
+    val b2 = new BucketedParquetBackend(spark, root, buckets = 2)
+    try {
+      val crashing = new CrashingBackend(b1)
+      val e1 = newEngine(crashing)
+      e1.processBatch(batch1)
+      crashing.armed = true
+      intercept[Exception](e1.processBatch(batch2))
+
+      val e2 = newEngine(b2)
+      e2.loadStateTables(b2.recover())
+      e2.processBatch(batch2)
+      assert(docsOf(e2.docs("CrashDoc")) == docsOf(expected.docs("CrashDoc")))
+    } finally { b2.deleteAll(); b1.deleteAll() }
+  }
+
+  test("gc keeps the newest compactEvery commits, each reading back as its batch's state") {
+    val compactEvery = 2
+    val root = tempRoot("graft_retention")
+    val backend = new BucketedParquetBackend(spark, root, buckets = 2, compactEvery = compactEvery)
+    try {
+      val engine = newEngine(backend)
+      val batches = batch1 +: (1 to 2 * compactEvery).map { i =>
+        Map("parent" -> changelog(parentSchema, Row(i.toLong % 2 + 1, s"p$i")),
+          "child" -> changelog(childSchema, Row(10L, i.toLong % 2 + 1), Row(11L + i, 1L)))
+      }
+      val after = batches.map { b =>
+        engine.processBatch(b)
+        engine.stateTables.map { case (n, df) => n -> contents(df) }
+      }
+
+      val rootPath = new Path(root)
+      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+      val commits = fs.listStatus(new Path(rootPath, "_commits")).map(_.getPath)
+      assert(commits.length == compactEvery, commits.mkString(", "))
+      val kept = commits.map(_.getName.toLong).sorted.toSeq
+      assert(kept == Seq(batches.size - 1, batches.size))
+
+      // every generation on disk is one that a kept commit names
+      val named = commits.flatMap { c =>
+        val in = fs.open(c)
+        val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        text.linesIterator.flatMap { line =>
+          val cells = line.split('\t')
+          cells.drop(2).map(g => s"${cells(0)}/${g.takeWhile(_ != ':')}")
+        }
+      }.toSet
+      val onDisk = fs.listStatus(rootPath).filter(_.getPath.getName != "_commits")
+        .flatMap(t => fs.listStatus(t.getPath).map(g => s"${t.getPath.getName}/${g.getPath.getName}"))
+        .toSet
+      assert(onDisk.nonEmpty && onDisk == named,
+        s"on disk but unnamed: ${onDisk -- named}; named but gone: ${named -- onDisk}")
+
+      kept.foreach { n =>
+        val asOf = BucketedParquetBackend.asOf(spark, root, n)
+        after(n.toInt - 1).foreach { case (name, rows) =>
+          assert(asOf.get(name).map(contents).getOrElse(Set.empty) == rows,
+            s"commit $n, table $name")
+        }
+      }
+    } finally backend.deleteAll()
+  }
+}

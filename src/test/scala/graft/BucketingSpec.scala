@@ -246,6 +246,7 @@ class BucketingSpec extends SparkSpec {
       df(2 -> 0L, 51 -> 0L).select("__pk"))))
     b1.persist("t", df(), Some((df(3 -> 300L),
       df(3 -> 0L, 4 -> 0L).select("__pk"))))
+    b1.gc() // the batch commit that recovery reads
     val b2 = new graft.streaming.BucketedParquetBackend(
       spark, root, buckets = 8, compactEvery = 10)
     try {
@@ -267,7 +268,7 @@ class BucketingSpec extends SparkSpec {
       // state key with the backend's bucket count
       assert(graft.plans.BucketUnion.isAligned(recovered, "__pk", 8))
       val compacted = b2.persist("t", recovered, None)
-      b2.gc() // drops b1's generations + recovery catalog entries
+      b2.gc() // commits the compaction; b1's chain stays in the kept commit
       val got2 = compacted.collect()
         .map(r => r.getAs[Array[Byte]]("__pk")(0).toInt -> r.getLong(1)).toMap
       assert(got2 == expect)

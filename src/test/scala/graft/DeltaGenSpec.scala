@@ -12,7 +12,7 @@ import graft.streaming.BucketedParquetBackend
   * reference's RocksDB WriteBatch write profile
   * (state/RocksDBState.java:611-636: only touched keys hit the
   * store) — while the composed view, restart recovery, compaction,
-  * and commit gating all behave exactly as with full generations.
+  * and batch commits all behave exactly as with full generations.
   */
 class DeltaGenSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -64,7 +64,8 @@ class DeltaGenSpec extends SparkSpec with BeforeAndAfterAll {
     assert(spark.read.parquet(new Path(lastGen, "rows").toString).count() == 2)
     assert(spark.read.parquet(new Path(lastGen, "keys").toString).count() == 2)
 
-    // restart recovery composes the full+delta chain from disk alone
+    // restart recovery composes the committed full+delta chain from disk alone
+    b.gc()
     val rec = BucketedParquetBackend.latest(spark, root)("t")
     assert(contents(rec) == Map(1 -> 10L, 2 -> 21L, 4 -> 41L, 5 -> 50L))
     b.deleteAll()
@@ -86,46 +87,51 @@ class DeltaGenSpec extends SparkSpec with BeforeAndAfterAll {
       "compaction persist still wrote a delta generation")
     assert(contents(spark.read.parquet(dirs.last.toString)) ==
       Map(1 -> 1L, 2 -> 2L, 3 -> 3L, 4 -> 4L))
-    // the superseded chain (g1 full + g2/g3 deltas) retires on gc
+    // gc commits g4 alone, and deletes the chain (g1 full + g2/g3
+    // deltas) that no commit names
     b.gc()
     assert(genDirs(fs, "c").map(_.getName) == Seq("g4"))
     b.deleteAll()
+    // keeping no commit would delete every generation
+    intercept[IllegalArgumentException](
+      new BucketedParquetBackend(spark, root, buckets = 4, compactEvery = 0))
   }
 
   test("asOf time-travels to any committed generation still on disk") {
     val b = new BucketedParquetBackend(spark, root, buckets = 4, compactEvery = 10)
     b.persist("tt", df(1 -> 10L, 2 -> 20L), None)
+    b.gc() // commit 1
     b.persist("tt", df(1 -> 10L, 2 -> 21L),
       Some((df(2 -> 21L), keysDf(2))))
+    b.gc() // commit 2
     b.persist("tt", df(1 -> 10L, 2 -> 21L, 3 -> 30L),
       Some((df(3 -> 30L), keysDf(3))))
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val ids = genDirs(fs, "tt").map(_.getName.drop(1).toLong)
-    assert(ids.size == 3)
-    // each batch's believed state is reproducible by generation id
-    assert(contents(BucketedParquetBackend.asOf(spark, root, ids(0))("tt")) ==
+    b.gc() // commit 3
+    // each batch's believed state is reproducible by commit id
+    assert(contents(BucketedParquetBackend.asOf(spark, root, 1)("tt")) ==
       Map(1 -> 10L, 2 -> 20L))
-    assert(contents(BucketedParquetBackend.asOf(spark, root, ids(1))("tt")) ==
+    assert(contents(BucketedParquetBackend.asOf(spark, root, 2)("tt")) ==
       Map(1 -> 10L, 2 -> 21L))
-    assert(contents(BucketedParquetBackend.asOf(spark, root, ids(2))("tt")) ==
+    assert(contents(BucketedParquetBackend.asOf(spark, root, 3)("tt")) ==
       Map(1 -> 10L, 2 -> 21L, 3 -> 30L))
     // latest == asOf(∞)
     assert(contents(BucketedParquetBackend.latest(spark, root)("tt")) ==
       Map(1 -> 10L, 2 -> 21L, 3 -> 30L))
-    // before the first generation: the table is absent, never empty
-    assert(!BucketedParquetBackend.asOf(spark, root, ids(0) - 1).contains("tt"))
+    // before the first commit: the table is absent, never empty
+    assert(!BucketedParquetBackend.asOf(spark, root, 0).contains("tt"))
     b.deleteAll()
   }
 
   test("an EMPTY committed full generation recovers as empty, not unreadable") {
     // a bucketed write of zero rows emits NO parquet files — the
-    // _SCHEMA sidecar is the only schema carrier; before it, recovery
+    // commit's schema is the only schema carrier; without one, recovery
     // of an empty state table (scrubbed rootmap, pre-first-edge link
     // table) died with UNABLE_TO_INFER_SCHEMA
     val b = new BucketedParquetBackend(spark, root, buckets = 4, compactEvery = 10)
     b.persist("empty", df(), None)
+    b.gc()
     val rec = BucketedParquetBackend.latest(spark, root)("empty")
-    assert(rec.schema == schema, "sidecar schema must round-trip")
+    assert(rec.schema == schema, "the commit's schema must round-trip")
     assert(rec.count() == 0)
     // the live recover() path composes the same empty chain
     val b2 = new BucketedParquetBackend(spark, root, buckets = 4, compactEvery = 10)
@@ -138,58 +144,57 @@ class DeltaGenSpec extends SparkSpec with BeforeAndAfterAll {
     val b = new BucketedParquetBackend(spark, root, buckets = 4, compactEvery = 10)
     b.persist("u", df(1 -> 1L), None)
     b.persist("u", df(1 -> 1L, 2 -> 2L), Some((df(2 -> 2L), keysDf(2))))
+    b.gc()
+    // a batch that died before its commit: its delta is on disk, and no
+    // commit names it
+    b.persist("u", df(1 -> 1L, 2 -> 2L, 9 -> 99L), Some((df(9 -> 99L), keysDf(1, 9))))
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    // fake a write that died mid-flight: data present, marker absent
-    val wreck = new Path(root, "u/g3")
-    df(9 -> 99L).write.parquet(new Path(wreck, "rows").toString)
-    keysDf(1, 2, 9).write.parquet(new Path(wreck, "keys").toString)
+    assert(genDirs(fs, "u").size == 3)
     val rec = BucketedParquetBackend.latest(spark, root)("u")
     assert(contents(rec) == Map(1 -> 1L, 2 -> 2L),
       "recovery read past an uncommitted generation")
     b.deleteAll()
   }
 
-  test("a committed delta with no committed base fails loudly, not empty") {
+  /** Overwrite commit 1 with `manifest`; the failure `latest` and
+    * `recover` both raise, which names the commit. */
+  private def commitFailure(manifest: String): String = {
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val dir = new Path(root, "corrupt/g2")
-    df(2 -> 2L).write.parquet(new Path(dir, "rows").toString)
-    keysDf(2).write.parquet(new Path(dir, "keys").toString)
-    // commit the delta by hand — in real operation this can only happen
-    // if the base generation was lost/deleted underneath the chain
-    val out = fs.create(new Path(dir, "_MANIFEST"), true)
-    out.write("delta:4".getBytes("UTF-8")); out.close()
-    val err = intercept[IllegalStateException] {
+    val out = fs.create(new Path(root, "_commits/1"), true)
+    out.write(manifest.getBytes("UTF-8")); out.close()
+    val viaLatest = intercept[IllegalStateException] {
       BucketedParquetBackend.latest(spark, root)
     }
-    assert(err.getMessage.contains("no committed full generation"))
-    fs.delete(new Path(root, "corrupt"), true)
+    val viaRecover = intercept[IllegalStateException] {
+      new BucketedParquetBackend(spark, root, buckets = 4).recover()
+    }
+    assert(viaLatest.getMessage == viaRecover.getMessage)
+    assert(viaLatest.getMessage.contains("_commits/1"), viaLatest.getMessage)
+    viaLatest.getMessage
+  }
+
+  test("a committed delta with no committed base fails loudly, not empty") {
+    val b = new BucketedParquetBackend(spark, root, buckets = 4, compactEvery = 10)
+    b.persist("m", df(1 -> 1L), None)
+    b.gc()
+    // a commit whose chain starts with a delta: in real operation this can
+    // only happen if the commit file was damaged underneath the chain
+    val err = commitFailure(s"m\t${schema.json}\tg1:delta:4")
+    assert(err.contains("m: a chain is one full generation"), err)
+    b.deleteAll()
   }
 
   test("a marker without a bucket count, or a full generation without _SCHEMA, fails naming the generation") {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    def failure(): String = {
-      val viaLatest = intercept[IllegalStateException] {
-        BucketedParquetBackend.latest(spark, root)
-      }
-      val viaRecover = intercept[IllegalStateException] {
-        new BucketedParquetBackend(spark, root, buckets = 4).recover()
-      }
-      assert(viaLatest.getMessage == viaRecover.getMessage)
-      viaLatest.getMessage
-    }
     val b = new BucketedParquetBackend(spark, root, buckets = 4, compactEvery = 10)
     b.persist("m", df(1 -> 1L), None)
-    val g1 = genDirs(fs, "m").head
-    val out = fs.create(new Path(g1, "_MANIFEST"), true)
-    out.write("full".getBytes("UTF-8")); out.close()
-    val badMarker = failure()
-    assert(badMarker.contains("m/g1") && badMarker.contains("'full'"), badMarker)
-
-    b.persist("s", df(2 -> 2L), None)
-    fs.delete(new Path(genDirs(fs, "s").head, "_SCHEMA"), false)
-    fs.delete(new Path(root, "m"), true)
-    val noSchema = failure()
-    assert(noSchema.contains("s/g1") && noSchema.contains("_SCHEMA"), noSchema)
+    b.gc()
+    // the commit's generation entry has no bucket count
+    val badMarker = commitFailure(s"m\t${schema.json}\tg1:full")
+    assert(badMarker.contains("m/g1:full"), badMarker)
+    // the commit names the table's generation, and no schema for it
+    val noSchema = commitFailure("m\t\tg1:full:4")
+    assert(noSchema.contains("m: no schema"), noSchema)
+    assert(commitFailure("m\tnot a schema\tg1:full:4").contains("m: no schema"))
     b.deleteAll()
   }
 

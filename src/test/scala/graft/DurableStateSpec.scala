@@ -170,8 +170,9 @@ class DurableStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("recovery skips uncommitted generations (_SUCCESS gating)") {
-    // a write that died mid-flight leaves data files but no _SUCCESS;
-    // recovery must land on the last COMMITTED generation, not the wreck
+    // a write that died mid-flight leaves data files that no batch
+    // commit names (here not even a _SUCCESS); recovery must land on
+    // the newest commit's generation, not the wreck
     val spark = SparkSpec.session
     forEachRoot { dir =>
       val stateRoot = run(dir).stateRoot

@@ -145,19 +145,19 @@ class MainSpec extends SparkSpec {
 
   test("--verify-state reads the durable state and writes nothing") {
     val state = Paths.get(s"$base/state")
-    // every generation directory, and every commit marker's bytes
+    // every generation directory, and every batch commit's bytes
     def layout(): Map[String, Seq[Byte]] = {
       val walk = Files.walk(state)
       try walk.iterator().asScala.collect {
         case p if Files.isDirectory(p) && p.getFileName.toString.matches("g\\d+") =>
           state.relativize(p).toString -> Seq.empty[Byte]
-        case p if p.getFileName.toString == "_MANIFEST" =>
+        case p if p.getParent.getFileName.toString == "_commits" =>
           state.relativize(p).toString -> Files.readAllBytes(p).toSeq
       }.toMap
       finally walk.close()
     }
     val before = layout()
-    assert(before.keys.exists(_.endsWith("_MANIFEST")), s"no committed state: $before")
+    assert(before.keys.exists(_.startsWith("_commits/")), s"no committed state: $before")
     assert(Main.run(cli("--verify-state"), spark) == 0)
     assert(layout() == before, "--verify-state changed the durable state")
   }
@@ -191,8 +191,10 @@ class MainSpec extends SparkSpec {
     // link now references a dead child PK
     val root = s"file://$dir/state"
     val owners = BucketedParquetBackend.latest(spark, root)("snapshot__owner")
-    new BucketedParquetBackend(spark, root, buckets = 4)
-      .persist("snapshot__owner", owners.limit(0))
+    val b = new BucketedParquetBackend(spark, root, buckets = 4)
+    b.recover()
+    b.persist("snapshot__owner", owners.limit(0))
+    b.gc()
     assert(run("--verify-state") > 0)
   }
 

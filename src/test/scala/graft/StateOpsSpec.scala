@@ -47,6 +47,24 @@ class StateOpsSpec extends SparkSpec {
     StateOps.deleteState(root)
   }
 
+  test("backup rotation keeps the newest N committed backups, not uncommitted wrecks") {
+    val root = tmpRoot()
+    val engine = newEngine()
+    engine.processBatch(Map("item" -> changelog(Seq((1L, 1L, 10L)))))
+    val a = new File(StateOps.backup(engine, root, backupsToKeep = 2))
+    // two writers that died before their marker, after backup A
+    val stamp = a.getName.stripPrefix("backup_").toLong
+    val wrecks = Seq(1, 2).map { i =>
+      val w = new File(root, f"backup_${stamp + i}%013d")
+      Files.createDirectories(new File(w, "snapshot__item").toPath)
+      w
+    }
+    val b = new File(StateOps.backup(engine, root, backupsToKeep = 2))
+    assert(StateOps.backups(root).map(_.getName) == Seq(a.getName, b.getName),
+      s"wrecks ${wrecks.map(_.getName)} must go, both committed backups stay")
+    StateOps.deleteState(root)
+  }
+
   test("restore modes: never is a no-op, when_needed skips a live engine, always restores") {
     val root = tmpRoot()
     val engine = newEngine()
