@@ -16,7 +16,10 @@ blocking release between passes: the measurement protocol is
 identical.
 
 Usage: python3 scripts/bench_ab.py --query q_stream_quantile \
-         --snapshot /tmp/graft_r11 [--rounds 5] [--cpus 32]
+         --snapshot /tmp/graft_r11 [--rounds 5] [--cpus N]
+
+`--cpus` defaults to the host's `nproc` and the JVM heap to half its
+memory, clamped to 2-8 g, as the Tier-1 command sizes them.
 """
 import argparse, json, os, statistics, subprocess, sys, tempfile
 
@@ -33,7 +36,25 @@ ADD_OPENS = [
 ]
 
 
-def jvm_cmd(classes, heap="24g"):
+def host_cpus():
+    """`nproc`: the CPUs this process may run on."""
+    return str(len(os.sched_getaffinity(0)))
+
+
+def host_heap():
+    """Half of MemTotal in whole GiB, clamped to 2-8 g; 2g when
+    /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "2g"
+    return f"{min(max(kb // 2097152, 2), 8)}g"
+
+
+def jvm_cmd(classes, heap=None):
+    heap = heap or host_heap()
     cmd = ["java"]
     for p in ADD_OPENS:
         cmd += ["--add-opens", p + "=ALL-UNNAMED"]
@@ -90,7 +111,7 @@ def main():
     ap.add_argument("--snapshot", required=True,
                     help="compiled worktree of the old commit")
     ap.add_argument("--rounds", type=int, default=5)
-    ap.add_argument("--cpus", default="32")
+    ap.add_argument("--cpus", default=host_cpus())
     ap.add_argument("--sfdir", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 

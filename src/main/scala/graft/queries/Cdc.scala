@@ -192,10 +192,10 @@ object Cdc {
     // equal a from-scratch batch join — verified against a plain SQL
     // oracle that never saw the incremental path.
     //
-    // Per-batch cost: each batch is two wave barriers (delta+state, then
-    // rebuild). The engine runs its plans interpreted in its own
-    // session, because a batch's generated classes overflow Spark's
-    // codegen cache and would be recompiled every batch
+    // Per-batch cost: the nodes of the engine's batch plan (`Waves`).
+    // The engine runs its plans interpreted in its own session, because
+    // a batch's generated classes overflow Spark's codegen cache and
+    // would be recompiled every batch
     // (BENCH_AB_ivm_interpreted.md has the A/B for this query). The
     // per-wave split comes from `perfbench/run.py --trace 1` (`ivm.*`).
     "q_incr" -> QueryDef(

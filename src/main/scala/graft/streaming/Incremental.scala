@@ -11,8 +11,6 @@ import graft.operators.{Compaction, Denormalize, Filters}
 import graft.operators.Filters.{FilterMode, RecordFilter}
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import scala.util.control.NonFatal
-
 /** Queueing strategy hook — decides rebuild priority per
   * (denormalized name, triggering entity); NONE drops the rebuild
   * entirely (load shedding). Parity with the reference's
@@ -103,7 +101,10 @@ final class IncrementalDenormalizer(
 
   /** One edge of one tree: path of relations from root (inclusive) down
     * to the edge's parent node, plus the child relation. */
-  private case class Edge(id: String, tree: Relation, path: Seq[Relation], child: Relation)
+  private case class Edge(id: String, tree: Relation, path: Seq[Relation], child: Relation) {
+    val links = s"links__${safeName(id)}"
+    val rootmap = s"rootmap__${safeName(id)}"
+  }
 
   private val allEntities: Set[String] = trees.flatMap(_.entities).toSet
 
@@ -132,130 +133,63 @@ final class IncrementalDenormalizer(
   private val statePartitions: Int =
     math.max(spark.sparkContext.defaultParallelism / 2, 4)
 
-  /** Materialization thunks: intra-batch temporaries always go to the
-    * memory checkpoint; cross-batch STATE tables go through the
-    * configured [[StateBackend]] under their stable [[stateTables]]
-    * name (the durable backend writes bucketed parquet generations). */
-  // Both take the frame BY NAME: a thunk whose plan depends on a
-  // still-materializing async rebuild output (the dirty-root sets read
-  // the previous batch's rootmaps) builds its plan inside the pool,
-  // after awaiting, instead of serializing the waves on the driver.
-  private def matTemp(df: => DataFrame): () => DataFrame =
-    () => df.graftCkptMem()
-  /** `delta` = (rows, keys) of the batch's change set for this table
-    * (see [[StateBackend.persist]]): a durable backend writes only the
-    * change set — the reference's WriteBatch write profile — instead
-    * of the full table. */
-  private def matState(name: String, df: => DataFrame,
-      delta: Option[(DataFrame, DataFrame)] = None): () => DataFrame =
-    () => {
-      // The coalesce bounds the memory backend's localCheckpoint
-      // partition count; a durable backend governs its own layout (the
-      // bucketed write), and the extra plan node would also hide an
-      // already-bucket-aligned recovered chain from persistFull's
-      // aligned fast path — so durable frames pass through untouched.
-      val src = if (backend.durable) df else df.coalesce(statePartitions)
-      bind(backend.persist(name, src, delta))
-    }
-
-  /** Materialize independent state tables concurrently. Each eager
-    * materialization is a blocking Spark job with a handful of tasks at
-    * state-table scale, so running them back-to-back leaves most cores
-    * idle; submitting them from a small thread pool overlaps the jobs
-    * (Spark's scheduler is thread-safe). Order of results matches the
-    * input order. */
-  private def parMaterialize(thunks: Seq[() => DataFrame]): Seq[DataFrame] =
-    if (thunks.lengthCompare(2) < 0) thunks.map(_.apply())
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec = materializeEc
-      Await.result(
-        Future.sequence(thunks.map(t => Future(t.apply()))),
-        Duration.Inf)
-    }
-
-  /** One plan of a batch's materialization wave: `run` materializes it,
-    * and `assign` stores the result in the engine's state once the
-    * whole wave is done, so every plan of the wave reads pre-batch
-    * state. */
-  private case class WaveItem(run: () => DataFrame, assign: DataFrame => Unit)
+  /** Persist `df` as state table `name` through the configured
+    * [[StateBackend]]. `delta` = (rows, keys) of the batch's change set
+    * for this table (see [[StateBackend.persist]]): a durable backend
+    * writes only the change set — the reference's WriteBatch write
+    * profile — instead of the full table. */
+  private def persist(name: String, df: DataFrame,
+      delta: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+    // The coalesce bounds the memory backend's localCheckpoint
+    // partition count; a durable backend governs its own layout (the
+    // bucketed write), and the extra plan node would also hide an
+    // already-bucket-aligned recovered chain from persistFull's
+    // aligned fast path — so durable frames pass through untouched.
+    val src = if (backend.durable) df else df.coalesce(statePartitions)
+    bind(backend.persist(name, src, delta))
+  }
 
   /** First edge in a tree whose child entity matches — reference
     * RelationHelper.getRelation takes the first match. */
   private def firstEdgeFor(tree: Relation, entity: String): Option[Edge] =
     edges.find(e => e.tree == tree && e.child.entity == entity)
 
-  // ---- mutable state (checkpointed DataFrames) -----------------------
+  // ---- state: one map of nodes ---------------------------------------
 
-  /** entity → (__pk binary, value struct) */
-  private var snapshots: Map[String, DataFrame] =
-    allEntities.map { e =>
-      e -> emptyDf(session, StructType(Seq(
-        StructField("__pk", BinaryType),
-        StructField("value", valueSchemas(e)))))
-    }.toMap
-
-  /** edge id → (__cpk binary childPK, __jk binary) */
-  private var links: Map[String, DataFrame] =
-    edges.map(e => e.id -> emptyDf(session, linkSchema)).toMap
-
-  // Rebuild-owned state is FUTURE-valued: [[rebuild]] submits its
-  // materializations to the shared pool and returns, so a queued next
-  // batch's delta wave overlaps the rebuild wave instead of waiting
-  // for it at a cross-batch barrier.
-  // Every consumer awaits through the typed accessors below; public
-  // reads go through [[awaitPending]] so the external contract
-  // (counters, docs, state tables reflect every processed batch) is
-  // unchanged.
-  private def completed(df: DataFrame): scala.concurrent.Future[DataFrame] =
-    scala.concurrent.Future.successful(df)
-  private def await[A](f: scala.concurrent.Future[A]): A =
-    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-
-  /** Submit one rebuild materialization of `table` to the wave pool.
-    * Its failure surfaces at whichever call awaits the future next,
-    * possibly batches later, so it is rethrown naming the table and the
-    * submitting batch, with the original failure as its cause. */
-  private def submit[A](table: String)(body: => A): scala.concurrent.Future[A] = {
-    val batch = batchIndex
-    scala.concurrent.Future {
-      try body catch {
-        case NonFatal(e) => throw new IllegalStateException(
-          s"IVM state table $table failed in batch $batch: $e", e)
-      }
-    }(materializeEc)
+  /** Every state table by its [[stateTables]] name, plus each tree's
+    * documents changed by the latest batch (`changed__<tree>`), as the
+    * [[Waves.Node]] that materializes it:
+    *
+    *  - `snapshot__<entity>`: (__pk binary, value struct);
+    *  - `links__<edge>`: (__cpk binary childPK, __jk binary);
+    *  - `rootmap__<edge>`: (__jk binary, __rpk binary rootPK);
+    *  - `docs__<tree>`, `changed__<tree>`: (__pk binary, doc_json
+    *    string nullable, __deleted);
+    *  - `pending_med__<tree>`, `pending_low__<tree>`: deferred dirty
+    *    roots (__rpk binary) — MEDIUM waits for `mediumTriggerRows`, LOW
+    *    drains every `lowDrainEvery`-th batch (reference
+    *    Southpaw.java:600-637).
+    *
+    * A batch replaces entries with new nodes. A node holds the nodes it
+    * reads from its creation on, so it reads the state as of then, and
+    * a rebuild still running when the next batch starts is composed
+    * into that batch's nodes instead of waited for. */
+  @volatile private var state: Map[String, Waves.Node] = {
+    def snap(e: String) = StructType(Seq(
+      StructField("__pk", BinaryType), StructField("value", valueSchemas(e))))
+    (allEntities.toSeq.map(e => snapshotTable(e) -> snap(e)) ++
+      edges.flatMap(e => Seq(e.links -> linkSchema, e.rootmap -> rootmapSchema)) ++
+      trees.flatMap(t => Seq(docsTable(t), changedTable(t)).map(_ -> docSchema) ++
+        Seq(pendingMedTable(t), pendingLowTable(t)).map(_ -> dirtySchema)))
+      .map { case (n, schema) => n -> Waves.ready(s"initial $n", emptyDf(session, schema)) }
+      .toMap
   }
-
-  /** edge id → (__jk binary, __rpk binary rootPK) */
-  private var rootmapsF: Map[String, scala.concurrent.Future[DataFrame]] =
-    edges.map(e => e.id -> completed(emptyDf(session, rootmapSchema))).toMap
-  private def rootmap(id: String): DataFrame = await(rootmapsF(id))
-
-  /** tree name → (__pk binary, doc_json string nullable, __deleted) */
-  private var docStateF: Map[String, scala.concurrent.Future[DataFrame]] =
-    trees.map(t => t.denormalizedName.get -> completed(emptyDf(session, docSchema))).toMap
-
-  /** Documents changed by the most recent batch, per tree (for sinks). */
-  private var lastChangedF: Map[String, scala.concurrent.Future[DataFrame]] =
-    trees.map(t => t.denormalizedName.get -> completed(emptyDf(session, docSchema))).toMap
-
-  /** Block until every async rebuild materialization has landed. */
-  private def awaitPending(): Unit = {
-    rootmapsF.values.foreach(await(_))
-    docStateF.values.foreach(await(_))
-    lastChangedF.values.foreach(await(_))
-  }
-
-  /** Deferred dirty roots per tree, by priority class (MEDIUM waits
-    * for `mediumTriggerRows`, LOW drains every `lowDrainEvery`-th
-    * batch — reference Southpaw.java:600-637). */
-  private val dirtySchema = StructType(Seq(StructField("__rpk", BinaryType)))
-  private var pendingMedium: Map[String, DataFrame] =
-    trees.map(t => t.denormalizedName.get -> emptyDf(session, dirtySchema)).toMap
-  private var pendingLow: Map[String, DataFrame] =
-    trees.map(t => t.denormalizedName.get -> emptyDf(session, dirtySchema)).toMap
   private var batchIndex: Long = 0L
+
+  /** The landed frames of `names`, waiting for any still running. */
+  private def landed(names: Seq[String]): Map[String, DataFrame] =
+    names.zip(Waves.awaitAll(names.map(state))).toMap
+  private def current(name: String): DataFrame = Waves.await(state(name))
 
   /** Cumulative engine counters, accumulated from `observe` metrics
     * that ride the batch's own materialization jobs — no extra Spark
@@ -265,10 +199,9 @@ final class IncrementalDenormalizer(
     "docs_written" -> 0L, "docs_tombstoned" -> 0L,
     "docs_truncated" -> 0L,
     "rebuilds_dropped_none" -> 0L, "batches" -> 0L)
-  /** Doc counters bump inside the async rebuild jobs, so reads first
-    * drain the pending wave — the contract (counters reflect every
-    * processed batch) is unchanged. */
-  def counters: Map[String, Long] = { awaitPending(); synchronized(counterMap) }
+  /** Doc counters bump inside the rebuild's nodes, so reads first land
+    * every node — counters reflect every processed batch. */
+  def counters: Map[String, Long] = { landed(state.keys.toSeq); synchronized(counterMap) }
   private def bump(name: String, by: Long): Unit = synchronized {
     counterMap = counterMap.updated(name, counterMap.getOrElse(name, 0L) + by)
   }
@@ -277,37 +210,43 @@ final class IncrementalDenormalizer(
   private def observed(df: DataFrame, name: String): Option[Row] =
     df.queryExecution.observedMetrics.get(name)
 
-  def docs(rootName: String): DataFrame = await(docStateF(rootName))
-  def changedDocs(rootName: String): DataFrame = await(lastChangedF(rootName))
-  def snapshot(entity: String): DataFrame = snapshots(entity).select(col("value.*"))
+  def docs(rootName: String): DataFrame = current(treeTable("docs", rootName))
+  def changedDocs(rootName: String): DataFrame = current(treeTable("changed", rootName))
+  def snapshot(entity: String): DataFrame =
+    current(snapshotTable(entity)).select(col("value.*"))
 
   /** Point lookup of the latest record for a primary key — the
     * reference's `readByPK` (topic/KafkaTopic.java:390-398). Key values
     * must be in key-field order (sorted by name for composites). */
   def readByPk(entity: String, keyValues: Seq[Any]): Option[Row] = {
     val pk = graft.functions.CanonicalKey.encodeComposite(keyValues)
-    snapshots(entity).where(col("__pk") === lit(pk))
+    current(snapshotTable(entity)).where(col("__pk") === lit(pk))
       .select(col("value")).collect().headOption.map(_.getAs[Row]("value"))
   }
 
   /** Engine counters, computed on demand from state (the reference
     * reports JMX metrics, metric/Metrics.java; here the state tables
     * are the source of truth). */
-  def metrics: Map[String, Long] = Map(
-    "entities" -> allEntities.size.toLong,
-    "trees" -> trees.size.toLong,
-    "snapshot_rows" -> snapshots.values.map(_.count()).sum,
-    "link_rows" -> links.values.map(_.count()).sum,
-    "rootmap_rows" -> rootmapsF.values.map(await(_).count()).sum,
-    "docs_live" -> docStateF.values.map(await(_).where(!col("__deleted")).count()).sum,
-    "docs_tombstoned" -> docStateF.values.map(await(_).where(col("__deleted")).count()).sum)
+  def metrics: Map[String, Long] = {
+    val tables = stateTables
+    def rows(kind: String, where: Column = lit(true)): Long =
+      tables.collect { case (n, df) if n.startsWith(kind + "__") => df.where(where).count() }.sum
+    Map(
+      "entities" -> allEntities.size.toLong,
+      "trees" -> trees.size.toLong,
+      "snapshot_rows" -> rows("snapshot"),
+      "link_rows" -> rows("links"),
+      "rootmap_rows" -> rows("rootmap"),
+      "docs_live" -> rows("docs", !col("__deleted")),
+      "docs_tombstoned" -> rows("docs", col("__deleted")))
+  }
 
   /** The link table (join index, childPK → joinKey) for the first edge
     * matching (child entity, join key) in any tree — test/debug API,
     * mirrors the reference's `JK|entity|joinKeyField` index naming. */
   def linkTable(childEntity: String, joinKey: String): Option[DataFrame] =
     edges.find(e => e.child.entity == childEntity && e.child.joinKey.contains(joinKey))
-      .map(e => links(e.id))
+      .map(e => current(e.links))
 
   /** Rootmap tables (parent index, joinKey → rootPK) for every edge
     * matching the reference's `PaK|root|parentEntity|parentKeyField`
@@ -318,19 +257,12 @@ final class IncrementalDenormalizer(
     edges.filter { e =>
       e.tree.entity == rootEntity && e.path.last.entity == parentEntity &&
         e.child.parentKey.contains(parentKeyField)
-    }.map(e => rootmap(e.id))
-
-  private def safeName(s: String): String = s.replaceAll("[^A-Za-z0-9._-]", "_")
+    }.map(e => current(e.rootmap))
 
   /** All state tables by stable name (for [[StateOps]] backup and the
     * durable backend's directory layout). */
   def stateTables: Map[String, DataFrame] =
-    snapshots.map { case (e, df) => s"snapshot__$e" -> df } ++
-      links.map { case (id, df) => s"links__${safeName(id)}" -> df } ++
-      rootmapsF.map { case (id, f) => s"rootmap__${safeName(id)}" -> await(f) } ++
-      docStateF.map { case (n, f) => s"docs__${safeName(n)}" -> await(f) } ++
-      pendingMedium.map { case (n, df) => s"pending_med__${safeName(n)}" -> df } ++
-      pendingLow.map { case (n, df) => s"pending_low__${safeName(n)}" -> df }
+    landed(state.keys.filterNot(_.startsWith("changed__")).toSeq)
 
   /** Replace state tables from a backup or a durable state root (names
     * as in [[stateTables]]); missing tables keep their current (usually
@@ -344,45 +276,23 @@ final class IncrementalDenormalizer(
     * batches later than an uninterrupted run — the same steady-state
     * lag bound as before the restart. */
   def loadStateTables(tables: Map[String, DataFrame]): Unit = {
-    awaitPending() // never restore over an in-flight rebuild wave
-    // One persist job per restored table; they are independent reads of
-    // distinct on-disk generations, so they materialize as ONE wave
-    // (sequential persists would leave the cluster mostly idle exactly
-    // when a restart wants to come back fastest).
-    val loaded: Map[String, DataFrame] = {
-      // only names this engine owns — a backup may hold tables of
-      // relations no longer configured, and those must not be persisted
-      // under the live root
-      val names = tables.keys.toSeq.filter(stateTables.keySet)
-      // alignRestored is forced EAGERLY (matState takes the frame by
-      // name): its loud schema-evolution rejection must fire before any
-      // sibling restore job is submitted, or the caller's cleanup races
-      // still-running persists of the other tables
-      val aligned = names.map(n => alignRestored(n, bind(tables(n))))
-      val out = parMaterialize(
-        names.zip(aligned).map { case (n, df) => matState(n, df) })
-      names.zip(out).toMap
+    // never restore over an in-flight rebuild; only names this engine
+    // owns — a backup may hold tables of relations no longer configured,
+    // and those must not be persisted under the live root
+    val owned = stateTables.keySet
+    // alignRestored runs for every table before any persist starts: its
+    // loud schema-evolution rejection must fire before a sibling restore
+    // job is submitted, or the caller's cleanup races still-running
+    // persists of the other tables
+    val aligned = tables.toSeq.collect {
+      case (n, df) if owned(n) => n -> alignRestored(n, bind(df))
     }
-    def load(name: String, old: DataFrame): DataFrame =
-      loaded.getOrElse(name, old)
-    snapshots = snapshots.map { case (e, old) =>
-      e -> load(s"snapshot__$e", old)
+    // one persist job per restored table, all independent: one wave
+    val restored = aligned.map { case (n, df) =>
+      n -> node(n, "restore", Nil)(_ => persist(n, df))
     }
-    links = links.map { case (id, old) =>
-      id -> load(s"links__${safeName(id)}", old)
-    }
-    rootmapsF = rootmapsF.map { case (id, old) =>
-      id -> completed(load(s"rootmap__${safeName(id)}", await(old)))
-    }
-    docStateF = docStateF.map { case (n, old) =>
-      n -> completed(load(s"docs__${safeName(n)}", await(old)))
-    }
-    pendingMedium = pendingMedium.map { case (n, old) =>
-      n -> load(s"pending_med__${safeName(n)}", old)
-    }
-    pendingLow = pendingLow.map { case (n, old) =>
-      n -> load(s"pending_low__${safeName(n)}", old)
-    }
+    Waves.awaitAll(restored.map(_._2))
+    state = state ++ restored
     backend.gc()
   }
 
@@ -452,10 +362,10 @@ final class IncrementalDenormalizer(
     * snapshot rows (scrub-on-rebuild guarantees this). */
   def indexInvariantViolations(): Seq[String] =
     edges.flatMap { edge =>
-      val childSnap = snapshots(edge.child.entity).select(col("__pk").as("__cpk"))
-      val orphanLinks = links(edge.id).join(childSnap, Seq("__cpk"), "left_anti").count()
-      val rootSnap = snapshots(edge.tree.entity).select(col("__pk").as("__rpk"))
-      val orphanRoots = rootmap(edge.id).join(rootSnap, Seq("__rpk"), "left_anti").count()
+      val childSnap = current(snapshotTable(edge.child.entity)).select(col("__pk").as("__cpk"))
+      val orphanLinks = current(edge.links).join(childSnap, Seq("__cpk"), "left_anti").count()
+      val rootSnap = current(snapshotTable(edge.tree.entity)).select(col("__pk").as("__rpk"))
+      val orphanRoots = current(edge.rootmap).join(rootSnap, Seq("__rpk"), "left_anti").count()
       Seq(
         if (orphanLinks > 0) Some(s"${edge.id}: $orphanLinks link rows reference dead child PKs") else None,
         if (orphanRoots > 0) Some(s"${edge.id}: $orphanRoots rootmap rows reference dead root PKs") else None
@@ -464,40 +374,47 @@ final class IncrementalDenormalizer(
 
   // ---- batch processing ---------------------------------------------
 
+  /** A node of batch `batchIndex` that writes `table`, reading the
+    * current nodes of the tables named in `reads`. */
+  private def node(table: String, step: String, reads: Iterable[String])(
+      body: (String => DataFrame) => DataFrame): Waves.Node =
+    Waves.submit(s"batch $batchIndex: $step of $table",
+      reads.map(n => n -> state(n)).toMap)(body)
+
   /** Process one micro-batch of changelog DataFrames per entity
     * (columns: offset Long, key struct, value struct|null).
     *
-    * Materialization is ONE wave before the per-tree rebuild: the
+    * The batch plan has two waves of nodes. The delta wave — the
     * dirty-root sets, snapshot updates, link updates and
-    * deferred-priority sets each re-derive their entity's
-    * (map-side-combinable) delta fold inline from a LAZY view, and all
-    * of them read only PRE-batch state, so they are mutually
-    * independent by construction. No fold is materialized on its own:
-    * the rebuild reads the drained dirty sets and the updated state.
-    * The plans run interpreted in [[session]]: at micro-batch scale,
-    * compiling them cost more than running them
-    * (BENCH_AB_ivm_interpreted.md).
+    * deferred-priority sets — re-derives each entity's
+    * (map-side-combinable) delta fold inline from a LAZY view, and every
+    * node of it is created before the state map changes, so all of them
+    * read PRE-batch state and are mutually independent. A dirty set
+    * that reads the previous batch's rootmaps composes onto their nodes,
+    * so the rest of the wave overlaps that rebuild's tail. The driver
+    * waits for the delta wave (its nodes read the caller's input
+    * frames), then creates the rebuild wave and returns without waiting
+    * for it, so a queued next batch's delta wave overlaps it. The plans
+    * run interpreted in [[session]]: at micro-batch scale, compiling
+    * them cost more than running them (BENCH_AB_ivm_interpreted.md).
     */
   def processBatch(changes: Map[String, DataFrame]): Unit = {
     batchIndex += 1
     bump("batches", 1L)
-    // reset per-batch change tracking
-    lastChangedF = trees.map(t =>
-      t.denormalizedName.get -> completed(emptyDf(session, docSchema))).toMap
-    // 1. fold each entity's changes against prior state (filter-aware),
-    // as LAZY views: each plan of the wave re-runs its fold inline, so
-    // the wave has one barrier, and every plan reads the SAME pre-batch
-    // state.
+    state = state ++ trees.map(t =>
+      changedTable(t) -> Waves.ready(s"batch $batchIndex: no change of ${changedTable(t)}",
+        emptyDf(session, docSchema)))
     val inputs: Map[String, DataFrame] = changes.collect {
       case (entity, df) if allEntities.contains(entity) => entity -> bind(df)
     }
-    val lazyDeltas: Map[String, DataFrame] =
-      inputs.map { case (entity, df) => entity -> foldDelta(entity, df) }
+    /** Each entity's fold of its changes against the pre-batch snapshot
+      * in `in` (filter-aware), as a LAZY view: each plan of the wave
+      * re-runs its fold inline, so the wave has one barrier. */
+    def fold(entity: String, in: String => DataFrame): DataFrame =
+      foldDelta(entity, inputs(entity), in(snapshotTable(entity)))
+    def lazyDeltas(in: String => DataFrame): Map[String, DataFrame] =
+      inputs.map { case (entity, _) => entity -> fold(entity, in) }
 
-    // Per-tree per-priority dirty-root sets plus snapshot and link
-    // updates, all derived from (lazy deltas, pre-batch state). State
-    // vars are reassigned only after the wave, so every plan in it
-    // reads consistent pre-batch state.
     val drainLowNow = batchIndex % math.max(lowDrainEvery, 1) == 0
 
     // (tree, priority) -> dirty parts from this batch's deltas. A
@@ -510,12 +427,10 @@ final class IncrementalDenormalizer(
     // one entity under several edges with different FKs; restricting
     // to the first matching edge left the other paths' parents stale
     // (SelfReferenceSpec, DiamondEdgeSpec pin the FK-flip cases).
-    def dirtyParts(tree: Relation,
-        wanted: QueueingStrategy.Priority => Boolean): Seq[DataFrame] =
-      lazyDeltas.toSeq.flatMap { case (entity, delta) =>
-        val name = tree.denormalizedName.get
-        val pri = strategy.priority(name, entity)
-        if (!wanted(pri)) Nil
+    def dirtyParts(tree: Relation, deltas: Map[String, DataFrame],
+        in: String => DataFrame, priority: QueueingStrategy.Priority): Seq[DataFrame] =
+      deltas.toSeq.flatMap { case (entity, delta) =>
+        if (strategy.priority(tree.denormalizedName.get, entity) != priority) Nil
         else {
           val rootPart =
             if (tree.entity == entity)
@@ -525,18 +440,13 @@ final class IncrementalDenormalizer(
             .filter(e => e.tree == tree && e.child.entity == entity)
             .map { edge =>
               val jkField = edge.child.joinKey.get
+              val links = in(edge.links)
               val newJks = delta.where(col("value").isNotNull)
                 .select(canonicalPk(Seq(col("value").getField(jkField))).as("__jk"))
-              val oldJks = delta.join(links(edge.id),
-                delta("__pk") === links(edge.id)("__cpk"), "inner")
+              val oldJks = delta.join(links, delta("__pk") === links("__cpk"), "inner")
                 .select(col("__jk"))
               val jks = newJks.union(oldJks).where(col("__jk").isNotNull).distinct()
-              // rootmap(·) AWAITS the previous batch's async rootmap
-              // materialization — called inside this thunk's pool
-              // thread, so the rest of the delta wave (folds, snapshot
-              // and link updates) runs concurrently with that rebuild
-              // tail instead of the driver serializing the two waves.
-              rootmap(edge.id).join(jks, "__jk").select(col("__rpk"))
+              in(edge.rootmap).join(jks, "__jk").select(col("__rpk"))
             }
           rootPart.toSeq ++ edgeParts
         }
@@ -546,32 +456,38 @@ final class IncrementalDenormalizer(
       else parts.reduce(_ union _).distinct()
 
     val mediumImmediate = mediumTriggerRows <= 0L
-    // per tree: drain-now set, plus pending medium/low ONLY when the
+    /** A delta-wave node of `tree` writing `table`: it reads `own` and
+      * what its dirty parts read — the changed entities' snapshots, the
+      * links and rootmaps of the tree's edges under them, and the LOW
+      * backlog when it drains now. */
+    def treeNode(tree: Relation, table: String, step: String, own: Seq[String])(
+        body: (String => DataFrame) => DataFrame): Waves.Node = {
+      val touched = edges.filter(e => e.tree == tree && inputs.contains(e.child.entity))
+      node(table, step, own ++ inputs.keys.map(snapshotTable) ++
+        touched.flatMap(e => Seq(e.links, e.rootmap)) ++
+        Option.when(drainLowNow)(pendingLowTable(tree)))(body)
+    }
+    // per tree: the drain-now set, plus pending medium/low ONLY when the
     // configuration can actually defer (the default immediate mode
-    // materializes nothing extra). PLAN BUILDERS, not plans: a dirty
-    // part reads the previous batch's rootmaps, which may still be
-    // materializing async — the builder runs inside the wave thunk's
-    // pool thread and awaits there, so independent wave jobs proceed.
-    var dirtySets = Map.empty[String, DataFrame]
-    val dirtyWave: Seq[WaveItem] = trees.flatMap { tree =>
+    // materializes nothing extra)
+    val dirtyNodes: Seq[(String, Waves.Node)] = trees.map { tree =>
       val name = tree.denormalizedName.get
-      def high = dirtyParts(tree, _ == QueueingStrategy.High)
-      def med = dirtyParts(tree, _ == QueueingStrategy.Medium)
-      def low = dirtyParts(tree, _ == QueueingStrategy.Low)
-      def drainNowParts =
-        high ++ (if (mediumImmediate) med else Nil) ++ (if (drainLowNow) low else Nil)
-      def drainBase =
-        if (drainLowNow) Seq(pendingLow(name)) else Nil
-      Seq(WaveItem(matTemp(unionParts(drainNowParts ++ drainBase)),
-          df => dirtySets = dirtySets.updated(name, df))) ++
-        (if (mediumImmediate) Nil
-         else Seq(WaveItem(matState(s"pending_med__${safeName(name)}",
-             unionParts(med :+ pendingMedium(name))),
-           df => pendingMedium = pendingMedium.updated(name, df)))) ++
-        (if (drainLowNow) Nil
-         else Seq(WaveItem(matState(s"pending_low__${safeName(name)}",
-             unionParts(low :+ pendingLow(name))),
-           df => pendingLow = pendingLow.updated(name, df))))
+      name -> treeNode(tree, name, "dirty set", Nil) { in =>
+        val deltas = lazyDeltas(in)
+        def part(p: QueueingStrategy.Priority) = dirtyParts(tree, deltas, in, p)
+        unionParts(part(QueueingStrategy.High) ++
+          (if (mediumImmediate) part(QueueingStrategy.Medium) else Nil) ++
+          (if (drainLowNow) part(QueueingStrategy.Low) :+ in(pendingLowTable(tree)) else Nil))
+          .graftCkptMem()
+      }
+    }
+    val pendingNodes: Seq[(String, Waves.Node)] = trees.flatMap { tree =>
+      def defer(table: String, p: QueueingStrategy.Priority) =
+        table -> treeNode(tree, table, "defer", Seq(table)) { in =>
+          persist(table, unionParts(dirtyParts(tree, lazyDeltas(in), in, p) :+ in(table)))
+        }
+      Option.when(!mediumImmediate)(defer(pendingMedTable(tree), QueueingStrategy.Medium)) ++
+        Option.when(!drainLowNow)(defer(pendingLowTable(tree), QueueingStrategy.Low))
     }
 
     // Snapshot/link updates carry their change set (new rows + changed
@@ -585,89 +501,86 @@ final class IncrementalDenormalizer(
     // set's writes, whose executions the engine never sees, so there
     // the fold is checkpointed first: the metrics ride that job, and
     // both writes read its blocks instead of re-running the fold.
-    val snapEntities: Seq[String] = lazyDeltas.keys.toSeq
-    def snapUpdate(entity: String): () => DataFrame = () => {
-      val observedDelta = foldDelta(entity,
-          inputs(entity).observe(s"graft_in_$entity", count(lit(1)).as("n")))
-        .observe(s"graft_delta_$entity", count(lit(1)).as("n"))
-      val delta =
-        if (backend.durable) observedDelta.graftCkptMem() else observedDelta
-      val changedKeys = delta.select(col("__pk"))
-      val newRows =
-        delta.where(col("value").isNotNull).select(col("__pk"), col("value"))
-      val kept = snapshots(entity).join(changedKeys, Seq("__pk"), "left_anti")
-      val full = kept.unionByName(newRows)
-      // as in matState: the coalesced frame is the one the memory
-      // backend checkpoints, so its execution holds the metrics
-      val src = if (backend.durable) full else full.coalesce(statePartitions)
-      val out = bind(backend.persist(s"snapshot__$entity", src,
-        Some((newRows, changedKeys))))
-      countDelta(entity, if (backend.durable) observedDelta else src)
-      out
+    val snapshotNodes = inputs.keys.toSeq.map { entity =>
+      val table = snapshotTable(entity)
+      table -> node(table, "update", Seq(table)) { in =>
+        val observedDelta = foldDelta(entity,
+            inputs(entity).observe(s"graft_in_$entity", count(lit(1)).as("n")),
+            in(table))
+          .observe(s"graft_delta_$entity", count(lit(1)).as("n"))
+        val delta =
+          if (backend.durable) observedDelta.graftCkptMem() else observedDelta
+        val changedKeys = delta.select(col("__pk"))
+        val newRows =
+          delta.where(col("value").isNotNull).select(col("__pk"), col("value"))
+        val full = in(table).join(changedKeys, Seq("__pk"), "left_anti").unionByName(newRows)
+        // as in persist: the coalesced frame is the one the memory
+        // backend checkpoints, so its execution holds the metrics
+        val src = if (backend.durable) full else full.coalesce(statePartitions)
+        val out = bind(backend.persist(table, src, Some((newRows, changedKeys))))
+        countDelta(entity, if (backend.durable) observedDelta else src)
+        out
+      }
     }
-    val linkUpdates: Seq[(String, DataFrame, (DataFrame, DataFrame))] =
-      lazyDeltas.toSeq.flatMap { case (entity, delta) =>
-        edges.filter(_.child.entity == entity).map { edge =>
-          val jkField = edge.child.joinKey.get
+    val linkNodes = inputs.keys.toSeq.flatMap { entity =>
+      edges.filter(_.child.entity == entity).map { edge =>
+        edge.links -> node(edge.links, "update", Seq(edge.links, snapshotTable(entity))) { in =>
+          val delta = fold(entity, in)
           val changedKeys = delta.select(col("__pk").as("__cpk"))
           val newLinks = delta.where(col("value").isNotNull)
             .select(col("__pk").as("__cpk"),
-              canonicalPk(Seq(col("value").getField(jkField))).as("__jk"))
+              canonicalPk(Seq(col("value").getField(edge.child.joinKey.get))).as("__jk"))
             .where(col("__jk").isNotNull)
-          val keptLinks = links(edge.id).join(
-            changedKeys, Seq("__cpk"), "left_anti")
-          (edge.id, keptLinks.unionByName(newLinks), (newLinks, changedKeys))
+          val keptLinks = in(edge.links).join(changedKeys, Seq("__cpk"), "left_anti")
+          persist(edge.links, keptLinks.unionByName(newLinks), Some((newLinks, changedKeys)))
         }
       }
-
-    val wave: Seq[WaveItem] = dirtyWave ++
-      snapEntities.map(e => WaveItem(snapUpdate(e),
-        df => snapshots = snapshots.updated(e, df))) ++
-      linkUpdates.map { case (id, df, d) =>
-        WaveItem(matState(s"links__${safeName(id)}", df, Some(d)),
-          out => links = links.updated(id, out))
-      }
-    parMaterialize(wave.map(_.run)).zip(wave).foreach {
-      case (df, item) => item.assign(df)
     }
-    if (drainLowNow) // drained this batch → reset without a job
-      trees.foreach(t => pendingLow =
-        pendingLow.updated(t.denormalizedName.get, emptyDf(session, dirtySchema)))
+
+    // every node of the wave exists before the state map changes
+    val updates = pendingNodes ++ snapshotNodes ++ linkNodes
+    val dirtyFrames = Waves.awaitAll(dirtyNodes.map(_._2) ++ updates.map(_._2))
+    var dirtySets = dirtyNodes.map(_._1).zip(dirtyFrames).toMap
+    state = state ++ updates
+
+    /** Empty a deferred set whose rows joined this batch's drain. Where
+      * deferral is configured, a durable backend persists the empty
+      * table, so the batch's commit no longer names the drained rows. */
+    def drain(table: String, deferred: Boolean): Unit = {
+      val empty = emptyDf(session, dirtySchema)
+      state = state.updated(table,
+        if (backend.durable && deferred) node(table, "drain", Nil)(_ => persist(table, empty))
+        else Waves.ready(s"batch $batchIndex: drain of $table", empty))
+    }
+    if (drainLowNow) trees.foreach(t => drain(pendingLowTable(t), lowDrainEvery > 1))
 
     // MEDIUM trigger check (only when deferral is configured — the
     // count here is the one deliberate extra job of the deferred mode).
-    if (!mediumImmediate) {
-      trees.foreach { tree =>
+    if (!mediumImmediate) trees.foreach { tree =>
+      val pending = current(pendingMedTable(tree))
+      if (pending.count() >= mediumTriggerRows) {
         val name = tree.denormalizedName.get
-        if (pendingMedium(name).count() >= mediumTriggerRows) {
-          dirtySets = dirtySets.updated(name,
-            dirtySets(name).union(pendingMedium(name)).distinct()
-              .graftCkptMem())
-          pendingMedium = pendingMedium.updated(name, emptyDf(session, dirtySchema))
-        }
+        dirtySets = dirtySets.updated(name,
+          dirtySets(name).union(pending).distinct().graftCkptMem())
+        drain(pendingMedTable(tree), deferred = true)
       }
     }
 
-    // 3. rebuild drained dirty roots per tree. Each rebuild SUBMITS its
-    // materializations (rootmap re-registrations, document upserts) to
-    // the pool and returns: several trees' rebuild waves overlap each
-    // other, and — when the caller queues another batch immediately, the
-    // bench/replay shape — the next batch's delta wave overlaps this
-    // rebuild's tail (its dirty thunks await the rootmap futures in the
-    // pool; see dirtyWave). Results are identical: every consumer of
-    // rebuild-owned state awaits through the accessors.
+    // Rebuild drained dirty roots per tree. The rebuild's nodes are
+    // created here and run without the driver: several trees' rebuilds
+    // overlap each other and, when the caller queues another batch, that
+    // batch's delta wave.
     trees.foreach { tree =>
-      val name = tree.denormalizedName.get
-      val dirty = dirtySets(name)
+      val dirty = dirtySets(tree.denormalizedName.get)
       if (!dirty.isEmpty) rebuild(tree, dirty)
     }
-    // 4. a durable backend commits the batch and drops what it
-    // superseded: drain the async wave first, so the commit names every
-    // table this batch wrote and no in-flight job reads a dropped
+    // A durable backend commits the batch and drops what it
+    // superseded: land every node first, so the commit names every
+    // table this batch wrote and no running job reads a dropped
     // generation (the memory backend has no gc, so it keeps the full
     // cross-batch overlap).
     if (backend.durable) {
-      awaitPending()
+      landed(state.keys.toSeq)
       backend.gc()
     }
   }
@@ -693,10 +606,11 @@ final class IncrementalDenormalizer(
   /** Fold one entity's batch changes into a per-key delta:
     * (__pk, value|null) — value null means the key's state after the
     * batch is deleted. Consults the record filter per change in offset
-    * order, seeded with the pre-batch snapshot value (reference
+    * order, seeded with the pre-batch `snapshot` value (reference
     * semantics: filter sees the previous state,
     * filter/BaseFilter.java:88). */
-  private def foldDelta(entity: String, changes: DataFrame): DataFrame = {
+  private def foldDelta(entity: String, changes: DataFrame,
+      snapshot: DataFrame): DataFrame = {
     val valueSchema = valueSchemas(entity)
     val kf = keyFields(entity)
     // A Column fast path (e.g. deleteWhere) compiles into the changelog
@@ -722,7 +636,7 @@ final class IncrementalDenormalizer(
       struct(col("offset"), col("value")).as("__ov"))
       .groupBy("__pk")
       .agg(sort_array(collect_list(col("__ov"))).as("__ovs"))
-      .join(snapshots(entity).withColumnRenamed("value", "__old"), Seq("__pk"), "left_outer")
+      .join(snapshot.withColumnRenamed("value", "__old"), Seq("__pk"), "left_outer")
     val outSchema = StructType(Seq(
       StructField("__pk", BinaryType),
       StructField("value", valueSchema)))
@@ -747,73 +661,70 @@ final class IncrementalDenormalizer(
   /** Rebuild the documents for a set of dirty root PKs: scrub rootmaps,
     * re-assemble via the batch compiler restricted to the dirty set,
     * re-register rootmap entries from the assembly paths, upsert docs
-    * (missing roots ⇒ null doc tombstones, Southpaw.java:335,379-380). */
+    * (missing roots ⇒ null doc tombstones, Southpaw.java:335,379-380).
+    * Creates the rebuild's nodes and returns; each reads the post-wave
+    * snapshots and the previous node of the table it replaces. */
   private def rebuild(tree: Relation, dirty: DataFrame): Unit = {
     val name = tree.denormalizedName.get
+    val batch = batchIndex
+    val snapshots = tree.entities.distinct.map(snapshotTable)
 
-    // J5 scrub: drop dirty roots from every rootmap of this tree.
-    // Local plans over the awaited previous values — the async updates
-    // below replace the map entries wholesale.
-    val scrubbed: Map[String, DataFrame] =
-      edges.filter(_.tree == tree).map { edge =>
-        edge.id -> rootmap(edge.id).join(dirty, Seq("__rpk"), "left_anti")
-      }.toMap
-
-    // Restrict the root entity to dirty PKs; assemble with the SAME
-    // compiler as batch mode (Q-INCR equivalence by construction).
-    val rootSnap = snapshots(tree.entity)
-    val restrictedRoot =
-      rootSnap.join(dirty, rootSnap("__pk") === dirty("__rpk"), "left_semi")
-        .select(col("value.*"))
-    // Cascade the dirty restriction down the tree: each child table is
-    // semi-joined to the reachable parent key values, so rebuild work
-    // scales with the dirty neighborhood, not with full table sizes —
-    // a rebuild of K roots never re-aggregates the whole child corpus.
-    // A superset per entity is safe (extra child groups simply find no
-    // parent in the left join); diamond entities union their
-    // per-position restrictions.
-    val restricted = scala.collection.mutable.Map[String, List[DataFrame]]()
-    def walkRestrict(node: Relation, nodeDf: DataFrame): Unit =
-      node.children.foreach { edge =>
-        val childSnap = snapshot(edge.entity)
-        // no distinct on the probe side: left_semi already dedups, and
-        // the saved shuffle beats the smaller probe at dirty-set scale
-        val parentKeys = nodeDf
-          .select(canonicalPk(Seq(nodeDf(edge.parentKey.get))).as("__k"))
-          .where(col("__k").isNotNull)
-        val r = childSnap.join(parentKeys,
-          canonicalPk(Seq(childSnap(edge.joinKey.get))) === col("__k"), "left_semi")
-        restricted(edge.entity) = r :: restricted.getOrElse(edge.entity, Nil)
-        walkRestrict(edge, r)
+    /** The dirty roots' records and, per entity, the records under them,
+      * over the snapshots in `in`. Restricts the root entity to dirty
+      * PKs; assembly uses the SAME compiler as batch mode (Q-INCR
+      * equivalence by construction). */
+    def restrict(in: String => DataFrame): (DataFrame, String => DataFrame) = {
+      def snapshot(e: String) = in(snapshotTable(e)).select(col("value.*"))
+      val rootSnap = in(snapshotTable(tree.entity))
+      val restrictedRoot =
+        rootSnap.join(dirty, rootSnap("__pk") === dirty("__rpk"), "left_semi")
+          .select(col("value.*"))
+      // Cascade the dirty restriction down the tree: each child table is
+      // semi-joined to the reachable parent key values, so rebuild work
+      // scales with the dirty neighborhood, not with full table sizes —
+      // a rebuild of K roots never re-aggregates the whole child corpus.
+      // A superset per entity is safe (extra child groups simply find no
+      // parent in the left join); diamond entities union their
+      // per-position restrictions.
+      val restricted = scala.collection.mutable.Map[String, List[DataFrame]]()
+      def walkRestrict(node: Relation, nodeDf: DataFrame): Unit =
+        node.children.foreach { edge =>
+          val childSnap = snapshot(edge.entity)
+          // no distinct on the probe side: left_semi already dedups, and
+          // the saved shuffle beats the smaller probe at dirty-set scale
+          val parentKeys = nodeDf
+            .select(canonicalPk(Seq(nodeDf(edge.parentKey.get))).as("__k"))
+            .where(col("__k").isNotNull)
+          val r = childSnap.join(parentKeys,
+            canonicalPk(Seq(childSnap(edge.joinKey.get))) === col("__k"), "left_semi")
+          restricted(edge.entity) = r :: restricted.getOrElse(edge.entity, Nil)
+          walkRestrict(edge, r)
+        }
+      walkRestrict(tree, restrictedRoot)
+      // Dedup is only needed when an entity sits at SEVERAL positions of
+      // the tree (diamond) — a single left_semi restriction never
+      // duplicates rows, so the common shape skips that whole shuffle.
+      val restrictedDedup: Map[String, DataFrame] = restricted.toMap.map {
+        case (e, one :: Nil) => e -> one
+        case (e, several) =>
+          e -> several.reduce(_ unionByName _).dropDuplicates(keyFields(e))
       }
-    walkRestrict(tree, restrictedRoot)
-    // Dedup is only needed when an entity sits at SEVERAL positions of
-    // the tree (diamond) — a single left_semi restriction never
-    // duplicates rows, so the common shape skips that whole shuffle.
-    val restrictedDedup: Map[String, DataFrame] = restricted.toMap.map {
-      case (e, one :: Nil) => e -> one
-      case (e, several) =>
-        e -> several.reduce(_ unionByName _).dropDuplicates(keyFields(e))
+      (restrictedRoot, e =>
+        if (e == tree.entity) restrictedRoot
+        else restrictedDedup.getOrElse(e, snapshot(e)))
     }
-    val tables: String => DataFrame = e =>
-      if (e == tree.entity) restrictedRoot
-      else restrictedDedup.getOrElse(e, snapshot(e))
-    // Not checkpointed: consumed exactly once, into newDocsCp below —
-    // a separate materialization pass would be pure overhead.
-    val assembled = Denormalize.documents(tree, tables, keyFields,
-        maxChildrenPerEdge)
-      .select(col("__pk") +: col("doc_json") +:
-        (if (maxChildrenPerEdge.isDefined) Seq(col("__truncated")) else Nil): _*)
 
     // J3 re-register: for each edge, walk the path root→parent with
     // inner joins over live snapshots (a node registers only if its
-    // record exists — lazy parent index, Southpaw.java:342).
+    // record exists — lazy parent index, Southpaw.java:342), after the
+    // J5 scrub that drops the dirty roots from the edge's rootmap.
     // Each update also carries its change set for the durable backend:
     // removed rows are exactly the scrubbed (__rpk ∈ dirty) ones and
     // added rows are regs — both dirty-neighborhood-sized, so a delta
     // generation needs neither a full-table read nor a full write.
-    val rootmapUpdates: Seq[(String, DataFrame, (DataFrame, DataFrame))] =
-      edges.filter(_.tree == tree).map { edge =>
+    val rootmaps = edges.filter(_.tree == tree).map { edge =>
+      edge.rootmap -> node(edge.rootmap, "rebuild", snapshots :+ edge.rootmap) { in =>
+        val (restrictedRoot, tables) = restrict(in)
         var cur = restrictedRoot
           .withColumn("__rpk", canonicalPk(keyFields(tree.entity).map(col)))
         // walk down path (path.head is the root node itself)
@@ -832,97 +743,79 @@ final class IncrementalDenormalizer(
         // No distinct on the union: the scrub removed every dirty root
         // from the old rootmap and regs contains ONLY dirty roots, so
         // the two sides are disjoint by construction.
-        (edge.id, scrubbed(edge.id).unionByName(regs),
-          (regs, dirty))
+        val scrubbed = in(edge.rootmap).join(dirty, Seq("__rpk"), "left_anti")
+        persist(edge.rootmap, scrubbed.unionByName(regs), Some((regs, dirty)))
       }
+    }
 
     // Upsert document state; dirty roots with no assembled doc get a
-    // null-document tombstone. The doc counters ride this job as
-    // observe metrics. newDocs, the rootmap re-registrations AND the
-    // kept-documents side all derive from restrictedRoot + dirty +
-    // pre-rebuild state, so they materialize as ONE wave (assembly,
-    // path walks and the anti-join overlap).
-    //
-    // Memory backend: the post-batch docState is the LAZY union of the
-    // two checkpointed frames — its lineage stays two levels deep
-    // forever because the next batch's `kept` re-materializes it, so
-    // no extra barrier is ever paid. Durable backend: one wave thunk
-    // runs the newDocs checkpoint (lastChanged + observe metrics
-    // ride it), then the docs-table write — the union re-reads the
-    // just-checkpointed blocks, so the assembly still runs once, and
-    // the rootmap writes overlap the whole chain.
-    val truncCol =
-      if (maxChildrenPerEdge.isDefined) coalesce(col("__truncated"), lit(0L))
-      else lit(0L)
-    val newDocs = dirty.join(assembled, dirty("__rpk") === assembled("__pk"), "left_outer")
-      .select(col("__rpk").as("__pk"), col("doc_json"),
-        col("doc_json").isNull.as("__deleted"), truncCol.as("__tr"))
-      .observe(s"graft_docs_${safeName(name)}_$batchIndex",
-        count(lit(1)).as("n"),
-        sum(when(col("doc_json").isNull, 1L).otherwise(0L)).as("tomb"),
-        sum(col("__tr")).as("trunc"))
-      .drop("__tr")
-    val dirtyPks = dirty.withColumnRenamed("__rpk", "__pk")
-    val kept = await(docStateF(name)).join(dirtyPks, Seq("__pk"), "left_anti")
-    // Async submission (no barrier here): the rootmap and doc jobs of
-    // this tree overlap each other, other trees' rebuilds, and — when
-    // batches queue — the NEXT batch's delta wave. Consumers await via
-    // the accessors; the doc counters bump inside the doc job itself so
-    // `counters` (which drains the wave) never under-reports.
-    implicit val ec = materializeEc
-    val metricName = s"graft_docs_${safeName(name)}_$batchIndex"
-    // read from the PRE-checkpoint frame: the observe rides newDocs'
-    // own execution (triggered by the checkpoint); the checkpointed
-    // result is a fresh LogicalRDD with no observed metrics
-    def bumpDocCounters(): Unit =
-      observed(newDocs, metricName).foreach { r =>
+    // null-document tombstone. The new documents, the rootmap
+    // re-registrations and the kept documents are independent nodes, so
+    // assembly, path walks and the anti-join overlap. The doc counters
+    // ride the new documents' checkpoint as observe metrics, read from
+    // the PRE-checkpoint frame (the checkpointed result is a fresh
+    // LogicalRDD with no observed metrics).
+    val metricName = s"graft_docs_${safeName(name)}_$batch"
+    val changed = changedTable(tree)
+    val newDocs = node(changed, "rebuild", snapshots) { in =>
+      val (_, tables) = restrict(in)
+      val assembled = Denormalize.documents(tree, tables, keyFields,
+          maxChildrenPerEdge)
+        .select(col("__pk") +: col("doc_json") +:
+          (if (maxChildrenPerEdge.isDefined) Seq(col("__truncated")) else Nil): _*)
+      val truncCol =
+        if (maxChildrenPerEdge.isDefined) coalesce(col("__truncated"), lit(0L))
+        else lit(0L)
+      val nd = dirty.join(assembled, dirty("__rpk") === assembled("__pk"), "left_outer")
+        .select(col("__rpk").as("__pk"), col("doc_json"),
+          col("doc_json").isNull.as("__deleted"), truncCol.as("__tr"))
+        .observe(metricName,
+          count(lit(1)).as("n"),
+          sum(when(col("doc_json").isNull, 1L).otherwise(0L)).as("tomb"),
+          sum(col("__tr")).as("trunc"))
+        .drop("__tr")
+      val out = nd.graftCkptMem()
+      observed(nd, metricName).foreach { r =>
         val tomb = if (r.isNullAt(1)) 0L else r.getLong(1)
         bump("docs_written", r.getLong(0) - tomb)
         bump("docs_tombstoned", tomb)
         bump("docs_truncated", if (r.isNullAt(2)) 0L else r.getLong(2))
       }
-    val docsTable = s"docs__${safeName(name)}"
-    rootmapUpdates.foreach { case (id, df, d) =>
-      val table = s"rootmap__${safeName(id)}"
-      val thunk = matState(table, df, Some(d))
-      rootmapsF = rootmapsF.updated(id, submit(table)(thunk()))
+      out
     }
-    if (!backend.durable) {
-      val newDocsF = submit(s"$docsTable (new documents)") {
-        val nd = newDocs.graftCkptMem()
-        bumpDocCounters()
-        nd
-      }
-      val keptF = submit(s"$docsTable (kept documents)") {
-        kept.coalesce(statePartitions).graftCkptMem()
-      }
-      lastChangedF = lastChangedF.updated(name, newDocsF)
-      // Lazy union of the two checkpointed frames, composed once both
-      // land — same two-level lineage as before.
-      docStateF = docStateF.updated(name,
-        newDocsF.flatMap(nd => keptF.map(_.unionByName(nd))))
-    } else {
-      val docPairF = submit(docsTable) {
-        val nd = newDocs.graftCkptMem()
-        bumpDocCounters()
-        // change set: nd covers EVERY dirty root (tombstones are real
-        // rows), so (rows = nd, keys = dirty) upserts exactly
-        val full = bind(backend.persist(docsTable,
-          kept.unionByName(nd).coalesce(statePartitions),
-          Some((nd, dirtyPks))))
-        (nd, full)
-      }
-      lastChangedF = lastChangedF.updated(name, docPairF.map(_._1))
-      docStateF = docStateF.updated(name, docPairF.map(_._2))
-    }
+    state = state ++ rootmaps + (changed -> newDocs)
+
+    // Memory backend: the post-batch docs are the LAZY union of the two
+    // checkpointed frames — the lineage stays two levels deep forever
+    // because the next batch's kept side re-materializes it. Durable
+    // backend: the docs write follows the new documents' checkpoint and
+    // re-reads its blocks, so the assembly still runs once.
+    val docs = docsTable(tree)
+    val dirtyPks = dirty.withColumnRenamed("__rpk", "__pk")
+    state = state.updated(docs,
+      if (backend.durable)
+        node(docs, "rebuild", Seq(docs, changed)) { in =>
+          // change set: the new documents cover EVERY dirty root
+          // (tombstones are real rows), so (rows, keys = dirty) upserts
+          // exactly
+          val nd = in(changed)
+          bind(backend.persist(docs,
+            in(docs).join(dirtyPks, Seq("__pk"), "left_anti").unionByName(nd)
+              .coalesce(statePartitions),
+            Some((nd, dirtyPks))))
+        }
+      else {
+        val kept = node(docs, "kept documents", Seq(docs)) { in =>
+          in(docs).join(dirtyPks, Seq("__pk"), "left_anti")
+            .coalesce(statePartitions).graftCkptMem()
+        }
+        Waves.submit(s"batch $batch: union of $docs",
+          Map("kept" -> kept, "new" -> newDocs))(in => in("kept").unionByName(in("new")))
+      })
   }
 }
 
 object IncrementalDenormalizer {
-  /** Small daemon pool for concurrent state-table materialization —
-    * shared with [[IncrementalAggregate]] (see [[Waves]]). */
-  private def materializeEc: scala.concurrent.ExecutionContext = Waves.ec
-
   private val linkSchema = StructType(Seq(
     StructField("__cpk", BinaryType), StructField("__jk", BinaryType)))
   private val rootmapSchema = StructType(Seq(
@@ -930,7 +823,18 @@ object IncrementalDenormalizer {
   private val docSchema = StructType(Seq(
     StructField("__pk", BinaryType), StructField("doc_json", StringType),
     StructField("__deleted", BooleanType)))
+  private val dirtySchema = StructType(Seq(StructField("__rpk", BinaryType)))
 
   private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  private def safeName(s: String): String = s.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  // state table names (see IncrementalDenormalizer.stateTables)
+  private def snapshotTable(entity: String) = s"snapshot__$entity"
+  private def treeTable(kind: String, tree: String) = s"${kind}__${safeName(tree)}"
+  private def docsTable(tree: Relation) = treeTable("docs", tree.denormalizedName.get)
+  private def changedTable(tree: Relation) = treeTable("changed", tree.denormalizedName.get)
+  private def pendingMedTable(tree: Relation) = treeTable("pending_med", tree.denormalizedName.get)
+  private def pendingLowTable(tree: Relation) = treeTable("pending_low", tree.denormalizedName.get)
 }

@@ -264,21 +264,17 @@ object IncrementalAggregate {
     // the persist barrier is hidden behind the others (guide §2.6).
     val rows = cc.where(col("g_new").isNotNull)
       .select(col("k"), col("g_new").as("g"), col("v_new").as("v"))
-    implicit val ec = Waves.ec
-    val fLatest = scala.concurrent.Future {
+    val latest = Waves.submit("aggregate: persist of ivm_agg_latest") { _ =>
       backend.persist("ivm_agg_latest",
         state.latest.join(cc.select("k"), Seq("k"), "left_anti")
           .unionByName(rows),
         delta = Some((rows, cc.select("k"))))
     }
-    def awaitLatest(): DataFrame =
-      scala.concurrent.Await.result(fLatest,
-        scala.concurrent.duration.Duration.Inf)
     // A failed merge waits for the persist before it rethrows (the
     // persist's own failure aside): no persist outlives its call, and a
     // retried batch never persists beside a stray one.
-    try mergeRollup(state, cc, () => awaitLatest())
-    catch { case NonFatal(e) => scala.util.Try(awaitLatest()); throw e }
+    try mergeRollup(state, cc, () => Waves.await(latest))
+    catch { case NonFatal(e) => scala.util.Try(Waves.await(latest)); throw e }
   }
 
   /** The rollup half of [[applyBatch]], run while the latest-state

@@ -45,9 +45,11 @@ object StreamRunner {
     * receives (tree name, changed docs: __pk/doc_json/__deleted,
     * micro-batch id); a null doc_json row is a tombstone. The batch id
     * is stable across a foreachBatch REPLAY (failure between sink
-    * write and checkpoint commit), so sinks can be idempotent per
-    * batch — the reference's at-least-once + upsert-by-PK contract
-    * (Southpaw.java:297-315). */
+    * write and checkpoint commit), so a sink can key its writes per
+    * batch. A replay does not always emit what the original emitted: over
+    * a durable backend that already committed the batch, the replay's
+    * fold finds nothing changed for a moved child's OLD parent, so that
+    * root's update is missing from the replay (ROADMAP direction 1). */
   type DocSink = (String, org.apache.spark.sql.DataFrame, Long) => Unit
 
   object DocSinks {
@@ -59,8 +61,10 @@ object StreamRunner {
     val noop: DocSink = (_, _, _) => ()
     /** Changed docs as parquet, one dir per tree, one OVERWRITTEN
       * partition dir per micro-batch: a replayed batch rewrites its own
-      * `batch_id=<n>` dir instead of appending duplicates, so the sink
-      * output is idempotent under at-least-once foreachBatch delivery.
+      * `batch_id=<n>` dir instead of appending duplicates. That is not
+      * idempotent after a durable commit: the replay can omit a moved
+      * child's old parent (see [[DocSink]]), and the overwrite then drops
+      * that root's update (ROADMAP direction 1).
       * `spark.read.parquet(root/tree)` sees all batches (batch_id is a
       * discovered partition column). */
     def parquet(root: String): DocSink = (name, docs, batchId) =>

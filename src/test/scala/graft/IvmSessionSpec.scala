@@ -131,6 +131,33 @@ class IvmSessionSpec extends SparkSpec {
     }
   }
 
+  test("queued batches' rebuild persists carry their own batch's job group") {
+    // no drain between batches: batch i's rebuild nodes may start after
+    // batch i+1 has, dispatched by the pool thread that finished their
+    // inputs, and must still carry batch i's group
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val recording = new StateBackend {
+      val durable = false
+      def persist(name: String, df: DataFrame): DataFrame = {
+        if (name.startsWith("rootmap__")) groups.add(sc.getLocalProperty("spark.jobGroup.id"))
+        StateBackend.Memory.persist(name, df)
+      }
+    }
+    val batches = (1 to 4).map(batch)
+    val engine = newEngine(recording)
+    try {
+      batches.zipWithIndex.foreach { case (b, i) =>
+        sc.setJobGroup(s"ivm-batch-${i + 1}", s"batch = ${i + 1}")
+        engine.processBatch(b)
+      }
+      sc.clearJobGroup()
+      engine.counters
+      // one edge, so one rootmap persist per rebuild, in batch order
+      assert(groups.asScala.toSeq == (1 to 4).map(i => s"ivm-batch-$i"))
+    } finally sc.clearJobGroup()
+  }
+
   test("an async rebuild failure names its state table and batch") {
     // the second rootmap persist (batch 2's rebuild) fails in the pool;
     // the next call that awaits it must say where it came from

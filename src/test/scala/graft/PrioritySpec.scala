@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.Relation
-import graft.streaming.{IncrementalDenormalizer, QueueingStrategy}
+import graft.streaming.{BucketedParquetBackend, IncrementalDenormalizer, QueueingStrategy}
 
 /** Priority drain semantics (reference Southpaw.java:600-637): HIGH
   * rebuilds ride the same batch, MEDIUM defers until a row-count
@@ -46,6 +46,34 @@ class PrioritySpec extends SparkSpec {
     // from CURRENT state (staleness, not loss)
     engine.processBatch(Map.empty)
     assert(liveDocs(engine, "Cold") == 1)
+  }
+
+  test("a LOW drain commits the emptied backlog on the durable backend") {
+    val root = "file://" + java.nio.file.Files.createTempDirectory("graft-drain")
+    def engine(b: BucketedParquetBackend) = new IncrementalDenormalizer(spark,
+      Seq(Relation.root("Hot", "item"), Relation.root("Cold", "item")),
+      Map("item" -> Seq("id")), Map("item" -> valueSchema),
+      strategy = prio((name, _) =>
+        if (name == "Hot") QueueingStrategy.High else QueueingStrategy.Low),
+      lowDrainEvery = 2, backend = b)
+    val first = new BucketedParquetBackend(spark, root, buckets = 2)
+    val second = new BucketedParquetBackend(spark, root, buckets = 2)
+    try {
+      val e1 = engine(first)
+      e1.processBatch(Map("item" -> changelog(Seq((1L, 1L, 10L))))) // commit 1
+      e1.processBatch(Map.empty) // commit 2: the drain batch
+      assert(liveDocs(e1, "Cold") == 1)
+      assert(BucketedParquetBackend.asOf(spark, root, 1)("pending_low__Cold").count() == 1)
+      assert(BucketedParquetBackend.asOf(spark, root, 2)("pending_low__Cold").count() == 0)
+      // a restart after the drain's commit does not drain root 1 again
+      val e2 = engine(second)
+      e2.loadStateTables(second.recover())
+      e2.processBatch(Map.empty)
+      e2.processBatch(Map.empty) // the recovered engine's first drain
+      assert(e2.counters("docs_written") == 0L)
+      assert(e2.changedDocs("Cold").isEmpty)
+      assert(liveDocs(e2, "Cold") == 1)
+    } finally { second.deleteAll(); first.deleteAll() }
   }
 
   test("MEDIUM defers until the row-count trigger") {
