@@ -10,8 +10,16 @@ checkpoint scan. They come from Spark's event log
 (`SparkListenerSQLExecutionStart`) and are compared as a sorted list,
 because concurrent waves run in any order.
 
+The same event log gives the storage level of every persisted RDD (each
+`SparkListenerStageSubmitted` event's `RDD Info` → `Storage Level`), so
+a checkpoint or cache whose level changed shows up as well. Per query,
+each RDD counts once, at the level other than NONE it was seen with,
+and the two sides' sorted lists of levels are compared.
+
 Normalized: expression ids (`#123`, `#123L`), plan ids (`[plan_id=7]`),
-RDD ids (`MapPartitionsRDD[42]`), JVM lambda / object hash names, the
+RDD ids (`MapPartitionsRDD[42]`), RDD call sites (`at localCheckpoint at
+Dedup.scala:797`, a source line that any edit above it moves), JVM
+lambda / object hash names, the
 random suffix of temp directories (`graft_q_incr_durable8841…`) and the
 durable backend's catalog tables (`graft_state_<instance>_<seq>`, whose
 sequence follows the order in which concurrent persists run). Any other
@@ -32,6 +40,8 @@ NORMALIZE = [
     (re.compile(r"#\d+L?"), "#"),
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id]"),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"(RDD\[\] at [\w$]+) at [\w$.-]+\.(?:scala|java):\d+"),
+     r"\1 at <site>"),
     (re.compile(r"\$\$Lambda[\w$/.]*(@[0-9a-f]+)?"), "$$Lambda"),
     (re.compile(r"@[0-9a-f]{6,}\b"), "@"),
     # Files.createTempDirectory(prefix) appends a random unsigned long
@@ -64,9 +74,25 @@ def run_explain(root, sfdir, query, logdir):
     return out.stdout
 
 
+def level_name(sl):
+    """A Spark `StorageLevel` name (MEMORY_AND_DISK, DISK_ONLY_2, ...) from
+    its event-log JSON fields."""
+    disk, mem = sl.get("Use Disk", False), sl.get("Use Memory", False)
+    if sl.get("Use Off Heap", False):
+        return "OFF_HEAP"
+    if not (disk or mem):
+        return "NONE"
+    name = "MEMORY_AND_DISK" if disk and mem else "MEMORY_ONLY" if mem else "DISK_ONLY"
+    if mem and not sl.get("Deserialized", False):
+        name += "_SER"
+    replication = sl.get("Replication", 1)
+    return name + (f"_{replication}" if replication != 1 else "")
+
+
 def executed(logdir):
-    """The physical plan of every SQL execution in the event log."""
-    found = []
+    """The physical plan of every SQL execution in the event log, and the
+    storage level of every RDD a stage ran with one other than NONE."""
+    found, levels = [], {}
     # Spark 4 may write a rolling `eventlog_v2_<app>/` directory
     for path in glob.glob(os.path.join(logdir, "**"), recursive=True):
         if not os.path.isfile(path) or path.endswith(".crc"):
@@ -76,24 +102,33 @@ def executed(logdir):
                 ev = json.loads(line)
                 if ev.get("Event", "").endswith("SQLExecutionStart"):
                     found.append(ev["physicalPlanDescription"])
-    return found
+                elif ev.get("Event") == "SparkListenerStageSubmitted":
+                    for rdd in ev["Stage Info"].get("RDD Info", []):
+                        name = level_name(rdd.get("Storage Level", {}))
+                        if name != "NONE":
+                            levels[rdd["RDD ID"]] = name
+    return found, sorted(levels.values())
 
 
 def plans(root, sfdir, queries):
     """Per query, on the classes under `root`: the returned frame's plan,
-    then the executed plans, sorted. Normalized, one line per entry."""
+    the executed plans, sorted, then the persisted RDDs' storage levels,
+    sorted. Normalized, one line per entry."""
     lines = []
     for q in queries:
         logdir = tempfile.mkdtemp(prefix="plan_diff_events_")
         try:
             returned = normalize(run_explain(root, sfdir, q, logdir))
-            ran = sorted(normalize(p) for p in executed(logdir))
+            ran, levels = executed(logdir)
+            ran = sorted(normalize(p) for p in ran)
         finally:
             shutil.rmtree(logdir, ignore_errors=True)
         lines += returned.splitlines()
         lines.append(f"---------- {q}: {len(ran)} executed plans ----------")
         for plan in ran:
             lines += plan.splitlines() + [""]
+        lines.append(f"---------- {q}: {len(levels)} persisted RDDs ----------")
+        lines += levels
     return lines
 
 
@@ -117,7 +152,7 @@ def main():
         print("\n".join(diff))
         print(f"\nplans differ ({len(diff)} diff lines)")
         sys.exit(1)
-    print(f"plans identical for {len(args.queries)} queries "
+    print(f"plans and storage levels identical for {len(args.queries)} queries "
           f"({len(head)} lines)")
 
 

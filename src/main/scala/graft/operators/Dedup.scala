@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.BloomBridge
 import org.apache.spark.sql.types._
-import graft.core.Ckpt.CkptOps
 import graft.functions.{BitmapExpr, SortedIntersectExpr}
 
 /** Deduplication operators for training-data pipelines: exact hashing,
@@ -102,7 +101,7 @@ object Dedup {
       // variant pipeline twice (broadcast build + probe side), and its
       // Generate stage pays a fresh whole-stage-codegen compile each
       // time (measured 3.2 s cold vs 0.4 s warm at sf0.1)
-      .graftCkptMem()
+      .localCheckpoint()
     val a = v.select(col("id").as("id_a"), col("s").as("s_a"),
       col("i").as("i_a"), col("variant"))
     val b = v.select(col("id").as("id_b"), col("s").as("s_b"),
@@ -158,7 +157,7 @@ object Dedup {
     val v = rows
       .select(col(strCol).as("s")).where(col("s").isNotNull).distinct()
       .withColumn("blk", substring(col("s"), 1, 1))
-      .graftCkptMem() // catalog is small and probed twice
+      .localCheckpoint() // catalog is small and probed twice
     val a = v.select(col("blk"), col("s").as("s_a"))
     val b = v.select(col("blk"), col("s").as("s_b"))
     a.join(b, "blk")
@@ -202,13 +201,13 @@ object Dedup {
     // size estimate for a lazy explode mis-plans the downstream joins.
     val g = gramArrs0
       .select(col(idCol).as("id"), explode(col("grams")).as("gram"))
-      .graftCkptMem()
+      .localCheckpoint()
     val dfs = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     val bound = jaccardBound(tauNum, tauDen)
     // The dense tiers read a CHECKPOINTED df table; the prefix path
     // keeps the lazy aggregate (DEDUP_ROUTER.md, "Lazy df table").
     if (denseUniverseMax > 0 && tauNum > 0) {
-      val dfsCp = dfs.graftCkptMem()
+      val dfsCp = dfs.localCheckpoint()
       val universe = dfsCp.count()
       if (universe <= denseUniverseMax) {
         val nDocs = g.select("id").distinct().count()
@@ -311,9 +310,9 @@ object Dedup {
         "tau = 0 would silently diverge between the dense branches")
     val g = gramArrs0
       .select(col(idCol).as("id"), explode(col("grams")).as("gram"))
-      .graftCkptMem()
+      .localCheckpoint()
     val dfs = g.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .graftCkptMem()
+      .localCheckpoint()
     val bound = containmentBound(tauNum, tauDen)
     if (denseUniverseMax > 0) {
       val universe = dfs.count()
@@ -372,7 +371,7 @@ object Dedup {
         slice(sort_array(col("gs")), lit(1),
           (n - floor((n * tauNum + (tauDen - 1)) / tauDen) + 1).cast(IntegerType))
           .getField("gram").as("pfx"))
-      .graftCkptMem()
+      .localCheckpoint()
   }
 
   /** Gram-connected components over the doc↔gram graph: each gram
@@ -391,7 +390,7 @@ object Dedup {
       .select(col("id").as("doc_a"), col("rep").as("doc_b"))
       .distinct()
     connectedComponents(compEdges, "doc_a", "doc_b")
-      .select(col("id"), col("component")).graftCkptMem()
+      .select(col("id"), col("component")).localCheckpoint()
   }
 
   /** Dictionary sizes up to this use the bitmap representation
@@ -462,12 +461,12 @@ object Dedup {
         val docs = byDoc.agg(collect_list(col("gid")).as("gids"))
           .select(col("id"), n,
             BitmapExpr.bitmapBuild(col("gids"), ((u + 63) / 64).toInt).as("bm"))
-          .graftCkptMem()
+          .localCheckpoint()
         DocSets(docs, "bm", "bma", "bmb", BitmapExpr.bitmapAndCount)
       case None =>
         val docs = byDoc.agg(sort_array(collect_list(col("gid"))).as("gids"))
           .select(col("id"), n, col("gids"))
-          .graftCkptMem()
+          .localCheckpoint()
         DocSets(docs, "gids", "ga", "gb", SortedIntersectExpr.sortedIntersectCount)
     }
   }
@@ -541,7 +540,7 @@ object Dedup {
       case Blocked(comp) =>
         // docs absent from the component map share no gram with anyone
         // — they can produce no pairs and drop out here by construction
-        val bc = sets.docs.join(comp, "id").graftCkptMem()
+        val bc = sets.docs.join(comp, "id").localCheckpoint()
         val s = math.max(4, bc.sparkSession.sparkContext.defaultParallelism / 4)
         val a = bc.select(col("component") +:
           pmod(col("id"), lit(s)).as("__salt") +: aCols: _*)
@@ -596,7 +595,7 @@ object Dedup {
     // upstream exist precisely to make them few) but their plan is the
     // expensive half of the query — every reuse below must NOT
     // re-derive it.
-    val c = cands.graftCkptMem()
+    val c = cands.localCheckpoint()
     // Restrict each gram side to docs that actually appear in a
     // candidate pair BEFORE the intersection join: the candidate id
     // sets are tiny relative to the corpus (AQE broadcasts them), so
@@ -701,7 +700,7 @@ object Dedup {
     // the verification join — materialize the compact array form once
     // (localCheckpoint: lineage-truncating block reuse) instead of
     // re-deriving it from text 4×.
-    val gramArrs = gramArrs0.graftCkptMem()
+    val gramArrs = gramArrs0.localCheckpoint()
     // Counter-experiment (r16 optimization round, kept for the
     // record): checkpointing `banded` before the self-join looks like
     // an obvious §2.4 share — both join sides re-derive the signature
@@ -795,7 +794,7 @@ object Dedup {
         .where(col("k") > 1).select(lit(1).as("bad"))
       childAndParent.union(multiParent).isEmpty
     }
-    var e = canon(edges0).graftCkptMem()
+    var e = canon(edges0).localCheckpoint()
     // The checkpoint just materialized the canonical edge set, so this
     // count reads cached blocks — and it buys the adaptive choice
     // below PLUS replaces the initial isEmpty probe.
@@ -837,7 +836,7 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins2.select(col("u"), col("m").as("v")))
         .distinct()
-        .graftCkptMem()
+        .localCheckpoint()
       converged = isStarForest(e)
       iter += 1
     }

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Ckpt.CkptOps
 
 /** Iterative graph analytics as repeated co-partitioned joins — the
   * one distributed-compute shape (fixed-point iteration) the rest of
@@ -38,18 +37,18 @@ object GraphOps {
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
-      .graftCkptMem()
+      .localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .graftCkptMem()
+      .localCheckpoint()
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // The edge⋈degree join is LOOP-INVARIANT: hoist it out and
     // materialize once, so each iteration pays one join (ranks) instead
     // of two (guide §2.4 — remove repeated shuffles outright; the
     // degree column is 8 bytes against an edge row already shuffled
     // every round). Same integer arithmetic, same results.
-    val eDeg = e.join(deg, "src").graftCkptMem()
+    val eDeg = e.join(deg, "src").localCheckpoint()
     val n = nodes.count()
     require(n > 0, "pageRank needs a non-empty graph")
     val base = ((15L * massPpt) / 100L) / n
@@ -63,7 +62,7 @@ object GraphOps {
         .join(inbound, col("node") === col("dst"), "left_outer")
         .select(col("node"),
           (lit(base) + expr("(85 * coalesce(m, 0L)) div 100")).as("r"))
-        .graftCkptMem()
+        .localCheckpoint()
     }
     ranks.select(col("node"), col("r").as("rank_ppt"))
   }
@@ -85,14 +84,14 @@ object GraphOps {
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
-      .graftCkptMem()
+      .localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .graftCkptMem()
+      .localCheckpoint()
     val seedSet = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .join(nodes, "node", "left_semi")
-      .graftCkptMem()
+      .localCheckpoint()
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // Both loop-invariant joins hoist out of the iteration (guide
     // §2.4): the edge⋈degree join materializes once, and the per-node
@@ -102,7 +101,7 @@ object GraphOps {
     // one join (ranks) + one aggregate + the rank rebuild join, the
     // same count as [[pageRank]]. Same integer arithmetic, same
     // results.
-    val eDeg = e.join(deg, "src").graftCkptMem()
+    val eDeg = e.join(deg, "src").localCheckpoint()
     val ns = seedSet.count()
     require(ns > 0, "personalizedPageRank needs >= 1 seed present in the graph")
     val base = ((15L * massPpt) / 100L) / ns
@@ -110,7 +109,7 @@ object GraphOps {
     val nodeBase = nodes
       .join(seeded, Seq("node"), "left_outer")
       .select(col("node"), col("__seed").isNotNull.as("__is_seed"))
-      .graftCkptMem()
+      .localCheckpoint()
     var ranks = nodeBase
       .select(col("node"),
         when(col("__is_seed"), lit(massPpt / ns)).otherwise(lit(0L)).as("r"))
@@ -124,7 +123,7 @@ object GraphOps {
         .select(col("node"),
           (when(col("__is_seed"), lit(base)).otherwise(lit(0L)) +
             expr("(85 * coalesce(m, 0L)) div 100")).as("r"))
-        .graftCkptMem()
+        .localCheckpoint()
     }
     ranks.select(col("node"), col("r").as("rank_ppt"))
   }
@@ -161,7 +160,7 @@ object GraphOps {
       .distinct()
     val neigh = und.select(col("a").as("v"), col("b").as("u"))
       .unionAll(und.select(col("b").as("v"), col("a").as("u")))
-      .graftCkptMem()
+      .localCheckpoint()
     var labels = neigh.select(col("v")).distinct()
       .select(col("v"), col("v").as("lbl"))
     for (_ <- 1 to iters) {
@@ -171,7 +170,7 @@ object GraphOps {
         .groupBy("v")
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("m"))
         .select(col("v"), col("m.l").as("lbl"))
-        .graftCkptMem()
+        .localCheckpoint()
     }
     labels.select(col("v").as("node"), col("lbl").as("label"))
   }
@@ -204,7 +203,7 @@ object GraphOps {
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct()
-      .graftCkptMem()
+      .localCheckpoint()
     val deg = und.select(col("a").as("n"))
       .unionAll(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -217,7 +216,7 @@ object GraphOps {
           struct(col("a").as("u"), col("b").as("v")))
           .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .graftCkptMem()
+      .localCheckpoint()
     val path = o.select(col("u").as("x"), col("v").as("y"))
       .join(o.select(col("u").as("y"), col("v").as("z")), "y")
     val tris = path.join(
@@ -256,18 +255,18 @@ object GraphOps {
       .distinct()
     val e = und.select(col("a").as("u"), col("b").as("v"))
       .unionAll(und.select(col("b").as("u"), col("a").as("v")))
-      .graftCkptMem()
+      .localCheckpoint()
     var dist = sources
       .select(col(sourceCol).cast("long").as("node")).distinct()
       .select(col("node"), lit(0L).as("d"))
-      .graftCkptMem()
+      .localCheckpoint()
     for (_ <- 1 to rounds) {
       val relaxed = e
         .join(dist.select(col("node").as("u"), col("d")), "u")
         .select(col("v").as("node"), (col("d") + 1L).as("d"))
       dist = dist.unionAll(relaxed)
         .groupBy("node").agg(min(col("d")).as("d"))
-        .graftCkptMem()
+        .localCheckpoint()
     }
     dist.select(col("node"), col("d").as("dist"))
   }
@@ -304,7 +303,7 @@ object GraphOps {
       .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .distinct()
-      .graftCkptMem()
+      .localCheckpoint()
     for (_ <- 1 to rounds) {
       val keep = e.select(col("a").as("n"))
         .unionAll(e.select(col("b").as("n")))
@@ -313,7 +312,7 @@ object GraphOps {
       e = e
         .join(keep.select(col("n").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("n").as("b")), Seq("b"), "left_semi")
-        .graftCkptMem()
+        .localCheckpoint()
     }
     e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("core_deg"))

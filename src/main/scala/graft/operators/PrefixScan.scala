@@ -89,12 +89,11 @@ object PrefixScan {
       outCol: String,
       partitions: Int): DataFrame = {
     require(partitions > 0, s"partitions must be positive: $partitions")
-    // pin the sampled ranges (graftCkptMem): the carry join and the
+    // pin the sampled ranges (localCheckpoint): the carry join and the
     // in-bucket window must see the SAME bucket assignment — a
     // re-executed range sampling could split differently per consumer
-    val bucketed = graft.core.Ckpt.mem(
-      df.repartitionByRange(partitions, col(orderCol))
-        .withColumn("__pb", spark_partition_id().cast("long")))
+    val bucketed = df.repartitionByRange(partitions, col(orderCol))
+      .withColumn("__pb", spark_partition_id().cast("long")).localCheckpoint()
     val carry = bucketed.groupBy("__pb").agg(sum(col(valueCol)).as("__bs"))
       .withColumn("__carry", coalesce(sum(col("__bs")).over(
         Window.orderBy(col("__pb"))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.TopKByScore
-import graft.core.Ckpt.CkptOps
 import graft.core.Spread.SpreadOps
 
 /** Similarity search over embedding columns (`array<float>`).
@@ -200,7 +199,7 @@ object Similarity {
     val keys = src
       .select(col("nid"),
         explode(lshBandKeys(col("vec"), dim, bands, rowsPerBand)).as("__bk"))
-      .graftCkptMem()
+      .localCheckpoint()
     // Candidates dedup as BARE id pairs (a pair can collide in several
     // bands) while rows are 16 bytes; the vectors join back in only
     // for the verify, once per unique pair. Measured at sf0.1: the

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Ckpt.CkptOps
 import graft.core.Spread.SpreadOps
 import graft.functions.TopKByScore
 
@@ -117,7 +116,7 @@ object TextAnalysis {
     // (group, hash) and shuffles one buffer per DISTINCT hash: the
     // exact wide shuffle the sketch exists to avoid. Verify-SF only.
     val src =
-      if (withExact) rows.select(col(groupCol), col(keyCol)).graftCkptMem()
+      if (withExact) rows.select(col(groupCol), col(keyCol)).localCheckpoint()
       else rows
     val sketch = kmvSketch(src, groupCol, keyCol, k)
       .withColumn("kmv_distinct",
@@ -301,7 +300,7 @@ object TextAnalysis {
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .graftCkptMem()
+      .localCheckpoint()
     val ctf = tf.groupBy("term").agg(sum(col("tf")).as("ctf"))
     val tot = tf.agg(sum(col("tf")).as("tot"))
     val logp = ctf.crossJoin(broadcast(tot))
@@ -353,10 +352,10 @@ object TextAnalysis {
       .select(col(idCol), explode(bigrams(tokens(col(textCol)))).as("bg"))
       .groupBy(col(idCol), col("bg"))
       .agg(count(lit(1)).as("tf"))
-      .graftCkptMem()
+      .localCheckpoint()
     val cbg = bg.groupBy("bg").agg(sum(col("tf")).as("cbg"))
       .withColumn("w1", split(col("bg"), " ").getItem(0))
-      .graftCkptMem()
+      .localCheckpoint()
     val ctx = cbg.groupBy("w1").agg(sum(col("cbg")).as("cw1"))
     val vocab = cbg.select(col("w1").as("t"))
       .union(cbg.select(split(col("bg"), " ").getItem(1).as("t")))
@@ -409,7 +408,7 @@ object TextAnalysis {
       .groupBy("bg").agg(count(lit(1)).as("a"))
       .withColumn("w1", split(col("bg"), " ").getItem(0))
       .withColumn("w2", split(col("bg"), " ").getItem(1))
-      .graftCkptMem()
+      .localCheckpoint()
     val rowM = bgc.groupBy("w1").agg(sum(col("a")).as("ra"))
     val colM = bgc.groupBy("w2").agg(sum(col("a")).as("cb"))
     val tot = bgc.agg(sum(col("a")).as("nn"))
@@ -461,7 +460,7 @@ object TextAnalysis {
           lit("[a-z0-9]"), lit(0))).as("ch"))
       .groupBy(col(idCol), col("ch"))
       .agg(count(lit(1)).as("cnt"))
-      .graftCkptMem()
+      .localCheckpoint()
     val lens = cnts.groupBy(idCol).agg(sum(col("cnt")).as("len"))
     cnts.join(lens, idCol)
       .groupBy(col(idCol), col("len"))
@@ -533,7 +532,7 @@ object TextAnalysis {
       .select(col(srcCol), explode(tokens(col(textCol))).as("term"))
       .groupBy(col(srcCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .graftCkptMem()
+      .localCheckpoint()
     val ctf = tf.groupBy("term").agg(sum(col("tf")).as("ctf"))
     val totS = tf.groupBy(col(srcCol)).agg(sum(col("tf")).as("tot_s"))
     val tot = tf.agg(sum(col("tf")).as("tot"))
@@ -582,7 +581,7 @@ object TextAnalysis {
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .graftCkptMem()
+      .localCheckpoint()
     val dfs = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).as("n"))
     tf.join(dfs, "term")
@@ -633,7 +632,7 @@ object TextAnalysis {
           terms.map(tm =>
             size(filter(col("__t"), x => x === lit(tm)))
               .cast(LongType).as(s"tf_$tm"))): _*)
-      .graftCkptMem()
+      .localCheckpoint()
     val stats = t.agg(
       count(lit(1)).as("n_docs"),
       (sum(col("dl")).as("tot") +:

@@ -11,18 +11,24 @@ import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Partition-aligned union: concatenates two relations that are both
   * hash-clustered on the same key into the same partition count,
-  * WITHOUT destroying the clustering the way `Union` does.
+  * WITHOUT losing the clustering the way `Union` can.
   *
-  * Spark's `UnionExec` emits left partitions followed by right
-  * partitions (2N partitions, each key living in two of them), so its
-  * output partitioning is unknown and every keyed join/aggregation
-  * over a union re-shuffles BOTH inputs. For the durable state
-  * backend's delta-chained tables (base generation ∪ delta rows, both bucketed
-  * by the state key) that re-shuffle is exactly the cost the bucket
-  * layout exists to avoid: the reference's RocksDB state stays
-  * key-indexed after WriteBatch puts (reference
-  * state/RocksDBState.java:570-636), and a delta-composed parquet
-  * state table should too.
+  * Since Spark 4.1 (`spark.sql.unionOutputPartitioning`, default on)
+  * `UnionExec` reports its children's common hash partitioning and
+  * zips them, so a keyed aggregate over a plain union plans no
+  * Exchange. It stops at a filter that makes the key non-nullable,
+  * such as the `IsNotNull` an inner join infers: each child's output
+  * key is then non-nullable while its partitioning still names the
+  * scan's nullable key, the union's match fails, its partitioning is
+  * unknown, and the join re-shuffles BOTH sides (BucketingSpec pins
+  * this; when Spark keeps the layout there, this node can go).
+  *
+  * For the durable state backend's delta-chained tables (base
+  * generation ∪ delta rows, both bucketed by the state key) that
+  * re-shuffle is exactly the cost the bucket layout exists to avoid:
+  * the reference's RocksDB state stays key-indexed after WriteBatch
+  * puts (reference state/RocksDBState.java:570-636), and a
+  * delta-composed parquet state table should too.
   *
   * This node instead ZIPS partition i of the left with partition i of
   * the right. Both children are required to be clustered on `keyName`

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Ckpt, QueryDef, Relation, Tables}
+import graft.core.{QueryDef, Relation, Tables}
 import graft.operators.Temporal
 import graft.streaming.{BucketedParquetBackend, IncrementalDenormalizer}
 
@@ -55,9 +55,9 @@ object Cdc {
       col("o_totalprice").cast(dec).as("v"))
     val loW = Window.partitionBy("g").orderBy(col("v"), col("k"))
     val hiW = Window.partitionBy("g").orderBy(col("v").desc, col("k"))
-    val ranked = Ckpt.mem(base
+    val ranked = base
       .withColumn("rn_lo", row_number().over(loW))
-      .withColumn("rn_hi", row_number().over(hiW)))
+      .withColumn("rn_hi", row_number().over(hiW)).localCheckpoint()
     val nullTomb = (rows: DataFrame, off: Column) => rows.select(
       col("k"), off.as("offset"),
       lit(null).cast(StringType).as("g"), lit(null).cast(dec).as("v"))
@@ -281,11 +281,11 @@ object Cdc {
         lit(null).cast(o.schema).as("value"))
       e2.processBatch(Map("orders" -> tomb))
       // materialize off the state tables, then drop the temp state root
-      val out = Ckpt.mem(e2.docs("DenormalizedOrder").where(!col("__deleted"))
+      val out = e2.docs("DenormalizedOrder").where(!col("__deleted"))
         .select(
           get_json_object(col("doc_json"), "$.Record.o_orderkey").cast(LongType).as("o_orderkey"),
           get_json_object(col("doc_json"), "$.Children.customer[0].Record.c_name").as("c_name"))
-        .orderBy("o_orderkey"))
+        .orderBy("o_orderkey").localCheckpoint()
       b2.deleteAll(); b1.deleteAll()
       out
     },
@@ -369,7 +369,7 @@ object Cdc {
       // finally: a mid-replay failure must not leak the temp state
       // root or the session's graft_state_* catalog tables (which
       // would also trip the leak-check gate confusingly)
-      try Ckpt.mem(minmaxReplay(spark, dir, b))
+      try minmaxReplay(spark, dir, b).localCheckpoint()
       finally b.deleteAll()
     },
 
@@ -725,11 +725,10 @@ object Cdc {
       val g1 = BucketedParquetBackend.asOf(spark, root, 1L)("user_state")
       val cur = BucketedParquetBackend
         .asOf(spark, root, Long.MaxValue)("user_state")
-      val out = Ckpt.mem(
-        g1.select(lit(1).as("gen"), col("user_id"), col("event_type"))
-          .unionByName(cur.select(lit(2).as("gen"), col("user_id"),
-            col("event_type")))
-          .orderBy("gen", "user_id"))
+      val out = g1.select(lit(1).as("gen"), col("user_id"), col("event_type"))
+        .unionByName(cur.select(lit(2).as("gen"), col("user_id"),
+          col("event_type")))
+        .orderBy("gen", "user_id").localCheckpoint()
       b.deleteAll()
       out
     },
@@ -1989,7 +1988,7 @@ object Cdc {
       val trans = Temporal.transitions(t(spark, dir)("events"),
           "user_id", "ts", "event_id", "event_type")
         .select(col("from_state"), col("to_state"), col("cnt"))
-      val transCp = Ckpt.mem(trans)
+      val transCp = trans.localCheckpoint()
       val tot = transCp.groupBy("from_state").agg(sum(col("cnt")).as("t"))
       val m = transCp.join(tot, Seq("from_state"))
       val states = transCp.select(col("from_state").as("state")).distinct()

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{QueryDef, Relation, Tables}
-import graft.core.Ckpt.CkptOps
 import graft.functions.CanonicalKey.canonicalPk
 import graft.operators.{Denormalize, Filters}
 
@@ -871,7 +870,7 @@ object Relational {
       // (the before-plan carried 17 Exchanges; guide §2.4).
       val ends = m.select(col("u").as("node"), col("v").as("other"))
         .unionByName(m.select(col("v").as("node"), col("u").as("other")))
-        .graftCkptMem()
+        .localCheckpoint()
       val deg = ends.groupBy("node").agg(count(lit(1)).as("d"))
       val p = ends
         .join(deg.select(col("node"), col("d").as("x")), Seq("node"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
-import graft.core.{Ckpt, QueryDef, Tables}
+import graft.core.{QueryDef, Tables}
 import graft.streaming.{EventTime, StreamingDedup, TwsAnomaly, TwsAttribution, TwsCompaction, TwsFunnel, TwsKmv, TwsScd2, TwsSessions, TwsSourceStats, TwsTopK}
 
 /** Queries that execute a REAL Structured Streaming pipeline —
@@ -78,7 +78,7 @@ object Streams {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val out = Ckpt.mem(spark.table(name))
+      val out = spark.table(name).localCheckpoint()
       spark.catalog.dropTempView(name)
       out
     } finally {

@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{QueryDef, Tables}
-import graft.core.Ckpt.CkptOps
-import graft.core.Hints.HintOps
 import graft.core.Spread.SpreadOps
 import graft.operators.{Dedup, Multimodal, TextAnalysis, TrainingData}
 
@@ -227,7 +225,7 @@ object Text {
       val sets = TextAnalysis.gramArrays(docs(spark, dir), "source", "text", 5)
         .select(col("source"), explode(col("grams")).as("gram"))
         .groupBy("gram").agg(collect_set(col("source")).as("srcs"))
-        .graftCkptMem()
+        .localCheckpoint()
       val tot = sets.select(explode(col("srcs")).as("source"))
         .groupBy("source").agg(count(lit(1)).as("n"))
       val pairs = sets
@@ -540,7 +538,7 @@ object Text {
       val d = docs(spark, dir)
       val scores = TextAnalysis.lmScore(d, "doc_id", "text")
         .join(d.select("doc_id", "source"), "doc_id")
-        .graftCkptMem()
+        .localCheckpoint()
       val med = scores.groupBy("source")
         .agg(round(expr("percentile(nll, 0.5)"), 6).as("med"))
       scores.join(broadcast(med), "source")
@@ -929,7 +927,7 @@ object Text {
         .graftSpread()
         .select(col("doc_id"),
           explode(array_distinct(TextAnalysis.tokens(col("text")))).as("w"))
-        .graftCkptMem()
+        .localCheckpoint()
       val nDocs = toks.select(countDistinct(col("doc_id")).as("n_docs"))
       val marg = toks.groupBy("w").agg(count(lit(1)).as("nw"))
       // The output threshold n_ab >= 5 implies BOTH marginals >= 5
@@ -1000,7 +998,7 @@ object Text {
           .graftSpread()
           .select(col("doc_id"),
             explode(array_distinct(TextAnalysis.tokens(col("text")))).as("w"))
-          .graftCkptMem()
+          .localCheckpoint()
         val nDocs = toks.select(countDistinct(col("doc_id")).as("n_docs"))
         val marg = toks.groupBy("w").agg(count(lit(1)).as("nw"))
         // same sub-threshold-tail prune as q_cooccur: df < 5 can never
@@ -1257,7 +1255,7 @@ object Text {
       // from ct (every (c, term) group exists in trt, so distinct
       // terms are identical) instead of re-tokenizing the train split.
       val ct = trt.groupBy("c", "term").agg(count(lit(1)).as("cnt"))
-        .graftCkptMem()
+        .localCheckpoint()
       val cstat = ct.groupBy("c").agg(sum(col("cnt")).as("tok"))
       val nd = tr.groupBy(col("source").as("c"))
         .agg(count(lit(1)).as("ndc"))
@@ -1268,7 +1266,7 @@ object Text {
       val tf = te.graftSpread().select(col("doc_id"),
           explode(TextAnalysis.tokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .graftCkptMem()
+        .localCheckpoint()
       val dls = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
       val sums = tf.join(ct, Seq("term"))
         .groupBy("doc_id", "c")
@@ -1440,10 +1438,9 @@ object Text {
     // machinery of q_dup_clusters; the anti-join keeps the corpus on
     // the big side and the DROP list (non-canonical cluster members)
     // on the small side. How small is DATA-dependent — a dirty crawl
-    // can put 20-50 % of the corpus in clusters — so the broadcast is
-    // a size-gated DECISION (Hints.broadcastIfSmall), not a forced
-    // hint: estimated-small drop lists broadcast, anything else falls
-    // back to AQE's runtime call instead of an unconditional collect.
+    // can put 20-50 % of the corpus in clusters — so the join carries
+    // no hint: Spark's size rule and AQE's runtime statistics choose
+    // the broadcast (HintsSpec).
     "q_dedup_keep" -> QueryDef(
       "surviving corpus after near-dup removal (cluster-canonical keep)",
       s"""WITH RECURSIVE $minhashPairsCtes,
@@ -1464,7 +1461,7 @@ object Text {
       val drop = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
         .where(col("id") =!= col("component"))
         .select(col("id").as("doc_id"))
-      d.join(drop.graftBcastIfSmall(), Seq("doc_id"), "left_anti")
+      d.join(drop, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("source"), col("lang"))
         .orderBy("doc_id")
     },
@@ -1479,7 +1476,7 @@ object Text {
     // engine-identical values, so the winner can't flip on float
     // noise. Scale shape: lmScore is one tokenize pass + broadcast
     // model; everything past connectedComponents is |members| rows;
-    // the drop-list anti-join is size-gated, never force-broadcast.
+    // the drop-list anti-join is unhinted, never force-broadcast.
     "q_dedup_keep_quality" -> QueryDef(
       "surviving corpus after near-dup removal (best-quality keep, LM-scored)",
       s"""WITH RECURSIVE $minhashPairsCtes,
@@ -1532,7 +1529,7 @@ object Text {
         .select(col("__k.doc_id").as("doc_id"))
       val drop = comp.select("doc_id")
         .join(best, Seq("doc_id"), "left_anti")
-      d.join(drop.graftBcastIfSmall(), Seq("doc_id"), "left_anti")
+      d.join(drop, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("source"), col("lang"))
         .orderBy("doc_id")
     },
@@ -1564,12 +1561,11 @@ object Text {
     // argmaxes are single-aggregate min(struct(-key, tiebreak))
     // reductions — no window over the corpus — and everything
     // downstream of connectedComponents is |cluster members| rows.
-    // The members↔documents join broadcasts only under the size gate
-    // (Hints.broadcastIfSmall): membership is corpus-derived (a dirty
-    // crawl clusters 20-50 % of its docs), so a forced hint would
-    // bypass Spark's size check and OOM the driver at 100 TB; the
-    // gate hints when the estimate fits and otherwise lets AQE decide
-    // from runtime shuffle sizes.
+    // The members↔documents join carries no hint: membership is
+    // corpus-derived (a dirty crawl clusters 20-50 % of its docs), so a
+    // forced hint would bypass Spark's size check and OOM the driver at
+    // 100 TB; Spark's size rule and AQE decide from the estimate and the
+    // runtime shuffle sizes.
     "q_golden_record" -> QueryDef(
       "golden records: per-cluster survivorship merge after near-dup ER",
       s"""WITH RECURSIVE $minhashPairsCtes,
@@ -1609,7 +1605,7 @@ object Text {
         TextAnalysis.gramArrays(d, "doc_id", "text", 5), "doc_id", 3, 5)
       val members = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
         .select(col("id").as("doc_id"), col("component"))
-      val m = d.join(members.graftBcastIfSmall(), Seq("doc_id"))
+      val m = d.join(members, Seq("doc_id"))
         .select(col("component"), col("doc_id"), col("n_chars"),
           col("source"), col("lang"))
       val agg = m.groupBy("component")
@@ -1671,7 +1667,7 @@ object Text {
       // linear-in-grams term).
       val sh = Dedup.simhash(
         TextAnalysis.grams(docs(spark, dir), "doc_id", "text", 5), "doc_id")
-        .graftCkptMem()
+        .localCheckpoint()
       val pieces = sh.select(col("doc_id"), col("simhash"),
           explode(expr("array(0, 1, 2, 3)")).as("pc"))
         .withColumn("pv", expr("shiftright(simhash, 8 * pc) & 255"))
@@ -1838,7 +1834,7 @@ object Text {
           .otherwise(lit("")),
         hex(col("text").cast(BinaryType)))
       val prepared = docs(spark, dir)
-        .select(col("doc_id"), hx.as("__hx")).graftCkptMem()
+        .select(col("doc_id"), hx.as("__hx")).localCheckpoint()
       val feats = Multimodal.decodeFeatures(
         prepared.select(col("doc_id"), unhex(col("__hx")).as("payload")),
         "doc_id")
@@ -2523,7 +2519,7 @@ object Text {
         .graftSpread()
       val bigrams = base
         .select(explode(TextAnalysis.bigrams(col("__t"))).as("bg"))
-        .graftCkptMem()
+        .localCheckpoint()
       // the sketch: explode each gram into its 4 (depth, bucket) cells
       // and count — the aggregation keys into a FIXED 4×65536 space
       val cms = bigrams
@@ -2606,7 +2602,7 @@ object Text {
       val toks = docs(spark, dir)
         .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
         .unionByName(planted)
-        .graftCkptMem()
+        .localCheckpoint()
       val ranks = toks
         .select(col("source"),
           expr("cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)").as("hv"))
@@ -2744,7 +2740,7 @@ object Text {
       // shingle derivation is planned (and run) twice — same measured
       // pattern as Dedup.ngramJaccardPairs
       val g = TextAnalysis.grams(docs(spark, dir), "doc_id", "text", 5)
-        .graftCkptMem()
+        .localCheckpoint()
       val dfs = g.groupBy("gram").agg(count(lit(1)).as("df"))
       g.join(dfs, "gram")
         .groupBy("doc_id")

@@ -1,11 +1,12 @@
 package graft.streaming
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.Relation
-import graft.core.Ckpt.CkptOps
 import graft.functions.CanonicalKey.canonicalPk
 import graft.operators.{Compaction, Denormalize, Filters}
 import graft.operators.Filters.{FilterMode, RecordFilter}
@@ -400,7 +401,6 @@ final class IncrementalDenormalizer(
     */
   def processBatch(changes: Map[String, DataFrame]): Unit = {
     batchIndex += 1
-    bump("batches", 1L)
     state = state ++ trees.map(t =>
       changedTable(t) -> Waves.ready(s"batch $batchIndex: no change of ${changedTable(t)}",
         emptyDf(session, docSchema)))
@@ -478,7 +478,7 @@ final class IncrementalDenormalizer(
         unionParts(part(QueueingStrategy.High) ++
           (if (mediumImmediate) part(QueueingStrategy.Medium) else Nil) ++
           (if (drainLowNow) part(QueueingStrategy.Low) :+ in(pendingLowTable(tree)) else Nil))
-          .graftCkptMem()
+          .localCheckpoint()
       }
     }
     val pendingNodes: Seq[(String, Waves.Node)] = trees.flatMap { tree =>
@@ -500,7 +500,11 @@ final class IncrementalDenormalizer(
     // the metrics ride that job. A durable backend runs only the change
     // set's writes, whose executions the engine never sees, so there
     // the fold is checkpointed first: the metrics ride that job, and
-    // both writes read its blocks instead of re-running the fold.
+    // both writes read its blocks instead of re-running the fold. Each
+    // node leaves the frame that ran its fold in `folds`; the counters
+    // bump from there once the batch's state lands, so a batch that
+    // keeps no state counts nothing.
+    val folds = TrieMap.empty[String, DataFrame]
     val snapshotNodes = inputs.keys.toSeq.map { entity =>
       val table = snapshotTable(entity)
       table -> node(table, "update", Seq(table)) { in =>
@@ -509,7 +513,7 @@ final class IncrementalDenormalizer(
             in(table))
           .observe(s"graft_delta_$entity", count(lit(1)).as("n"))
         val delta =
-          if (backend.durable) observedDelta.graftCkptMem() else observedDelta
+          if (backend.durable) observedDelta.localCheckpoint() else observedDelta
         val changedKeys = delta.select(col("__pk"))
         val newRows =
           delta.where(col("value").isNotNull).select(col("__pk"), col("value"))
@@ -518,7 +522,7 @@ final class IncrementalDenormalizer(
         // backend checkpoints, so its execution holds the metrics
         val src = if (backend.durable) full else full.coalesce(statePartitions)
         val out = bind(backend.persist(table, src, Some((newRows, changedKeys))))
-        countDelta(entity, if (backend.durable) observedDelta else src)
+        folds(entity) = if (backend.durable) observedDelta else src
         out
       }
     }
@@ -542,6 +546,8 @@ final class IncrementalDenormalizer(
     val dirtyFrames = Waves.awaitAll(dirtyNodes.map(_._2) ++ updates.map(_._2))
     var dirtySets = dirtyNodes.map(_._1).zip(dirtyFrames).toMap
     state = state ++ updates
+    bump("batches", 1L)
+    folds.foreach { case (entity, executed) => countDelta(entity, executed) }
 
     /** Empty a deferred set whose rows joined this batch's drain. Where
       * deferral is configured, a durable backend persists the empty
@@ -561,7 +567,7 @@ final class IncrementalDenormalizer(
       if (pending.count() >= mediumTriggerRows) {
         val name = tree.denormalizedName.get
         dirtySets = dirtySets.updated(name,
-          dirtySets(name).union(pending).distinct().graftCkptMem())
+          dirtySets(name).union(pending).distinct().localCheckpoint())
         drain(pendingMedTable(tree), deferred = true)
       }
     }
@@ -774,7 +780,7 @@ final class IncrementalDenormalizer(
           sum(when(col("doc_json").isNull, 1L).otherwise(0L)).as("tomb"),
           sum(col("__tr")).as("trunc"))
         .drop("__tr")
-      val out = nd.graftCkptMem()
+      val out = nd.localCheckpoint()
       observed(nd, metricName).foreach { r =>
         val tomb = if (r.isNullAt(1)) 0L else r.getLong(1)
         bump("docs_written", r.getLong(0) - tomb)
@@ -807,7 +813,7 @@ final class IncrementalDenormalizer(
       else {
         val kept = node(docs, "kept documents", Seq(docs)) { in =>
           in(docs).join(dirtyPks, Seq("__pk"), "left_anti")
-            .coalesce(statePartitions).graftCkptMem()
+            .coalesce(statePartitions).localCheckpoint()
         }
         Waves.submit(s"batch $batch: union of $docs",
           Map("kept" -> kept, "new" -> newDocs))(in => in("kept").unionByName(in("new")))

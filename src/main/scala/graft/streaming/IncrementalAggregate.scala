@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Ckpt.CkptOps
 import graft.functions.TopKByScore
 
 import scala.util.control.NonFatal
@@ -153,7 +152,7 @@ object IncrementalAggregate {
     compacted.join(
         latest.select(col("k"), col("g").as("g_old"), col("v").as("v_old")),
         Seq("k"), "left")
-      .graftCkptMem()
+      .localCheckpoint()
 
   /** The ±contribution rows for one compacted batch against the
     * current latest state: −(old g, old v) for every key that had
@@ -254,7 +253,7 @@ object IncrementalAggregate {
     * state-sized. */
   def applyBatch(state: State, changes: DataFrame,
       backend: StateBackend): State = {
-    val cc = compactBatch(changes).graftCkptMem()
+    val cc = compactBatch(changes).localCheckpoint()
     // The LATEST-state persist (O(state) memory rewrite / durable
     // parquet generation — the batch's single largest job) depends
     // only on (pre-batch latest, cc), and nothing below reads it until
@@ -303,7 +302,7 @@ object IncrementalAggregate {
           coalesce(col("dv"), lit(0).cast(sumType))).cast(sumType).as("s"))
       .where(col("cnt") > 0)
     if (kk == 0) { // count/sum-only rollup: no candidate work at all
-      val agg = mergedAgg.graftCkptMem() // overlaps the async persist
+      val agg = mergedAgg.localCheckpoint() // overlaps the async persist
       return State(awaitLatest(), agg, kk)
     }
     val mergedCand = state.agg
@@ -323,7 +322,7 @@ object IncrementalAggregate {
       .toDF()
     // Checkpointed on the main thread while the latest-state persist
     // runs async; the rollup table is ≤ |groups| rows.
-    val pre = mergedAgg.join(mergedCand, Seq("g"), "inner").graftCkptMem()
+    val pre = mergedAgg.join(mergedCand, Seq("g"), "inner").localCheckpoint()
     // Underflow fallback: a group whose deletions drained a candidate
     // set rebuilds from the new latest state — restricted to exactly
     // those groups (broadcast semi-join on the tiny underflow list),
@@ -352,7 +351,7 @@ object IncrementalAggregate {
           .join(broadcast(under), Seq("g"), "left_semi")
           .select(col("g"), vc.as("vc"))
           .groupBy("g", "vc").agg(count(lit(1)).as("cnt"))
-          .graftCkptMem()
+          .localCheckpoint()
         val top = byVal.groupBy("g")
           .agg(
             TopKByScore.topK(struct((-col("vc")).cast(DoubleType).as("score"),
@@ -374,10 +373,10 @@ object IncrementalAggregate {
           .toDF()
         pre.join(broadcast(under), Seq("g"), "left_anti")
           .unionByName(pre.select("g", "cnt", "s").join(rebuilt, Seq("g")))
-          .graftCkptMem()
+          .localCheckpoint()
       }
     // No re-checkpoint when agg2 IS pre (the common no-underflow batch):
-    // pre is already materialized — the old unconditional graftCkptMem
+    // pre is already materialized — the old unconditional localCheckpoint
     // paid one extra copy + barrier per batch for nothing.
     State(awaitLatest(), agg2, kk)
   }

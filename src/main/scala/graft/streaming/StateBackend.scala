@@ -13,8 +13,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.core.Ckpt
-
 /** Pluggable persistence for the incremental engine's cross-batch
   * state tables (entity snapshots, per-edge links/rootmaps, per-tree
   * documents, deferred-priority sets).
@@ -24,10 +22,10 @@ import graft.core.Ckpt
   * precisely because state outgrows memory long before the corpus
   * does. The Spark-native split is the same idea at table granularity:
   *
-  *  - [[StateBackend.Memory]] — eager MEMORY_ONLY localCheckpoint
-  *    (see core/Ckpt.scala for the level rationale). Fastest, but
-  *    state dies with block eviction or the session. Right for tests
-  *    and short bounded runs that fit the memory envelope.
+  *  - [[StateBackend.Memory]] — eager `localCheckpoint()` at Spark's
+  *    MEMORY_AND_DISK level, so an evicted block spills to local disk
+  *    (CkptSpec). Fastest, but state dies with the session. Right for
+  *    tests and runs that need no restart.
   *  - [[BucketedParquetBackend]] — every state table lands as a
   *    bucketed parquet table under a state root on any Hadoop
   *    filesystem (file://, hdfs://, s3a://). Durable across eviction
@@ -78,7 +76,7 @@ object StateBackend {
   /** Default in-memory backend — the bench/test envelope. */
   object Memory extends StateBackend {
     val durable = false
-    def persist(name: String, df: DataFrame): DataFrame = Ckpt.mem(df)
+    def persist(name: String, df: DataFrame): DataFrame = df.localCheckpoint()
   }
 }
 

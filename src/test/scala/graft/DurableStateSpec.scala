@@ -108,7 +108,7 @@ class DurableStateSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
     // the restart: the context dies, and with it the catalog and every
-    // MEMORY_ONLY checkpoint block — only the parquet generations remain
+    // local checkpoint block — only the parquet generations remain
     sparkA.stop()
     val sparkB = SparkSpec.session
     assert(sparkA.sparkContext.isStopped && (sparkB ne sparkA),

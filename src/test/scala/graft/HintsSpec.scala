@@ -1,73 +1,19 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.functions._
 
-import graft.core.Hints
-
-/** Size-gated broadcast hints (`Hints.broadcastIfSmall`): estimated-
-  * small frames get the hint, estimated-large (or size-unknown) frames
-  * pass through unhinted so AQE decides from runtime statistics —
-  * never a forced driver collect of a corpus-derived frame.
+/** Corpus-derived join sides carry no broadcast hint: Spark's size rule
+  * and AQE's runtime statistics choose the broadcast (q_dedup_keep,
+  * q_dedup_keep_quality, q_golden_record).
   */
 class HintsSpec extends SparkSpec {
-
-  import spark.implicits._
-
-  // The optimizer folds ResolvedHint into the Join node's JoinHint, so
-  // probe the ANALYZED plan — that is where a forced hint is visible.
-  private def hasHint(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.analyzed.exists(_.isInstanceOf[ResolvedHint])
-
-  test("estimated-small frame gets the broadcast hint") {
-    val dim = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    val joined = spark.range(100).toDF("k")
-      .join(Hints.broadcastIfSmall(dim), Seq("k"))
-    assert(hasHint(joined), "small dimension should carry the hint")
-  }
-
-  test("estimated-large frame passes through unhinted") {
-    // ~128 MB estimate: 2^22 rows x 32-char string — far over the
-    // 10 MB default autoBroadcastJoinThreshold.
-    val big = spark.range(1L << 22)
-      .select(col("id").as("k"),
-        lit("x" * 32).as("pad"))
-    assert(
-      big.queryExecution.optimizedPlan.stats.sizeInBytes >
-        spark.sessionState.conf.autoBroadcastJoinThreshold,
-      "fixture must actually estimate over the threshold")
-    val joined = spark.range(100).toDF("k")
-      .join(Hints.broadcastIfSmall(big), Seq("k"))
-    assert(!hasHint(joined),
-      "corpus-sized frame must not be force-broadcast; AQE decides")
-  }
-
-  test("generate/explode plans never hint (size-only stats under-estimate)") {
-    // Size-only propagation carries the PRE-explode child size through
-    // a Generate node — a tiny frame exploding 100k-wide estimates as
-    // tiny, and a broadcast hint is not AQE-revocable, so hinting here
-    // would be the one reachable way to OOM the driver. The gate must
-    // refuse regardless of how small the estimate looks.
-    val exploded = spark.range(4).toDF("k")
-      .select(col("k"), explode(sequence(lit(1), lit(100000))).as("v"))
-    assert(
-      exploded.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        spark.sessionState.conf.autoBroadcastJoinThreshold,
-      "fixture must actually under-estimate below the threshold")
-    val joined = spark.range(100).toDF("k")
-      .join(Hints.broadcastIfSmall(exploded), Seq("k"))
-    assert(!hasHint(joined),
-      "explode output must not be force-broadcast off a pre-explode estimate")
-  }
 
   test("real q_dedup_keep drop list: unhinted is fine — AQE broadcasts at runtime") {
     // The drop list is downstream of connected components (iterative
     // localCheckpoints + aggregates), so its size ESTIMATE is unknown
-    // or inflated and the gate typically does NOT hint (ADVICE r12).
-    // That is the intended safe behavior — this pins the other half of
-    // the claim: at test scale the executed anti-join still ends up a
-    // broadcast join, because AQE converts it from runtime shuffle
-    // statistics. The hint is an optimization, never a requirement.
+    // or inflated and the planner does not broadcast it. At test scale
+    // the executed anti-join still ends up a broadcast join, because
+    // AQE converts it from runtime shuffle statistics.
     val dir = "/root/testdata/sf0.001"
     val d = graft.core.Tables.load(spark, dir, "documents")
     val pairs = graft.operators.Dedup.minhashPairs(
@@ -76,8 +22,7 @@ class HintsSpec extends SparkSpec {
     val drop = graft.operators.Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       .where(col("id") =!= col("component"))
       .select(col("id").as("doc_id"))
-    val gated = Hints.broadcastIfSmall(drop)
-    val kept = d.join(gated, Seq("doc_id"), "left_anti")
+    val kept = d.join(drop, Seq("doc_id"), "left_anti")
     kept.collect() // materialize so AQE finalizes the physical plan
     // Descend through AQE's leaf wrappers (AdaptiveSparkPlanExec holds
     // its final plan out-of-tree; QueryStageExec is a LeafExecNode
@@ -93,16 +38,5 @@ class HintsSpec extends SparkSpec {
     }
     assert(findBhj(kept.queryExecution.executedPlan),
       "test-scale anti-join should broadcast the drop list at runtime via AQE")
-  }
-
-  test("threshold -1 (broadcast disabled) never hints") {
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val dim = Seq((1L, "a")).toDF("k", "v")
-      val joined = spark.range(10).toDF("k")
-        .join(Hints.broadcastIfSmall(dim), Seq("k"))
-      assert(!hasHint(joined))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
   }
 }
