@@ -21,9 +21,12 @@ RDD ids (`MapPartitionsRDD[42]`), RDD call sites (`at localCheckpoint at
 Dedup.scala:797`, a source line that any edit above it moves), JVM
 lambda / object hash names, the
 random suffix of temp directories (`graft_q_incr_durable8841…`) and the
-durable backend's catalog tables (`graft_state_<instance>_<seq>`, whose
-sequence follows the order in which concurrent persists run). Any other
-difference, join strategy and codegen stage included, is printed.
+catalog tables (`graft_state_<instance>_<seq>`, whose sequence follows
+the order in which concurrent persists run) that the durable backend
+registered before it wrote and read its generations by path. The
+current code registers none; that rule stays only so a diff against
+such an older snapshot lines up. Any other difference, join strategy
+and codegen stage included, is printed.
 
 Both sides must be compiled (`sbt compile`, which writes
 `target/scala-2.13/classes`). Each query runs in a fresh JVM per side.

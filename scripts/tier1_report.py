@@ -11,9 +11,16 @@ failed test (`<suite>::<test>`) and the 10 slowest tests.
                     directory, or a checkout holding target/test-reports.
                     Lists every test that passed there but failed or is
                     missing here, and exits 1 if there is any.
+  --removed <suite::test>
+                    with --against, a test deleted on purpose (repeat
+                    the option for each). It must be absent here, and is
+                    then not counted as lost; a named test that still
+                    runs here is listed and exits 1.
 
-Usage: python3 scripts/tier1_report.py [--reports <dir>] [--against <dir>]
-Exit status: 0, or 1 when --against finds a test that no longer passes.
+Usage: python3 scripts/tier1_report.py [--reports <dir>]
+         [--against <dir> [--removed <suite::test>]...]
+Exit status: 0, or 1 when --against finds a test that no longer passes
+or a --removed test that is still present.
 """
 import argparse, glob, os, sys
 import xml.etree.ElementTree as ET
@@ -54,7 +61,10 @@ def main():
                                  formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--reports", default=os.path.join(REPO, "target", "test-reports"))
     ap.add_argument("--against")
+    ap.add_argument("--removed", action="append", default=[])
     args = ap.parse_args()
+    if args.removed and not args.against:
+        ap.error("--removed needs --against")
 
     suites, tests = read_run(reports_dir(args.reports))
     failed = sorted(k for k, (ok, _) in tests.items() if not ok)
@@ -71,12 +81,18 @@ def main():
 
     if args.against:
         _, before = read_run(reports_dir(args.against))
+        removed = set(args.removed)
         lost = sorted(k for k, (ok, _) in before.items()
-                      if ok and not tests.get(k, (False, 0))[0])
+                      if ok and k not in removed and not tests.get(k, (False, 0))[0])
         print(f"passed in {args.against} but not here: {len(lost)}")
         for k in lost:
             print(f"  {k}{'' if k in tests else '  (missing)'}")
-        return 1 if lost else 0
+        present = sorted(removed & tests.keys())
+        if removed:
+            print(f"removed on purpose: {len(removed)}, still present here: {len(present)}")
+            for k in present:
+                print(f"  {k}")
+        return 1 if lost or present else 0
     return 0
 
 

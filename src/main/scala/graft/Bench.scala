@@ -20,27 +20,19 @@ object BenchCore {
   /** Deterministically release everything a finished query pinned:
     * its localCheckpoint blocks (unpersist BLOCKING — the async form
     * lets block removal bleed into the next query's timing, measured
-    * as 1.3-3.9× phantom regressions in earlier rounds), any cached
-    * plans, any catalog tables a durable-backend query registered,
-    * then a GC so the next measurement starts from a clean heap. */
+    * as 1.3-3.9× phantom regressions in earlier rounds) and any cached
+    * plans, then a GC so the next measurement starts from a clean heap. */
   def release(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
     spark.sqlContext.clearCache()
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_state_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
     System.gc()
-    // HARD comparability guard: a query that leaks pinned blocks or
-    // state tables past its own release taxes every successor's timing
-    // silently. Fail the bench loudly instead of best-effort-cleaning.
+    // HARD comparability guard: a query that leaks pinned blocks past
+    // its own release taxes every successor's timing silently. Fail the
+    // bench loudly instead of best-effort-cleaning.
     val leakedRdds = spark.sparkContext.getPersistentRDDs
     require(leakedRdds.isEmpty,
       s"leaked persistent RDDs after release: ${leakedRdds.keys.mkString(",")}")
-    val leakedTables = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_state_"))
-    require(leakedTables.isEmpty,
-      s"leaked state tables after release: ${leakedTables.mkString(",")}")
   }
 
   /** All query names in the canonical bench order: the PINNED manifest

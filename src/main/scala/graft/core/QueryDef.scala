@@ -19,8 +19,4 @@ object QueryDef {
   def apply(description: String, oracle: String)(
       build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(build, Some(oracle), description)
-
-  def noOracle(description: String)(
-      build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(build, None, description)
 }

@@ -27,8 +27,6 @@ final case class Relation(
     parentKey: Option[String],
     children: Seq[Relation]) {
 
-  def isRoot: Boolean = denormalizedName.isDefined
-
   /** All entities in this subtree (with repetition for diamond shapes). */
   def entities: Seq[String] = entity +: children.flatMap(_.entities)
 }

@@ -366,9 +366,7 @@ object Cdc {
         java.nio.file.Files.createTempDirectory("graft_q_incr_minmax_dur")
       val b = new BucketedParquetBackend(spark, stateRoot,
         buckets = 8, compactEvery = 8)
-      // finally: a mid-replay failure must not leak the temp state
-      // root or the session's graft_state_* catalog tables (which
-      // would also trip the leak-check gate confusingly)
+      // finally: a mid-replay failure must not leak the temp state root
       try minmaxReplay(spark, dir, b).localCheckpoint()
       finally b.deleteAll()
     },

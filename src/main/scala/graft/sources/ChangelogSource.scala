@@ -96,13 +96,28 @@ private[v2] object ChangelogIO {
       fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  def countLines(path: String): Long = {
+  /** Records in the log: line pairs, a trailing key line counting as one. */
+  def countPairs(path: String): Long = {
     val r = open(path)
     try {
-      var n = 0L
-      while (r.readLine() != null) n += 1
-      n
+      var lines = 0L
+      while (r.readLine() != null) lines += 1
+      (lines + 1) / 2
     } finally r.close()
+  }
+
+  /** The record range [from, until) as at most `splits` contiguous,
+    * near-equal partitions; none when the range is empty. */
+  def splitRange(path: String, from: Long, until: Long,
+      splits: Int): Array[InputPartition] = {
+    val total = math.max(0L, until - from)
+    if (total == 0) return Array.empty
+    val n = math.max(1, math.min(splits.toLong, total).toInt)
+    val per = (total + n - 1) / n
+    (0 until n).map { i =>
+      ChangelogInputPartition(path,
+        from + i * per, math.min(from + (i + 1) * per, until))
+    }.filter(p => p.startPair < p.endPair).toArray[InputPartition]
   }
 }
 
@@ -164,21 +179,11 @@ class ChangelogScan(
     s"graft-changelog $path (pruned to ${required.fieldNames.mkString(",")}, " +
       s"offsets [$minPair, ${if (maxPairExcl == Long.MaxValue) "end" else maxPairExcl}))"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // One cheap driver pass for the record count (fixture planning —
-    // a log-store variant would consult segment metadata instead).
-    val nPairs = (ChangelogIO.countLines(path) + 1) / 2
-    val from = math.max(0L, minPair)
-    val until = math.min(nPairs, maxPairExcl)
-    val total = math.max(0L, until - from)
-    if (total == 0) return Array.empty
-    val n = math.max(1, math.min(splits.toLong, total).toInt)
-    val per = (total + n - 1) / n
-    (0 until n).map { i =>
-      ChangelogInputPartition(path,
-        from + i * per, math.min(from + (i + 1) * per, until))
-    }.filter(p => p.startPair < p.endPair).toArray[InputPartition]
-  }
+  // One cheap driver pass for the record count (fixture planning —
+  // a log-store variant would consult segment metadata instead).
+  override def planInputPartitions(): Array[InputPartition] =
+    ChangelogIO.splitRange(path, math.max(0L, minPair),
+      math.min(ChangelogIO.countPairs(path), maxPairExcl), splits)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ChangelogReaderFactory(required)
@@ -215,12 +220,10 @@ class ChangelogMicroBatchStream(
     maxPairExcl: Long = Long.MaxValue)
     extends sstreaming.MicroBatchStream {
 
-  private def countPairs(): Long = (ChangelogIO.countLines(path) + 1) / 2
-
   override def initialOffset(): sstreaming.Offset =
     ChangelogOffset(math.max(0L, minPair))
-  override def latestOffset(): sstreaming.Offset =
-    ChangelogOffset(math.max(math.min(countPairs(), maxPairExcl), math.max(0L, minPair)))
+  override def latestOffset(): sstreaming.Offset = ChangelogOffset(math.max(
+    math.min(ChangelogIO.countPairs(path), maxPairExcl), math.max(0L, minPair)))
   override def deserializeOffset(json: String): sstreaming.Offset =
     ChangelogOffset(json.trim.toLong)
   override def commit(end: sstreaming.Offset): Unit = ()
@@ -228,18 +231,9 @@ class ChangelogMicroBatchStream(
 
   override def planInputPartitions(
       start: sstreaming.Offset,
-      end: sstreaming.Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[ChangelogOffset].pairs
-    val until = end.asInstanceOf[ChangelogOffset].pairs
-    val total = math.max(0L, until - from)
-    if (total == 0) return Array.empty
-    val n = math.max(1, math.min(splits.toLong, total).toInt)
-    val per = (total + n - 1) / n
-    (0 until n).map { i =>
-      ChangelogInputPartition(path,
-        from + i * per, math.min(from + (i + 1) * per, until))
-    }.filter(p => p.startPair < p.endPair).toArray[InputPartition]
-  }
+      end: sstreaming.Offset): Array[InputPartition] =
+    ChangelogIO.splitRange(path, start.asInstanceOf[ChangelogOffset].pairs,
+      end.asInstanceOf[ChangelogOffset].pairs, splits)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ChangelogReaderFactory(required)

@@ -89,9 +89,10 @@ final class IncrementalDenormalizer(
     * batch [[Denormalize]] and the other operators. Conf set on `spark`
     * after construction does not reach this session. */
   val session: SparkSession = PlanBridge.interpretedClone(spark)
-  // a durable backend's frames may compose through BucketUnion, whose
-  // planner strategy the clone must hold also if it was registered late
-  if (backend.durable) graft.plans.BucketUnion.register(session)
+  // durable state, live or loaded from a root's commit, composes through
+  // BucketUnion, whose planner strategy the clone must hold also if it
+  // was registered after the clone was made
+  graft.plans.BucketUnion.register(session)
 
   /** `df` with its plan rebound into [[session]]: every frame that
     * enters engine state goes through here, so every plan derived from

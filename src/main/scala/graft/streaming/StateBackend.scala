@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -11,6 +10,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.graftbridge.BucketedPath
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Pluggable persistence for the incremental engine's cross-batch
@@ -87,13 +87,14 @@ object StateBackend {
   *
   * A generation is one of two kinds:
   *
-  *  - FULL — the whole table as a bucketed parquet catalog table. The
-  *    write repartitions by the table's leading column (the state key:
+  *  - FULL — the whole table as bucketed parquet. The write
+  *    repartitions by the table's leading column (the state key:
   *    `__pk` / `__cpk` / `__jk`) into `buckets` partitions, so every
-  *    task writes one bucket file. Readers go through the session
-  *    catalog, which holds the bucket spec: a join or aggregation keyed
-  *    on the bucket column plans no Exchange on the state side
-  *    (BucketingSpec).
+  *    task writes one bucket file. Generations are written and read by
+  *    path with the bucket spec given directly
+  *    ([[org.apache.spark.sql.graftbridge.BucketedPath]]), never through
+  *    the session catalog: a join or aggregation keyed on the bucket
+  *    column plans no Exchange on the state side (BucketingSpec).
   *  - DELTA — only the batch's change set: `rows/` (full new rows of
   *    the changed keys, bucketed like the full generation) and `keys/`
   *    (every changed key; a key without a row is a deletion). Write
@@ -102,13 +103,15 @@ object StateBackend {
   *
   * A table's state is its CHAIN: a full generation and the delta
   * generations after it. [[BucketedParquetBackend.applyDelta]] lays one
-  * delta over the view so far (broadcast anti-join on `keys/`, then
-  * `rows/`) for live persists, [[recover]] and the read-only
-  * [[BucketedParquetBackend.asOf]]. Every `compactEvery`-th persist of a
-  * table writes FULL, which bounds the chain; a persist without a change
-  * set (the first one, restart recovery) is always FULL. Each persist
-  * writes a NEW generation, past every one on disk, because the plan
-  * being written usually reads the previous one.
+  * delta over the view so far (broadcast anti-join on `keys/`, then a
+  * bucket-to-bucket zip with `rows/`) for live persists, and
+  * [[BucketedParquetBackend.compose]] folds it over a committed chain for
+  * [[recover]], [[BucketedParquetBackend.latest]] and
+  * [[BucketedParquetBackend.asOf]] alike. Every `compactEvery`-th persist
+  * of a table writes FULL, which bounds the chain; a persist without a
+  * change set (the first one, restart recovery) is always FULL. Each
+  * persist writes a NEW generation, past every one on disk, because the
+  * plan being written usually reads the previous one.
   *
   * Commits: [[gc]], the batch boundary, writes one manifest
   * `root/_commits/<n>` by create-then-rename. It names every live
@@ -119,19 +122,17 @@ object StateBackend {
   * it, whole, as the reference commits a batch's writes as one RocksDB
   * WriteBatch. [[recover]] and [[BucketedParquetBackend.latest]] read
   * the newest commit. gc then keeps the newest `compactEvery` commits
-  * and deletes every generation directory, and its catalog table, that
-  * none of them names: superseded generations and the wrecks of batches that
-  * never committed.
+  * and deletes every generation directory that none of them names:
+  * superseded generations and the wrecks of batches that never
+  * committed.
   *
-  * Restart: [[recover]] registers each chain's bucketed directories in
-  * the catalog and zips them with [[graft.plans.BucketUnion]], as a live
-  * persist does, so keyed reads against recovered state plan no
-  * state-side Exchange before the first compaction — the reference's
-  * RocksDB state is key-indexed the moment it reopens
-  * (state/RocksDBState.java:474-491). Feed the result to
-  * [[IncrementalDenormalizer.loadStateTables]]: its re-persist is a FULL
-  * write that takes [[persistFull]]'s aligned path, without a
-  * full-state shuffle.
+  * Restart: [[recover]] composes each chain bucket-aligned and adopts
+  * it, so keyed reads against recovered state plan no state-side
+  * Exchange before the first compaction — the reference's RocksDB state
+  * is key-indexed the moment it reopens (state/RocksDBState.java:474-491).
+  * Feed the result to [[IncrementalDenormalizer.loadStateTables]]: its
+  * re-persist is a FULL write that takes [[persistFull]]'s aligned path,
+  * without a full-state shuffle.
   */
 final class BucketedParquetBackend(
     spark: SparkSession,
@@ -140,7 +141,7 @@ final class BucketedParquetBackend(
     compactEvery: Int = 4) extends StateBackend {
 
   import BucketedParquetBackend.{Chain, Gen, applyDelta, commitPath, commits,
-    generations, manifest, manifestLine, readCommit, tableNames, writeMarker}
+    compose, generations, manifest, manifestLine, readCommit, tableNames, writeMarker}
 
   // Register the BucketUnion planner strategy + pushdown rule NOW, at
   // backend construction — not lazily at the first compose. A
@@ -165,24 +166,11 @@ final class BucketedParquetBackend(
     * restart over the wrecks of an uncommitted batch). */
   private case class Live(maxGen: Long, chain: Chain, frame: DataFrame)
 
-  private val instanceId = BucketedParquetBackend.instances.incrementAndGet()
-  private val tableSeq = new AtomicLong(0L)
   private val live = new ConcurrentHashMap[String, Live]()
-  /** Catalog table of each generation this backend registered, by `<name>/g<n>`. */
-  private val catalog = new ConcurrentHashMap[String, String]()
 
   private val rootPath = new Path(root)
   private def fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
   private def genDir(name: String, gen: Long) = new Path(rootPath, s"$name/g$gen")
-
-  /** Catalog identifiers are case-insensitive and charset-limited, so a
-    * generation's catalog table is a unique sequence id; its data dir
-    * keeps the exact state-table name. */
-  private def newTableName(name: String, gen: Long): String = {
-    val tbl = s"graft_state_${instanceId}_${tableSeq.incrementAndGet()}"
-    catalog.put(s"$name/g$gen", tbl)
-    tbl
-  }
 
   def persist(name: String, df: DataFrame): DataFrame =
     persistFull(name, df)
@@ -202,7 +190,7 @@ final class BucketedParquetBackend(
     val prev = live.get(name)
     val gen = 1L + (if (prev != null) prev.maxGen
       else generations(fs, new Path(rootPath, name)).lastOption.getOrElse(0L))
-    val tbl = newTableName(name, gen)
+    val dir = genDir(name, gen).toString
     val keyCol = df.columns.head
     // Aligned fast path: a frame whose plan is already a BucketUnion
     // compose on (keyCol, buckets) — a recovered chain, or any
@@ -215,11 +203,8 @@ final class BucketedParquetBackend(
     val src =
       if (graft.plans.BucketUnion.isAligned(df, keyCol, buckets)) df
       else df.repartition(buckets, col(keyCol))
-    src.write.format("parquet")
-      .bucketBy(buckets, keyCol)
-      .option("path", genDir(name, gen).toString)
-      .saveAsTable(tbl)
-    val frame = spark.table(tbl)
+    BucketedPath.write(src, dir, keyCol, buckets)
+    val frame = BucketedPath.read(spark, dir, df.schema, keyCol, buckets)
     live.put(name, Live(gen, Chain(df.schema, Seq(Gen(gen, "full", buckets))), frame))
     frame
   }
@@ -244,58 +229,35 @@ final class BucketedParquetBackend(
     val gen = prev.maxGen + 1L
     val dir = genDir(name, gen)
     val keyCol = prev.frame.columns.head
-    val tbl = newTableName(name, gen)
     // Change sets are batch-sized: the pre-write repartition is a
     // delta-sized shuffle that lands exactly one file per bucket.
-    rows.select(prev.frame.columns.map(col).toSeq: _*)
-      .repartition(buckets, col(keyCol))
-      .write.format("parquet")
-      .bucketBy(buckets, keyCol)
-      .option("path", new Path(dir, "rows").toString)
-      .saveAsTable(tbl)
+    BucketedPath.write(rows.select(prev.frame.columns.map(col).toSeq: _*)
+      .repartition(buckets, col(keyCol)), new Path(dir, "rows").toString, keyCol, buckets)
     keys.coalesce(buckets).write.parquet(new Path(dir, "keys").toString)
     // the layer reads both sides back from disk, so the composed frame
     // is independent of the input plans' lineage
-    val frame = applyDelta(spark, prev.frame, dir, Some((tbl, buckets)))
+    val frame = applyDelta(spark, prev.frame, dir, buckets, buckets)
     val chain = prev.chain.copy(gens = prev.chain.gens :+ Gen(gen, "delta", buckets))
     live.put(name, Live(gen, chain, frame))
     frame
   }
 
-  /** Register a bucketed parquet directory (a full generation, or a
-    * delta's `rows/`) as an external catalog table so readers see the
-    * bucket spec. DDL because the DataFrame API can only CTAS. */
-  private def registerBucketed(name: String, gen: Gen, dir: Path,
-      schema: StructType): String = {
-    val tbl = newTableName(name, gen.id)
-    spark.sql(s"CREATE TABLE $tbl (${schema.toDDL}) USING PARQUET " +
-      s"CLUSTERED BY (`${schema.fields.head.name}`) INTO ${gen.buckets} BUCKETS " +
-      s"LOCATION '${dir.toString}'")
-    tbl
-  }
-
   /** Restart recovery through the live backend (see class doc): the
-    * newest commit's chain of every table, composed bucket-aligned on
-    * its full generation's bucket count and adopted into [[live]], so
-    * each table's first post-restore persist extends or supersedes it. */
+    * newest commit's chain of every table, composed as
+    * [[BucketedParquetBackend.latest]] composes it and adopted into
+    * [[live]], so each table's first post-restore persist extends or
+    * supersedes it. */
   def recover(): Map[String, DataFrame] =
     readCommit(fs, rootPath, Long.MaxValue).map { case (name, chain) =>
-      val base = chain.gens.head
-      val frame = chain.gens.tail.foldLeft(
-        spark.table(registerBucketed(name, base, genDir(name, base.id), chain.schema))) {
-        (cur, d) =>
-          val dir = genDir(name, d.id)
-          val rowsTbl = registerBucketed(name, d, new Path(dir, "rows"), chain.schema)
-          applyDelta(spark, cur, dir, Some((rowsTbl, base.buckets)))
-      }
+      val frame = compose(spark, rootPath, name, chain)
       live.put(name, Live(generations(fs, new Path(rootPath, name)).last, chain, frame))
       name -> frame
     }
 
   /** Commit every live table's chain as `root/_commits/<n>`, then keep
     * the newest `compactEvery` commits and delete each generation
-    * directory and catalog table that none of them names. A backend
-    * that has neither persisted nor recovered commits nothing. */
+    * directory that none of them names. A backend that has neither
+    * persisted nor recovered commits nothing. */
   override def gc(): Unit = synchronized {
     if (!live.isEmpty) {
       val f = fs
@@ -313,19 +275,13 @@ final class BucketedParquetBackend(
       }.toSet
       for (name <- tableNames(f, rootPath);
            gen <- generations(f, new Path(rootPath, name));
-           key = s"$name/g$gen" if !named(key)) {
-        // DROP on an external (path-backed) table leaves the files; the
-        // directory is deleted explicitly through the Hadoop FS API.
-        Option(catalog.remove(key)).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+           key = s"$name/g$gen" if !named(key))
         f.delete(new Path(rootPath, key), true)
-      }
     }
   }
 
-  /** Drop every catalog table and the whole root (test teardown / --delete-state). */
+  /** Delete the whole root (test teardown / --delete-state). */
   def deleteAll(): Unit = {
-    catalog.values.forEach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    catalog.clear()
     live.clear()
     val f = fs
     if (f.exists(rootPath)) f.delete(rootPath, true)
@@ -333,8 +289,6 @@ final class BucketedParquetBackend(
 }
 
 object BucketedParquetBackend {
-  private val instances = new AtomicInteger(0)
-
   /** One generation of a chain: `g<id>`, its kind and bucket count. */
   private case class Gen(id: Long, kind: String, buckets: Int)
 
@@ -423,21 +377,30 @@ object BucketedParquetBackend {
   /** One delta generation over the view so far: drop the changed keys
     * (`keys/`; batch-sized, so a broadcast anti-join that never
     * shuffles the state side), then add the new rows (a changed key
-    * without a row stays dropped = deletion). `rowsTable` names the
-    * delta's `rows/` registered as a bucketed catalog table, with the
-    * bucket count of the view; the layer then zips bucket to bucket
-    * ([[graft.plans.BucketUnion]]) and keeps the view's layout. Without
-    * it, `rows/` is read plain, with the view's schema (a bucketed write
-    * of an empty change set emits no parquet file), and unioned. */
+    * without a row stays dropped = deletion). `rows/` is read with the
+    * `rowsBuckets` it was written with, and zipped bucket to bucket
+    * ([[graft.plans.BucketUnion]]) into the view's `viewBuckets`, so the
+    * result keeps the view's layout. */
   private def applyDelta(spark: SparkSession, cur: DataFrame, dir: Path,
-      rowsTable: Option[(String, Int)]): DataFrame = {
+      rowsBuckets: Int, viewBuckets: Int): DataFrame = {
     val keys = spark.read.parquet(new Path(dir, "keys").toString)
     val kept = cur.join(broadcast(keys), keys.columns.toSeq, "left_anti")
-    rowsTable match {
-      case Some((tbl, n)) =>
-        graft.plans.BucketUnion(kept, spark.table(tbl), cur.columns.head, n)
-      case None => kept.unionByName(
-        spark.read.schema(cur.schema).parquet(new Path(dir, "rows").toString))
+    val keyCol = cur.columns.head
+    graft.plans.BucketUnion(kept, BucketedPath.read(spark,
+      new Path(dir, "rows").toString, cur.schema, keyCol, rowsBuckets), keyCol, viewBuckets)
+  }
+
+  /** A committed chain as one frame: its full generation read bucketed,
+    * then each delta laid over it by [[applyDelta]]. The one reader of
+    * committed state, for [[BucketedParquetBackend.recover]], [[latest]]
+    * and [[asOf]]. */
+  private def compose(spark: SparkSession, root: Path, name: String,
+      chain: Chain): DataFrame = {
+    def dir(g: Gen) = new Path(root, s"$name/g${g.id}")
+    val base = chain.gens.head
+    chain.gens.tail.foldLeft(BucketedPath.read(spark, dir(base).toString,
+      chain.schema, chain.schema.fields.head.name, base.buckets)) {
+      (cur, d) => applyDelta(spark, cur, dir(d), d.buckets, base.buckets)
     }
   }
 
@@ -446,24 +409,22 @@ object BucketedParquetBackend {
     asOf(spark, root, Long.MaxValue)
 
   /** Time travel: every table as of commit `commit` (the newest commit
-    * with id ≤ `commit`), read with plain parquet reads and composed
-    * with plain unions. It registers nothing in the catalog and writes
-    * nothing, so it is the path for inspection (`--show-state`,
-    * `--verify-state`) and cross-backend reads; ENGINE restarts go
-    * through [[BucketedParquetBackend.recover]], which composes the same
-    * tables bucket-aligned. The engine commits once per batch, so this
-    * answers "what did the engine believe after batch N" for every
-    * commit the backend still keeps — a per-batch refinement of the reference's
-    * whole-store backup restore (RocksDBState.java:355-461 can only
-    * rewind to a rotated backup). Before the oldest retained commit the
-    * map is empty, never half-composed. */
+    * with id ≤ `commit`), composed as [[BucketedParquetBackend.recover]]
+    * composes it, so keyed reads plan no state-side Exchange. It writes
+    * nothing and adopts nothing, so it is the path for inspection
+    * (`--show-state`, `--verify-state`) and cross-backend reads; ENGINE
+    * restarts go through `recover`, which a later persist extends. The
+    * engine commits once per batch, so this answers "what did the engine
+    * believe after batch N" for every commit the backend still keeps — a
+    * per-batch refinement of the reference's whole-store backup restore
+    * (RocksDBState.java:355-461 can only rewind to a rotated backup).
+    * Before the oldest retained commit the map is empty, never
+    * half-composed. */
   def asOf(spark: SparkSession, root: String, commit: Long): Map[String, DataFrame] = {
     val rootPath = new Path(root)
     val f = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     readCommit(f, rootPath, commit).map { case (name, chain) =>
-      def dir(g: Gen) = new Path(rootPath, s"$name/g${g.id}")
-      val full = spark.read.schema(chain.schema).parquet(dir(chain.gens.head).toString)
-      name -> chain.gens.tail.foldLeft(full)((cur, d) => applyDelta(spark, cur, dir(d), None))
+      name -> compose(spark, rootPath, name, chain)
     }
   }
 }

@@ -206,10 +206,9 @@ object StreamRunner {
     // fresh checkpoint dir then.
     backend match {
       case b: BucketedParquetBackend =>
-        // recover() (not the static latest()): the composed tables come
-        // back bucket-aligned, so the recovery re-persist skips the
-        // full-state shuffle and pre-compaction keyed reads stay
-        // Exchange-free on the state side
+        // recover() (not the static latest(), which composes the same
+        // bucket-aligned tables): it adopts each chain into the backend,
+        // so the next persist extends or supersedes it
         val gens = b.recover()
         if (gens.nonEmpty) engine.loadStateTables(gens)
       case _ => ()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.core.Relation
@@ -20,9 +20,10 @@ class BatchCommitSpec extends SparkSpec {
   private val tree = Relation.root("CrashDoc", "parent",
     Relation.child("child", "pid", "id"))
 
-  private def newEngine(backend: StateBackend) = new IncrementalDenormalizer(
-    spark, Seq(tree), Map("parent" -> Seq("id"), "child" -> Seq("id")),
-    Map("parent" -> parentSchema, "child" -> childSchema), backend = backend)
+  private def newEngine(backend: StateBackend, session: SparkSession = spark) =
+    new IncrementalDenormalizer(
+      session, Seq(tree), Map("parent" -> Seq("id"), "child" -> Seq("id")),
+      Map("parent" -> parentSchema, "child" -> childSchema), backend = backend)
 
   private def changelog(schema: StructType, values: Row*): DataFrame =
     spark.createDataFrame(
@@ -40,6 +41,10 @@ class BatchCommitSpec extends SparkSpec {
     "child" -> changelog(childSchema, Row(10L, 1L), Row(11L, 2L)))
   /** Child 10 moves to parent 2. */
   private def batch2 = Map("child" -> changelog(childSchema, Row(10L, 2L)))
+  /** Parent 1 is renamed; child 12 joins it. */
+  private def batch3 = Map(
+    "parent" -> changelog(parentSchema, Row(1L, "p1b")),
+    "child" -> changelog(childSchema, Row(12L, 1L)))
 
   private def docsOf(docs: DataFrame): Map[Long, Option[Any]] =
     docs.collect().map { r =>
@@ -147,5 +152,56 @@ class BatchCommitSpec extends SparkSpec {
         }
       }
     } finally backend.deleteAll()
+  }
+
+  test("durable state is written and read by path: no catalog table, and every committed read is bucket-aligned") {
+    val catalogBefore = spark.catalog.listTables().collect().map(_.name).toSet
+    val root = tempRoot("graft_by_path")
+    val b1 = new BucketedParquetBackend(spark, root, buckets = 2, compactEvery = 8)
+    val b2 = new BucketedParquetBackend(spark, root, buckets = 2, compactEvery = 8)
+    try {
+      val engine = newEngine(b1)
+      engine.processBatch(batch1)
+      val afterFirst = engine.stateTables.map { case (n, df) => n -> contents(df) }
+      engine.processBatch(batch2)
+      engine.processBatch(batch3)
+      val afterLast = engine.stateTables.map { case (n, df) => n -> contents(df) }
+
+      // the replay committed a chain of a full generation and two deltas
+      val rootPath = new Path(root)
+      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+      val in = fs.open(new Path(rootPath, "_commits/3"))
+      val commit = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      assert(commit.linesIterator.exists(_.split('\t').count(_.endsWith(":delta:2")) == 2),
+        commit)
+
+      val recovered = b2.recover()
+      val first = BucketedParquetBackend.asOf(spark, root, 1)
+      val latest = BucketedParquetBackend.latest(spark, root)
+      assert(spark.catalog.listTables().collect().map(_.name).toSet == catalogBefore)
+      def sameState(read: Map[String, DataFrame], want: Map[String, Set[Any]]): Unit =
+        want.foreach { case (n, rows) =>
+          assert(read.get(n).map(contents).getOrElse(Set.empty) == rows, n)
+        }
+      sameState(first, afterFirst)
+      sameState(latest, afterLast)
+      sameState(recovered, afterLast)
+
+      // keyed on the state key, each committed read keeps the bucket layout
+      for ((view, tables) <- Seq("recover" -> recovered, "asOf(1)" -> first,
+          "latest" -> latest); (name, df) <- tables) {
+        val plan = df.groupBy(df.columns.head).count().queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange hashpartitioning"),
+          s"$view($name) re-shuffled the state side:\n$plan")
+      }
+
+      // a memory-backend engine, made before any compose ran in its
+      // session, loads the bucket-aligned latest state and checks it
+      val fresh = spark.newSession()
+      val inspector = newEngine(StateBackend.Memory, fresh)
+      inspector.loadStateTables(BucketedParquetBackend.latest(fresh, root))
+      assert(inspector.indexInvariantViolations().isEmpty)
+      assert(docsOf(inspector.docs("CrashDoc")) == docsOf(engine.docs("CrashDoc")))
+    } finally { b2.deleteAll(); b1.deleteAll() }
   }
 }
