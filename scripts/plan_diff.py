@@ -2,13 +2,18 @@
 """Plan identity check: for each named query, on this checkout's
 classes and on a snapshot's, read the formatted physical plan of the
 frame `graft.Explain` builds and every plan the build EXECUTED, normalize
-the ids that differ from run to run, and diff them.
+the ids that differ from run to run, and diff them query by query.
 
 The executed plans matter for queries that materialize their answer (the
 IVM replays, the durable-state queries): the frame they return is a bare
 checkpoint scan. They come from Spark's event log
-(`SparkListenerSQLExecutionStart`) and are compared as a sorted list,
-because concurrent waves run in any order.
+(`SparkListenerSQLExecutionStart`). Concurrent waves run in any order,
+so the two sides' plans are matched, not compared in sequence: plans
+equal on both sides pair off first, then the remaining plans pair with
+plans of the same root operator (`Execute
+InsertIntoHadoopFsRelationCommand`, `HashAggregate`, ...) on the other
+side, the most similar pair first. A plan left without a partner was
+added or removed, and shifts no other pair.
 
 The same event log gives the storage level of every persisted RDD (each
 `SparkListenerStageSubmitted` event's `RDD Info` → `Storage Level`), so
@@ -19,14 +24,13 @@ and the two sides' sorted lists of levels are compared.
 Normalized: expression ids (`#123`, `#123L`), plan ids (`[plan_id=7]`),
 RDD ids (`MapPartitionsRDD[42]`), RDD call sites (`at localCheckpoint at
 Dedup.scala:797`, a source line that any edit above it moves), JVM
-lambda / object hash names, the
-random suffix of temp directories (`graft_q_incr_durable8841…`) and the
-catalog tables (`graft_state_<instance>_<seq>`, whose sequence follows
-the order in which concurrent persists run) that the durable backend
-registered before it wrote and read its generations by path. The
-current code registers none; that rule stays only so a diff against
-such an older snapshot lines up. Any other difference, join strategy
-and codegen stage included, is printed.
+lambda / object hash names and the random suffix of temp directories
+(`graft_q_incr_durable8841…`). Any other difference, join strategy and
+codegen stage included, is printed.
+
+Output: one verdict line per query, then, for each query that differs,
+the returned plan's diff, each paired plan's diff, the plans only one
+side ran, and the storage levels' diff.
 
 Both sides must be compiled (`sbt compile`, which writes
 `target/scala-2.13/classes`). Each query runs in a fresh JVM per side.
@@ -50,7 +54,6 @@ NORMALIZE = [
     # Files.createTempDirectory(prefix) appends a random unsigned long
     (re.compile(r"(/[A-Za-z][\w.-]*?[A-Za-z_.-])\d{6,}(?=[/\]\s,']|$)"),
      r"\1<tmp>"),
-    (re.compile(r"graft_state_\d+_\d+"), "graft_state_<i>_<n>"),
 ]
 
 
@@ -113,26 +116,101 @@ def executed(logdir):
     return found, sorted(levels.values())
 
 
-def plans(root, sfdir, queries):
-    """Per query, on the classes under `root`: the returned frame's plan,
-    the executed plans, sorted, then the persisted RDDs' storage levels,
-    sorted. Normalized, one line per entry."""
-    lines = []
-    for q in queries:
-        logdir = tempfile.mkdtemp(prefix="plan_diff_events_")
-        try:
-            returned = normalize(run_explain(root, sfdir, q, logdir))
-            ran, levels = executed(logdir)
-            ran = sorted(normalize(p) for p in ran)
-        finally:
-            shutil.rmtree(logdir, ignore_errors=True)
-        lines += returned.splitlines()
-        lines.append(f"---------- {q}: {len(ran)} executed plans ----------")
-        for plan in ran:
-            lines += plan.splitlines() + [""]
-        lines.append(f"---------- {q}: {len(levels)} persisted RDDs ----------")
-        lines += levels
-    return lines
+# plan nodes that wrap the operator a plan is about
+WRAPPERS = {"AdaptiveSparkPlan", "ResultQueryStage", "ShuffleQueryStage",
+            "BroadcastQueryStage", "TableCacheQueryStage"}
+NODE = re.compile(r"^[\s:+|*-]*([A-Za-z][\w ]*?)(?: \(\d+\))?$")
+
+
+def root_op(plan):
+    """The first operator of a formatted physical plan's tree that is not
+    an adaptive-execution wrapper."""
+    for line in plan.splitlines():
+        if not line.strip():
+            break
+        m = NODE.match(line)
+        if m and "==" not in line and m.group(1) not in WRAPPERS:
+            return m.group(1)
+    return "?"
+
+
+def plans(root, sfdir, query):
+    """One query on the classes under `root`: the returned frame's plan
+    lines, the executed plans and the persisted RDDs' sorted storage
+    levels, normalized."""
+    logdir = tempfile.mkdtemp(prefix="plan_diff_events_")
+    try:
+        returned = normalize(run_explain(root, sfdir, query, logdir))
+        ran, levels = executed(logdir)
+    finally:
+        shutil.rmtree(logdir, ignore_errors=True)
+    return returned.splitlines(), [normalize(p) for p in ran], levels
+
+
+def match(snap, head):
+    """Pair the two sides' executed plans: equal plans first, then, among
+    plans of the same root operator, the most similar pair first.
+    Returns (equal count, differing pairs, snapshot-only plans, HEAD-only
+    plans)."""
+    rest_head = list(head)
+    rest_snap = []
+    for p in snap:
+        if p in rest_head:
+            rest_head.remove(p)
+        else:
+            rest_snap.append(p)
+    equal = len(snap) - len(rest_snap)
+    scored = sorted(
+        ((-difflib.SequenceMatcher(None, s.splitlines(), h.splitlines()).ratio(), i, j)
+         for i, s in enumerate(rest_snap) for j, h in enumerate(rest_head)
+         if root_op(s) == root_op(h)))
+    pairs, used_s, used_h = [], set(), set()
+    for _, i, j in scored:
+        if i not in used_s and j not in used_h:
+            used_s.add(i)
+            used_h.add(j)
+            pairs.append((rest_snap[i], rest_head[j]))
+    removed = [p for i, p in enumerate(rest_snap) if i not in used_s]
+    added = [p for j, p in enumerate(rest_head) if j not in used_h]
+    return equal, sorted(pairs), sorted(removed), sorted(added)
+
+
+def by_root(ps):
+    counts = {}
+    for p in ps:
+        counts[root_op(p)] = counts.get(root_op(p), 0) + 1
+    return ", ".join(f"{n} {op}" for op, n in sorted(counts.items()))
+
+
+def compare(query, snap, head):
+    """The verdict line for one query and the detail lines under it."""
+    (s_ret, s_ran, s_lev), (h_ret, h_ran, h_lev) = snap, head
+    equal, pairs, removed, added = match(s_ran, h_ran)
+    detail = []
+    ret_diff = list(difflib.unified_diff(s_ret, h_ret, "snapshot", "HEAD", lineterm=""))
+    if ret_diff:
+        detail += [f"--- {query}: returned plan"] + ret_diff
+    for i, (s, h) in enumerate(pairs, 1):
+        detail += [f"--- {query}: paired plan {i}/{len(pairs)} ({root_op(s)})"]
+        detail += list(difflib.unified_diff(s.splitlines(), h.splitlines(),
+                                            "snapshot", "HEAD", lineterm=""))
+    for sign, side, ps in (("-", "snapshot", removed), ("+", "HEAD", added)):
+        for p in ps:
+            detail += [f"--- {query}: {root_op(p)}, run by {side} only"]
+            detail += [sign + line for line in p.splitlines()]
+    lev_diff = list(difflib.unified_diff(s_lev, h_lev, "snapshot", "HEAD", lineterm=""))
+    if lev_diff:
+        detail += [f"--- {query}: persisted RDD storage levels"] + lev_diff
+    if not detail:
+        return (f"{query}: identical (returned plan, {len(h_ran)} executed plans, "
+                f"{len(h_lev)} persisted RDDs)"), []
+    verdict = (f"{query}: DIFFERS: returned plan {'differs' if ret_diff else 'same'}; "
+               f"executed {len(s_ran)} -> {len(h_ran)}: {equal} equal, "
+               f"{len(pairs)} paired with differences, {len(removed)} snapshot only"
+               + (f" ({by_root(removed)})" if removed else "")
+               + f", {len(added)} HEAD only" + (f" ({by_root(added)})" if added else "")
+               + f"; storage levels {'differ' if lev_diff else 'same'}")
+    return verdict, detail
 
 
 def main():
@@ -144,19 +222,21 @@ def main():
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    head = plans(REPO, args.sfdir, args.queries)
-    snap = plans(os.path.abspath(args.snapshot), args.sfdir, args.queries)
+    snapshot = os.path.abspath(args.snapshot)
+    verdicts, details = [], []
     for q in args.queries:
-        if f"========== {q} ==========" not in head:
+        head = plans(REPO, args.sfdir, q)
+        if f"========== {q} ==========" not in head[0]:
             sys.exit(f"no plan printed for {q}")
-    diff = list(difflib.unified_diff(snap, head, "snapshot", "HEAD",
-                                     lineterm=""))
-    if diff:
-        print("\n".join(diff))
-        print(f"\nplans differ ({len(diff)} diff lines)")
-        sys.exit(1)
-    print(f"plans and storage levels identical for {len(args.queries)} queries "
-          f"({len(head)} lines)")
+        verdict, detail = compare(q, plans(snapshot, args.sfdir, q), head)
+        print(verdict, flush=True)
+        verdicts.append(verdict)
+        details += detail
+    if details:
+        print("\n" + "\n".join(details))
+    differ = sum(" DIFFERS: " in v for v in verdicts)
+    print(f"\n{len(verdicts) - differ} of {len(verdicts)} queries identical")
+    sys.exit(1 if differ else 0)
 
 
 if __name__ == "__main__":

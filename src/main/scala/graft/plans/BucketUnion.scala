@@ -134,19 +134,6 @@ object BucketUnion {
     PlanBridge.addOptimizerRule(spark, BucketUnionPushdown)
   }
 
-  /** True when `df`'s plan is a partition-aligned compose on
-    * (`keyName`, `numPartitions`): a caller about to write `df` back
-    * out bucketed by the same key into the same count can skip its
-    * pre-write repartition — partition i already holds exactly bucket
-    * i's keys (the zip preserves HashPartitioning, and bucketed writes
-    * derive bucket ids from the same Murmur3-pmod function). */
-  def isAligned(df: DataFrame, keyName: String, numPartitions: Int): Boolean =
-    PlanBridge.analyzed(df) match {
-      case b: BucketUnionPlan =>
-        b.keyName == keyName && b.numPartitions == numPartitions
-      case _ => false
-    }
-
   /** Partition-aligned union of two frames clustered on `keyName` into
     * `numPartitions` partitions (right's columns are realigned to
     * left's order by name). */

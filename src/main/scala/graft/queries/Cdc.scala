@@ -238,10 +238,9 @@ object Cdc {
     // bucketed-parquet backend — the deployment shape — including an
     // engine handoff mid-replay: a SECOND engine recovers the first
     // one's state purely from the on-disk generations
-    // (BucketedParquetBackend.recover → loadStateTables, the restart
-    // path — bucket-aligned compose, so the recovery re-persist skips
-    // the full-state shuffle) before applying the tombstone batch.
-    // Same oracle as q_incr:
+    // (IncrementalDenormalizer.recover, the restart path: it adopts the
+    // committed chains bucket-aligned and writes nothing) before
+    // applying the tombstone batch. Same oracle as q_incr:
     // durability and recovery must be invisible in the result.
     "q_incr_durable" -> QueryDef(
       "IVM through the durable bucketed-parquet backend, with a mid-replay recovery from disk",
@@ -265,29 +264,30 @@ object Cdc {
         struct(df.columns.map(col): _*).as("value"))
       // buckets = 8 measured best at sf0.1; per-wave durable cost: perfbench/run.py --buckets N --trace 1
       val b1 = new BucketedParquetBackend(spark, stateRoot, buckets = 8)
-      val e1 = newEngine(b1)
-      (0 until 2).foreach { i =>
-        e1.processBatch(Map(
-          "orders" -> changelog(o.where(pmod(col("o_orderkey"), lit(2)) === i), "o_orderkey"),
-          "customer" -> changelog(c.where(pmod(col("c_custkey"), lit(2)) === i), "c_custkey")))
-      }
-      // handoff: recover from the newest batch commit, then delete
       val b2 = new BucketedParquetBackend(spark, stateRoot, buckets = 8)
-      val e2 = newEngine(b2)
-      e2.loadStateTables(b2.recover())
-      val tomb = o.where(col("o_orderkey") % 97 === 0).select(
-        col("o_orderkey").as("offset"),
-        struct(col("o_orderkey")).as("key"),
-        lit(null).cast(o.schema).as("value"))
-      e2.processBatch(Map("orders" -> tomb))
-      // materialize off the state tables, then drop the temp state root
-      val out = e2.docs("DenormalizedOrder").where(!col("__deleted"))
-        .select(
-          get_json_object(col("doc_json"), "$.Record.o_orderkey").cast(LongType).as("o_orderkey"),
-          get_json_object(col("doc_json"), "$.Children.customer[0].Record.c_name").as("c_name"))
-        .orderBy("o_orderkey").localCheckpoint()
-      b2.deleteAll(); b1.deleteAll()
-      out
+      // finally: a mid-replay failure must not leak the temp state root
+      try {
+        val e1 = newEngine(b1)
+        (0 until 2).foreach { i =>
+          e1.processBatch(Map(
+            "orders" -> changelog(o.where(pmod(col("o_orderkey"), lit(2)) === i), "o_orderkey"),
+            "customer" -> changelog(c.where(pmod(col("c_custkey"), lit(2)) === i), "c_custkey")))
+        }
+        // handoff: recover from the newest batch commit
+        val e2 = newEngine(b2)
+        e2.recover()
+        val tomb = o.where(col("o_orderkey") % 97 === 0).select(
+          col("o_orderkey").as("offset"),
+          struct(col("o_orderkey")).as("key"),
+          lit(null).cast(o.schema).as("value"))
+        e2.processBatch(Map("orders" -> tomb))
+        // materialize off the state tables before the root goes
+        e2.docs("DenormalizedOrder").where(!col("__deleted"))
+          .select(
+            get_json_object(col("doc_json"), "$.Record.o_orderkey").cast(LongType).as("o_orderkey"),
+            get_json_object(col("doc_json"), "$.Children.customer[0].Record.c_name").as("c_name"))
+          .orderBy("o_orderkey").localCheckpoint()
+      } finally { b2.deleteAll(); b1.deleteAll() }
     },
 
     // Incrementally MAINTAINED grouped aggregate over a chunked

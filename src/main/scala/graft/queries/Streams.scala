@@ -47,31 +47,25 @@ object Streams {
     * by every query here, in microseconds. */
   private val GapUs = 1800000000L
 
+  /** Stateful-operator partition count of every run, which Spark fixes
+    * at the first checkpoint from `spark.sql.shuffle.partitions`: each
+    * partition costs every stateful operator state-store I/O per batch,
+    * so it tracks state volume, not cluster width (q_stream_join at
+    * sf0.1: 10.8 s at 32, 3.8 s at 8). */
+  private val StatePartitions = 8
+
   /** Drive `df` through the streaming runtime to completion and hand
     * back the sink contents as a batch frame. The memory table and the
     * checkpoint directory are torn down before returning — the caller
-    * owns only the checkpointed result.
-    *
-    * `statePartitions` pins the stateful-operator partition count for
-    * the run (Spark fixes it at first checkpoint from
-    * `spark.sql.shuffle.partitions`, so it is a deliberate per-query
-    * knob, not an inherited default). Sizing it to the keyed-state
-    * volume matters: every micro-batch pays per-partition state-store
-    * file/commit overhead for EACH stateful operator (a stream-stream
-    * join maintains four stores per partition), so running a
-    * few-hundred-key state at the batch engine's shuffle width
-    * multiplies fixed I/O for nothing — measured 10.8 s → 3.8 s on
-    * q_stream_join by moving 32 → 8 at sf0.1. At production scale the
-    * same parameter is what you RAISE to spread millions of keys; the
-    * point is that it tracks state volume, not cluster width. */
+    * owns only the checkpointed result. */
   private def runStream(spark: SparkSession, df: DataFrame,
-      mode: OutputMode, statePartitions: Int = 8): DataFrame = {
+      mode: OutputMode): DataFrame = {
     val name = s"graft_stream_sink_${seq.incrementAndGet()}"
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
     val partKey = "spark.sql.shuffle.partitions"
     val priorParts = spark.conf.get(partKey)
     try {
-      spark.conf.set(partKey, statePartitions.toString)
+      spark.conf.set(partKey, StatePartitions.toString)
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode)
         .option("checkpointLocation", ckpt.toString)

@@ -144,9 +144,7 @@ final class IncrementalDenormalizer(
       delta: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     // The coalesce bounds the memory backend's localCheckpoint
     // partition count; a durable backend governs its own layout (the
-    // bucketed write), and the extra plan node would also hide an
-    // already-bucket-aligned recovered chain from persistFull's
-    // aligned fast path — so durable frames pass through untouched.
+    // bucketed write), so durable frames pass through untouched.
     val src = if (backend.durable) df else df.coalesce(statePartitions)
     bind(backend.persist(name, src, delta))
   }
@@ -266,10 +264,13 @@ final class IncrementalDenormalizer(
   def stateTables: Map[String, DataFrame] =
     landed(state.keys.filterNot(_.startsWith("changed__")).toSeq)
 
-  /** Replace state tables from a backup or a durable state root (names
-    * as in [[stateTables]]); missing tables keep their current (usually
-    * empty) content. Loaded tables re-persist through the configured
-    * backend, so a durable engine's restored state is durable too.
+  /** Replace state tables from a backup, a durable root's `latest` or
+    * `asOf`, or another backend (names as in [[stateTables]]); missing
+    * tables keep their current (usually empty) content. Loaded tables
+    * re-persist through the configured backend, each as a FULL write,
+    * so a durable engine's loaded state is durable too. A restart over
+    * the engine's own backend goes through [[recover]] instead, which
+    * writes nothing.
     *
     * Deferred-priority rows (pending_med/pending_low) restore with the
     * rest, so no queued rebuild is ever lost across a restart; only the
@@ -298,6 +299,23 @@ final class IncrementalDenormalizer(
     backend.gc()
   }
 
+  /** Restart: adopt the state that the backend recovers from its newest
+    * commit ([[StateBackend.recover]]). Each owned table it recovered
+    * becomes this engine's state as it stands, with nothing written —
+    * the reference reopens its RocksDB state key-indexed, with nothing
+    * rewritten (state/RocksDBState.java:474-491). The exception is a
+    * snapshot whose value schema evolved: it loads through
+    * [[loadStateTables]], which projects it into the configured schema
+    * and persists it FULL, and commits. A backend that recovers nothing
+    * (the memory backend) leaves the engine as it is. */
+  def recover(): Unit = {
+    val owned = stateTables.keySet
+    val (evolved, adopted) = backend.recover().filter { case (n, _) => owned(n) }
+      .partition { case (n, df) => evolvedSnapshot(n, df) }
+    if (evolved.nonEmpty) loadStateTables(evolved)
+    state = state ++ adopted.map { case (n, df) => n -> Waves.ready(s"recovered $n", bind(df)) }
+  }
+
   /** Schema evolution across restart: a restored snapshot table whose
     * value struct predates the CURRENTLY configured entity schema is
     * projected into it — declared fields missing from the stored rows
@@ -308,15 +326,16 @@ final class IncrementalDenormalizer(
     * instead of rebuilding from offset zero. Non-snapshot tables have
     * engine-fixed schemas and pass through untouched. */
   private def alignRestored(name: String, df: DataFrame): DataFrame =
-    if (!name.startsWith("snapshot__")) df
-    else {
-      val entity = name.stripPrefix("snapshot__")
-      val target = valueSchemas(entity)
-      if (df.schema("value").dataType == target) df
-      else df.select(col("__pk"),
-        alignColumn(Some(col("value")), target,
-          Some(df.schema("value").dataType)).as("value"))
-    }
+    if (!evolvedSnapshot(name, df)) df
+    else df.select(col("__pk"),
+      alignColumn(Some(col("value")), valueSchemas(name.stripPrefix("snapshot__")),
+        Some(df.schema("value").dataType)).as("value"))
+
+  /** Is `df` a restored snapshot table whose value struct differs from
+    * the configured entity schema? */
+  private def evolvedSnapshot(name: String, df: DataFrame): Boolean =
+    name.startsWith("snapshot__") &&
+      df.schema("value").dataType != valueSchemas(name.stripPrefix("snapshot__"))
 
   private def alignColumn(src: Option[Column], dt: DataType,
       srcType: Option[DataType]): Column = (src, dt, srcType) match {
@@ -807,8 +826,7 @@ final class IncrementalDenormalizer(
           // exactly
           val nd = in(changed)
           bind(backend.persist(docs,
-            in(docs).join(dirtyPks, Seq("__pk"), "left_anti").unionByName(nd)
-              .coalesce(statePartitions),
+            in(docs).join(dirtyPks, Seq("__pk"), "left_anti").unionByName(nd),
             Some((nd, dirtyPks))))
         }
       else {

@@ -63,11 +63,19 @@ trait StateBackend {
       delta: Option[(DataFrame, DataFrame)]): DataFrame =
     persist(name, df)
 
+  /** Restart recovery: the state of every table as the newest commit
+    * left it, keyed by table name, and adopted, so that each table's
+    * next persist extends or supersedes it. Nothing is written. The
+    * memory backend keeps nothing across sessions, so it has nothing to
+    * recover. The engine restarts through
+    * [[IncrementalDenormalizer.recover]]. */
+  def recover(): Map[String, DataFrame] = Map.empty
+
   /** The batch boundary. The engine calls this once per batch, after
-    * the batch's last job, and once after a restore. A durable backend
-    * commits every table's current state here as one unit, then drops
-    * what no retained commit still names; the memory backend has nothing
-    * to do. Never call it mid-batch: while a batch's waves run, derived
+    * the batch's last job, and once after a load that wrote state. A
+    * durable backend commits every table's current state here as one
+    * unit, then drops what no retained commit still names; the memory
+    * backend has nothing to do. Never call it mid-batch: while a batch's waves run, derived
     * plans still read the PRE-batch generations. */
   def gc(): Unit = ()
 }
@@ -109,7 +117,7 @@ object StateBackend {
   * [[recover]], [[BucketedParquetBackend.latest]] and
   * [[BucketedParquetBackend.asOf]] alike. Every `compactEvery`-th persist
   * of a table writes FULL, which bounds the chain; a persist without a
-  * change set (the first one, restart recovery) is always FULL. Each
+  * change set (the first one, a load from a backup) is always FULL. Each
   * persist writes a NEW generation, past every one on disk, because the
   * plan being written usually reads the previous one.
   *
@@ -126,13 +134,11 @@ object StateBackend {
   * superseded generations and the wrecks of batches that never
   * committed.
   *
-  * Restart: [[recover]] composes each chain bucket-aligned and adopts
-  * it, so keyed reads against recovered state plan no state-side
-  * Exchange before the first compaction — the reference's RocksDB state
-  * is key-indexed the moment it reopens (state/RocksDBState.java:474-491).
-  * Feed the result to [[IncrementalDenormalizer.loadStateTables]]: its
-  * re-persist is a FULL write that takes [[persistFull]]'s aligned path,
-  * without a full-state shuffle.
+  * Restart: [[recover]] composes each chain of the newest commit
+  * bucket-aligned and adopts it as it stands, writing nothing, so keyed
+  * reads against recovered state plan no state-side Exchange — the
+  * reference's RocksDB state is key-indexed the moment it reopens, with
+  * nothing rewritten (state/RocksDBState.java:474-491).
   */
 final class BucketedParquetBackend(
     spark: SparkSession,
@@ -192,18 +198,7 @@ final class BucketedParquetBackend(
       else generations(fs, new Path(rootPath, name)).lastOption.getOrElse(0L))
     val dir = genDir(name, gen).toString
     val keyCol = df.columns.head
-    // Aligned fast path: a frame whose plan is already a BucketUnion
-    // compose on (keyCol, buckets) — a recovered chain, or any
-    // delta-composed view being compacted — arrives with partition i
-    // holding exactly bucket i's keys (the zip preserves
-    // HashPartitioning, and the bucketed write derives bucket ids from
-    // the same Murmur3 pmod), so the pre-write repartition would be a
-    // full-state shuffle for nothing. Skipping it, each task writes
-    // exactly its one bucket file.
-    val src =
-      if (graft.plans.BucketUnion.isAligned(df, keyCol, buckets)) df
-      else df.repartition(buckets, col(keyCol))
-    BucketedPath.write(src, dir, keyCol, buckets)
+    BucketedPath.write(df.repartition(buckets, col(keyCol)), dir, keyCol, buckets)
     val frame = BucketedPath.read(spark, dir, df.schema, keyCol, buckets)
     live.put(name, Live(gen, Chain(df.schema, Seq(Gen(gen, "full", buckets))), frame))
     frame
@@ -235,19 +230,20 @@ final class BucketedParquetBackend(
       .repartition(buckets, col(keyCol)), new Path(dir, "rows").toString, keyCol, buckets)
     keys.coalesce(buckets).write.parquet(new Path(dir, "keys").toString)
     // the layer reads both sides back from disk, so the composed frame
-    // is independent of the input plans' lineage
-    val frame = applyDelta(spark, prev.frame, dir, buckets, buckets)
+    // is independent of the input plans' lineage; it keeps the chain's
+    // layout, as compose does, also over a chain recovered from a root
+    // written with another bucket count
+    val frame = applyDelta(spark, prev.frame, dir, buckets, prev.chain.gens.head.buckets)
     val chain = prev.chain.copy(gens = prev.chain.gens :+ Gen(gen, "delta", buckets))
     live.put(name, Live(gen, chain, frame))
     frame
   }
 
-  /** Restart recovery through the live backend (see class doc): the
-    * newest commit's chain of every table, composed as
-    * [[BucketedParquetBackend.latest]] composes it and adopted into
-    * [[live]], so each table's first post-restore persist extends or
-    * supersedes it. */
-  def recover(): Map[String, DataFrame] =
+  /** Restart recovery (see class doc): the newest commit's chain of
+    * every table, composed as [[BucketedParquetBackend.latest]] composes
+    * it and adopted into [[live]], so each table's first post-restart
+    * persist extends or supersedes it. */
+  override def recover(): Map[String, DataFrame] =
     readCommit(fs, rootPath, Long.MaxValue).map { case (name, chain) =>
       val frame = compose(spark, rootPath, name, chain)
       live.put(name, Live(generations(fs, new Path(rootPath, name)).last, chain, frame))

@@ -18,8 +18,10 @@ import graft.operators.Compaction
   * changelog whose rows carry `(entity, offset, key_json, value_json)`,
   * with `foreachBatch` driving [[IncrementalDenormalizer.processBatch]]
   * per micro-batch — the dirty-set machinery IS the batch delta, and
-  * the checkpoint supplies restart/exactly-once offsets (vs the
-  * reference's hand-rolled offset keyspaces, topic/BaseTopic.java:89-101).
+  * the checkpoint supplies restart offsets (vs the reference's
+  * hand-rolled offset keyspaces, topic/BaseTopic.java:89-101). Delivery
+  * is at-least-once: a batch replayed after its durable commit can drop
+  * a root's update (see [[DocSink]]; ROADMAP direction 1).
   *
   * Kafka wiring (untestable offline — the connector jar isn't in this
   * environment) is a drop-in source swap:
@@ -195,24 +197,16 @@ object StreamRunner {
       backend = backend)
     // Restart consistency: the streaming checkpoint makes committed
     // offsets skip on restart, so the engine state MUST resume from
-    // where those offsets left it. A durable backend recovers first,
-    // from its newest batch commit (the state of the last batch whose
-    // gc() completed — BucketedParquetBackend.recover); a stateRoot
-    // then restores the newest readable explicit backup only if the
-    // backend had nothing (when_needed), and keeps backing up every
-    // `backupEvery`-th batch. Pair either with `checkpointDir` for
-    // consistent restarts: restarting an existing checkpointLocation
+    // where those offsets left it. The engine first adopts what its
+    // backend recovers from its newest batch commit (the state of the
+    // last batch whose gc() completed; nothing for the memory backend);
+    // a stateRoot then restores the newest readable explicit backup
+    // only if the backend had nothing (when_needed), and keeps backing
+    // up every `backupEvery`-th batch. Pair either with `checkpointDir`
+    // for consistent restarts: restarting an existing checkpointLocation
     // over purely in-memory state would silently skip data — use a
     // fresh checkpoint dir then.
-    backend match {
-      case b: BucketedParquetBackend =>
-        // recover() (not the static latest(), which composes the same
-        // bucket-aligned tables): it adopts each chain into the backend,
-        // so the next persist extends or supersedes it
-        val gens = b.recover()
-        if (gens.nonEmpty) engine.loadStateTables(gens)
-      case _ => ()
-    }
+    engine.recover()
     stateRoot.foreach(r =>
       StateOps.restore(engine, r, StateOps.RestoreMode.WhenNeeded))
     // The dangerous restart shape deserves a loud warning, not a

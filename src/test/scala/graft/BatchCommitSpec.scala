@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -66,6 +68,14 @@ class BatchCommitSpec extends SparkSpec {
   private def tempRoot(prefix: String) =
     "file://" + java.nio.file.Files.createTempDirectory(prefix)
 
+  /** Every file and directory under `root`, relative to it. */
+  private def listing(root: String): Set[String] = {
+    val dir = java.nio.file.Paths.get(new java.net.URI(root))
+    val all = java.nio.file.Files.walk(dir)
+    try all.iterator().asScala.map(p => dir.relativize(p).toString).toSet
+    finally all.close()
+  }
+
   /** Delegates to `inner`; once armed, throws from the first `rootmap__`
     * or `docs__` persist on, so the batch's snapshot and link writes
     * land and its rebuild does not. */
@@ -101,8 +111,53 @@ class BatchCommitSpec extends SparkSpec {
       intercept[Exception](e1.processBatch(batch2))
 
       val e2 = newEngine(b2)
-      e2.loadStateTables(b2.recover())
+      e2.recover()
       e2.processBatch(batch2)
+      assert(docsOf(e2.docs("CrashDoc")) == docsOf(expected.docs("CrashDoc")))
+    } finally { b2.deleteAll(); b1.deleteAll() }
+  }
+
+  test("a restart adopts the committed state: recover() writes nothing, keeps the bucket layout, and the next batch extends the chain") {
+    /** Child 11 moves to parent 1. */
+    val batch4 = Map("child" -> changelog(childSchema, Row(11L, 1L)))
+    val expected = newEngine(StateBackend.Memory)
+    Seq(batch1, batch2, batch3, batch4).foreach(expected.processBatch)
+
+    val root = tempRoot("graft_adopt")
+    val b1 = new BucketedParquetBackend(spark, root, buckets = 2, compactEvery = 8)
+    val b2 = new BucketedParquetBackend(spark, root, buckets = 2, compactEvery = 8)
+    try {
+      val e1 = newEngine(b1)
+      Seq(batch1, batch2, batch3).foreach(e1.processBatch)
+      val before = e1.stateTables.map { case (n, df) => n -> contents(df) }
+      val committed = BucketedParquetBackend.latest(spark, root).keySet
+      val onDisk = listing(root)
+      assert(onDisk.contains("_commits/3") && onDisk.exists(_.matches("[^/]+/g\\d+")), onDisk)
+
+      val e2 = newEngine(b2)
+      e2.recover()
+      // no generation, no commit, no file: the restart wrote nothing
+      assert(listing(root) == onDisk,
+        s"written by recover(): ${listing(root) -- onDisk}; gone: ${onDisk -- listing(root)}")
+      val recovered = e2.stateTables
+      assert(recovered.map { case (n, df) => n -> contents(df) } == before)
+      // keyed on the state key, every adopted table keeps its buckets
+      for ((name, df) <- recovered if committed(name)) {
+        val plan = df.groupBy(df.columns.head).count().queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange hashpartitioning"),
+          s"adopted $name re-shuffled the state side:\n$plan")
+      }
+
+      // the first batch after the restart extends the adopted chain:
+      // the child snapshot's chain is now its full generation and three
+      // deltas, and the documents match an uninterrupted run
+      e2.processBatch(batch4)
+      val rootPath = new Path(root)
+      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+      val in = fs.open(new Path(rootPath, "_commits/4"))
+      val commit = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val childChain = commit.linesIterator.find(_.startsWith("snapshot__child\t"))
+      assert(childChain.exists(_.split('\t').count(_.endsWith(":delta:2")) == 3), commit)
       assert(docsOf(e2.docs("CrashDoc")) == docsOf(expected.docs("CrashDoc")))
     } finally { b2.deleteAll(); b1.deleteAll() }
   }

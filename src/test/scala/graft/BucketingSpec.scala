@@ -281,10 +281,6 @@ class BucketingSpec extends SparkSpec {
       val got = recovered.collect()
         .map(r => r.getAs[Array[Byte]]("__pk")(0).toInt -> r.getLong(1)).toMap
       assert(got == expect)
-      // the recovery re-persist (loadStateTables' compaction write)
-      // takes the aligned fast path: the plan is a BucketUnion on the
-      // state key with the backend's bucket count
-      assert(graft.plans.BucketUnion.isAligned(recovered, "__pk", 8))
       val compacted = b2.persist("t", recovered, None)
       b2.gc() // commits the compaction; b1's chain stays in the kept commit
       val got2 = compacted.collect()

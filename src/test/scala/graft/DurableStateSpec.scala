@@ -17,10 +17,11 @@ import ReferenceFixtures._
   * Shape: replay all topic fixtures EXCEPT the final pass through the
   * durable backend under a temp root, capture every state table, then
   * stop the SparkContext. Open a brand-new session (new context, empty
-  * catalog, every in-memory checkpoint block gone), recover purely from
-  * disk via [[BucketedParquetBackend.latest]] → `loadStateTables`, and
-  * assert all state tables — documents AND the JK link / PaK rootmap
-  * indices — byte-equal the pre-restart capture. The restart, the
+  * catalog, every in-memory checkpoint block gone), restart a new engine
+  * purely from disk through [[IncrementalDenormalizer.recover]], which
+  * adopts the committed chains and writes nothing, and assert all state
+  * tables — documents AND the JK link / PaK rootmap indices — byte-equal
+  * the pre-restart capture. The restart, the
   * no-Exchange and the `_SUCCESS` checks run over the in-repo corpus,
   * and over the reference's when mounted. On the reference corpus, the
   * final fixture pass then runs on the recovered engine and the
@@ -125,7 +126,7 @@ class DurableStateSpec extends AnyFunSuite with BeforeAndAfterAll {
             assert(rows.isEmpty, s"state table $name had rows but no committed generation")
         }
         r.recovered = r.newEngine(sparkB)
-        r.recovered.loadStateTables(gens)
+        r.recovered.recover()
         r.recovered.stateTables.foreach { case (name, df) =>
           assert(contents(df) == r.captured(name),
             s"state table $name diverged across restart")

@@ -237,10 +237,10 @@ class IncrementalFuzzSpec extends SparkSpec {
         var engine = newEngine(b1)
         pChunks.zip(cChunks).zipWithIndex.foreach { case ((p, c), i) =>
           if (i == restartAt) {
-            // handoff: a second engine recovers from committed
+            // handoff: a second engine adopts the committed
             // generations only (delta chains compose from disk)
             engine = newEngine(b2)
-            engine.loadStateTables(BucketedParquetBackend.latest(spark, stateRoot))
+            engine.recover()
           }
           val batch = Seq(
             "parent" -> (if (p.nonEmpty) Some(changelogDf(p, parentSchema)) else None),

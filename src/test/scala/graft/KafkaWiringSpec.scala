@@ -172,8 +172,8 @@ class KafkaWiringSpec extends SparkSpec {
     val backendRoot = "file://" + Files.createTempDirectory("graft-gen-state")
     val tree = Relation.root("DenormItem", "item")
     // No stateRoot: recovery must come from the bucketed parquet
-    // generations the previous run's backend committed, via the
-    // BucketedParquetBackend.latest wiring in StreamRunner.start.
+    // generations the previous run's backend committed, which
+    // StreamRunner.start adopts through the engine's recover().
     def startRunner(stream: MemoryStream[(String, Long, String, String)]) =
       StreamRunner.start(spark,
         stream.toDF().toDF("entity", "offset", "key_json", "value_json"),

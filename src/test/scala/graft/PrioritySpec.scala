@@ -67,7 +67,7 @@ class PrioritySpec extends SparkSpec {
       assert(BucketedParquetBackend.asOf(spark, root, 2)("pending_low__Cold").count() == 0)
       // a restart after the drain's commit does not drain root 1 again
       val e2 = engine(second)
-      e2.loadStateTables(second.recover())
+      e2.recover()
       e2.processBatch(Map.empty)
       e2.processBatch(Map.empty) // the recovered engine's first drain
       assert(e2.counters("docs_written") == 0L)

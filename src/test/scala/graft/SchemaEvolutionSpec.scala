@@ -56,7 +56,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       val e2 = new IncrementalDenormalizer(spark, Seq(tree),
         Map("item" -> Seq("id"), "owner" -> Seq("id")),
         Map("item" -> v2Full, "owner" -> ownerSchema), backend = b2)
-      e2.loadStateTables(BucketedParquetBackend.latest(spark, stateRoot))
+      e2.recover()
 
       // the recovered engine processes a v2 batch: update item 1 WITH a
       // note, insert item 3
@@ -89,6 +89,67 @@ class SchemaEvolutionSpec extends SparkSpec {
     }
   }
 
+  test("recover() persists an evolved snapshot FULL and adopts the rest; under new buckets the replay matches an uninterrupted run") {
+    val keys = Map("item" -> Seq("id"), "owner" -> Seq("id"))
+    def items(schema: StructType, rows: Row*) = "item" -> changelog(rows, schema)
+    def owners(rows: Row*) = "owner" -> changelog(rows, ownerSchema)
+    // v1 batches, and the same batches as v2 rows (no note)
+    def before(schema: StructType): Seq[Map[String, DataFrame]] = {
+      def item(offset: Long, id: Long, qty: Long, owner: Long) =
+        if (schema == v1Full) Row(offset, Row(id), Row(id, qty, owner))
+        else Row(offset, Row(id), Row(id, qty, null, owner))
+      Seq(
+        Map(items(schema, item(1L, 1L, 10L, 100L), item(2L, 2L, 20L, 100L)),
+          owners(Row(1L, Row(100L), Row(100L, "ann")), Row(2L, Row(200L), Row(200L, "bo")))),
+        Map(items(schema, item(3L, 2L, 21L, 200L))))
+    }
+    val after = Seq(
+      Map(items(v2Full, Row(4L, Row(1L), Row(1L, 11L, "rushed", 200L)),
+        Row(5L, Row(3L), Row(3L, 30L, "fresh", 100L)))),
+      Map(items(v2Full, Row(6L, Row(2L), null)),
+        owners(Row(7L, Row(100L), Row(100L, "cy")))))
+    val expected = new IncrementalDenormalizer(spark, Seq(tree), keys,
+      Map("item" -> v2Full, "owner" -> ownerSchema))
+    (before(v2Full) ++ after).foreach(expected.processBatch)
+
+    val stateRoot = "file://" +
+      java.nio.file.Files.createTempDirectory("graft_schema_rebucket")
+    val b1 = new BucketedParquetBackend(spark, stateRoot, buckets = 4)
+    val b2 = new BucketedParquetBackend(spark, stateRoot, buckets = 8)
+    try {
+      val e1 = new IncrementalDenormalizer(spark, Seq(tree), keys,
+        Map("item" -> v1Full, "owner" -> ownerSchema), backend = b1)
+      before(v1Full).foreach(e1.processBatch)
+      val dir = new java.io.File(new java.net.URI(stateRoot))
+      def generations = dir.listFiles().toSeq.filter(_.isDirectory)
+        .flatMap(t => t.list().toSeq.filter(_.matches("g\\d+")).map(g => s"${t.getName}/$g"))
+        .toSet
+      def commits = new java.io.File(dir, "_commits").list().toSet.filter(_.forall(_.isDigit))
+      val gensBefore = generations
+      val commitsBefore = commits
+
+      // restart with the wider item schema and twice the buckets
+      val e2 = new IncrementalDenormalizer(spark, Seq(tree), keys,
+        Map("item" -> v2Full, "owner" -> ownerSchema), backend = b2)
+      e2.recover()
+      val written = generations -- gensBefore
+      assert(written.size == 1 && written.head.startsWith("snapshot__item/"),
+        s"expected one FULL generation of the evolved snapshot, got $written")
+      assert(gensBefore.subsetOf(generations), "recover() dropped an adopted generation")
+      assert(commits.size == commitsBefore.size + 1, "the evolved snapshot's write is committed")
+
+      after.foreach(e2.processBatch)
+      def docs(e: IncrementalDenormalizer) = e.docs("DenormItem").collect().map { r =>
+        r.getAs[Array[Byte]]("__pk").toSeq ->
+          Option(r.getAs[String]("doc_json")).map(ReferenceFixtures.normalizeJson)
+      }.toMap
+      assert(docs(e2) == docs(expected))
+      assert(graft.streaming.StateOps.verifyState(e2).isEmpty)
+    } finally {
+      b2.deleteAll(); b1.deleteAll()
+    }
+  }
+
   test("a NARROWED field is rejected loudly instead of truncating restored state") {
     val stateRoot = "file://" +
       java.nio.file.Files.createTempDirectory("graft_schema_narrow")
@@ -112,7 +173,7 @@ class SchemaEvolutionSpec extends SparkSpec {
         Map("item" -> Seq("id"), "owner" -> Seq("id")),
         Map("item" -> narrowed, "owner" -> ownerSchema), backend = b2)
       val err = intercept[IllegalStateException] {
-        e2.loadStateTables(BucketedParquetBackend.latest(spark, stateRoot))
+        e2.recover()
       }
       assert(err.getMessage.contains("schema evolution"), err.getMessage)
     } finally {
@@ -147,7 +208,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       val e2 = new IncrementalDenormalizer(spark, Seq(tree),
         Map("item" -> Seq("id"), "owner" -> Seq("id")),
         Map("item" -> w2, "owner" -> ownerSchema), backend = b2)
-      e2.loadStateTables(BucketedParquetBackend.latest(spark, stateRoot))
+      e2.recover()
 
       val tag = e2.snapshot("item").select(col("tags")(0).as("tag"))
         .collect().head.getStruct(0)
